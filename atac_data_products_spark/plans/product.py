@@ -15,9 +15,13 @@ plan over long/COO matrices:
     matrices arrive as long-form (dataset, barcode, feature_id, value)
     → annotate = column expressions (barcode clean, cell_id)
     → union = unionByName (outer feature alignment free in long form)
-    → intersect = left-semi joins on cell_id
-    → donor join = broadcast hash inner join (keyed, order-free)
-    → aggregates + product dir write (sinks.writers)
+    → intersect = left-semi joins of the first modality's cells on
+      every other modality's cell_id
+    → donor join = broadcast hash inner join (keyed, order-free) = obs
+    → at write time, obs (the surviving cell set) is computed ONCE by an
+      eager checkpoint; x/var are each modality's union semi-joined to
+      it, and the aggregates read it too (ProductResult.restricted_to)
+    → product dir write (sinks.writers)
 
 Deliberately NOT reproduced (§2.11): the positional re-index idiom, the
 `Unnamed: 0` column, the URL/filename mismatch, the Response-object
@@ -33,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strings import concat_cell_id, replace_literal
-from ..operators.joins import broadcast_dim_join, intersect_keys
+from ..operators.joins import broadcast_dim_join
 from ..operators.unions import union_outer
 from ..sinks.writers import write_product
 from ..spill import ckpt_eager as _ckpt_eager
@@ -44,8 +48,37 @@ BARCODE_PREFIX = "BAM_data#"  # stripped at bin/concatenate.py:67
 @dataclass
 class ProductResult:
     obs: DataFrame
-    modalities: dict[str, tuple[DataFrame, DataFrame]]  # name -> (x, var)
+    unioned: dict[str, DataFrame]  # modality -> annotated union (all cells)
     metadata: dict = field(default_factory=dict)
+
+    def restricted_to(self, obs: DataFrame) -> dict[str, tuple[DataFrame, DataFrame]]:
+        """Per modality, (x, var) restricted to the cells of ``obs``.
+
+        Pass a checkpointed ``obs`` so every table derived from it reads
+        one computed cell set instead of re-running the intersection.
+        var is each dataset's feature CONTRIBUTION among those cells:
+        partitioned by dataset on disk, a re-added dataset's stale
+        features are replaced the same way its obs rows are
+        (append_dataset_to_product).  Like x, it is restricted to cells
+        present in every modality of a manifested dataset."""
+        cells = obs.select("cell_id")
+        out = {}
+        for mod, union in self.unioned.items():
+            x = union.join(cells, "cell_id", "left_semi").select(
+                "dataset", "cell_id", "feature_id", "value"
+            )
+            var = (
+                x.select("dataset", "feature_id")
+                .distinct()
+                .withColumn("modality", F.lit(mod))
+            )
+            out[mod] = (x, var)
+        return out
+
+    @property
+    def modalities(self) -> dict[str, tuple[DataFrame, DataFrame]]:
+        """name -> (x, var) over the lazy ``obs``."""
+        return self.restricted_to(self.obs)
 
 
 def annotate_matrix(x: DataFrame, tissue: str | None) -> DataFrame:
@@ -84,59 +117,22 @@ def build_product(
         for mod, dfs in matrices_by_modality.items()
     }
 
-    # 2. modality intersection on cell_id (J1, mu.pp.intersect_obs):
-    #    chain left-semi joins so every modality keeps only cells present
-    #    in ALL modalities.
+    # 2. modality intersection (J1, mu.pp.intersect_obs) and obs: one
+    #    row per cell of the first modality (the reference takes cbb's
+    #    obs at :145) present in every other modality, + donor metadata
+    #    via broadcast inner join on dataset uuid (J2).  The inner join
+    #    drops cells of unmanifested datasets — reference behavior worth
+    #    keeping (FIXTURES edge case 1).
     mods = list(unioned)
-    cells = {mod: df.select("cell_id").distinct() for mod, df in unioned.items()}
-    for mod in mods:
-        for other in mods:
-            if other != mod:
-                unioned[mod] = intersect_keys(unioned[mod], cells[other], "cell_id")
-
-    # 3. obs: one row per surviving cell (from the first modality, as the
-    #    reference takes cbb's obs at :145), + donor metadata via
-    #    broadcast inner join on dataset uuid (J2).  The inner join drops
-    #    cells of unmanifested datasets — reference behavior worth keeping
-    #    (FIXTURES edge case 1).
-    first = unioned[mods[0]]
-    obs_cells = first.select("cell_id", "dataset", "barcode", "tissue").distinct()
+    obs_cells = unioned[mods[0]].select("cell_id", "dataset", "barcode", "tissue").distinct()
+    for other in mods[1:]:
+        obs_cells = obs_cells.join(unioned[other].select("cell_id"), "cell_id", "left_semi")
     obs = broadcast_dim_join(
         obs_cells, manifest, obs_cells.dataset == manifest.uuid, "inner"
     ).drop("uuid")
-    # 4. type normalization (age string → double, bin/concatenate.py:110)
+    # 3. type normalization (age string → double, bin/concatenate.py:110)
     if "age" in obs.columns:
         obs = obs.withColumn("age", F.col("age").cast("double"))
-
-    # matrices restricted to manifested cells so X and obs stay aligned
-    final_cells = obs.select("cell_id")
-    modalities = {}
-    for mod in mods:
-        x = intersect_keys(unioned[mod], final_cells, "cell_id").select(
-            "dataset", "cell_id", "feature_id", "value"
-        )
-        # var carries each dataset's feature CONTRIBUTION (not just the
-        # distinct feature set): partitioned by dataset on disk, a
-        # re-added dataset's stale features are subtractable the same
-        # way obs rows are — dynamic partition overwrite replaces
-        # exactly that dataset's contribution (append_dataset_to_product).
-        # Restricted to MANIFESTED datasets (reference parity: only
-        # manifest rows are read at all, bin/concatenate.py:121-136) but
-        # NOT to surviving cells (anndata outer concat keeps a manifested
-        # dataset's features even when intersect_obs drops its cells).
-        # The product-level feature list is the distinct feature_id view.
-        var = (
-            unioned[mod]
-            .join(
-                F.broadcast(manifest.select(F.col("uuid").alias("dataset"))),
-                "dataset",
-                "left_semi",
-            )
-            .select("dataset", "feature_id")
-            .distinct()
-            .withColumn("modality", F.lit(mod))
-        )
-        modalities[mod] = (x, var)
 
     meta = {
         "product_uuid": product_uuid or str(_uuid.uuid4()),
@@ -144,14 +140,16 @@ def build_product(
         "assay": "ATACseq",
         "modalities": sorted(mods),
     }
-    return ProductResult(obs=obs, modalities=modalities, metadata=meta)
+    return ProductResult(obs=obs, unioned=unioned, metadata=meta)
 
 
 def finalize_and_write(result: ProductResult, manifest: DataFrame, out_dir: str) -> dict:
     """Execute the plan: compute the metadata aggregates (cell count A1,
     uuid/hbmid lists A2 — bin/concatenate.py:122-123,142-143) and write
-    the product directory."""
-    counts = result.obs.agg(
+    the product directory.  obs is checkpointed once; the counts and
+    every table written read that one result."""
+    obs = result.obs.transform(_ckpt_eager)
+    counts = obs.agg(
         F.count("*").alias("n_cells"),
         F.count_distinct("dataset").alias("n_datasets"),
     ).first()
@@ -166,7 +164,7 @@ def finalize_and_write(result: ProductResult, manifest: DataFrame, out_dir: str)
         "dataset_uuids": list(lists.uuids),
         "dataset_hbmids": list(lists.hbmids),
     }
-    write_product(out_dir, result.obs, result.modalities, metadata)
+    write_product(out_dir, obs, result.restricted_to(obs), metadata)
     return metadata
 
 
@@ -209,24 +207,23 @@ def append_dataset_to_product(
         crashed append re-executes safely; a plain append mode would
         duplicate rows).  Existing partitions are untouched bytes.
       - ``var_<modality>``: same — var holds per-dataset feature
-        CONTRIBUTIONS (build_product), so a re-added dataset whose new
-        version dropped features leaves no stale var rows.
+        CONTRIBUTIONS (ProductResult.restricted_to), so a re-added
+        dataset whose new version dropped features leaves no stale var
+        rows.
       - ``obs``: small (cell metadata); rewritten as (old minus this
-        dataset) ∪ new, with the lineage broken by localCheckpoint
+        dataset) ∪ new, with the lineage broken by an eager checkpoint
         before overwriting the path being read.
-      - ``product.json``: cell_count updated incrementally;
-        dataset_uuids / dataset_hbmids / dataset_count derived from the
-        datasets ACTUALLY PRESENT in the merged obs (manifest filtered
-        to them), so the metadata can never list datasets absent from
-        the data nor disagree with dataset_count.
+      - ``product.json``: cell_count, dataset_uuids / dataset_hbmids /
+        dataset_count derived from the merged obs (one aggregate over
+        its checkpoint; the manifest filtered to the datasets ACTUALLY
+        PRESENT), so the metadata can never list datasets absent from
+        the data nor disagree with the obs rows on disk.
     """
-    from ..sinks.writers import _join_uri, _write_text_uri
+    from ..sinks.writers import _join_uri, _read_text_uri, _write_text_uri
     import json as _json
 
     prev_meta = _json.loads(
-        spark.read.text(_join_uri(product_dir, "product.json"))
-        .agg(F.concat_ws("\n", F.collect_list("value")))
-        .first()[0]
+        _read_text_uri(spark, _join_uri(product_dir, "product.json"))
     )
     product_mods = set(prev_meta.get("modalities", []))
     new_mods = set(new_matrices_by_modality)
@@ -242,7 +239,6 @@ def append_dataset_to_product(
         # missing a product modality → zero intersected cells: removal
         mini_modalities: dict[str, tuple[DataFrame, DataFrame]] = {}
         new_obs = None
-        added = 0
     else:
         row = manifest.where(F.col("uuid") == dataset)
         mini = build_product(
@@ -250,13 +246,11 @@ def append_dataset_to_product(
             {mod: [df] for mod, df in new_matrices_by_modality.items()},
             tissue=tissue,
         )
-        mini_modalities = mini.modalities
-        new_obs = mini.obs
-        added = new_obs.count()
+        new_obs = mini.obs.transform(_ckpt_eager)
+        mini_modalities = mini.restricted_to(new_obs)
 
     old_obs = spark.read.parquet(_join_uri(product_dir, "obs"))
     obs_kept = old_obs.where(F.col("dataset") != dataset)
-    removed = old_obs.where(F.col("dataset") == dataset).count()
     merged_obs = (
         obs_kept.unionByName(new_obs) if new_obs is not None else obs_kept
     ).transform(_ckpt_eager)
@@ -289,19 +283,20 @@ def append_dataset_to_product(
         spark.conf.set(dyn_key, prev_mode)
     merged_obs.write.mode("overwrite").parquet(_join_uri(product_dir, "obs"))
 
-    # metadata lists derive from the data actually present: filter the
+    # metadata derives from the data actually present: filter the
     # manifest to the merged obs' datasets so uuids/hbmids/count agree
     # with the product by construction
-    present = [
-        r.dataset for r in merged_obs.select("dataset").distinct().collect()
-    ]
-    lists = manifest.where(F.col("uuid").isin(present)).agg(
+    summary = merged_obs.agg(
+        F.count("*").alias("n_cells"),
+        F.collect_set("dataset").alias("present"),
+    ).first()
+    lists = manifest.where(F.col("uuid").isin(summary.present)).agg(
         F.sort_array(F.collect_list("uuid")).alias("uuids"),
         F.sort_array(F.collect_list("hubmap_id")).alias("hbmids"),
     ).first()
     metadata = {
         **prev_meta,
-        "cell_count": int(prev_meta["cell_count"]) - removed + added,
+        "cell_count": summary.n_cells,
         "dataset_uuids": list(lists.uuids),
         "dataset_hbmids": list(lists.hbmids),
         "dataset_count": len(lists.uuids),

@@ -197,6 +197,21 @@ def _write_text_uri(spark, path: str, content: str) -> None:
         out.close()
 
 
+def _read_text_uri(spark, path: str) -> str:
+    """Read a small UTF-8 text file via the Hadoop FileSystem for
+    `path`'s scheme — the twin of _write_text_uri; runs no Spark job."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    buf = jvm.java.io.ByteArrayOutputStream()
+    inp = fs.open(jpath)
+    try:
+        jvm.org.apache.hadoop.io.IOUtils.copyBytes(inp, buf, 65536, False)
+    finally:
+        inp.close()
+    return bytes(buf.toByteArray()).decode("utf-8")
+
+
 def _check_h5mu_row_alignment(
     name: str, barcodes: list, obs_index: list
 ) -> None:
@@ -248,12 +263,12 @@ def export_h5mu(
 
     SCALE CONTRACT: a .h5mu is ONE file — inherently a single-writer
     artifact, exactly as the reference's muon call is.  The matrices are
-    intersected, aggregated and ORDERED in Spark (distributed shuffles),
-    and only the final CSR arrays stream to the driver for byte
-    assembly; still O(matrix) driver memory, so this is the
-    dataset-scoped interchange export.  The parquet product directory
-    (write_product) remains the 100 TB path; this sink exists so muon/
-    scanpy users can consume the product without this engine.
+    intersected in Spark (distributed shuffles); the surviving COO rows
+    stream to the driver, which sums duplicates and orders them
+    (_csr_from_coo) for byte assembly; O(matrix) driver memory, so
+    this is the dataset-scoped interchange export.  The parquet product
+    directory (write_product) remains the 100 TB path; this sink exists
+    so muon/scanpy users can consume the product without this engine.
 
     ``compression``: None (default) or ``"gzip"`` — deflate chunk-
     filters every modality's X arrays.  Deflate ONLY, no shuffle:
@@ -270,6 +285,7 @@ def export_h5mu(
     from pyspark.sql import functions as F
 
     from ..sources.hdf5_write import build_h5mu
+    from ..spill import ckpt_eager
 
     names = sorted(modalities)
     shared = None
@@ -278,7 +294,11 @@ def export_h5mu(
             F.col("cell_id").cast("string").alias("cell_id")
         ).distinct()
         shared = cells if shared is None else shared.join(cells, "cell_id")
-    obs_index = [r["cell_id"] for r in shared.orderBy("cell_id").collect()]
+    # computed once: every modality's semi-join below reads the
+    # checkpoint.  Python's code-point order equals Spark's UTF-8 byte
+    # order, and _csr_from_coo sorts its row axis the same way.
+    shared = shared.transform(ckpt_eager)
+    obs_index = sorted(r["cell_id"] for r in shared.collect())
     mod_tuples = {}
     for name in names:
         df = (
@@ -290,7 +310,6 @@ def export_h5mu(
                 F.col("feature_id").cast("string").alias("feature_id"),
                 F.col("value").cast("double").alias("value"),
             )
-            .orderBy("cell_id", "feature_id")
         )
         # shared assembly incl. duplicate (cell, feature) summation;
         # intersect-obs guarantees every obs_index cell has ≥1 entry in

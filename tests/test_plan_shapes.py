@@ -79,7 +79,9 @@ GLOBAL_WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
 # join must broadcast; a new SMJ key fails here until audited.
 SMJ_ALLOWLIST: dict[str, int] = {
     "cdc_merge_upsert": 1,
-    "dedup_cluster_chain_audit": 6,
+    # dedup_cluster_chain_audit left this list: its candidate pairs are
+    # eagerly checkpointed, so the fact-to-fact joins run below the
+    # checkpoint, outside the plan this scan sees (oracle-checked)
     "dedup_containment": 4,
     "dedup_incremental_probe": 4,
     "dedup_lsh_band_sweep": 3,

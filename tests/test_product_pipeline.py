@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -381,3 +382,129 @@ def test_append_new_modality_rejected(spark, tmp_path):
         append_dataset_to_product(
             spark, inc_dir, manifest, "ds2", with_extra, tissue="kidney"
         )
+
+
+def test_text_uri_round_trip(spark, tmp_path):
+    """_read_text_uri is the exact inverse of _write_text_uri through
+    the Hadoop FileSystem seam: multi-line, non-ASCII UTF-8 survives."""
+    from atac_data_products_spark.sinks.writers import (
+        _read_text_uri,
+        _write_text_uri,
+    )
+
+    uri = "file://" + str(tmp_path / "meta.json")
+    text = 'line one\n  "Größe": "ü",\n三行目 — ✓ 🧬\n\nlast'
+    _write_text_uri(spark, uri, text)
+    assert _read_text_uri(spark, uri) == text
+
+
+def _assert_metadata_matches_disk(spark, base):
+    meta = json.loads(open(os.path.join(base, "product.json")).read())
+    obs = spark.read.parquet(f"{base}/obs")
+    on_disk = sorted(r.dataset for r in obs.select("dataset").distinct().collect())
+    assert meta["cell_count"] == obs.count()
+    assert meta["dataset_count"] == len(on_disk)
+    assert meta["dataset_uuids"] == on_disk
+    return meta
+
+
+def test_append_sequence_metadata_matches_obs(spark, tmp_path):
+    """After a new append, a changed re-add and a removal, product.json's
+    cell_count and dataset_count equal the obs rows and datasets on
+    disk after every step (both derive from the merged obs)."""
+    from atac_data_products_spark.plans.product import append_dataset_to_product
+
+    manifest, mats = _fixtures(spark)
+    coo = "dataset string, barcode string, feature_id string, value double"
+    inc_dir = str(tmp_path / "inc")
+    m1 = manifest.where(F.col("uuid") == "ds1")
+    mats1 = {
+        mod: [df.where(F.col("dataset") == "ds1") for df in dfs]
+        for mod, dfs in mats.items()
+    }
+    finalize_and_write(
+        build_product(m1, mats1, tissue="kidney", product_uuid="p"), m1, inc_dir
+    )
+    _assert_metadata_matches_disk(spark, inc_dir)
+
+    ds2_new = {
+        "atac_cell_by_bin": spark.createDataFrame(
+            [("ds2", "CCCC", "chr2:0-500", 5.0), ("ds2", "DDDD", "chr2:0-500", 1.0)],
+            coo,
+        ),
+        "atac_cell_by_gene": spark.createDataFrame(
+            [("ds2", "CCCC", "GENE1", 2.0), ("ds2", "DDDD", "GENE1", 8.0)], coo
+        ),
+    }
+    ds2_changed = {
+        "atac_cell_by_bin": spark.createDataFrame(
+            [("ds2", "CCCC", "chr3:0-500", 6.0)], coo
+        ),
+        "atac_cell_by_gene": spark.createDataFrame(
+            [("ds2", "CCCC", "GENE2", 3.0), ("ds2", "EEEE", "GENE2", 1.0)], coo
+        ),
+    }
+    ds1_removal = {"atac_cell_by_bin": spark.createDataFrame(
+        [("ds1", "GGGT", "chr1:0-500", 3.0)], coo
+    )}
+    expected = [
+        ("ds2", ds2_new, 4, ["ds1", "ds2"]),
+        ("ds2", ds2_changed, 3, ["ds1", "ds2"]),
+        ("ds1", ds1_removal, 1, ["ds2"]),
+    ]
+    for ds, new, cells, datasets in expected:
+        meta = append_dataset_to_product(
+            spark, inc_dir, manifest, ds, new, tissue="kidney"
+        )
+        on_disk = _assert_metadata_matches_disk(spark, inc_dir)
+        assert meta == on_disk
+        assert meta["cell_count"] == cells
+        assert meta["dataset_uuids"] == datasets
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the async bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_product_job_counts(spark, tmp_path):
+    """Guard against re-executing the cell-set plan: build_product runs
+    no job, and finalize_and_write / a "new" append compute obs once
+    and derive every count and table from that result."""
+    from atac_data_products_spark.plans.product import append_dataset_to_product
+
+    manifest, mats = _fixtures(spark)
+    m1 = manifest.where(F.col("uuid") == "ds1")
+    mats1 = {
+        mod: [df.where(F.col("dataset") == "ds1") for df in dfs]
+        for mod, dfs in mats.items()
+    }
+    inc_dir = str(tmp_path / "inc")
+    result, build_jobs = _jobs_run(
+        spark, lambda: build_product(m1, mats1, tissue="kidney")
+    )
+    _, finalize_jobs = _jobs_run(
+        spark, lambda: finalize_and_write(result, m1, inc_dir)
+    )
+    new = {mod: dfs[-1].where(F.col("dataset") == "ds2") for mod, dfs in mats.items()}
+    _, append_jobs = _jobs_run(
+        spark,
+        lambda: append_dataset_to_product(
+            spark, inc_dir, manifest, "ds2", new, tissue="kidney"
+        ),
+    )
+    assert build_jobs == 0
+    # measured on this fixture (conftest session, local mode): 31 and 26
+    # jobs; re-running the intersection per count and write took 46 and 93
+    assert finalize_jobs <= 31
+    assert append_jobs <= 26

@@ -251,8 +251,6 @@ EXEMPT: dict[tuple[str, str], str] = {
     ("attribution_model_compare", "last_touch_credit"): "exact-unit-divide",
     ("attribution_model_compare", "linear_credit"): "exact-unit-divide",
     ("cohort_ltv_curve", "cum_revenue"): "exact-unit-divide",
-    ("dedup_cluster_chain_audit", "max_edge_jaccard"): "quantized-composition",
-    ("dedup_cluster_chain_audit", "min_edge_jaccard"): "quantized-composition",
     ("dedup_minhash_estimate_calibration", "abs_err"): "quantized-composition",
     ("dedup_minhash_estimate_calibration", "jaccard_est"): "exact-unit-divide",
     ("dedup_minhash_estimate_calibration", "jaccard_exact"): "quantized-composition",
