@@ -74,31 +74,16 @@ def minhash_signatures(
     shingles: DataFrame,
     id_col: str = "doc_id",
     k: int = MINHASH_K,
-    digest_col: str | None = None,
 ) -> DataFrame:
-    """Per-doc MinHash signature: k min-aggregates over one permuted base
-    hash — a single map-side-combinable aggregation, no UDFs.
+    """Per-doc MinHash signature over a :func:`digest_shingles` table: k
+    min-aggregates over one permuted base hash h = digest % 2^40 — a
+    single map-side-combinable aggregation, no UDFs.
 
     The k permutation expressions are built as SQL strings (one py4j
     call each, parsed JVM-side) rather than nested Column operations —
     the Column form spent ~1s of driver time on py4j round trips just
-    constructing this plan (measured sf0.1; semantics identical).
-
-    ``digest_col``: the 60-bit hash59 digest of the shingle, when the
-    caller already computed it (the digest-spill path).  The base hash
-    here is exactly ``hash59(shingle) % 2^40`` — same md5 substring,
-    same conv — so deriving h from the digest is value-identical to
-    deriving it from the shingle string."""
-    if digest_col is not None:
-        base = shingles.selectExpr(
-            id_col, f"{digest_col} % {_MASK40 + 1} AS h"
-        )
-    else:
-        base = shingles.selectExpr(
-            id_col,
-            "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)"
-            f" % {_MASK40 + 1} AS h",
-        )
+    constructing this plan (measured sf0.1; semantics identical)."""
+    base = shingles.selectExpr(id_col, f"shingle % {_MASK40 + 1} AS h")
     aggs = [
         F.expr(f"min((h * {a} + {b}) % {_P}) AS mh_{i}")
         for i, (a, b) in enumerate(_perm_params(k))
@@ -336,65 +321,53 @@ def jaccard_pairs(
     )
 
 
-def spilled_digest_shingles(
-    docs: DataFrame, text_col: str, id_col: str, path: str
+def digest_shingles(
+    docs: DataFrame,
+    sf_dir: str | None = None,
+    tag: str = "lsh_digest_shingles",
+    text_col: str = "text",
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """The LSH digest-spill (round-12 re-A/B of the round-5 decision at
-    64×, −15%/−10% wall on the two heaviest LSH keys): one parquet
-    write of (id, hash59-digest) 16-byte rows, then every consumer
-    scans the columnar spill instead of re-tokenizing + re-hashing the
-    corpus.  The round-5 sf0.1 A/B spilled the shingle STRINGS — the
-    digest rows are ~10× fewer bytes, and at 64× the tokenize+md5
-    recompute is three full corpus passes per key.  MinHash h =
-    hash59 % 2^40 (same md5 substring, pass digest_col="shingle" to
-    minhash_signatures) and the verify counts digest matches — the
-    engine-wide hash59 acceptance (collision odds 2^-60 per
-    co-occurring pair).  The digest column keeps the name "shingle" so
-    every downstream consumer (jaccard_pairs, containment_pairs) works
-    unchanged.  Callers share one spill per (session, corpus) via a
-    shared tag (spill.spill_root)."""
-    from ..spill import spill_once as _spill_once
+    """The LSH family's one shingle source: the (id, hash59 digest)
+    multiset of each doc's word 3-gram shingles.  The digest column
+    keeps the name "shingle", so :func:`minhash_signatures`,
+    :func:`jaccard_pairs` and :func:`containment_pairs` all take it.
 
-    return _spill_once(
-        shingle_table(docs, text_col, id_col, distinct=False).select(
-            id_col, hash59(F.col("shingle")).alias("shingle")
-        ),
-        docs.sparkSession,
-        path,
+    Digest contract: the MinHash base hash is h = digest % 2^40 (the
+    same md5 prefix as hashing the shingle string), and every verify
+    counts digest matches, not string matches — the engine-wide hash59
+    acceptance, collision odds 2^-60 per co-occurring pair.
+
+    With ``sf_dir`` given and a spill location available
+    (``spill.spill_root``), the 16-byte rows are written once per
+    session and (``tag``, ``sf_dir``), and every consumer scans that
+    parquet instead of re-tokenizing and re-hashing the corpus.
+    Otherwise the same rows come back lazily.  Keys over the same
+    corpus share the default tag; a different input (a gated subset)
+    needs its own."""
+    from ..spill import spill_once, spill_root
+
+    spark = docs.sparkSession
+    sh = shingle_table(docs, text_col, id_col, distinct=False).select(
+        id_col, hash59(F.col("shingle")).alias("shingle")
     )
+    path = None if sf_dir is None else spill_root(spark, tag, sf_dir)
+    return sh if path is None else spill_once(sh, spark, path)
 
 
 def minhash_lsh_dedup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
+    shingles: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.2,
     max_bucket_size: int | None = None,
-    digest_spill_path: str | None = None,
 ) -> DataFrame:
-    """Full MinHash→LSH→verify pipeline: near-dup pairs at scale.
+    """Full MinHash→LSH→verify pipeline over a :func:`digest_shingles`
+    table: near-dup pairs at scale.
 
-    The shingle table feeds three consumers (signatures, candidate-doc
-    restriction, intersection counts) and is deliberately RECOMPUTED per
-    consumer: five materialization/representation strategies have been
-    measured against the lazy recompute and all lost — block-cache
-    persist 3-4× slower (row-format materialization + lost broadcast
-    statistics), parquet spill slower for every LSH key (round-5 A/B:
-    3.47s vs 4.83s for this pipeline at sf0.1; the former spill_path
-    parameter was retired with its last caller), array-packed and
-    digest-keyed verifies parity-at-best (docs/PLAN_AUDIT.md).  The
-    signature branch additionally skips the distinct shuffle: min() is
-    duplicate-insensitive, so MinHash over the shingle *multiset* is
-    identical.
+    The signature branch consumes the shingle *multiset*: min() is
+    duplicate-insensitive, so no distinct shuffle is needed there.
     """
-    if digest_spill_path is not None:
-        sh_multiset = spilled_digest_shingles(
-            docs, text_col, id_col, digest_spill_path
-        )
-        sig = minhash_signatures(sh_multiset, id_col, digest_col="shingle")
-    else:
-        sh_multiset = shingle_table(docs, text_col, id_col, distinct=False)
-        sig = minhash_signatures(sh_multiset, id_col)
+    sig = minhash_signatures(shingles, id_col)
     # keep the candidate distinct: near-dup pairs collide in MANY bands,
     # so one dedup shuffle of the multiset bounds both downstream
     # semi-join shuffles by the unique-pair set (measured sf0.1: parity;
@@ -402,7 +375,7 @@ def minhash_lsh_dedup_pairs(
     cand = lsh_candidate_pairs(sig, id_col, max_bucket_size=max_bucket_size)
     # verification also consumes the multiset: jaccard_pairs distinct-s it
     # AFTER the candidate restriction, so no full-corpus dedup shuffle runs
-    return jaccard_pairs(sh_multiset, id_col, threshold, candidates=cand)
+    return jaccard_pairs(shingles, id_col, threshold, candidates=cand)
 
 
 def duplicate_clusters(

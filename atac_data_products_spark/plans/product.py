@@ -219,7 +219,12 @@ def append_dataset_to_product(
         PRESENT), so the metadata can never list datasets absent from
         the data nor disagree with the obs rows on disk.
     """
-    from ..sinks.writers import _join_uri, _read_text_uri, _write_text_uri
+    from ..sinks.writers import (
+        _delete_uri,
+        _join_uri,
+        _read_text_uri,
+        _write_text_uri,
+    )
     import json as _json
 
     prev_meta = _json.loads(
@@ -308,13 +313,3 @@ def append_dataset_to_product(
         _json.dumps(metadata, indent=2, sort_keys=True),
     )
     return metadata
-
-
-def _delete_uri(spark, path: str) -> None:
-    """Recursively delete `path` via the Hadoop FileSystem for its
-    scheme (no-op if absent) — works for file://, hdfs://, s3a:// alike."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)

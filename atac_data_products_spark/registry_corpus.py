@@ -929,24 +929,17 @@ def corpus_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap test pins."""
     from .extensions.dedup import (
         LSH_MAX_BUCKET,
+        digest_shingles,
         duplicate_clusters,
         minhash_lsh_dedup_pairs,
     )
     from .registry_ext import JACCARD_THRESHOLD
 
-    # Digest spill (round-12 64× re-A/B of the round-5 string-spill
-    # decision — see dedup_minhash_lsh and docs/SCALE_SWEEP.md r12)
-    from .spill import spill_root as _spill_root
-
     docs = _t(spark, sf_dir, "documents")
     edges = minhash_lsh_dedup_pairs(
-        docs,
+        digest_shingles(docs, sf_dir),
         threshold=JACCARD_THRESHOLD,
         max_bucket_size=LSH_MAX_BUCKET,
-        # tag shared with dedup_minhash_lsh: same digest multiset
-        digest_spill_path=_spill_root(
-            spark, "lsh_digest_shingles", sf_dir
-        ),
     ).select("doc_a", "doc_b")
     dup = duplicate_clusters(edges)  # (doc_id, cluster_id), members only
     sized = dup.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
@@ -2180,9 +2173,9 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     under its standalone key — composition adds no new shuffle."""
     from .extensions.dedup import (
         LSH_MAX_BUCKET,
+        digest_shingles,
         duplicate_clusters,
         minhash_lsh_dedup_pairs,
-        spilled_digest_shingles,
     )
     from .extensions.text import tokens, word_shingles
     from .functions.hashes import hash59
@@ -2204,23 +2197,12 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (avg_tok_len <= _QG_MAX_AVG_TOK_LEN)
         & (F.col("source") != "src9")
     )
-    # round-12: the composition recomputed the gate+tokenize+shingle
-    # subtree per consumer (~6 full corpus passes: signatures, verify,
-    # survivor window, singleton anti-join, train shingles, final
-    # n_tokens — stage attribution showed 4 stages of 8-17 exec-s each,
-    # all re-deriving the same subtree).  The round's digest spill
-    # (16-byte hash59 rows, own tag — the GATED multiset differs from
-    # the standalone keys' full-corpus spill) now feeds the LSH
-    # signatures, the verify probes, AND the contamination train side
-    # (digest equality == shingle equality under the engine-wide hash59
-    # acceptance, collision odds 2^-60 per co-occurring pair); a second
-    # tiny per-doc spill carries (doc_id, source, n_tokens) for the
-    # gate-membership consumers.  The r4/r5 "recompute beats spill"
-    # A/B that kept this key spill-free measured the shingle-STRING
-    # spill; the digest re-A/B is in OPTIMIZATION_r12.md.  Without
-    # executor-visible storage (spill_root None) every consumer
-    # degrades to the lazy recompute unchanged.
-    spill_path = _spill_root(spark, "lsh_digest_shingles_gated", sf_dir)
+    # the gate+tokenize+shingle subtree has ~6 consumers (signatures,
+    # verify, survivor window, singleton anti-join, train shingles,
+    # final n_tokens): the gated digest multiset (own tag — it differs
+    # from the full-corpus table) feeds the LSH stages AND the
+    # contamination train side, and a tiny per-doc spill carries
+    # (doc_id, source, n_tokens) for the gate-membership consumers
     gate_tbl = gated.select(
         "doc_id", "source", F.size(toks).cast("bigint").alias("n_tokens")
     )
@@ -2243,11 +2225,11 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pool = ThreadPoolExecutor(max_workers=1)
         gate_fut = _pool.submit(_spill_once, gate_tbl, spark, gate_path)
         _pool.shutdown(wait=False)
+    sh = digest_shingles(gated, sf_dir, tag="lsh_digest_shingles_gated")
     edges = minhash_lsh_dedup_pairs(
-        gated,
+        sh,
         threshold=JACCARD_THRESHOLD,
         max_bucket_size=LSH_MAX_BUCKET,
-        digest_spill_path=spill_path,
     ).select("doc_a", "doc_b")
     dup = duplicate_clusters(edges)  # edge members only
     if gate_fut is not None:
@@ -2268,32 +2250,16 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate_tbl.select("doc_id").join(dup.select("doc_id"), "doc_id", "left_anti")
     )
 
-    def _sh_of(df, *keep):
-        toked = df.select(*keep, tokens("text").alias("__toks"))
-        return toked.select(
-            *keep,
-            F.explode(word_shingles(F.col("__toks"), 3)).alias("shingle"),
-        ).where(F.col("shingle") != "")
-
-    bench = _sh_of(d.where(F.col("source") == "src9")).select(
-        F.col("shingle").alias("b_sh")
+    bench = (
+        d.where(F.col("source") == "src9")
+        .select(tokens("text").alias("__toks"))
+        .select(F.explode(word_shingles(F.col("__toks"), 3)).alias("shingle"))
+        .where(F.col("shingle") != "")
+        .select(hash59(F.col("shingle")).alias("b_sh"))
     )
-    if spill_path is not None:
-        # contamination over digests from the shared spill: survivors
-        # are gated, so the gated multiset covers every train doc; the
-        # distinct collapses it to per-doc shingle-set semantics
-        train_sh = (
-            spilled_digest_shingles(gated, "text", "doc_id", spill_path)
-            .distinct()
-            .join(surv, "doc_id")
-        )
-        bench = bench.select(hash59(F.col("b_sh")).alias("b_sh"))
-    else:
-        train_sh = (
-            _sh_of(d.where(F.col("source") != "src9"), "doc_id")
-            .distinct()
-            .join(surv, "doc_id")
-        )
+    # survivors are gated, so the gated multiset covers every train doc;
+    # the distinct collapses it to per-doc shingle-set semantics
+    train_sh = sh.distinct().join(surv, "doc_id")
     hit = train_sh.join(
         _bench_shingles_maybe_broadcast(spark, d, bench.distinct()),
         train_sh.shingle == F.col("b_sh"),

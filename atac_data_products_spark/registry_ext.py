@@ -23,6 +23,7 @@ from .extensions.dedup import (
     _MASK40,
     _P,
     _perm_params,
+    digest_shingles,
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_dedup_pairs,
@@ -297,8 +298,7 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (k={k}): one map-side-combinable aggregation of
     k universal-hash permutations over the portable shingle hash — exact,
     deterministic, oracle-checked bit-for-bit.""".format(k=MINHASH_K)
-    sh = shingle_table(_t(spark, sf_dir, "documents"))
-    return minhash_signatures(sh)
+    return minhash_signatures(digest_shingles(_t(spark, sf_dir, "documents")))
 
 
 def _lsh_dedup_oracle(max_bucket_size: int | None = None) -> str:
@@ -381,37 +381,22 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding AND the cap from the same constants, so even this
     approximate path is value-checked; its exact brute-force twin is
     dedup_ngram_jaccard, its uncapped form dedup_minhash_lsh_exact."""
-    # Spill history: the round-5 A/B spilled the shingle STRING multiset
-    # and lost at sf0.1 (4.83s vs 3.47s).  Round 12 re-ran the A/B at
-    # 64× per the r11 verdict with a DIGEST spill instead — 16-byte
-    # (id, hash59) rows, ~10× fewer bytes, feeding all three consumers
-    # (h = digest % 2^40; verify counts digest matches — the engine-wide
-    # hash59 acceptance).  Result: docs/SCALE_SWEEP.md round 12.
-    from .spill import spill_root as _spill_root
-
     return minhash_lsh_dedup_pairs(
-        _t(spark, sf_dir, "documents"),
+        digest_shingles(_t(spark, sf_dir, "documents"), sf_dir),
         threshold=JACCARD_THRESHOLD,
         max_bucket_size=LSH_MAX_BUCKET,
-        # tag shared with corpus_dedup_survivors: both spill the SAME
-        # digest multiset, so one write serves both keys per session
-        digest_spill_path=_spill_root(spark, "lsh_digest_shingles", sf_dir),
     )
 
 
 @query("dedup_minhash_lsh_exact", oracle=_lsh_dedup_oracle())
 def dedup_minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verification twin: the uncapped all-pairs LSH pipeline (exact
-    within-bucket semantics, quadratic on pathological buckets) — kept
-    as a second contract so the capped production path is auditable
-    against it.  Rides the shared digest spill (round-13 continuation:
-    one write per session serves the whole LSH family)."""
-    from .spill import spill_root as _spill_root
-
+    """Verification twin: the uncapped all-pairs LSH pipeline
+    (digest-exact within-bucket semantics — see digest_shingles —
+    quadratic on pathological buckets) — kept as a second contract so
+    the capped production path is auditable against it."""
     return minhash_lsh_dedup_pairs(
-        _t(spark, sf_dir, "documents"),
+        digest_shingles(_t(spark, sf_dir, "documents"), sf_dir),
         threshold=JACCARD_THRESHOLD,
-        digest_spill_path=_spill_root(spark, "lsh_digest_shingles", sf_dir),
     )
 
 
@@ -421,13 +406,10 @@ def dedup_minhash_lsh_star_stress(spark: SparkSession, sf_dir: str) -> DataFrame
     real buckets reach size 5, so the star path FIRES here and the
     oracle value-checks its exact output — driver-gradable evidence the
     capped plan is correct, not just bounded."""
-    from .spill import spill_root as _spill_root
-
     return minhash_lsh_dedup_pairs(
-        _t(spark, sf_dir, "documents"),
+        digest_shingles(_t(spark, sf_dir, "documents"), sf_dir),
         threshold=JACCARD_THRESHOLD,
         max_bucket_size=3,
-        digest_spill_path=_spill_root(spark, "lsh_digest_shingles", sf_dir),
     )
 
 
@@ -458,21 +440,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash banding (signatures track Jaccard, so low-Jaccard supersets
     must collide in some band to be candidates); the deterministic
     pipeline keeps even that approximate semantics value-checked."""
-    from .extensions.dedup import containment_pairs, lsh_candidate_pairs, spilled_digest_shingles
-    from .spill import spill_root as _spill_root
+    from .extensions.dedup import containment_pairs, lsh_candidate_pairs
 
-    docs = _t(spark, sf_dir, "documents")
-    # shared digest spill (round-13 continuation — same tag as the
-    # graded LSH keys; the verify counts digest matches, the
-    # engine-wide hash59 acceptance)
-    spill_path = _spill_root(spark, "lsh_digest_shingles", sf_dir)
-    if spill_path is not None:
-        sh = spilled_digest_shingles(docs, "text", "doc_id", spill_path)
-        sig = minhash_signatures(sh, digest_col="shingle")
-    else:
-        sh = shingle_table(docs, distinct=False)
-        sig = minhash_signatures(sh)
-    cand = lsh_candidate_pairs(sig, max_bucket_size=LSH_MAX_BUCKET)
+    sh = digest_shingles(_t(spark, sf_dir, "documents"), sf_dir)
+    cand = lsh_candidate_pairs(minhash_signatures(sh), max_bucket_size=LSH_MAX_BUCKET)
     return containment_pairs(sh, cand, threshold=CONTAINMENT_THRESHOLD)
 
 
@@ -514,26 +485,14 @@ def dedup_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> Data
     the doc key); exact values come from the same pair-driven verify as
     the graded dedup path; everything downstream of candidate
     generation is linear in the candidate set."""
-    from .extensions.dedup import lsh_candidate_pairs, spilled_digest_shingles
+    from .extensions.dedup import lsh_candidate_pairs
     from .spill import ckpt_eager as _ckpt_eager
-    from .spill import spill_root as _spill_root
 
-    docs = _t(spark, sf_dir, "documents")
-    # round-13 continuation: the gate-log lens surfaced this as the
-    # heaviest registry key at sf0.1 (~29 s isolated) — `cand` is
-    # consumed by BOTH the estimate join and the exact verify, and
-    # `sig`/`sh` re-derived per reference with no spill, so the whole
-    # tokenize→signature→bucket pipeline ran ~3×.  Shared digest spill
-    # (one write per session, same tag as the graded LSH keys) + an
-    # eager checkpoint of the small candidate-pair set — the exact
-    # pattern the chain audit landed this round.
-    spill_path = _spill_root(spark, "lsh_digest_shingles", sf_dir)
-    if spill_path is not None:
-        sh = spilled_digest_shingles(docs, "text", "doc_id", spill_path)
-        sig = minhash_signatures(sh, digest_col="shingle")
-    else:
-        sh = shingle_table(docs, distinct=False)
-        sig = minhash_signatures(sh)
+    sh = digest_shingles(_t(spark, sf_dir, "documents"), sf_dir)
+    sig = minhash_signatures(sh)
+    # `cand` feeds both the estimate join and the exact verify: one
+    # eager checkpoint of the small pair set instead of running the
+    # signature→bucket pipeline per consumer
     cand = lsh_candidate_pairs(sig, max_bucket_size=LSH_MAX_BUCKET).transform(
         _ckpt_eager
     )
@@ -2585,21 +2544,13 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     here both sides derive in-plan from the same table so the contract
     is self-contained.  Verification is the same candidate-restricted
     exact-Jaccard as the graded LSH contract."""
-    from .extensions.dedup import lsh_probe_pairs, spilled_digest_shingles
-    from .spill import spill_root as _spill_root
+    from .extensions.dedup import lsh_probe_pairs
 
-    docs = _t(spark, sf_dir, "documents")
-    # digest spill, shared tag with the other LSH keys (round-12 128×
-    # attribution: this key's two heaviest stages were the DUPLICATED
-    # tokenize+md5 subtree — 84 + 69 exec-s at 128× — plus a 2.2 GB
-    # string-shingle verify shuffle that 16-byte digests shrink ~4×)
-    path = _spill_root(spark, "lsh_digest_shingles", sf_dir)
-    if path is not None:
-        sh = spilled_digest_shingles(docs, "text", "doc_id", path)
-        sig = minhash_signatures(sh, "doc_id", digest_col="shingle")
-    else:
-        sh = shingle_table(docs, "text", "doc_id", distinct=False)
-        sig = minhash_signatures(sh, "doc_id")
+    # spilled digests (128× attribution: this key's two heaviest stages
+    # were the DUPLICATED tokenize+md5 subtree — 84 + 69 exec-s — plus a
+    # 2.2 GB string-shingle verify shuffle that 16-byte digests shrink ~4×)
+    sh = digest_shingles(_t(spark, sf_dir, "documents"), sf_dir)
+    sig = minhash_signatures(sh, "doc_id")
     flagged = sig.withColumn("__is_new", F.col("doc_id") % 10 == 0)
     cand = lsh_probe_pairs(flagged, "__is_new", "doc_id")
     cand_ab = cand.select(

@@ -528,7 +528,8 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   measured 25.2s vs 17.4s, with ZERO extra candidate pruning.
     # - SUFFIX filter (PPJoin+): would prune 44.5% of surviving
     #   candidates at the paper's depth 2 (98.4% at depth 4), measured
-    #   exactly offline by tools/suffix_probe.py — but it needs
+    #   exactly offline (docs/SCALE_SWEEP.md, "Round-12: the PPJoin
+    #   suffix-filter adjudication") — but it needs
     #   pair-specific access to ordered suffix arrays.
     # - FIXED-BOUNDARY HISTOGRAM filter (the pair-independent-payload
     #   stand-in: overlap ≤ Σ_k min(h_x[k], h_y[k]) over top-digest-bit
@@ -2880,36 +2881,21 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared eval-at-scale path).
     """
     from .extensions.dedup import (
+        digest_shingles,
         jaccard_pairs,
         lsh_candidate_pairs,
         minhash_signatures,
-        spilled_digest_shingles,
     )
-    from .extensions.text import shingle_table
     from .spill import ckpt_eager as _ckpt_eager
-    from .spill import spill_root as _spill_root
 
-    docs = _t(spark, sf_dir, "documents")
-    # round-13 continuation (gate-log lens): the lazy composition
-    # re-derived the corpus pipeline per reference — sig feeds three
-    # configs, the exact ground truth fed up to SIX consumers (hits
-    # join + truth count per config), and each config's candidate set
-    # was consumed twice (count + hits join).  Three fixes, all
-    # established patterns: the shared digest spill for the shingle
-    # table; an eager checkpoint of the (tiny, threshold-filtered)
-    # truth pair set; and ONE left-join aggregate per config computing
-    # n_candidates and n_hits in a single pass over cand.
-    spill_path = _spill_root(spark, "lsh_digest_shingles", sf_dir)
-    if spill_path is not None:
-        sh_multi = spilled_digest_shingles(docs, "text", "doc_id", spill_path)
-        sh_set = sh_multi.distinct()
-        sig = minhash_signatures(sh_multi, digest_col="shingle")
-    else:
-        sh_multi = shingle_table(docs, distinct=False)
-        sh_set = shingle_table(docs, distinct=True)
-        sig = minhash_signatures(sh_multi)
+    sh = digest_shingles(_t(spark, sf_dir, "documents"), sf_dir)
+    sig = minhash_signatures(sh)
+    # the exact ground truth feeds a hits join and a truth count per
+    # config: one eager checkpoint of the (tiny, threshold-filtered)
+    # pair set; each config then computes n_candidates and n_hits in
+    # ONE left-join aggregate over its candidate set
     truth = (
-        jaccard_pairs(sh_set, threshold=SWEEP_THRESHOLD)
+        jaccard_pairs(sh.distinct(), threshold=SWEEP_THRESHOLD)
         .select("doc_a", "doc_b")
         .transform(_ckpt_eager)
     )
@@ -6108,30 +6094,21 @@ def dedup_cluster_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .extensions.dedup import (
         LSH_MAX_BUCKET,
         connected_components,
+        digest_shingles,
         minhash_lsh_dedup_pairs,
     )
     from .registry_ext import JACCARD_THRESHOLD
     from .spill import ckpt_eager as _ckpt_eager
-    from .spill import spill_root as _spill_root
 
     docs = _t(spark, sf_dir, "documents")
-    # round-13 continuation: this key was the slowest non-headline
-    # registry entry (7.6 s isolated at sf0.1 vs 3.0 for
-    # dedup_minhash_lsh) for two plan reasons, both fixed with the
-    # engine's established patterns rather than anything new:
-    # (a) it was the one production-LSH caller NOT riding the shared
-    #     digest spill, so every consumer branch re-tokenized the
-    #     corpus (the r12 64× adjudication that added the spill to its
-    #     siblings applies verbatim — same tag, one write per session);
-    # (b) `pairs` feeds BOTH the cluster map and the per-cluster edge
-    #     rollup, so the banded join + packed verify ran per consumer;
-    #     an eager checkpoint materializes the (small, dup-only) pair
-    #     set once — the pagerank edge-checkpoint adjudication shape.
+    # `pairs` feeds BOTH the cluster map and the per-cluster edge
+    # rollup: an eager checkpoint materializes the (small, dup-only)
+    # pair set once instead of running the banded join + verify per
+    # consumer — the pagerank edge-checkpoint adjudication shape
     pairs = minhash_lsh_dedup_pairs(
-        docs,
+        digest_shingles(docs, sf_dir),
         threshold=JACCARD_THRESHOLD,
         max_bucket_size=LSH_MAX_BUCKET,
-        digest_spill_path=_spill_root(spark, "lsh_digest_shingles", sf_dir),
     ).transform(_ckpt_eager)
     cc = connected_components(docs.select("doc_id"), pairs.select("doc_a", "doc_b"))
     sized = cc.groupBy("cluster_id").agg(F.count("*").alias("n_members"))

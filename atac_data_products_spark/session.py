@@ -24,6 +24,25 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def sweep_conf() -> dict[str, str]:
+    """Spark conf pairs from ``ADP_SWEEP_CONF``, the conf-sweep seam of
+    the tools: comma-separated ``k=v`` pairs with whitespace stripped.
+    Empty segments are ignored.  A segment without ``=`` — what a value
+    containing a comma turns into — raises ValueError naming it, instead
+    of being dropped."""
+    raw = os.environ.get("ADP_SWEEP_CONF", "")
+    conf = {}
+    for seg in filter(None, (s.strip() for s in raw.split(","))):
+        if "=" not in seg:
+            raise ValueError(
+                f"ADP_SWEEP_CONF segment {seg!r} is not k=v "
+                "(a value cannot contain a comma)"
+            )
+        k, v = seg.split("=", 1)
+        conf[k.strip()] = v.strip()
+    return conf
+
+
 def get_spark(
     app_name: str = "atac-data-products-spark",
     master: str | None = None,

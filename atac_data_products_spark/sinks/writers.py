@@ -184,32 +184,49 @@ def _join_uri(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
-def _write_text_uri(spark, path: str, content: str) -> None:
-    """Write a small text file via the Hadoop FileSystem for `path`'s
-    scheme — driver-side metadata only, never bulk data."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+# Driver-side file helpers over the Hadoop FileSystem for a path's
+# scheme, so file://, hdfs:// and s3a:// all work.  They run no Spark
+# job and are for small files (metadata, the .h5mu blob), never bulk data.
+
+
+def _hadoop_path(spark, path: str):
+    """(FileSystem, Path) for `path`."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _write_bytes_uri(spark, path: str, content: bytes) -> None:
+    """Write `content` to `path`, overwriting it."""
+    fs, jpath = _hadoop_path(spark, path)
     out = fs.create(jpath, True)
     try:
-        out.write(bytearray(content.encode("utf-8")))
+        out.write(bytearray(content))
     finally:
         out.close()
 
 
+def _write_text_uri(spark, path: str, content: str) -> None:
+    """Write `content` to `path` as UTF-8, overwriting it."""
+    _write_bytes_uri(spark, path, content.encode("utf-8"))
+
+
 def _read_text_uri(spark, path: str) -> str:
-    """Read a small UTF-8 text file via the Hadoop FileSystem for
-    `path`'s scheme — the twin of _write_text_uri; runs no Spark job."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    buf = jvm.java.io.ByteArrayOutputStream()
+    """Read the UTF-8 text file at `path`."""
+    fs, jpath = _hadoop_path(spark, path)
+    buf = spark._jvm.java.io.ByteArrayOutputStream()
     inp = fs.open(jpath)
     try:
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(inp, buf, 65536, False)
+        spark._jvm.org.apache.hadoop.io.IOUtils.copyBytes(inp, buf, 65536, False)
     finally:
         inp.close()
     return bytes(buf.toByteArray()).decode("utf-8")
+
+
+def _delete_uri(spark, path: str) -> None:
+    """Recursively delete `path` (no-op if absent)."""
+    fs, jpath = _hadoop_path(spark, path)
+    if fs.exists(jpath):
+        fs.delete(jpath, True)
 
 
 def _check_h5mu_row_alignment(
@@ -342,16 +359,3 @@ def export_h5mu(
         "n_obs": len(obs_index),
         "modalities": {n: len(mod_tuples[n][1]) for n in names},
     }
-
-
-def _write_bytes_uri(spark, path: str, content: bytes) -> None:
-    """Binary twin of _write_text_uri — same Hadoop FileSystem seam, so
-    file:// local paths and s3a:// both work."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(content))
-    finally:
-        out.close()

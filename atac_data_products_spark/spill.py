@@ -3,7 +3,7 @@
 A handful of queries round-trip an intermediate relation through parquet
 ("columnar spill") because a block-cache persist was measured slower
 than either recompute or a dictionary-encoded re-scan (see
-extensions/dedup.minhash_lsh_dedup_pairs and the prefix-filter join in
+extensions/dedup.digest_shingles and the prefix-filter join in
 registry_scale).  Round 4 built those paths under
 ``tempfile.gettempdir()`` — correct on ``local[*]`` where driver and
 executors share one filesystem, but a latent correctness hazard on a

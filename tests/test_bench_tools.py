@@ -13,6 +13,8 @@ from __future__ import annotations
 import json
 import sys
 
+import pytest
+
 sys.path.insert(0, "tools")
 
 import bench_diff  # noqa: E402
@@ -132,3 +134,18 @@ def test_json_report_marks_new_and_gone(tmp_path, monkeypatch):
     assert doc["per_query"]["gone_q"]["status"] == "gone"
     assert doc["per_query"]["new_q"]["status"] == "new"
     assert doc["n_common"] == 1
+
+
+def test_sweep_conf_parses_pairs_and_rejects_bare_segments(monkeypatch):
+    """ADP_SWEEP_CONF is parsed in one place: whitespace is stripped,
+    empty segments are ignored, and a segment without '=' (a value
+    split at its comma) is an error instead of a silent drop."""
+    from atac_data_products_spark.session import sweep_conf
+
+    monkeypatch.delenv("ADP_SWEEP_CONF", raising=False)
+    assert sweep_conf() == {}
+    monkeypatch.setenv("ADP_SWEEP_CONF", " a.b = 1 ,, c=x=y ,")
+    assert sweep_conf() == {"a.b": "1", "c": "x=y"}
+    monkeypatch.setenv("ADP_SWEEP_CONF", "spark.master=local-cluster[2,8,8192]")
+    with pytest.raises(ValueError, match="'8'"):
+        sweep_conf()

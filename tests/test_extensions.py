@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from atac_data_products_spark.extensions.dedup import (
+    digest_shingles,
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_dedup_pairs,
@@ -55,7 +56,7 @@ def test_minhash_lsh_finds_near_duplicates(spark):
     near = " ".join(f"tok{i}" for i in range(39)) + " changed"
     far = " ".join(f"other{i}" for i in range(40))
     docs = _docs(spark, [(1, base), (2, near), (3, far)])
-    pairs = minhash_lsh_dedup_pairs(docs, threshold=0.5).collect()
+    pairs = minhash_lsh_dedup_pairs(digest_shingles(docs), threshold=0.5).collect()
     assert [(p.doc_a, p.doc_b) for p in pairs] == [(1, 2)]
 
 

@@ -40,6 +40,29 @@ def test_query_matches_oracle(key, spark, duck):
     assert verdict == "OK", f"{key}: {verdict}"
 
 
+# keys whose shingle source spills by default: with spill off,
+# digest_shingles hands them the same rows lazily
+SPILL_OFF_KEYS = [
+    "dedup_minhash_lsh",
+    "dedup_containment",
+    "dedup_minhash_estimate_calibration",
+    "dedup_incremental_probe",
+    "dedup_lsh_band_sweep",
+    "corpus_pipeline_e2e",
+]
+
+
+@pytest.mark.parametrize("key", SPILL_OFF_KEYS)
+def test_query_matches_oracle_with_spill_off(key, spark, duck):
+    spark.conf.set("adp.spill.enabled", "false")
+    try:
+        sdf = QUERIES[key](spark, SF_SMALL).toPandas()
+    finally:
+        spark.conf.unset("adp.spill.enabled")
+    verdict = compare(key, sdf, duck.execute(ORACLES[key]).df())
+    assert verdict == "OK", f"{key}: {verdict}"
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -16,6 +16,7 @@ def empty_docs(spark):
 
 def test_dedup_ops_on_empty(spark, empty_docs):
     from atac_data_products_spark.extensions.dedup import (
+        digest_shingles,
         exact_dedup,
         jaccard_pairs,
         minhash_lsh_dedup_pairs,
@@ -26,7 +27,7 @@ def test_dedup_ops_on_empty(spark, empty_docs):
     assert exact_dedup(empty_docs).count() == 0
     assert simhash(empty_docs).count() == 0
     assert jaccard_pairs(shingle_table(empty_docs)).count() == 0
-    assert minhash_lsh_dedup_pairs(empty_docs).count() == 0
+    assert minhash_lsh_dedup_pairs(digest_shingles(empty_docs)).count() == 0
 
 
 def test_text_ops_on_empty_and_whitespace(spark):

@@ -59,10 +59,10 @@ def test_lsh_hot_bucket_capped_to_star_edges(spark):
     connected components still merges the whole cluster."""
     from atac_data_products_spark.extensions.dedup import (
         connected_components,
+        digest_shingles,
         lsh_candidate_pairs,
         minhash_signatures,
     )
-    from atac_data_products_spark.extensions.text import shingle_table
 
     # 800 docs with identical boilerplate text (one shingle set → one
     # bucket per band) + 4200 token-disjoint background docs (every
@@ -84,7 +84,7 @@ def test_lsh_hot_bucket_capped_to_star_edges(spark):
         )
         .alias("text"),
     )
-    sig = minhash_signatures(shingle_table(docs, "text", "doc_id", distinct=False))
+    sig = minhash_signatures(digest_shingles(docs))
 
     capped = lsh_candidate_pairs(sig, max_bucket_size=100)
     edges = capped.collect()
@@ -109,7 +109,10 @@ def test_capped_pipeline_linear_end_to_end(spark):
     pair-driven verification keeps intermediate rows linear in it (the
     inverted-index form restricted to candidate docs would be quadratic
     again, because all 800 boilerplate docs share every shingle)."""
-    from atac_data_products_spark.extensions.dedup import minhash_lsh_dedup_pairs
+    from atac_data_products_spark.extensions.dedup import (
+        digest_shingles,
+        minhash_lsh_dedup_pairs,
+    )
 
     docs = spark.range(2000).select(
         F.col("id").alias("doc_id"),
@@ -128,7 +131,9 @@ def test_capped_pipeline_linear_end_to_end(spark):
         )
         .alias("text"),
     )
-    pairs = minhash_lsh_dedup_pairs(docs, threshold=0.2, max_bucket_size=100)
+    pairs = minhash_lsh_dedup_pairs(
+        digest_shingles(docs), threshold=0.2, max_bucket_size=100
+    )
     rows = pairs.collect()
     # exactly the 799 star pairs, each verified at jaccard 1.0; the
     # token-disjoint background contributes nothing

@@ -321,3 +321,44 @@ def test_spill_once_records_write_seconds(spark, tmp_path):
     assert spill_mod.spill_write_seconds_total() > before_total
     spill_mod.spill_once(df, spark, path)  # _SUCCESS exists: no write
     assert spill_mod.SPILL_WRITE_SECONDS[path] == first
+
+
+def test_digest_shingles_rows_same_with_and_without_spill(spark, tmp_path):
+    """digest_shingles is the LSH family's one shingle source: the lazy
+    rows (no sf_dir), the spill-off rows and the spilled rows are the
+    same (id, hash59 digest) multiset, and a second spilled call on the
+    same (tag, sf_dir) scans the first call's write instead of writing."""
+    import hashlib
+
+    import atac_data_products_spark.spill as spill_mod
+    from atac_data_products_spark.extensions.dedup import digest_shingles
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d a b c"), (2, "x y z"), (3, "one two"), (4, "")],
+        "doc_id bigint, text string",
+    )
+    sf_dir = str(tmp_path / "corpus")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    lazy = rows(digest_shingles(docs))
+    spark.conf.set("adp.spill.enabled", "false")
+    try:
+        off = rows(digest_shingles(docs, sf_dir))
+    finally:
+        spark.conf.unset("adp.spill.enabled")
+    before = spill_mod.spill_write_seconds_total()
+    on = rows(digest_shingles(docs, sf_dir))
+    written = spill_mod.spill_write_seconds_total()
+    again = rows(digest_shingles(docs, sf_dir))
+    assert written > before
+    assert spill_mod.spill_write_seconds_total() == written
+    assert lazy == off == on == again
+
+    def h59(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    shingles = [(1, "a b c"), (1, "b c d"), (1, "c d a"), (1, "d a b"),
+                (1, "a b c"), (2, "x y z")]
+    assert lazy == sorted((i, h59(s)) for i, s in shingles)

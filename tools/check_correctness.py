@@ -52,7 +52,7 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
-from atac_data_products_spark.session import get_spark  # noqa: E402
+from atac_data_products_spark.session import get_spark, sweep_conf as _sweep_conf  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -250,14 +250,7 @@ def main() -> int:
 
     qs, os_ = queries(), oracle_sql()
     keys = sys.argv[2:] or list(qs)
-    sweep_conf = {
-        k.strip(): v.strip()
-        for k, v in (
-            pair.split("=", 1)
-            for pair in os.environ.get("ADP_SWEEP_CONF", "").split(",")
-            if "=" in pair
-        )
-    }
+    sweep_conf = _sweep_conf()
     if sweep_conf:
         print(f"conf-invariance sweep: {sweep_conf}")
     chaos_prob = float(os.environ.get("ADP_CHAOS_KILL", "0") or 0)

@@ -45,7 +45,7 @@ sys.path.insert(0, "tools")
 
 from check_correctness import compare, duck_connect  # noqa: E402
 
-from atac_data_products_spark.session import get_spark  # noqa: E402
+from atac_data_products_spark.session import get_spark, sweep_conf as _sweep_conf  # noqa: E402
 
 
 def main() -> int:
@@ -59,16 +59,7 @@ def main() -> int:
     # concurrent sweep in reliable-checkpoint mode, where the
     # setCheckpointDir/release machinery is itself session-global state
     # under concurrent load
-    import os as _os
-
-    sweep_conf = {
-        k.strip(): v.strip()
-        for k, v in (
-            pair.split("=", 1)
-            for pair in _os.environ.get("ADP_SWEEP_CONF", "").split(",")
-            if "=" in pair
-        )
-    }
+    sweep_conf = _sweep_conf()
     if sweep_conf:
         print(f"conf sweep: {sweep_conf}")
     spark = get_spark("concurrency-sweep", extra_conf=sweep_conf or None)

@@ -202,7 +202,7 @@ def _print_attr(tag: str, stages: list[dict]) -> None:
 
 
 def main() -> None:
-    from atac_data_products_spark.session import get_spark
+    from atac_data_products_spark.session import get_spark, sweep_conf
 
     import __spark_entry__ as e
 
@@ -220,11 +220,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # same sweep seam as check_correctness: ADP_SWEEP_CONF="k=v,k=v"
     # (runtime confs only — used e.g. to A/B adp.spill.enabled)
-    for pair in os.environ.get("ADP_SWEEP_CONF", "").split(","):
-        if "=" in pair:
-            k, v = pair.split("=", 1)
-            spark.conf.set(k.strip(), v.strip())
-            print(f"sweep conf: {k.strip()}={v.strip()}", flush=True)
+    for k, v in sweep_conf().items():
+        spark.conf.set(k, v)
+        print(f"sweep conf: {k}={v}", flush=True)
     attr = StageAttribution(spark) if want_attr else None
     out_dir = f"/tmp/scale_probe_x{mult}"
     if os.environ.get("ADP_SCALE_REUSE") and os.path.exists(out_dir):

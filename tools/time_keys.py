@@ -27,18 +27,14 @@ def main() -> int:
             sf_dir = a.split("=", 1)[1]
 
     import __spark_entry__ as e
-    from atac_data_products_spark.session import get_spark
+    from atac_data_products_spark.session import get_spark, sweep_conf
 
     qs = e.queries()
     # same conf-sweep seam as check_correctness.py: ADP_SWEEP_CONF holds
     # comma-separated k=v Spark conf pairs, so conf A/Bs can be timed
     # with the bench methodology (the committed session defaults stay
     # untouched — this is a measurement tool, not the product session)
-    extra = {
-        pair.split("=", 1)[0]: pair.split("=", 1)[1]
-        for pair in os.environ.get("ADP_SWEEP_CONF", "").split(",")
-        if "=" in pair
-    }
+    extra = sweep_conf()
     spark = get_spark("time-keys", extra_conf=extra or None)
     spark.sparkContext.setLogLevel("ERROR")
 
