@@ -25,7 +25,10 @@ plan over long/COO matrices:
 
 Deliberately NOT reproduced (§2.11): the positional re-index idiom, the
 `Unnamed: 0` column, the URL/filename mismatch, the Response-object
-organ lookup bug.
+organ lookup bug, and listing every manifest uuid/hbmid in the metadata
+(bin/concatenate.py:122-123): product.json lists only the datasets with
+cells in obs, so ``dataset_count == len(dataset_uuids)`` for the build
+and for every append.
 """
 
 from __future__ import annotations
@@ -143,27 +146,34 @@ def build_product(
     return ProductResult(obs=obs, unioned=unioned, metadata=meta)
 
 
+def _dataset_summary(obs: DataFrame, manifest: DataFrame) -> dict:
+    """product.json's counts and lists (A1/A2) from a checkpointed obs:
+    ``cell_count`` is its rows; the uuids and hbmids are the manifest
+    rows of the datasets present in it, sorted, nulls dropped (as
+    ``collect_list`` drops them); ``dataset_count`` is the uuid count,
+    so the metadata never lists a dataset absent from the data."""
+    cells = dict(obs.groupBy("dataset").count().collect())
+    present = [
+        r
+        for r in manifest.select("uuid", "hubmap_id").collect()
+        if r.uuid is not None and r.uuid in cells
+    ]
+    uuids = sorted(r.uuid for r in present)
+    return {
+        "cell_count": sum(cells.values()),
+        "dataset_count": len(uuids),
+        "dataset_uuids": uuids,
+        "dataset_hbmids": sorted(r.hubmap_id for r in present if r.hubmap_id is not None),
+    }
+
+
 def finalize_and_write(result: ProductResult, manifest: DataFrame, out_dir: str) -> dict:
     """Execute the plan: compute the metadata aggregates (cell count A1,
     uuid/hbmid lists A2 — bin/concatenate.py:122-123,142-143) and write
-    the product directory.  obs is checkpointed once; the counts and
+    the product directory.  obs is checkpointed once; the summary and
     every table written read that one result."""
     obs = result.obs.transform(_ckpt_eager)
-    counts = obs.agg(
-        F.count("*").alias("n_cells"),
-        F.count_distinct("dataset").alias("n_datasets"),
-    ).first()
-    lists = manifest.agg(
-        F.sort_array(F.collect_list("uuid")).alias("uuids"),
-        F.sort_array(F.collect_list("hubmap_id")).alias("hbmids"),
-    ).first()
-    metadata = {
-        **result.metadata,
-        "cell_count": counts.n_cells,
-        "dataset_count": counts.n_datasets,
-        "dataset_uuids": list(lists.uuids),
-        "dataset_hbmids": list(lists.hbmids),
-    }
+    metadata = {**result.metadata, **_dataset_summary(obs, manifest)}
     write_product(out_dir, obs, result.restricted_to(obs), metadata)
     return metadata
 
@@ -214,10 +224,11 @@ def append_dataset_to_product(
         dataset) ∪ new, with the lineage broken by an eager checkpoint
         before overwriting the path being read.
       - ``product.json``: cell_count, dataset_uuids / dataset_hbmids /
-        dataset_count derived from the merged obs (one aggregate over
-        its checkpoint; the manifest filtered to the datasets ACTUALLY
-        PRESENT), so the metadata can never list datasets absent from
-        the data nor disagree with the obs rows on disk.
+        dataset_count derived from the merged obs' checkpoint by the
+        same rule as the build (``_dataset_summary``: the manifest
+        filtered to the datasets ACTUALLY PRESENT), so the metadata can
+        never list datasets absent from the data nor disagree with the
+        obs rows on disk.
     """
     from ..sinks.writers import (
         _delete_uri,
@@ -288,23 +299,9 @@ def append_dataset_to_product(
         spark.conf.set(dyn_key, prev_mode)
     merged_obs.write.mode("overwrite").parquet(_join_uri(product_dir, "obs"))
 
-    # metadata derives from the data actually present: filter the
-    # manifest to the merged obs' datasets so uuids/hbmids/count agree
-    # with the product by construction
-    summary = merged_obs.agg(
-        F.count("*").alias("n_cells"),
-        F.collect_set("dataset").alias("present"),
-    ).first()
-    lists = manifest.where(F.col("uuid").isin(summary.present)).agg(
-        F.sort_array(F.collect_list("uuid")).alias("uuids"),
-        F.sort_array(F.collect_list("hubmap_id")).alias("hbmids"),
-    ).first()
     metadata = {
         **prev_meta,
-        "cell_count": summary.n_cells,
-        "dataset_uuids": list(lists.uuids),
-        "dataset_hbmids": list(lists.hbmids),
-        "dataset_count": len(lists.uuids),
+        **_dataset_summary(merged_obs, manifest),
         "modalities": sorted(product_mods | set(mini_modalities)),
     }
     _write_text_uri(

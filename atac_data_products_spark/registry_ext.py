@@ -2681,7 +2681,6 @@ def dedup_simhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality join (256 buckets/band at 32 bits — widen the fingerprint
     to widen the bucket space), Hamming verify on 8-byte ints, two
     scalar counts."""
-    from .extensions.dedup import jaccard_pairs as _jp  # noqa: F401
 
     docs = _t(spark, sf_dir, "documents")
     fp = simhash(docs)

@@ -835,7 +835,6 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     only in the single final division.  This is the model-eval
     counterpart of dedup_simhash_eval's precision/recall verdict.
     """
-    from .sources.tables import ts_us_expr  # noqa: F401  (parity import convention)
 
     # unscored rows (NULL value) can't be ranked: excluded on both sides
     # (a NULL score group otherwise sorts NULLS FIRST in Spark's window
@@ -1223,7 +1222,7 @@ def stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming enrichment shape, and it is precisely the state
     Structured Streaming would keep (watermark-bounded per-key buffers).
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events")
     e = ev.select(
@@ -3041,7 +3040,7 @@ def events_bot_cadence_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same floor-quantize contract as the day/week epoch indexes,
     docs/OPERATIONS.md).
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events")
     e = ev.select("user_id", ts_us_expr(ev).alias("us"))
@@ -3771,7 +3770,7 @@ def events_outage_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the same grid-bounding acceptance as stat_ks_two_sample and the
     day spines.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events")
     s = ev.select(
@@ -3842,7 +3841,7 @@ def events_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio and the page predicate compares integers against the literal
     budget — no float boundary can disagree.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     e = ev.select(
@@ -4226,7 +4225,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep pattern exists to kill (interval_coverage_profile,
     orders_backlog_snapshot).
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     e = ev.select("user_id", ts_us_expr(ev).alias("us"))
@@ -5810,7 +5809,7 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; users with fewer than 3 events are excluded rather
     than producing ragged prefixes.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     e = ev.select(
@@ -6194,7 +6193,7 @@ def attribution_model_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     models), and per-touch credits quantized to integer µ-units before
     the channel rollup so the distributive sums are exact.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events")
     e = ev.select(
@@ -6370,7 +6369,7 @@ def stream_state_size_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     change ([[stream_late_data_audit]] covers the other side: what the
     watermark would DROP).
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events")
     e = ev.select(
@@ -6713,7 +6712,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregation).  The shuffles stay node-grained; the edge
     set is persisted once and reused by every round.
     """
-    from pyspark import StorageLevel
 
     li = (
         _t(spark, sf_dir, "lineitem")
@@ -6898,7 +6896,7 @@ def events_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     their start day (the standard convention, stated because midnight-
     spanning sessions would otherwise double-count).
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
+    from .sources.tables import ts_us_expr
 
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     e = ev.select("user_id", ts_us_expr(ev).alias("us"))
@@ -7895,7 +7893,6 @@ def stat_mcnemar_classifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the paired rollup is one combinable aggregation on the doc key.
     """
     from .extensions.text import STOPWORDS, tokens as tok_fn
-    from .registry import QUERIES
 
     d = _t(spark, sf_dir, "documents")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])

@@ -30,6 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from atac_data_products_spark.session import get_spark
+from tools.measure import time_key, warm_up
 
 HEADLINE = [
     "product_build_obs",
@@ -215,21 +216,7 @@ def main() -> None:
     spark = get_spark("adp-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warmup: exercise scan + shuffle + codegen paths once so per-query
-    # timings measure plan cost, not JVM/JIT startup.
-    warm = qs["product_cell_count"](spark, sf_dir)
-    warm.write.format("noop").mode("overwrite").save()
-
-    # Python/Arrow worker-pool warmup: one tiny mapInPandas across all
-    # cores so the Pandas-seam queries measure their plans, not the
-    # one-time spin-up of the Python worker pool.
-    def _identity(it):
-        yield from it
-
-    n_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(n_cpus * 4, numPartitions=n_cpus).mapInPandas(
-        _identity, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, qs, sf_dir)
 
     # min-of-N per query (N=3 by default): single-shot timings drift
     # ±0.15 s with JIT/GC noise at this scale, which round-over-round
@@ -244,74 +231,27 @@ def main() -> None:
     # first interleaved measurement is load, not compilation
     if do_cal:
         _measure_calibration(spark, n=1)
-    from atac_data_products_spark.spill import (
-        spill_write_seconds_total as _spill_write_total,
-    )
 
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     spill_runs: dict[str, list[float]] = {}
     cal: dict[str, float] = {}
     cal_runs: dict[str, list[float]] = {}
-    total = 0.0
     for name in HEADLINE:
         if name not in qs:
             continue
-        # untimed JVM gc between queries: 60+ codegen'd plans leave
-        # old-gen debt that throttles later shuffle-heavy queries
-        # (measured: dedup_prefix_filter_join 8.7 s after 40 queries
-        # vs 6.4 s after an explicit collection) — pay it OUTSIDE the
-        # timing window so min-of-N measures plan cost
-        spark.sparkContext._jvm.System.gc()
         # calibration probe adjacent to (not inside) the key's window
         if do_cal:
             cal_runs[name] = _measure_calibration(spark)
             cal[name] = round(sum(cal_runs[name]) / len(cal_runs[name]), 3)
-        best = None
-        runs[name] = []
-        spill_runs[name] = []
-        for _ in range(n_iters):
-            sw0 = _spill_write_total()
-            # plan construction is INSIDE the window: eager-iterative
-            # operators (pagerank loop fallback, connected components)
-            # run jobs during construction, and excluding it would
-            # under-report them (r02 did; its survivors row measured
-            # only the final window stage)
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            runs[name].append(round(dt, 3))
-            # spill write seconds paid INSIDE this timed iteration
-            # (spill_once skips the write once _SUCCESS exists in the
-            # session, so the min excludes the first iteration's write
-            # — r12 verdict: make that excluded cost visible per key)
-            spill_runs[name].append(round(_spill_write_total() - sw0, 3))
-            best = dt if best is None else min(best, dt)
-            # drop every block the query persisted: (a) iterations stay
-            # COLD — plan-identical reruns would otherwise hit the
-            # CacheManager and min-of-N would report cache latency, not
-            # plan cost; (b) iterative operators' internal persists
-            # (pagerank, survivors, k-means, BFS) otherwise accumulate
-            # across the whole bench and the leaked blocks GC-throttle
-            # every later query (measured: k-means 13.9 s late in a full
-            # run vs 4.5 s isolated)
-            spark.catalog.clearCache()
-            # release localCheckpoint blocks too: they are freed by the
-            # ContextCleaner only after the Python DataFrame reference
-            # is gone — without the explicit collect, retained Py4J refs
-            # kept earlier queries' blocks alive and throttled later
-            # ones (measured: dedup_prefix_filter_join 9.0 s retained
-            # vs 6.1 s collected)
-            del df
-            import gc
-
-            gc.collect()
-        timings[name] = round(best, 3)
-        total += best
+        runs[name], spill_runs[name] = time_key(
+            spark, lambda: qs[name](spark, sf_dir), n_iters
+        )
+        timings[name] = min(runs[name])
         # per-query progress line: even a truncated stdout tail shows
         # the most recent timings (driver-side diagnostics, not parsed)
-        print(json.dumps({"query": name, "sec": round(best, 3)}), flush=True)
+        print(json.dumps({"query": name, "sec": timings[name]}), flush=True)
+    total = sum(timings.values())
 
     # record the keys ACTUALLY summed (not the constant): tools/
     # bench_diff.py refuses to normalize across artifacts whose summed

@@ -26,12 +26,11 @@ battery exists to pin.
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tests.test_plan_shapes import ARROW_ALLOWLIST
+from tools.check_correctness import normalize
+
 SF = "/root/testdata/sf0.001"
 
 # Every Arrow-crossing registry key (tests/test_plan_shapes.py
@@ -62,29 +61,11 @@ EXEMPT = {
 BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def _load_normalize():
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", REPO / "tools" / "check_correctness.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.normalize
-
-
-def _load_allowlist():
-    spec = importlib.util.spec_from_file_location(
-        "test_plan_shapes", REPO / "tests" / "test_plan_shapes.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.ARROW_ALLOWLIST
-
-
 @pytest.fixture(scope="module")
 def harness(spark):
     import __spark_entry__ as entry
 
-    return spark, entry.queries(), _load_normalize()
+    return spark, entry.queries(), normalize
 
 
 def _run(spark, fn, batch_size, normalize):
@@ -119,7 +100,7 @@ def test_battery_covers_every_arrow_seam():
     """If a new Arrow seam lands (ARROW_ALLOWLIST grows), it must be
     added here (or explicitly exempted with a reason) — batch-boundary
     invariance is part of an Arrow seam's definition of done."""
-    allow = set(_load_allowlist())
+    allow = set(ARROW_ALLOWLIST)
     covered = set(ARROW_KEYS) | set(EXEMPT)
     missing = allow - covered
     assert not missing, (

@@ -1,4 +1,5 @@
-"""Tests for tools/bench_diff.py flag logic (no Spark needed).
+"""Tests for the bench tooling: tools/bench_diff.py flag logic (no Spark
+needed) and the shared measurement code in tools/measure.py.
 
 The multi-lens flagging rule requires every normalization lens to agree.
 r12 advisor find: a regressed key that is itself a member of the mid
@@ -13,11 +14,11 @@ from __future__ import annotations
 import json
 import sys
 
+import pandas as pd
 import pytest
 
-sys.path.insert(0, "tools")
-
-import bench_diff  # noqa: E402
+from tools import bench_diff
+from tools.measure import sweep, time_key
 
 
 def _write(tmp_path, name, queries, vi_keys, mid_keys):
@@ -149,3 +150,51 @@ def test_sweep_conf_parses_pairs_and_rejects_bare_segments(monkeypatch):
     monkeypatch.setenv("ADP_SWEEP_CONF", "spark.master=local-cluster[2,8,8192]")
     with pytest.raises(ValueError, match="'8'"):
         sweep_conf()
+
+
+def test_sweep_reports_each_key_and_fails_on_drift_or_error(capsys):
+    """Both settings run through normalize, so row order and column
+    order do not count as drift; a changed value does, and an exception
+    under either setting is an ERR line, not a crash."""
+    frames = {
+        "same": (pd.DataFrame({"b": [2, 1], "a": ["y", "x"]}),
+                 pd.DataFrame({"a": ["x", "y"], "b": [1, 2]})),
+        "moved": (pd.DataFrame({"v": [1.0]}), pd.DataFrame({"v": [1.5]})),
+    }
+
+    def run(key, setting):
+        if key == "boom" and setting == "flipped":
+            raise ValueError("bad input\nsecond line")
+        return frames.get(key, frames["same"])[setting == "flipped"]
+
+    rc = sweep(["same", "moved", "boom"], run, ("base", "flipped"))
+    out = capsys.readouterr().out.splitlines()
+    assert out[:3] == [
+        "[1/3] same: ok",
+        "[2/3] moved: DRIFT",
+        "[3/3] boom: ERR ValueError: bad input",
+    ]
+    assert "1/3 invariant" in out
+    assert "DRIFT: moved" in out
+    assert "ERRORS: boom" in out
+    assert rc == 1
+
+    assert sweep(["boom"], run, ("base", "flipped")) == 1
+    assert sweep(["same"], run, ("base", "flipped")) == 0
+    assert capsys.readouterr().out.splitlines()[-1] == "1/1 invariant"
+
+
+def test_time_key_times_each_run_and_leaves_no_cache(spark):
+    """One time per iteration, and a .cache() inside build() is dropped after
+    every run, so runs stay cold and nothing leaks into the next key."""
+    built = []
+
+    def build():
+        df = spark.range(100).selectExpr("id % 7 AS k").cache()
+        built.append(df)
+        return df
+
+    runs, spill_runs = time_key(spark, build, 3)
+    assert len(runs) == len(spill_runs) == len(built) == 3
+    assert all(t >= 0 for t in runs)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

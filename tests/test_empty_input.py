@@ -24,12 +24,10 @@ crash class lives, and where the fixes landed:
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tools.empty_scan import build_empty_dir
+
 
 RISK_KEYS = [
     # fixed by the audit: crashed on empty before
@@ -53,19 +51,10 @@ RISK_KEYS = [
 ]
 
 
-def _load_builder():
-    spec = importlib.util.spec_from_file_location(
-        "empty_scan", REPO / "tools" / "empty_scan.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.build_empty_dir
-
-
 @pytest.fixture(scope="module")
 def empty_sf(tmp_path_factory):
     dest = tmp_path_factory.mktemp("empty_sf")
-    _load_builder()(str(dest))
+    build_empty_dir(str(dest))
     return str(dest)
 
 

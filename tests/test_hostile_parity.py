@@ -37,19 +37,18 @@ only when they are present (verified both ways at introduction:
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import duckdb
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tools import hostile_fixture as hf
+from tools.check_correctness import compare
+
 
 # keys that diverge ONLY via the full-vs-simple case-mapping docs —
 # single source of truth in tools/hostile_fixture.py, asserted exact
 # (both directions, full registry) by tools/hostile_scan.py
 def _case_mapping_exempt():
-    return _load("hostile_fixture", "tools/hostile_fixture.py").CASE_MAPPING_EXEMPT
+    return hf.CASE_MAPPING_EXEMPT
 
 # the per-suite subset: every key the sweep caught a real bug in, plus
 # the highest-churn tokenizer consumers (full 88-key audit:
@@ -120,16 +119,8 @@ TABLES = [
 ]
 
 
-def _load(modname, relpath):
-    spec = importlib.util.spec_from_file_location(modname, REPO / relpath)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 @pytest.fixture(scope="module")
 def hostile_sf(tmp_path_factory):
-    hf = _load("hostile_fixture", "tools/hostile_fixture.py")
     # drop the full-case-mapping docs (İ / final sigma): known checker
     # divergence, exercised + documented in the module docstring
     dest = tmp_path_factory.mktemp("hostile_sf")
@@ -141,13 +132,12 @@ def hostile_sf(tmp_path_factory):
 def harness(spark, hostile_sf):
     import __spark_entry__ as entry
 
-    cc = _load("check_correctness", "tools/check_correctness.py")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{hostile_sf}/{t}.parquet'"
         )
-    yield spark, entry.queries(), entry.oracle_sql(), cc.compare, con
+    yield spark, entry.queries(), entry.oracle_sql(), compare, con
     con.close()
 
 

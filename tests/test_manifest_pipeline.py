@@ -82,10 +82,11 @@ def test_build_manifest_cli_end_to_end(spark, tmp_path, monkeypatch):
     """tools/build_manifest.py — the make_uuids_tsv.py-equivalent CLI —
     from hits JSONL on disk to the manifest TSV, with the same filter /
     last-wins semantics as the library path."""
-    import importlib.util
     import json as _json
     import sys as _sys
     from pathlib import Path
+
+    from tools import build_manifest as cli
 
     hits = _hits(spark)
     jsonl = tmp_path / "hits.jsonl"
@@ -94,12 +95,6 @@ def test_build_manifest_cli_end_to_end(spark, tmp_path, monkeypatch):
             f.write(row + "\n")
     out = tmp_path / "manifest.tsv"
 
-    spec = importlib.util.spec_from_file_location(
-        "build_manifest_cli",
-        str(Path(__file__).resolve().parent.parent / "tools" / "build_manifest.py"),
-    )
-    cli = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cli)
     monkeypatch.setattr(
         _sys, "argv", ["build_manifest.py", str(jsonl), str(out)]
     )

@@ -18,12 +18,11 @@ after the Q1 fix, across seeds 1-5 × 1-7 files).
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tools.check_correctness import normalize
+from tools.order_scan import build_shuffled_dir
+
 SF = "/root/testdata/sf0.001"
 
 # round-of-double-sum family (flip risk at the rounding boundary) +
@@ -59,19 +58,10 @@ RISK_KEYS = [
 ]
 
 
-def _load_order_scan():
-    spec = importlib.util.spec_from_file_location(
-        "order_scan", REPO / "tools" / "order_scan.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 @pytest.fixture(scope="module")
 def shuffled_sf(tmp_path_factory):
     dest = tmp_path_factory.mktemp("shuffled_sf")
-    _load_order_scan().build_shuffled_dir(str(dest), seed=42, nfiles=3)
+    build_shuffled_dir(str(dest), seed=42, nfiles=3)
     return str(dest)
 
 
@@ -79,12 +69,7 @@ def shuffled_sf(tmp_path_factory):
 def harness(spark):
     import __spark_entry__ as entry
 
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", REPO / "tools" / "check_correctness.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return spark, entry.queries(), mod.normalize
+    return spark, entry.queries(), normalize
 
 
 @pytest.mark.parametrize("key", RISK_KEYS)

@@ -20,12 +20,10 @@ for every suite run.
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tools.check_correctness import normalize
+
 SF = "/root/testdata/sf0.001"
 
 # (key, why it's partition-layout risky)
@@ -51,20 +49,11 @@ RISK_KEYS = [
 ]
 
 
-def _load_normalize():
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", REPO / "tools" / "check_correctness.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.normalize
-
-
 @pytest.fixture(scope="module")
 def harness(spark):
     import __spark_entry__ as entry
 
-    return spark, entry.queries(), _load_normalize()
+    return spark, entry.queries(), normalize
 
 
 LAYOUT_A = {

@@ -27,12 +27,10 @@ at that scale.
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tools import plan_shape_scan as scanner
+
 SF_SMALL = "/root/testdata/sf0.001"
 
 # key -> (max global-window count, PLAN_AUDIT class).  Classes:
@@ -197,20 +195,10 @@ ARROW_ALLOWLIST: dict[str, int] = {
 }
 
 
-def _load_scanner():
-    spec = importlib.util.spec_from_file_location(
-        "plan_shape_scan", REPO / "tools" / "plan_shape_scan.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 @pytest.fixture(scope="module")
 def shapes(spark) -> dict:
     import __spark_entry__ as e
 
-    scanner = _load_scanner()
     qs = e.queries()
     return scanner.scan(spark, qs, list(qs), SF_SMALL)
 

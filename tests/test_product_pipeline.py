@@ -135,9 +135,9 @@ def test_build_product_cli_end_to_end(spark, tmp_path, monkeypatch):
     must reproduce the golden product from files on disk (TSV manifest +
     long-form parquet matrices).  Runs in-process: get_spark's
     getOrCreate rejoins the test session."""
-    import importlib.util
     import sys as _sys
-    from pathlib import Path
+
+    from tools import build_product as cli
 
     manifest, mats = _fixtures(spark)
     # manifest as a reference-shaped TSV (with the index artifact)
@@ -153,12 +153,6 @@ def test_build_product_cli_end_to_end(spark, tmp_path, monkeypatch):
             matrix_args += ["--matrix", f"{mod}={p}"]
     out = tmp_path / "product_cli"
 
-    spec = importlib.util.spec_from_file_location(
-        "build_product_cli",
-        str(Path(__file__).resolve().parent.parent / "tools" / "build_product.py"),
-    )
-    cli = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(cli)
     monkeypatch.setattr(
         _sys, "argv",
         ["build_product.py", str(out), "--manifest", str(tsv),
@@ -460,6 +454,46 @@ def test_append_sequence_metadata_matches_obs(spark, tmp_path):
         assert meta == on_disk
         assert meta["cell_count"] == cells
         assert meta["dataset_uuids"] == datasets
+
+
+def test_build_and_append_write_the_same_summary(spark, tmp_path):
+    """A manifested dataset with bin cells only has no cell in obs: the
+    build lists only the datasets present, as an append does, so an
+    unchanged re-add leaves product.json as the build wrote it."""
+    from atac_data_products_spark.plans.product import append_dataset_to_product
+
+    manifest, mats = _fixtures(spark)
+    coo = "dataset string, barcode string, feature_id string, value double"
+    manifest = manifest.unionByName(
+        spark.createDataFrame(
+            [("ds4", "HBM4.DDDD.444", "30", "F", None, None, None, None, None)],
+            manifest.schema,
+        )
+    )
+    bins_only = spark.createDataFrame([("ds4", "QQQQ", "chr1:0-500", 1.0)], coo)
+    mats["atac_cell_by_bin"] = mats["atac_cell_by_bin"] + [bins_only]
+    out = str(tmp_path / "p")
+    meta = finalize_and_write(
+        build_product(manifest, mats, tissue="kidney", product_uuid="p"),
+        manifest,
+        out,
+    )
+    assert meta["dataset_count"] == len(meta["dataset_uuids"]) == 2
+    assert meta["dataset_uuids"] == ["ds1", "ds2"]
+    assert meta["dataset_hbmids"] == ["HBM1.AAAA.111", "HBM2.BBBB.222"]
+    built = _assert_metadata_matches_disk(spark, out)
+
+    ds2 = {mod: _dataset_rows(dfs, "ds2") for mod, dfs in mats.items()}
+    append_dataset_to_product(spark, out, manifest, "ds2", ds2, tissue="kidney")
+    assert _assert_metadata_matches_disk(spark, out) == built
+
+
+def _dataset_rows(dfs, dataset):
+    """One dataset's rows of a modality's per-dataset frames."""
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df)
+    return out.where(F.col("dataset") == dataset)
 
 
 def _jobs_run(spark, fn):

@@ -25,26 +25,17 @@ standard as tests/test_quantization_contract.py.
 
 from __future__ import annotations
 
-import importlib.util
 from pathlib import Path
 
 import pytest
 
+from tools import python_lane_scan as scanner
+
 REPO = Path(__file__).resolve().parent.parent
-
-
-def _load_scanner():
-    spec = importlib.util.spec_from_file_location(
-        "python_lane_scan", REPO / "tools" / "python_lane_scan.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.fixture(scope="module")
 def scan_result():
-    scanner = _load_scanner()
     return scanner, scanner.scan_all()
 
 

@@ -24,29 +24,16 @@ factor, so the scan runs at sf0.001.
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tools import quantization_scan as scanner
 SF_SMALL = "/root/testdata/sf0.001"
-
-
-def _load_scanner():
-    spec = importlib.util.spec_from_file_location(
-        "quantization_scan", REPO / "tools" / "quantization_scan.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.fixture(scope="module")
 def scan_result(spark):
     import __spark_entry__ as e
 
-    scanner = _load_scanner()
     qs = e.queries()
     return scanner, scanner.scan(spark, qs, list(qs), SF_SMALL)
 

@@ -30,29 +30,16 @@ reintroduce the hazard unnoticed.  Plan analysis only — no jobs run;
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tools import nondeterminism_scan as scanner
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _load_scanner():
-    spec = importlib.util.spec_from_file_location(
-        "nondeterminism_scan", REPO / "tools" / "nondeterminism_scan.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
 
 
 @pytest.fixture(scope="module")
 def scan_result(spark):
     import __spark_entry__ as e
 
-    scanner = _load_scanner()
     spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
     qs = e.queries()
     return scanner, scanner.scan(spark, qs, list(qs), SF_DIR)
@@ -83,7 +70,6 @@ def test_no_stale_exemptions(scan_result):
 
 
 def test_exempt_classes_are_argued():
-    scanner = _load_scanner()
     allowed = {"count-only-surface", "run-stamp", "internal-chunking"}
     for (key, marker), cls in scanner.EXEMPT.items():
         assert cls in allowed, (

@@ -18,7 +18,6 @@ this tool is the full-registry audit.
 
 from __future__ import annotations
 
-import importlib.util
 import sys
 import tempfile
 from pathlib import Path

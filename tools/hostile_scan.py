@@ -25,7 +25,6 @@ tests/test_hostile_parity.py; THIS scan is the completeness record.
 
 from __future__ import annotations
 
-import importlib.util
 import subprocess
 import sys
 import tempfile
@@ -38,15 +37,10 @@ import duckdb
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-
-def _load(modname: str, relpath: str):
-    spec = importlib.util.spec_from_file_location(modname, REPO / relpath)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+from tools.check_correctness import compare  # noqa: E402
 
 
-def run_pass(spark, queries, oracles, compare, sf_dir: str, keys) -> dict:
+def run_pass(spark, queries, oracles, sf_dir: str, keys) -> dict:
     """{key: verdict-first-line}; 'OK' / 'rows-only: N' / failure text."""
     con = duckdb.connect()
     for t in [
@@ -78,9 +72,8 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     write_artifact = "--no-artifact" not in sys.argv[1:] and not args
 
-    hf = _load("hostile_fixture", "tools/hostile_fixture.py")
-    cc = _load("check_correctness", "tools/check_correctness.py")
     import __spark_entry__ as entry
+    from tools import hostile_fixture as hf
     from atac_data_products_spark.session import get_spark
 
     queries, oracles = entry.queries(), entry.oracle_sql()
@@ -94,14 +87,14 @@ def main() -> int:
         hf.build(trap_dir, include_case_traps=True)
 
         print(f"pass 1: {len(keys)} keys, case-trap docs EXCLUDED")
-        p1 = run_pass(spark, queries, oracles, cc.compare, clean_dir, keys)
+        p1 = run_pass(spark, queries, oracles, clean_dir, keys)
         p1_bad = {k: v for k, v in p1.items() if not v.startswith(("OK", "rows-only"))}
         for k, v in p1_bad.items():
             print(f"  FAIL {k}: {v}")
         print(f"pass 1: {len(keys) - len(p1_bad)}/{len(keys)} clean")
 
         print(f"pass 2: {len(keys)} keys, case-trap docs INCLUDED")
-        p2 = run_pass(spark, queries, oracles, cc.compare, trap_dir, keys)
+        p2 = run_pass(spark, queries, oracles, trap_dir, keys)
         p2_bad = {k for k, v in p2.items() if not v.startswith(("OK", "rows-only"))}
 
     elapsed = time.time() - t0

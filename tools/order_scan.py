@@ -25,7 +25,6 @@ rewritten in exact DECIMAL.  The per-suite battery
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import shutil
 import sys
 import tempfile
@@ -65,15 +64,6 @@ def build_shuffled_dir(
             )
 
 
-def _load_normalize():
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", REPO / "tools" / "check_correctness.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.normalize
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("keys", nargs="*")
@@ -82,40 +72,24 @@ def main() -> int:
     args = ap.parse_args()
 
     from atac_data_products_spark.session import get_spark
+    from tools.measure import sweep
 
     import __spark_entry__ as entry
 
-    normalize = _load_normalize()
     qs = entry.queries()
     keys = args.keys or [k for k in sorted(qs) if k not in SKIP]
 
     spark = get_spark("order-scan", shuffle_partitions=8)
-    drift, errors = [], []
     tmp = tempfile.mkdtemp(prefix="adp_order_")
     try:
         build_shuffled_dir(tmp, seed=args.seed, nfiles=args.files)
-        for i, k in enumerate(keys, 1):
-            try:
-                a = normalize(qs[k](spark, SCHEMA_SOURCE).toPandas())
-                b = normalize(qs[k](spark, tmp).toPandas())
-            except Exception as ex:  # noqa: BLE001 — report, don't mask
-                errors.append(k)
-                print(f"[{i}/{len(keys)}] {k}: ERR {type(ex).__name__}: "
-                      f"{str(ex).splitlines()[0][:100]}")
-                continue
-            if a.shape != b.shape or not a.equals(b):
-                drift.append(k)
-                print(f"[{i}/{len(keys)}] {k}: DRIFT")
-            else:
-                print(f"[{i}/{len(keys)}] {k}: ok")
+        return sweep(
+            keys,
+            lambda k, sf_dir: qs[k](spark, sf_dir).toPandas(),
+            (SCHEMA_SOURCE, tmp),
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    print(f"\n{len(keys) - len(drift) - len(errors)}/{len(keys)} invariant")
-    if drift:
-        print("DRIFT:", ", ".join(drift))
-    if errors:
-        print("ERRORS:", ", ".join(errors))
-    return 1 if drift or errors else 0
 
 
 if __name__ == "__main__":

@@ -25,10 +25,11 @@ import json
 import os
 import shutil
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, ".")
+
+from tools.measure import time_key, warm_up  # noqa: E402
 
 DEFAULT_KEYS = [
     "dedup_minhash_lsh",
@@ -176,17 +177,20 @@ class StageAttribution:
 
 
 def timed(qs, key, spark, sf_dir, n=2, attr=None):
+    """Min of n runs; with ``attr``, also the best run's top stages."""
+
+    def build():
+        return qs[key](spark, sf_dir)
+
+    if not attr:
+        return min(time_key(spark, build, n)[0])
     best, best_stages = None, None
     for _ in range(n):
-        mark = attr.watermark() if attr else -1
-        t0 = time.time()
-        qs[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.time() - t0
+        mark = attr.watermark()
+        (dt,), _ = time_key(spark, build, 1)
         if best is None or dt < best:
-            best = dt
-            if attr:
-                best_stages = attr.report(mark)
-    return (best, best_stages) if attr else best
+            best, best_stages = dt, attr.report(mark)
+    return best, best_stages
 
 
 def _print_attr(tag: str, stages: list[dict]) -> None:
@@ -231,7 +235,7 @@ def main() -> None:
         print(f"building {mult}x corpus at {out_dir} ...", flush=True)
         build_scaled(spark, mult, out_dir)
     qs = e.queries()
-    qs["product_cell_count"](spark, BASE).write.format("noop").mode("overwrite").save()
+    warm_up(spark, qs, BASE)
     print(f"{'key':32} {'1x':>7} {f'{mult}x':>8} {'ratio':>6}  (data x{mult})")
     for k in keys:
         if attr:

@@ -17,7 +17,6 @@ Exits nonzero if any key drifts or errors, so it can gate.
 
 from __future__ import annotations
 
-import importlib.util
 import sys
 from pathlib import Path
 
@@ -29,51 +28,23 @@ TZ_CONF = "spark.sql.session.timeZone"
 SKIP = {"gen_uuid", "gen_timestamp"}  # nondeterministic by nature
 
 
-def _load_normalize():
-    spec = importlib.util.spec_from_file_location(
-        "check_correctness", REPO / "tools" / "check_correctness.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.normalize
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from atac_data_products_spark.session import get_spark
+    from tools.measure import sweep
 
     import __spark_entry__ as entry
 
-    normalize = _load_normalize()
     qs = entry.queries()
     keys = sys.argv[2:] or [k for k in sorted(qs) if k not in SKIP]
 
     spark = get_spark("tz-scan", shuffle_partitions=8)
-    drift, errors = [], []
-    for i, k in enumerate(keys, 1):
-        out = {}
-        for tz in ("UTC", FLIP_TZ):
-            spark.conf.set(TZ_CONF, tz)
-            try:
-                out[tz] = normalize(qs[k](spark, sf_dir).toPandas())
-            except Exception as ex:  # noqa: BLE001 — report, don't mask
-                out[tz] = f"{type(ex).__name__}: {str(ex)[:120]}"
-        spark.conf.set(TZ_CONF, "UTC")
-        a, b = out["UTC"], out[FLIP_TZ]
-        if isinstance(a, str) or isinstance(b, str):
-            errors.append(k)
-            print(f"[{i}/{len(keys)}] {k}: ERR {a if isinstance(a, str) else b}")
-        elif a.shape != b.shape or not a.equals(b):
-            drift.append(k)
-            print(f"[{i}/{len(keys)}] {k}: DRIFT")
-        else:
-            print(f"[{i}/{len(keys)}] {k}: ok")
-    print(f"\n{len(keys) - len(drift) - len(errors)}/{len(keys)} invariant")
-    if drift:
-        print("DRIFT:", ", ".join(drift))
-    if errors:
-        print("ERRORS:", ", ".join(errors))
-    return 1 if drift or errors else 0
+
+    def run(k, tz):
+        spark.conf.set(TZ_CONF, tz)
+        return qs[k](spark, sf_dir).toPandas()
+
+    return sweep(keys, run, ("UTC", FLIP_TZ))
 
 
 if __name__ == "__main__":
