@@ -279,24 +279,22 @@ def append_dataset_to_product(
                 spark, _join_uri(product_dir, table, f"dataset={dataset}")
             )
 
-    dyn_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(dyn_key, "static")
-    spark.conf.set(dyn_key, "dynamic")
-    try:
-        for mod, (x, var) in mini_modalities.items():
-            (
-                x.sortWithinPartitions("dataset", "cell_id")
-                .write.mode("overwrite")
-                .partitionBy("dataset")
-                .parquet(_join_uri(product_dir, f"x_{mod}"))
-            )
-            (
-                var.write.mode("overwrite")
-                .partitionBy("dataset")
-                .parquet(_join_uri(product_dir, f"var_{mod}"))
-            )
-    finally:
-        spark.conf.set(dyn_key, prev_mode)
+    # dynamic overwrite per write (read by InsertIntoHadoopFsRelationCommand),
+    # not the session conf: another thread's writes keep their own mode
+    for mod, (x, var) in mini_modalities.items():
+        (
+            x.sortWithinPartitions("dataset", "cell_id")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("dataset")
+            .parquet(_join_uri(product_dir, f"x_{mod}"))
+        )
+        (
+            var.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("dataset")
+            .parquet(_join_uri(product_dir, f"var_{mod}"))
+        )
     merged_obs.write.mode("overwrite").parquet(_join_uri(product_dir, "obs"))
 
     metadata = {

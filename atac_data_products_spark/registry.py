@@ -12,7 +12,9 @@ streaming) live in ``registry_ext.py``.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import uuid as _uuid
 from collections.abc import Callable
@@ -108,8 +110,8 @@ def _ensure_dir(path: str) -> str:
 
 # Per-process staging root: unique per session (mkdtemp) so two concurrent
 # sessions on one host never interleave a driver-side write with the other's
-# read, but reused across calls within a process so repeated harness runs
-# don't accumulate temp dirs.
+# read, reused across calls within a process, and removed at interpreter
+# exit so repeated harness runs don't accumulate temp dirs.
 _STAGING_ROOT: str | None = None
 
 
@@ -117,7 +119,14 @@ def _staging_dir(name: str) -> str:
     global _STAGING_ROOT
     if _STAGING_ROOT is None:
         _STAGING_ROOT = tempfile.mkdtemp(prefix="adp_staging_")
+        atexit.register(shutil.rmtree, _STAGING_ROOT, True)
     return _ensure_dir(os.path.join(_STAGING_ROOT, name))
+
+
+def _call_dir(name: str) -> str:
+    """A fresh output path under ``_staging_dir(name)`` for one call, so
+    two builds of the same key never write into each other's output."""
+    return os.path.join(_staging_dir(name), _uuid.uuid4().hex[:8])
 
 
 @query(
@@ -980,7 +989,7 @@ def sink_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
     quirk: `Unnamed: 0`), verified by round-trip."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    out = os.path.join(tempfile.gettempdir(), f"adp_sink_tsv_{_uuid.uuid4().hex[:8]}")
+    out = _call_dir("sink_tsv")
     nat = _t(spark, sf_dir, "nation")
     nat.coalesce(1).write.options(sep="\t", header=True).mode("overwrite").csv(out)
     schema = StructType(
@@ -999,7 +1008,7 @@ def sink_tsv(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_metadata_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-metadata JSON sink (create_json, bin/concatenate.py:81-96):
     single-record JSON written by Spark, verified by round-trip."""
-    out = os.path.join(tempfile.gettempdir(), f"adp_sink_json_{_uuid.uuid4().hex[:8]}")
+    out = _call_dir("sink_json")
     orders = _t(spark, sf_dir, "orders")
     meta = orders.agg(
         F.lit("atac").alias("assay"),
@@ -1019,7 +1028,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (warehouse interop — Hive/Trino deployments are ORC-heavy).
     Types survive natively (no string casts), split-able and predicate-
     pushdown-capable at scale exactly like the parquet path."""
-    out = os.path.join(tempfile.gettempdir(), f"adp_sink_orc_{_uuid.uuid4().hex[:8]}")
+    out = _call_dir("sink_orc")
     nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     nat.write.mode("overwrite").orc(out)
     return spark.read.orc(out)
@@ -1039,9 +1048,7 @@ def sink_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLANNING time (directory listing), never touching the other
     partitions' files — the pruning itself is plan-asserted in
     tests/test_operators.py."""
-    out = os.path.join(
-        tempfile.gettempdir(), f"adp_sink_part_{_uuid.uuid4().hex[:8]}"
-    )
+    out = _call_dir("sink_part")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
@@ -1311,7 +1318,7 @@ def sink_product_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-directory sink (the h5mu replacement, SURVEY §1.4/§2.8
     sink_h5mu): write the flagship obs as a parquet product table and
     read it back — the round trip is the check."""
-    out = os.path.join(tempfile.gettempdir(), f"adp_product_{_uuid.uuid4().hex[:8]}")
+    out = _call_dir("product_dir")
     product_obs_plan(spark, sf_dir).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 

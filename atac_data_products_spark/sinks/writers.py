@@ -51,7 +51,6 @@ def write_product(
     obs: DataFrame,
     modalities: dict[str, tuple[DataFrame, DataFrame]],
     metadata: dict,
-    partition_matrix_by: str = "dataset",
 ) -> None:
     """Write one data product:
 
@@ -68,23 +67,22 @@ def write_product(
     """
     obs.write.mode("overwrite").parquet(_join_uri(out_dir, "obs"))
     for modality, (x, var) in modalities.items():
-        # sort within files by the row key (when present) so parquet
-        # row-group min/max statistics prune per-cell reads inside each
-        # dataset partition
-        sort_cols = [partition_matrix_by] + (["cell_id"] if "cell_id" in x.columns else [])
+        # sort within files by the row key so parquet row-group min/max
+        # statistics prune per-cell reads inside each dataset partition
         (
-            x.sortWithinPartitions(*sort_cols)
+            x.sortWithinPartitions("dataset", "cell_id")
             .write.mode("overwrite")
-            .partitionBy(partition_matrix_by)
+            .partitionBy("dataset")
             .parquet(_join_uri(out_dir, f"x_{modality}"))
         )
-        # var partitions by dataset too (when the contribution column is
-        # present) so incremental re-adds can replace exactly one
-        # dataset's feature contribution via dynamic partition overwrite
-        vw = var.write.mode("overwrite")
-        if partition_matrix_by in var.columns:
-            vw = vw.partitionBy(partition_matrix_by)
-        vw.parquet(_join_uri(out_dir, f"var_{modality}"))
+        # var partitions by dataset too, so incremental re-adds can
+        # replace exactly one dataset's feature contribution via dynamic
+        # partition overwrite
+        (
+            var.write.mode("overwrite")
+            .partitionBy("dataset")
+            .parquet(_join_uri(out_dir, f"var_{modality}"))
+        )
     # product.json goes through the Hadoop FileSystem API, not a local
     # open(): the SAME write_product call then works against any
     # configured filesystem URI (file://, hdfs://, s3a:// + credentials

@@ -15,11 +15,14 @@ decode output streams out as Arrow record batches (never one giant pandas
 frame per node, unlike the reference's materialize-everything pattern at
 bin/concatenate.py:128-136).
 
-The actual HDF5 decode requires h5py/anndata, which this container does
-not ship — `decode_h5ad_bytes` is therefore an import-gated stub with the
-real signature; `decode_parquet_bytes` is a fully working decoder for the
-same plumbing (used by tests and the scan_h5ad correctness query), since
-pyarrow IS available.
+`decode_h5ad_bytes` decodes real h5ad files: through anndata when it is
+importable, otherwise through the dependency-free HDF5 reader
+(sources/hdf5.py), which covers the layouts default-settings
+``anndata.write_h5ad`` produces.  The `scan_h5ad_codec` key, the product
+ingest (tools/ingest_h5ad.py) and perfbench's `atac_product` workload run
+through it.
+`decode_parquet_bytes` drives the same plumbing with parquet payloads; the
+`scan_h5ad` key uses it to scan the documents table.
 """
 
 from __future__ import annotations

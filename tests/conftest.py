@@ -33,3 +33,13 @@ def duck():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark):
+    """Every key's plan texts, built once for the static scanners."""
+    import __spark_entry__ as e
+    from tools.plan_capture import capture
+
+    qs = e.queries()
+    return capture(spark, qs, list(qs), SF_SMALL)

@@ -19,10 +19,10 @@ and the PLAN_AUDIT class as documentation:
 - REMOVING one (a scalability rewrite) -> FAIL on the stale-entry
   check, forcing the allowlist (and the audit doc) to stay accurate
 
-Plan shape does not depend on scale factor, so the scan runs at
-sf0.001; eagerly-probing operators (adaptive cluster probe, iterative
-seeds) execute their bounded probes during construction, which is cheap
-at that scale.
+Plan shape does not depend on scale factor, so the scan reads the
+session's sf0.001 `registry_plans` (conftest.py); eagerly-probing
+operators (adaptive cluster probe, iterative seeds) execute their
+bounded probes during construction, which is cheap at that scale.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ from __future__ import annotations
 import pytest
 
 from tools import plan_shape_scan as scanner
-
-SF_SMALL = "/root/testdata/sf0.001"
 
 # key -> (max global-window count, PLAN_AUDIT class).  Classes:
 #   grid           input bounded by a value grid (days / hours / months /
@@ -196,11 +194,29 @@ ARROW_ALLOWLIST: dict[str, int] = {
 
 
 @pytest.fixture(scope="module")
-def shapes(spark) -> dict:
-    import __spark_entry__ as e
+def shapes(registry_plans) -> dict:
+    return scanner.scan(registry_plans)
 
-    qs = e.queries()
-    return scanner.scan(spark, qs, list(qs), SF_SMALL)
+
+def test_capture_builds_each_key_once_and_restores_conf(spark):
+    from tools.plan_capture import FIELDS_CONF, capture
+
+    builds = []
+
+    def ok(spark, sf_dir):
+        builds.append((sf_dir, spark.conf.get(FIELDS_CONF)))
+        return spark.range(3).selectExpr("id", "rand(1) AS r")
+
+    def bad(spark, sf_dir):
+        raise ValueError("no plan")
+
+    before = spark.conf.get(FIELDS_CONF, None)
+    plans = capture(spark, {"ok": ok, "bad": bad}, ["ok", "bad"], "sf")
+    assert spark.conf.get(FIELDS_CONF, None) == before
+    assert builds == [("sf", "100000")]
+    assert plans["bad"] == {"err": "ValueError: no plan"}
+    assert "rand(1)" in plans["ok"]["analyzed"]
+    assert scanner.scan(plans)["ok"]["smj"] == 0
 
 
 def test_all_plans_build(shapes):

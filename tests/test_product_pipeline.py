@@ -233,6 +233,35 @@ def test_incremental_append_equals_full_rebuild(spark, tmp_path):
     assert meta2["dataset_uuids"] == full_meta["dataset_uuids"]
 
 
+def test_append_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """append_dataset_to_product asks for dynamic partition overwrite on
+    its own writes: it sets no session conf, so a write another thread
+    runs meanwhile keeps the session's overwrite mode."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from atac_data_products_spark.plans.product import append_dataset_to_product
+
+    manifest, mats = _fixtures(spark)
+    m1 = manifest.where(F.col("uuid") == "ds1")
+    mats1 = {
+        mod: [df.where(F.col("dataset") == "ds1") for df in dfs]
+        for mod, dfs in mats.items()
+    }
+    inc_dir = str(tmp_path / "inc")
+    finalize_and_write(build_product(m1, mats1, tissue="kidney"), m1, inc_dir)
+    new = {mod: _dataset_rows(dfs, "ds2") for mod, dfs in mats.items()}
+
+    sets = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "set",
+        lambda self, k, v: (sets.append((k, v)), real_set(self, k, v))[1],
+    )
+    append_dataset_to_product(spark, inc_dir, manifest, "ds2", new, tissue="kidney")
+    assert sets == []
+
+
 def _product_tables(spark, base):
     import pandas as pd  # noqa: F401
 

@@ -19,34 +19,21 @@ match the scanner's EXEMPT table EXACTLY in both directions:
 
 Same lockstep standard as tests/test_plan_shapes.py and the hostile
 sweep's CASE_MAPPING_EXEMPT.  Plan analysis does not depend on scale
-factor, so the scan runs at sf0.001.
+factor, so the scan reads the session's sf0.001 `registry_plans`.
 """
 
 from __future__ import annotations
 
-import pytest
-
 from tools import quantization_scan as scanner
-SF_SMALL = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def scan_result(spark):
-    import __spark_entry__ as e
-
-    qs = e.queries()
-    return scanner, scanner.scan(spark, qs, list(qs), SF_SMALL)
-
-
-def test_all_plans_analyzable(scan_result):
-    _, result = scan_result
-    errs = {k: v["err"] for k, v in result.items() if v.get("err")}
+def test_all_plans_analyzable(registry_plans):
+    errs = {k: v["err"] for k, v in registry_plans.items() if v.get("err")}
     assert errs == {}, f"plans failed to analyze: {errs}"
 
 
-def test_rational_round_sites_exactly_exempted(scan_result):
-    scanner, result = scan_result
-    violations, stale = scanner.verdict(result)
+def test_rational_round_sites_exactly_exempted(registry_plans):
+    violations, stale = scanner.verdict(scanner.scan(registry_plans))
     assert violations == [], (
         "UNEXEMPTED round() over a rational integer ratio — convert to "
         "the mean_quantized*/ratio_scaled_int* exact lane or classify "
@@ -58,8 +45,7 @@ def test_rational_round_sites_exactly_exempted(scan_result):
     )
 
 
-def test_exempt_classes_are_documented(scan_result):
-    scanner, _ = scan_result
+def test_exempt_classes_are_documented():
     allowed = {
         "exact-unit-divide",
         "quantized-composition",

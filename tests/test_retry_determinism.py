@@ -24,30 +24,17 @@ Two-sided enforcement, the scanner-family standard:
   actually launch; results must be byte-identical.
 
 This file wires the static half into the suite so a NEW key cannot
-reintroduce the hazard unnoticed.  Plan analysis only — no jobs run;
-~a second per key on the shared session.
+reintroduce the hazard unnoticed.  Plan analysis only, of the plans
+the session captures once for all scanners (conftest.registry_plans).
 """
 
 from __future__ import annotations
 
-import pytest
-
 from tools import nondeterminism_scan as scanner
-SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def scan_result(spark):
-    import __spark_entry__ as e
-
-    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
-    qs = e.queries()
-    return scanner, scanner.scan(spark, qs, list(qs), SF_DIR)
-
-
-def test_no_unexempted_nondeterministic_exprs(scan_result):
-    scanner, result = scan_result
-    violations, _ = scanner.verdict(result)
+def test_no_unexempted_nondeterministic_exprs(registry_plans):
+    violations, _ = scanner.verdict(scanner.scan(registry_plans))
     assert violations == [], (
         "Registry key's analyzed plan contains a nondeterministic-per-"
         "attempt expression not covered by the EXEMPT table — a task "
@@ -59,9 +46,8 @@ def test_no_unexempted_nondeterministic_exprs(scan_result):
     )
 
 
-def test_no_stale_exemptions(scan_result):
-    scanner, result = scan_result
-    _, stale = scanner.verdict(result)
+def test_no_stale_exemptions(registry_plans):
+    _, stale = scanner.verdict(scanner.scan(registry_plans))
     assert stale == [], (
         "EXEMPT entry no longer matches any analyzed-plan marker — the "
         "site was rewritten; delete the entry so the table stays an "

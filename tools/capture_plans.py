@@ -10,8 +10,6 @@ same as bench).
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
@@ -27,6 +25,7 @@ def main() -> int:
     import bench
     import __spark_entry__ as e
     from atac_data_products_spark.session import get_spark
+    from tools.plan_capture import formatted
 
     if not keys:
         keys = bench.HEADLINE
@@ -40,13 +39,10 @@ def main() -> int:
             print(f"SKIP {key}: not registered")
             continue
         try:
-            df = qs[key](spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+            plan = formatted(qs[key](spark, sf_dir))
             path = os.path.join(outdir, f"{key}_{suffix}.txt")
             with open(path, "w") as fh:
-                fh.write(buf.getvalue())
+                fh.write(plan)
             print(f"wrote {path}")
         except Exception as ex:  # noqa: BLE001
             print(f"ERR {key}: {ex}")

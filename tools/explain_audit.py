@@ -8,8 +8,6 @@ schemas — the properties the audit table asserts.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import re
 import sys
 
@@ -36,6 +34,7 @@ AUDIT_KEYS = [
 
 def main() -> int:
     from atac_data_products_spark.session import get_spark
+    from tools.plan_capture import formatted, nodes
 
     import __spark_entry__ as e
 
@@ -44,22 +43,11 @@ def main() -> int:
     qs = e.queries()
     keys = sys.argv[1:] or AUDIT_KEYS
     for key in keys:
-        df = qs[key](spark, "/root/testdata/sf0.01")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = formatted(qs[key](spark, "/root/testdata/sf0.01"))
         pushed = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
         schemas = re.findall(r"ReadSchema: [^\n]*", plan)
 
-        # Count NODES, not substrings: `explain("formatted")` prints each
-        # node twice (tree line `+- Op (n)` and detail header `(n) Op`),
-        # and a shuffle prints as `(n) Exchange` with hashpartitioning
-        # only in the following Arguments line — substring counting both
-        # doubled joins and reported every shuffle as zero.
-        def nodes(name: str) -> int:
-            return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
-
+        # a shuffle's partitioning prints in its Arguments line only
         shuffle_args = re.findall(
             r"^\(\d+\) Exchange\n(?:[^\n]+\n)*?Arguments: (\w+)", plan, re.M
         )
@@ -69,13 +57,13 @@ def main() -> int:
         )
         print(f"== {key}")
         print(
-            f"   BroadcastHashJoin={nodes('BroadcastHashJoin')} "
-            f"SortMergeJoin={nodes('SortMergeJoin')} "
-            f"ShuffledHashJoin={nodes('ShuffledHashJoin')} "
-            f"NestedLoop={nodes('BroadcastNestedLoopJoin') + nodes('CartesianProduct')} "
+            f"   BroadcastHashJoin={nodes(plan, 'BroadcastHashJoin')} "
+            f"SortMergeJoin={nodes(plan, 'SortMergeJoin')} "
+            f"ShuffledHashJoin={nodes(plan, 'ShuffledHashJoin')} "
+            f"NestedLoop={nodes(plan, 'BroadcastNestedLoopJoin') + nodes(plan, 'CartesianProduct')} "
             f"ShuffleExchange={n_shuffle} "
-            f"HashAggregate={nodes('HashAggregate') + nodes('ObjectHashAggregate')} "
-            f"SortAggregate={nodes('SortAggregate')}"
+            f"HashAggregate={nodes(plan, 'HashAggregate') + nodes(plan, 'ObjectHashAggregate')} "
+            f"SortAggregate={nodes(plan, 'SortAggregate')}"
         )
         for p in dict.fromkeys(pushed):
             print(f"   {p[:140]}")

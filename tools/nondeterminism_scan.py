@@ -86,16 +86,14 @@ EXEMPT: dict[tuple[str, str], str] = {
 }
 
 
-def scan(spark, qs, keys, sf_dir) -> dict:
+def scan(plans: dict) -> dict:
+    """Keys of a `plan_capture.capture` result with markers."""
     result: dict[str, dict] = {}
-    for key in keys:
-        try:
-            df = qs[key](spark, sf_dir)
-            plan = df._jdf.queryExecution().analyzed().toString()
-        except Exception as ex:  # noqa: BLE001
-            result[key] = {"err": f"{type(ex).__name__}: {ex}"[:300]}
+    for key, p in plans.items():
+        if "err" in p:
+            result[key] = p
             continue
-        hits = sorted({m.group(1).lower() for m in MARKERS.finditer(plan)})
+        hits = sorted({m.group(1).lower() for m in MARKERS.finditer(p["analyzed"])})
         if hits:
             result[key] = {"markers": hits}
     return result
@@ -115,18 +113,16 @@ def verdict(result: dict) -> tuple[list[str], list[str]]:
 
 def main() -> int:
     from atac_data_products_spark.session import get_spark
+    from tools.plan_capture import capture
 
     import __spark_entry__ as e
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(
-        "nondeterminism-scan",
-        extra_conf={"spark.sql.debug.maxToStringFields": "100000"},
-    )
+    spark = get_spark("nondeterminism-scan")
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
     keys = sys.argv[2:] or list(qs)
-    result = scan(spark, qs, keys, sf_dir)
+    result = scan(capture(spark, qs, keys, sf_dir))
     print(json.dumps(result, indent=1, sort_keys=True))
     violations, stale = verdict(result)
     for v in violations:

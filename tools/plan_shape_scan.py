@@ -23,26 +23,13 @@ so the default input is sf0.001 to keep eagerly-probing queries cheap.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import json
 import re
 import sys
 
 sys.path.insert(0, ".")
 
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def _nodes(plan: str, name: str) -> int:
-    # node headers print as "(n) Name" (the tree echoes each node too,
-    # as `+- Name (n)` — counting headers avoids double counting)
-    return len(re.findall(rf"^\(\d+\) {name}\b", plan, re.M))
+from tools.plan_capture import capture, nodes  # noqa: E402
 
 
 def global_window_args(plan: str) -> list[str]:
@@ -88,27 +75,26 @@ def global_window_args(plan: str) -> list[str]:
     return out
 
 
-def scan(spark, qs, keys, sf_dir) -> dict:
+def scan(plans: dict) -> dict:
+    """Shape metrics per key of a `plan_capture.capture` result."""
     result = {}
-    for key in keys:
-        try:
-            df = qs[key](spark, sf_dir)
-            plan = plan_of(df)
-        except Exception as ex:  # noqa: BLE001 — report, don't abort the scan
-            result[key] = {"err": f"{type(ex).__name__}: {ex}"[:300]}
+    for key, p in plans.items():
+        if "err" in p:
+            result[key] = p
             continue
+        plan = p["formatted"]
         result[key] = {
-            "smj": _nodes(plan, "SortMergeJoin"),
-            "batch_eval": _nodes(plan, "BatchEvalPython"),
+            "smj": nodes(plan, "SortMergeJoin"),
+            "batch_eval": nodes(plan, "BatchEvalPython"),
             "arrow_eval": (
-                _nodes(plan, "ArrowEvalPython")
-                + _nodes(plan, "FlatMapGroupsInPandas")
-                + _nodes(plan, "MapInPandas")
-                + _nodes(plan, "FlatMapGroupsInPandasWithState")
+                nodes(plan, "ArrowEvalPython")
+                + nodes(plan, "FlatMapGroupsInPandas")
+                + nodes(plan, "MapInPandas")
+                + nodes(plan, "FlatMapGroupsInPandasWithState")
             ),
             "nested_loop": (
-                _nodes(plan, "BroadcastNestedLoopJoin")
-                + _nodes(plan, "CartesianProduct")
+                nodes(plan, "BroadcastNestedLoopJoin")
+                + nodes(plan, "CartesianProduct")
             ),
             "global_windows": global_window_args(plan),
         }
@@ -125,7 +111,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
     keys = sys.argv[2:] or list(qs)
-    print(json.dumps(scan(spark, qs, keys, sf_dir), indent=1, sort_keys=True))
+    result = scan(capture(spark, qs, keys, sf_dir))
+    print(json.dumps(result, indent=1, sort_keys=True))
     return 0
 
 
