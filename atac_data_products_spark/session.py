@@ -11,6 +11,19 @@ Design notes (100 TB target, tested on local[N]):
 - UTC session timezone pins timestamp semantics so results are stable
   across environments (the reference stringifies ``datetime.now()`` with
   no timezone at all — bin/concatenate.py:140).
+- Codegen class cache sized to the registry's working set
+  (``CODEGEN_CACHE_ENTRIES``).  Spark compiles each generated class
+  with Janino and keeps it in a JVM-wide LRU of
+  ``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.  One
+  cold pass over the four keys of the ``lsh_corpus`` benchmark workload
+  compiles 174 classes, so at 100 every entry was evicted before its
+  plan ran again: each warm pass over the built plans compiled 85-138
+  classes anew, and the JIT compiled those fresh classes once more.
+  With 2000 entries warm passes compile 0 classes, apart from the
+  renamed stages of docs/OPERATIONS.md.  The ``atac_product`` flow
+  needs fewer than 100, so it never hit the old limit.  The conf is
+  static, so it is set here in the builder; sessions not built by
+  ``get_spark`` (one an outside caller creates) keep Spark's default.
 """
 
 from __future__ import annotations
@@ -18,6 +31,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# About 11x one lsh_corpus pass (174 classes): room for the registry's
+# other keys in one session without evicting the pass (module docstring)
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def default_parallelism() -> int:
@@ -74,6 +92,7 @@ def get_spark(
         # here, e.g. the driver's.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))

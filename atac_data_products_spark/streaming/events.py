@@ -26,15 +26,17 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     The streaming file source requires an explicit schema and a
     *directory*; the schema comes from a footer-only batch read of the
     same path, and a single-file path is staged behind a symlink dir so
-    the same call works on both.
+    the same call works on both.  The symlink dir lives under the
+    per-process staging root (registry._staging_dir), removed at exit.
     """
     import os
-    import tempfile
 
+    from ..registry import _call_dir
     from ..sources.tables import ts_us_expr
 
     if os.path.isfile(path):
-        stage = tempfile.mkdtemp(prefix="adp_stream_")
+        stage = _call_dir("stream")
+        os.makedirs(stage)
         os.symlink(path, os.path.join(stage, os.path.basename(path)))
         path = stage
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

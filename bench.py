@@ -235,6 +235,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     spill_runs: dict[str, list[float]] = {}
+    compiled: dict[str, list[int]] = {}
     cal: dict[str, float] = {}
     cal_runs: dict[str, list[float]] = {}
     for name in HEADLINE:
@@ -244,7 +245,7 @@ def main() -> None:
         if do_cal:
             cal_runs[name] = _measure_calibration(spark)
             cal[name] = round(sum(cal_runs[name]) / len(cal_runs[name]), 3)
-        runs[name], spill_runs[name] = time_key(
+        runs[name], spill_runs[name], compiled[name] = time_key(
             spark, lambda: qs[name](spark, sf_dir), n_iters
         )
         timings[name] = min(runs[name])
@@ -295,6 +296,9 @@ def main() -> None:
                     if any(spill_runs.get(k) or [])
                     else {}
                 ),
+                # generated classes each timed run compiled (how to read
+                # them: docs/OPERATIONS.md, codegen class cache)
+                "compiled_classes_runs": compiled[k],
             }
             for k in timings
         },

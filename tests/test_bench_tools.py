@@ -186,15 +186,21 @@ def test_sweep_reports_each_key_and_fails_on_drift_or_error(capsys):
 
 def test_time_key_times_each_run_and_leaves_no_cache(spark):
     """One time per iteration, and a .cache() inside build() is dropped after
-    every run, so runs stay cold and nothing leaks into the next key."""
+    every run, so runs stay cold and nothing leaks into the next key.  Each
+    run also reports the classes it compiled: the first run of a plan no
+    session has seen compiles its own, the later runs reuse them."""
     built = []
 
     def build():
-        df = spark.range(100).selectExpr("id % 7 AS k").cache()
+        # codegen inlines the literal: one no other test uses makes the
+        # first run's classes new to the session
+        df = spark.range(100).selectExpr("id % 7919 AS k").cache()
         built.append(df)
         return df
 
-    runs, spill_runs = time_key(spark, build, 3)
-    assert len(runs) == len(spill_runs) == len(built) == 3
+    runs, spill_runs, compiled = time_key(spark, build, 3)
+    assert len(runs) == len(spill_runs) == len(compiled) == len(built) == 3
     assert all(t >= 0 for t in runs)
+    assert compiled[0] > 0
+    assert compiled[1:] == [0, 0]
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

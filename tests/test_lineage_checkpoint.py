@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,8 +27,9 @@ from atac_data_products_spark.spill import (
 
 
 @pytest.fixture()
-def ckpt_root(spark):
-    root = tempfile.mkdtemp(prefix="adp_ckpt_test_")
+def ckpt_root(spark, tmp_path):
+    root = str(tmp_path / "ckpt")
+    os.mkdir(root)
     spark.conf.set("adp.checkpoint.root", root)
     try:
         yield root
@@ -104,14 +104,15 @@ def test_release_checkpoint_noop_on_plain_frames(spark, ckpt_root):
     spark.conf.set("adp.checkpoint.root", ckpt_root)  # fixture unsets
 
 
-def test_root_change_mid_session_redirects(spark, ckpt_root):
+def test_root_change_mid_session_redirects(spark, ckpt_root, tmp_path):
     # changing adp.checkpoint.root mid-session must redirect new
     # checkpoints to the NEW root — the conf is the source of truth,
     # not whichever setCheckpointDir call happened first (ADVICE r10)
     first = _demo(spark).transform(ckpt_eager)
     assert first.count() == 100
     assert _rdd_dirs(ckpt_root)
-    new_root = tempfile.mkdtemp(prefix="adp_ckpt_test2_")
+    new_root = str(tmp_path / "ckpt2")
+    os.mkdir(new_root)
     spark.conf.set("adp.checkpoint.root", new_root)
     try:
         second = _demo(spark).transform(ckpt_eager)

@@ -162,7 +162,7 @@ def test_ml_score_bounds_and_prediction_consistency(spark):
         assert r.predicted == (r.score > 0)
 
 
-def test_kmeans_degenerate_identical_points(spark):
+def test_kmeans_degenerate_identical_points(spark, tmp_path):
     """All-identical vectors: every point must land in cluster 0 (the
     init centroid it coincides with, ties broken by cluster id), other
     clusters drop out, and inertia is exactly zero."""
@@ -176,9 +176,8 @@ def test_kmeans_degenerate_identical_points(spark):
         F.array(*[F.lit(0.5)] * _KM_DIM).cast("array<float>").alias("embedding"),
         F.lit(0).alias("label"),
     )
-    import tempfile, os
-    d = tempfile.mkdtemp()
-    df.write.mode("overwrite").parquet(os.path.join(d, "embeddings.parquet"))
+    d = str(tmp_path)
+    df.write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
     got = rx.vector_kmeans_lloyd(spark, d).toPandas()
     assert len(got) == 1
     assert got.loc[0, "cluster_id"] == 0

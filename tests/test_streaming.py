@@ -201,15 +201,15 @@ def test_transform_with_state_running_totals(spark):
     assert (final["total_value"] - want["total_value"]).abs().max() < 1e-6
 
 
-def test_stream_ml_score_equals_batch(spark):
+def test_stream_ml_score_equals_batch(spark, tmp_path):
     """The Arrow batch-inference seam is streaming-capable: the SAME
     mapInPandas scorer over a file-source stream of embeddings equals
     the batch result (exact — integer-quantized scores)."""
-    import tempfile, os
+    import os
     from atac_data_products_spark.registry_ext import ml_score_batch
 
     path = f"{SF_SMALL}/embeddings.parquet"
-    stage = tempfile.mkdtemp(prefix="adp_mlstream_")
+    stage = str(tmp_path)
     os.symlink(path, os.path.join(stage, "embeddings.parquet"))
     schema = spark.read.parquet(path).schema
     stream = (

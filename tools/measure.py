@@ -4,6 +4,8 @@
   before anything is timed.
 - ``time_key``: bench.py's timed key run (noop sink, plan construction
   inside the window, cold iterations).
+- ``compiled_classes``: how many generated classes the JVM has compiled,
+  so a run's codegen cost can be told apart from its execution.
 - ``sweep``: run each key under two settings and diff the normalized
   outputs (tools/tz_scan.py, tools/order_scan.py).
 
@@ -43,11 +45,20 @@ def warm_up(spark: SparkSession, queries: dict, sf_dir: str) -> None:
     )
 
 
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes compiled by this JVM so far: one per codegen
+    cache miss (``CodegenMetrics`` records one compilation time per
+    Janino compile), across every session of the JVM."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def time_key(
     spark: SparkSession, build: Callable[[], DataFrame], iters: int
-) -> tuple[list[float], list[float]]:
+) -> tuple[list[float], list[float], list[int]]:
     """Run ``build()`` into the noop sink ``iters`` times; return the
-    seconds of each run and the spill-write seconds paid inside it.
+    seconds of each run, the spill-write seconds paid inside it and the
+    generated classes it compiled.
 
     - An untimed JVM gc comes first: dozens of codegen'd plans leave
       old-gen debt that throttles later shuffle-heavy keys (measured:
@@ -57,6 +68,9 @@ def time_key(
       run jobs while the plan is built.
     - ``spill_once`` writes once per session, so only the first run
       pays the write; the second list makes that cost visible.
+    - Later runs of a key should compile 0 classes: each run's plan
+      reuses the classes of the first from the codegen cache.  A count
+      above 0 there is recompilation, paid again by Janino and the JIT.
     - After each run, every persisted block is dropped (``clearCache``;
       localCheckpoint blocks go once the Python reference is collected),
       so runs stay cold instead of measuring cache latency, and an
@@ -68,18 +82,19 @@ def time_key(
     from atac_data_products_spark.spill import spill_write_seconds_total
 
     spark.sparkContext._jvm.System.gc()
-    runs, spill_runs = [], []
+    runs, spill_runs, compiled = [], [], []
     for _ in range(iters):
-        sw0 = spill_write_seconds_total()
+        sw0, cc0 = spill_write_seconds_total(), compiled_classes(spark)
         t0 = time.time()
         df = build()
         _noop(df)
         runs.append(round(time.time() - t0, 3))
         spill_runs.append(round(spill_write_seconds_total() - sw0, 3))
+        compiled.append(compiled_classes(spark) - cc0)
         spark.catalog.clearCache()
         del df
         gc.collect()
-    return runs, spill_runs
+    return runs, spill_runs, compiled
 
 
 def sweep(keys: list[str], run: Callable, settings: tuple) -> int:

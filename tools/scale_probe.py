@@ -187,7 +187,7 @@ def timed(qs, key, spark, sf_dir, n=2, attr=None):
     best, best_stages = None, None
     for _ in range(n):
         mark = attr.watermark()
-        (dt,), _ = time_key(spark, build, 1)
+        (dt,), _, _ = time_key(spark, build, 1)
         if best is None or dt < best:
             best, best_stages = dt, attr.report(mark)
     return best, best_stages

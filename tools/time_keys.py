@@ -38,8 +38,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     warm_up(spark, qs, sf_dir)
     for name in args:
-        runs, _ = time_key(spark, lambda: qs[name](spark, sf_dir), iters)
-        print(json.dumps({"query": name, "sec": min(runs), "runs": runs}), flush=True)
+        runs, _, compiled = time_key(spark, lambda: qs[name](spark, sf_dir), iters)
+        print(json.dumps({"query": name, "sec": min(runs), "runs": runs,
+                          "compiled_classes_runs": compiled}), flush=True)
     return 0
 
 
