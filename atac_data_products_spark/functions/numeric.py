@@ -99,17 +99,19 @@ def mean_quantized_signed_sql(
 
 def mean_quantized_sql(sum_sql: str, cnt_sql: str, unit: int = 1_000_000) -> str:
     """DuckDB twin of :func:`mean_quantized` (HUGEINT lane).  The
-    quantized integer goes straight HUGEINT→DOUBLE — a BIGINT
-    intermediate overflows when the mean exceeds ~9.2e12 units (the
-    hostile fixture's year-9999 gap does), and the direct conversion is
-    the same round-to-nearest Spark's DECIMAL→double cast makes.
+    quantized integer skips BIGINT, which overflows past a ~9.2e12-unit
+    mean (the hostile fixture's year-9999 gap), and reaches DOUBLE via
+    VARCHAR: DuckDB's direct HUGEINT→DOUBLE cast rounds twice past 2^64
+    (hypothesis find), while the string parses to the nearest double,
+    as Spark's DECIMAL→double cast does.
     The denominator rides HUGEINT too: DuckDB types a fitting integer
     LITERAL as INT32, so `2 * n` overflows at n ≥ 2^30 when a caller
     inlines a literal count (hypothesis find, round 9)."""
     return (
         f"CASE WHEN ({cnt_sql}) > 0 THEN "
-        f"CAST((2 * CAST({sum_sql} AS HUGEINT) * {unit} + ({cnt_sql}))"
-        f" // (2 * CAST(({cnt_sql}) AS HUGEINT)) AS DOUBLE) / {unit}.0 END"
+        f"CAST(CAST((2 * CAST({sum_sql} AS HUGEINT) * {unit} + ({cnt_sql}))"
+        f" // (2 * CAST(({cnt_sql}) AS HUGEINT)) AS VARCHAR) AS DOUBLE)"
+        f" / {unit}.0 END"
     )
 
 
@@ -138,12 +140,12 @@ def ratio_scaled_int(
 
 def ratio_scaled_int_sql(sum_sql: str, cnt_sql: str, scale: int = 1_000_000) -> str:
     """DuckDB twin of :func:`ratio_scaled_int` (HUGEINT lane; the
-    denominator is HUGEINT-cast for the same INT32-literal reason as
-    :func:`mean_quantized_sql`)."""
+    denominator is HUGEINT-cast, and the result reaches DOUBLE through
+    VARCHAR, for the same reasons as :func:`mean_quantized_sql`)."""
     return (
         f"CASE WHEN ({cnt_sql}) > 0 THEN "
-        f"CAST((2 * CAST({sum_sql} AS HUGEINT) * {scale} + ({cnt_sql}))"
-        f" // (2 * CAST(({cnt_sql}) AS HUGEINT)) AS DOUBLE) END"
+        f"CAST(CAST((2 * CAST({sum_sql} AS HUGEINT) * {scale} + ({cnt_sql}))"
+        f" // (2 * CAST(({cnt_sql}) AS HUGEINT)) AS VARCHAR) AS DOUBLE) END"
     )
 
 

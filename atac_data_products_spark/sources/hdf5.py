@@ -1,4 +1,5 @@
-"""Minimal pure-Python HDF5 reader for AnnData ``.h5ad`` payloads.
+"""Minimal pure-Python HDF5 reader for AnnData ``.h5ad`` and MuData
+``.h5mu`` payloads.
 
 The reference's core input format is HDF5 (``anndata.read_h5ad``,
 ``bin/concatenate.py:62``), but this container ships neither ``h5py``
@@ -28,6 +29,10 @@ fractal-heap dense groups/attributes, szip/lzf/plugin-filtered chunks,
 compound or reference datatypes, version 3/4 data layouts other than
 the above.  These do not occur in default- or gzip-settings
 ``anndata.write_h5ad`` output.
+
+An ``.h5ad`` root and each ``/mod/<name>`` of an ``.h5mu`` are the same
+AnnData group, so one reader, ``_read_anndata``, decodes both, with the
+same errors.
 
 Everything here is stateless byte slicing over one file's content —
 it runs inside the Arrow-batched ``mapInPandas`` decode seam
@@ -284,7 +289,6 @@ class H5Reader:
                 return
             if sig != b"TREE":
                 raise ValueError(f"bad group B-tree node at {node}")
-            level = self.b[node + 5]
             n = struct.unpack_from("<H", self.b, node + 6)[0]
             p = node + 8 + 16  # skip siblings
             p += 8  # key 0
@@ -292,7 +296,6 @@ class H5Reader:
                 (child,) = struct.unpack_from("<Q", self.b, p)
                 walk(self.base + child)
                 p += 16  # child + next key
-            del level
 
         if btree - self.base != _UNDEF:
             walk(btree)
@@ -330,11 +333,9 @@ class H5Reader:
         raise _unsupported(f"datatype class {cls}")
 
     def _parse_dataspace(self, body: bytes) -> tuple[int, ...]:
-        ver, rank, flags = body[0], body[1], body[2]
+        ver, rank = body[0], body[1]
         p = 8 if ver == 1 else 4
-        dims = struct.unpack_from(f"<{rank}Q", body, p)
-        del flags
-        return tuple(dims)
+        return tuple(struct.unpack_from(f"<{rank}Q", body, p))
 
     def attributes(self, obj: _Obj) -> dict[str, object]:
         # dense (fractal-heap) attribute storage must be REJECTED, not
@@ -587,7 +588,47 @@ class H5Reader:
             return False
 
 
-# -- AnnData (.h5ad) structure decoding ------------------------------------
+# -- AnnData group decoding (.h5ad root, .h5mu /mod/<name>) ---------------
+
+
+def _read_anndata(r: H5Reader, group: _Obj, where: str) -> dict:
+    """One AnnData group, an .h5ad root or an .h5mu /mod/<name>, as
+    read_h5ad_matrix's dict; ``where`` is its path, for error messages."""
+    x_obj = r.read_object(r.list_group(group)["X"])
+    attrs = r.attributes(x_obj)
+    if x_obj.one(_MSG_DATATYPE) is not None:  # dense dataset
+        x = ("dense", np.asarray(r.read_dataset(x_obj)))
+    else:
+        # no silent defaults on a group-encoded X (round-4 ADVICE): a
+        # file whose attributes we could not read must raise, not decode
+        # as an empty csr.  Modern anndata writes encoding-type/shape;
+        # legacy h5sparse files carry h5sparse_format/h5sparse_shape.
+        enc = attrs.get("encoding-type")
+        if enc is None and "h5sparse_format" in attrs:
+            enc = f"{attrs['h5sparse_format']}_matrix"
+        if enc is None:
+            raise _unsupported(
+                f"group-encoded {where}/X without encoding-type / h5sparse_format"
+            )
+        kind = {"csr_matrix": "csr", "csc_matrix": "csc"}.get(str(enc))
+        if kind is None:
+            raise _unsupported(f"{where}/X encoding-type {enc!r}")
+        raw_shape = attrs.get("shape", attrs.get("h5sparse_shape"))
+        if raw_shape is None:
+            raise _unsupported(
+                f"group-encoded {where}/X without shape / h5sparse_shape"
+            )
+        ch = r.list_group(x_obj)
+        data, indices, indptr = (
+            np.asarray(r.read_dataset(r.read_object(ch[n])))
+            for n in ("data", "indices", "indptr")
+        )
+        x = (kind, data, indices, indptr, tuple(int(s) for s in raw_shape))
+    return {
+        "barcodes": _read_axis_index(r, group, "obs", where),
+        "features": _read_axis_index(r, group, "var", where),
+        "x": x,
+    }
 
 
 def read_h5ad_matrix(content: bytes) -> dict:
@@ -606,44 +647,7 @@ def read_h5ad_matrix(content: bytes) -> dict:
     literal '_index' or 'index' dataset).
     """
     r = H5Reader(content)
-    x_obj = r.open("X")
-    attrs = r.attributes(x_obj)
-    if x_obj.one(_MSG_DATATYPE) is not None:  # dense dataset
-        x = ("dense", np.asarray(r.read_dataset(x_obj)))
-        n_obs = x[1].shape[0]
-    else:
-        # no silent defaults on a group-encoded X (round-4 ADVICE): a
-        # file whose attributes we could not read must raise, not decode
-        # as an empty csr.  Modern anndata writes encoding-type/shape;
-        # legacy h5sparse files carry h5sparse_format/h5sparse_shape.
-        enc = attrs.get("encoding-type")
-        if enc is None and "h5sparse_format" in attrs:
-            enc = f"{attrs['h5sparse_format']}_matrix"
-        if enc is None:
-            raise _unsupported(
-                "group-encoded X without encoding-type / h5sparse_format"
-            )
-        kind = {"csr_matrix": "csr", "csc_matrix": "csc"}.get(str(enc))
-        if kind is None:
-            raise _unsupported(f"X encoding-type {enc!r}")
-        children = r.list_group(x_obj)
-        data = np.asarray(r.read_dataset(r.read_object(children["data"])))
-        indices = np.asarray(
-            r.read_dataset(r.read_object(children["indices"]))
-        )
-        indptr = np.asarray(r.read_dataset(r.read_object(children["indptr"])))
-        raw_shape = attrs.get("shape", attrs.get("h5sparse_shape"))
-        if raw_shape is None:
-            raise _unsupported(
-                "group-encoded X without shape / h5sparse_shape"
-            )
-        shape = tuple(int(s) for s in raw_shape)
-        x = (kind, data, indices, indptr, shape)
-        n_obs = shape[0]
-    barcodes = _read_axis_index(r, "obs")
-    features = _read_axis_index(r, "var")
-    del n_obs
-    return {"barcodes": barcodes, "features": features, "x": x}
+    return _read_anndata(r, r.read_object(r.root), "")
 
 
 def _resolve_index_dataset(attrs: dict, children: dict, where: str) -> str:
@@ -672,32 +676,18 @@ def _resolve_index_dataset(attrs: dict, children: dict, where: str) -> str:
     )
 
 
-def _read_axis_index(r: H5Reader, axis: str) -> list[str]:
-    obj = r.open(axis)
+def _read_axis_index(r: H5Reader, parent: _Obj, axis: str, where: str) -> list[str]:
+    """The obs or var index of the AnnData group ``parent`` at path
+    ``where``."""
+    path = f"{where}/{axis}"
+    obj = r.read_object(r.list_group(parent)[axis])
     if obj.one(_MSG_DATATYPE) is not None:
-        raise _unsupported(f"compound-dataset {axis} (pre-0.7 anndata)")
+        raise _unsupported(f"compound-dataset {path} (pre-0.7 anndata)")
     attrs = r.attributes(obj)
     children = r.list_group(obj)
-    index_name = _resolve_index_dataset(attrs, children, f"/{axis}")
+    index_name = _resolve_index_dataset(attrs, children, path)
     vals = r.read_dataset(r.read_object(children[index_name]))
     return [str(v) for v in vals]
-
-
-def _read_csr_group(r: H5Reader, obj: _Obj) -> tuple:
-    """Decode one AnnData-encoded group's X (csr/csc) as the same tuple
-    read_h5ad_matrix emits."""
-    x_obj = r.read_object(r.list_group(obj)["X"])
-    attrs = r.attributes(x_obj)
-    enc = attrs.get("encoding-type")
-    kind = {"csr_matrix": "csr", "csc_matrix": "csc"}.get(str(enc))
-    if kind is None:
-        raise _unsupported(f"modality X encoding-type {enc!r}")
-    ch = r.list_group(x_obj)
-    data = np.asarray(r.read_dataset(r.read_object(ch["data"])))
-    indices = np.asarray(r.read_dataset(r.read_object(ch["indices"])))
-    indptr = np.asarray(r.read_dataset(r.read_object(ch["indptr"])))
-    shape = tuple(int(s) for s in attrs["shape"])
-    return (kind, data, indices, indptr, shape)
 
 
 def read_h5mu(content: bytes) -> dict:
@@ -711,12 +701,14 @@ def read_h5mu(content: bytes) -> dict:
     Returns::
 
         {"mod": {name: {"barcodes": [...], "features": [...],
-                        "x": (kind, data, indices, indptr, shape)}},
+                        "x": <as read_h5ad_matrix's "x">}},
          "obs": {"_index": [...], "<col>": [...], ...},
          "uns": {key: [values]}}
 
-    The 512-byte MuData user block is transparent: H5Reader locates the
-    superblock by signature scan at the spec's allowed offsets."""
+    Each /mod/<name> is read by the same AnnData group reader as an
+    .h5ad root.  The 512-byte MuData user block is transparent:
+    H5Reader locates the superblock by signature scan at the spec's
+    allowed offsets."""
     r = H5Reader(content)
     root_attrs = r.attributes(r.open("/"))
     if "encoding-type" in root_attrs and root_attrs["encoding-type"] != "MuData":
@@ -724,14 +716,10 @@ def read_h5mu(content: bytes) -> dict:
             f"root encoding-type {root_attrs['encoding-type']!r} (not MuData)"
         )
     mod_grp = r.open("mod")
-    mods: dict[str, dict] = {}
-    for name, addr in sorted(r.list_group(mod_grp).items()):
-        m_obj = r.read_object(addr)
-        mods[name] = {
-            "barcodes": _read_modality_axis(r, m_obj, "obs"),
-            "features": _read_modality_axis(r, m_obj, "var"),
-            "x": _read_csr_group(r, m_obj),
-        }
+    mods = {
+        name: _read_anndata(r, r.read_object(addr), f"/mod/{name}")
+        for name, addr in sorted(r.list_group(mod_grp).items())
+    }
     obs_obj = r.open("obs")
     obs_attrs = r.attributes(obs_obj)
     # same strict resolution as the axis readers (review finding: the
@@ -741,31 +729,18 @@ def read_h5mu(content: bytes) -> dict:
     index_name = _resolve_index_dataset(
         obs_attrs, r.list_group(obs_obj), "/obs"
     )
-    obs: dict[str, list] = {}
-    for col, addr in sorted(r.list_group(obs_obj).items()):
-        vals = r.read_dataset(r.read_object(addr))
-        key = "_index" if col == index_name else col
-        obs[key] = list(vals) if not isinstance(vals, list) else vals
-    uns: dict[str, list] = {}
+    obs = {
+        "_index" if col == index_name else col: list(
+            r.read_dataset(r.read_object(addr))
+        )
+        for col, addr in sorted(r.list_group(obs_obj).items())
+    }
     try:
-        uns_obj = r.open("uns")
+        uns_grp = r.list_group(r.open("uns"))
     except KeyError:
-        uns_obj = None
-    if uns_obj is not None:
-        for k, addr in sorted(r.list_group(uns_obj).items()):
-            vals = r.read_dataset(r.read_object(addr))
-            uns[k] = list(vals) if not isinstance(vals, list) else vals
+        uns_grp = {}
+    uns = {
+        k: list(r.read_dataset(r.read_object(addr)))
+        for k, addr in sorted(uns_grp.items())
+    }
     return {"mod": mods, "obs": obs, "uns": uns}
-
-
-def _read_modality_axis(r: H5Reader, mod_obj: _Obj, axis: str) -> list[str]:
-    obj = r.read_object(r.list_group(mod_obj)[axis])
-    attrs = r.attributes(obj)
-    children = r.list_group(obj)
-    # strict resolution shared with _read_axis_index: legacy 'index'
-    # fallback only when _index is absent/default; an explicitly
-    # declared-but-missing index column is a loud _unsupported, never a
-    # silent substitute (round-5 + round-6 ADVICE)
-    index_name = _resolve_index_dataset(attrs, children, f"modality {axis}")
-    vals = r.read_dataset(r.read_object(children[index_name]))
-    return [str(v) for v in vals]

@@ -15,12 +15,13 @@ decode output streams out as Arrow record batches (never one giant pandas
 frame per node, unlike the reference's materialize-everything pattern at
 bin/concatenate.py:128-136).
 
-`decode_h5ad_bytes` decodes real h5ad files: through anndata when it is
-importable, otherwise through the dependency-free HDF5 reader
-(sources/hdf5.py), which covers the layouts default-settings
-``anndata.write_h5ad`` produces.  The `scan_h5ad_codec` key, the product
-ingest (tools/ingest_h5ad.py) and perfbench's `atac_product` workload run
-through it.
+`decode_h5ad_bytes` and `decode_h5mu_bytes` read real files with the
+dependency-free HDF5 reader (sources/hdf5.py), one AnnData group reader
+for both formats, and expand them to COO rows through one expander,
+`_coo_blocks`.  anndata is only the fallback for an .h5ad that the pure
+reader rejects as unsupported.  The `scan_h5ad_codec` key, the product
+ingest (tools/ingest_h5ad.py) and perfbench's `atac_product` workload
+run through it.
 `decode_parquet_bytes` drives the same plumbing with parquet payloads; the
 `scan_h5ad` key uses it to scan the documents table.
 """
@@ -37,60 +38,22 @@ from pyspark.sql import DataFrame, SparkSession
 COO_SCHEMA = "dataset string, barcode string, feature_id string, value double"
 
 
-def decode_h5ad_bytes(content: bytes, dataset: str) -> Iterator[pd.DataFrame]:
-    """Decode one h5ad file's AnnData X matrix into COO chunks.
-
-    Yields (dataset, barcode, feature_id, value) chunks, one per CSR row
-    block, so a 10 GB matrix never materializes as one pandas frame.
-
-    Prefers anndata when importable (full-format coverage); otherwise
-    falls back to the dependency-free HDF5 reader (sources/hdf5.py),
-    which handles the layouts default-settings ``anndata.write_h5ad``
-    produces (contiguous/chunked-uncompressed, CSR/CSC/dense X, vlen
-    string indices) — the reference's core input path
-    (bin/concatenate.py:62) with zero extra packages.
-    """
-    try:
-        import anndata  # noqa: F401
-    except ImportError:
-        yield from _decode_h5ad_pure(content, dataset)
-        return
-    import scipy.sparse as sp
-
-    adata = anndata.read_h5ad(io.BytesIO(content))  # pragma: no cover
-    x = sp.csr_matrix(adata.X)  # pragma: no cover
-    barcodes = adata.obs.index.to_numpy()  # pragma: no cover
-    features = adata.var.index.to_numpy()  # pragma: no cover
-    block = 10_000  # pragma: no cover
-    for start in range(0, x.shape[0], block):  # pragma: no cover
-        sub = x[start : start + block].tocoo()
-        yield pd.DataFrame(
-            {
-                "dataset": dataset,
-                "barcode": barcodes[start + sub.row],
-                "feature_id": features[sub.col],
-                "value": sub.data.astype("float64"),
-            }
-        )
-
-
-def _decode_h5ad_pure(
-    content: bytes, dataset: str, block: int = 10_000
-) -> Iterator[pd.DataFrame]:
-    """COO chunks via the pure-Python HDF5 reader — no scipy: CSR/CSC
-    row ids come from np.repeat over indptr run lengths."""
+def _coo_blocks(m: dict, col: str, label: str) -> Iterator[pd.DataFrame]:
+    """Expand one decoded AnnData matrix (read_h5ad_matrix's dict) into
+    (<col>=label, barcode, feature_id, value) frames, one per 10,000
+    major-axis rows, so a 10 GB matrix never materializes as one pandas
+    frame.  No scipy: csr/csc row ids come from np.repeat over indptr
+    run lengths."""
     import numpy as np
 
-    from .hdf5 import read_h5ad_matrix
-
-    m = read_h5ad_matrix(content)
+    block = 10_000
     barcodes = np.asarray(m["barcodes"], dtype=object)
     features = np.asarray(m["features"], dtype=object)
 
     def frame(bc, ft, vals) -> pd.DataFrame:
         return pd.DataFrame(
             {
-                "dataset": dataset,
+                col: label,
                 "barcode": bc,
                 "feature_id": ft,
                 "value": np.asarray(vals, dtype="float64"),
@@ -117,6 +80,33 @@ def _decode_h5ad_pure(
             yield frame(barcodes[runs], features[indices[lo:hi]], data[lo:hi])
         else:  # csc: major axis is features, indices are obs rows
             yield frame(barcodes[indices[lo:hi]], features[runs], data[lo:hi])
+
+
+def decode_h5ad_bytes(content: bytes, dataset: str) -> Iterator[pd.DataFrame]:
+    """Decode one h5ad file's AnnData X matrix into (dataset, barcode,
+    feature_id, value) COO chunks with the pure HDF5 reader: the
+    reference's core input path (bin/concatenate.py:62) with zero extra
+    packages.  A file the reader rejects as unsupported is read with
+    anndata when that is importable; otherwise its NotImplementedError
+    propagates."""
+    from .hdf5 import read_h5ad_matrix
+
+    try:
+        m = read_h5ad_matrix(content)
+    except NotImplementedError as unsupported:
+        try:
+            import anndata
+            import scipy.sparse as sp
+        except ImportError:
+            raise unsupported from None
+        adata = anndata.read_h5ad(io.BytesIO(content))
+        x = sp.csr_matrix(adata.X)
+        m = {
+            "barcodes": adata.obs.index.to_numpy(),
+            "features": adata.var.index.to_numpy(),
+            "x": ("csr", x.data, x.indices, x.indptr, x.shape),
+        }
+    yield from _coo_blocks(m, "dataset", dataset)
 
 
 def ingest_binary_files(
@@ -169,33 +159,7 @@ def decode_h5mu_bytes(content: bytes, dataset: str) -> Iterator[pd.DataFrame]:
     (sources/hdf5.read_h5mu).  Yields (modality, barcode, feature_id,
     value) row blocks; runs inside the same Arrow-batched mapInPandas
     seam as decode_h5ad_bytes (one file per task)."""
-    import numpy as np
-
     from .hdf5 import read_h5mu
 
-    out = read_h5mu(content)
-    block = 10_000
-    for name, m in out["mod"].items():
-        kind, data, indices, indptr, shape = m["x"]
-        barcodes = np.asarray(m["barcodes"], dtype=object)
-        features = np.asarray(m["features"], dtype=object)
-        if kind == "csr":
-            row_ids = np.repeat(
-                np.arange(shape[0]), np.diff(indptr).astype("int64")
-            )
-            rows, cols = row_ids, np.asarray(indices)
-        else:  # csc
-            col_ids = np.repeat(
-                np.arange(shape[1]), np.diff(indptr).astype("int64")
-            )
-            rows, cols = np.asarray(indices), col_ids
-        for start in range(0, len(data), block):
-            sl = slice(start, start + block)
-            yield pd.DataFrame(
-                {
-                    "modality": name,
-                    "barcode": barcodes[rows[sl]],
-                    "feature_id": features[cols[sl]],
-                    "value": np.asarray(data[sl], dtype="float64"),
-                }
-            )
+    for name, m in read_h5mu(content)["mod"].items():
+        yield from _coo_blocks(m, "modality", name)

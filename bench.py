@@ -224,13 +224,9 @@ def main() -> None:
     # cost.  (r01/r02 were single-shot — totals are ~10-15% higher than
     # the same plans measured this way.)
     n_iters = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3")))
-    # ADP_BENCH_CAL=0 disables the interleaved probe (the harness's own
-    # A/B knob: measured parity — totals within noise with probes on/off)
-    do_cal = os.environ.get("ADP_BENCH_CAL", "1") != "0"
     # pay the probe's one-time analysis/codegen cost in warmup so the
     # first interleaved measurement is load, not compilation
-    if do_cal:
-        _measure_calibration(spark, n=1)
+    _measure_calibration(spark, n=1)
 
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
@@ -242,9 +238,8 @@ def main() -> None:
         if name not in qs:
             continue
         # calibration probe adjacent to (not inside) the key's window
-        if do_cal:
-            cal_runs[name] = _measure_calibration(spark)
-            cal[name] = round(sum(cal_runs[name]) / len(cal_runs[name]), 3)
+        cal_runs[name] = _measure_calibration(spark)
+        cal[name] = round(sum(cal_runs[name]) / len(cal_runs[name]), 3)
         runs[name], spill_runs[name], compiled[name] = time_key(
             spark, lambda: qs[name](spark, sf_dir), n_iters
         )
@@ -280,8 +275,8 @@ def main() -> None:
                 # load-normalized cost in probe units (r10 task 4):
                 # cross-round, (sec_min/cal_sec) ratios cancel host load
                 # per-key — tools/bench_diff.py prefers them
-                "cal_sec": cal.get(k),
-                "cal_runs": cal_runs.get(k),
+                "cal_sec": cal[k],
+                "cal_runs": cal_runs[k],
                 "sec_load_norm": (
                     round(timings[k] / cal[k], 3) if cal.get(k) else None
                 ),

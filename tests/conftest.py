@@ -3,21 +3,16 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from atac_data_products_spark.session import get_spark  # noqa: E402
+from tools.check_correctness import duck_connect  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 @pytest.fixture(scope="session")
@@ -28,9 +23,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
+    con = duck_connect(SF_SMALL)
     yield con
     con.close()
 

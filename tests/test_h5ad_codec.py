@@ -516,3 +516,95 @@ def test_chunked_write_normalizes_big_endian_input():
     ds2 = w2.write_dataset(vi, chunk_shape=(2,))
     r2 = H5Reader(w2.finish(w2.write_group({"d": ds2})))
     np.testing.assert_array_equal(r2.read_dataset(r2.open("d")), np.arange(5))
+
+
+# anndata fallback: only for files the pure reader rejects as unsupported
+# ---------------------------------------------------------------------------
+
+EXPECTED_ROWS = [
+    ["d", "BAM_data#AAAC", "chr1:0-500", 2.0],
+    ["d", "BAM_data#AAAC", "chr1:500-1000", 1.0],
+    ["d", "GGGT", "chr1:0-500", 3.0],
+    ["d", "TTTT", "chr2:0-500", 9.5],
+]
+
+
+def _stub_anndata(monkeypatch) -> list:
+    """Install stub ``anndata`` and ``scipy.sparse`` modules whose
+    read_h5ad returns the test matrix; returns the list of calls."""
+    import sys
+    import types
+
+    import pandas as pd
+
+    calls: list = []
+
+    def read_h5ad(f):
+        calls.append(f.read())
+        return types.SimpleNamespace(
+            X="stub-X",
+            obs=pd.DataFrame(index=BARCODES),
+            var=pd.DataFrame(index=FEATURES),
+        )
+
+    def csr_matrix(x):
+        assert x == "stub-X"
+        return types.SimpleNamespace(
+            data=DATA, indices=INDICES, indptr=INDPTR, shape=(3, 3)
+        )
+
+    anndata = types.ModuleType("anndata")
+    anndata.read_h5ad = read_h5ad
+    sparse = types.ModuleType("scipy.sparse")
+    sparse.csr_matrix = csr_matrix
+    scipy = types.ModuleType("scipy")
+    scipy.sparse = sparse
+    monkeypatch.setitem(sys.modules, "anndata", anndata)
+    monkeypatch.setitem(sys.modules, "scipy", scipy)
+    monkeypatch.setitem(sys.modules, "scipy.sparse", sparse)
+    return calls
+
+
+def _decoded_rows(content: bytes) -> list:
+    import pandas as pd
+
+    from atac_data_products_spark.sources.ingest import decode_h5ad_bytes
+
+    coo = pd.concat(list(decode_h5ad_bytes(content, "d")), ignore_index=True)
+    return coo[["dataset", "barcode", "feature_id", "value"]].values.tolist()
+
+
+def test_supported_file_never_calls_anndata(monkeypatch):
+    calls = _stub_anndata(monkeypatch)
+    content = build_h5ad_csr(BARCODES, FEATURES, DATA, INDICES, INDPTR)
+    assert _decoded_rows(content) == EXPECTED_ROWS
+    assert calls == []
+
+
+def test_unsupported_file_decodes_through_anndata(monkeypatch):
+    """A file the pure reader rejects gets its rows from anndata, expanded
+    by the same _coo_blocks as the pure reader's output."""
+    from atac_data_products_spark.sources import ingest
+
+    calls = _stub_anndata(monkeypatch)
+    coo_blocks = ingest._coo_blocks
+    expanded = []
+
+    def spy(m, col, label):
+        expanded.append(m["x"][0])
+        return coo_blocks(m, col, label)
+
+    monkeypatch.setattr(ingest, "_coo_blocks", spy)
+    content = _csr_group_file({"encoding-type": "coo_matrix", "shape": [3, 3]})
+    assert _decoded_rows(content) == EXPECTED_ROWS
+    assert calls == [content]
+    assert expanded == ["csr"]
+
+
+def test_unsupported_file_without_anndata_raises(monkeypatch):
+    import sys
+
+    monkeypatch.setitem(sys.modules, "anndata", None)  # import -> ImportError
+    content = _csr_group_file({"encoding-type": "coo_matrix", "shape": [3, 3]})
+    with pytest.raises(NotImplementedError, match="coo_matrix"):
+        _decoded_rows(content)

@@ -237,10 +237,10 @@ def test_export_h5mu_alignment_guard_is_a_real_raise():
 def test_modality_axis_legacy_index_fallback():
     """Round-5 ADVICE: modality obs/var groups written by legacy
     muon/anndata use an `index` dataset with no `_index` attr; the
-    modality axis reader must mirror _read_axis_index's fallback instead
-    of dying with a raw KeyError — and reject a truly index-less group
-    with the codec's explicit-unsupported contract."""
-    from atac_data_products_spark.sources.hdf5 import _read_modality_axis
+    modality axis must get the same fallback as the .h5ad axes (one axis
+    reader) instead of dying with a raw KeyError — and reject a truly
+    index-less group with the codec's explicit-unsupported contract."""
+    from atac_data_products_spark.sources.hdf5 import _read_axis_index
     from atac_data_products_spark.sources.hdf5_write import Writer
 
     w = Writer()
@@ -253,9 +253,9 @@ def test_modality_axis_legacy_index_fallback():
     content = w.finish(root)
     r = H5Reader(content)
     mod_obj = r.open("m")
-    assert _read_modality_axis(r, mod_obj, "obs") == ["c1", "c2"]
+    assert _read_axis_index(r, mod_obj, "obs", "/m") == ["c1", "c2"]
     with pytest.raises(NotImplementedError, match="no index dataset"):
-        _read_modality_axis(r, mod_obj, "var")
+        _read_axis_index(r, mod_obj, "var", "/m")
 
 
 def test_declared_index_column_missing_is_rejected():
@@ -264,10 +264,7 @@ def test_declared_index_column_missing_is_rejected():
     reference anndata/muon readers fail on it, so silently falling back
     to an '_index'/'index' dataset could yield a WRONG axis.  The legacy
     fallback must apply only when the attr is absent or default."""
-    from atac_data_products_spark.sources.hdf5 import (
-        _read_axis_index,
-        _read_modality_axis,
-    )
+    from atac_data_products_spark.sources.hdf5 import _read_axis_index
     from atac_data_products_spark.sources.hdf5_write import Writer
 
     w = Writer()
@@ -292,12 +289,13 @@ def test_declared_index_column_missing_is_rejected():
     r = H5Reader(content)
     mod_obj = r.open("m")
     with pytest.raises(NotImplementedError, match="barcode_id"):
-        _read_modality_axis(r, mod_obj, "obs")
-    assert _read_modality_axis(r, mod_obj, "var") == ["g1", "g2"]
-    # same contract at the top-level h5ad axis reader
+        _read_axis_index(r, mod_obj, "obs", "/m")
+    assert _read_axis_index(r, mod_obj, "var", "/m") == ["g1", "g2"]
+    # same contract at the top-level h5ad axes
+    root_obj = r.open("/")
     with pytest.raises(NotImplementedError, match="barcode_id"):
-        _read_axis_index(r, "obs")
-    assert _read_axis_index(r, "var") == ["g1", "g2"]
+        _read_axis_index(r, root_obj, "obs", "")
+    assert _read_axis_index(r, root_obj, "var", "") == ["g1", "g2"]
 
 
 def test_row_misalignment_error_pinpoints_first_mismatch():
@@ -379,3 +377,102 @@ def test_export_h5mu_gzip_single_filter(spark, tmp_path):
     out = read_h5mu(content)
     kind, d, i, p, shape = out["mod"]["m"]["x"]
     assert kind == "csr" and list(d) == [1.5, 2.5, 3.5]
+
+
+# -- one AnnData group reader for .h5ad roots and .h5mu modalities ---------
+
+
+def _anndata_group(w, x, obs=None) -> int:
+    """An AnnData group (X + obs/var dataframes) over BC x ["f0", "f1"]."""
+    if obs is None:
+        obs = w.write_group(
+            {"_index": w.write_dataset(BC)}, attrs={"_index": "_index"}
+        )
+    var = w.write_group(
+        {"_index": w.write_dataset(["f0", "f1"])}, attrs={"_index": "_index"}
+    )
+    return w.write_group({"X": x, "obs": obs, "var": var})
+
+
+def _h5mu_with_mod(build_x, build_obs=lambda w: None) -> bytes:
+    """A MuData container whose one modality 'm' holds build_x(w) as X."""
+    from atac_data_products_spark.sources.hdf5_write import Writer
+
+    w = Writer()
+    mod = w.write_group({"m": _anndata_group(w, build_x(w), build_obs(w))})
+    obs = w.write_group(
+        {"_index": w.write_dataset(BC)}, attrs={"_index": "_index"}
+    )
+    root = w.write_group(
+        {"mod": mod, "obs": obs}, attrs={"encoding-type": "MuData"}
+    )
+    return w.finish(root)
+
+
+def _one_entry_csr(w, attrs: dict) -> int:
+    """A csr X group holding 1.0 at (0, 0), with the given attributes."""
+    return w.write_group(
+        {
+            "data": w.write_dataset(np.array([1.0])),
+            "indices": w.write_dataset(np.array([0], dtype="i4")),
+            "indptr": w.write_dataset(np.array([0, 1, 1, 1], dtype="i8")),
+        },
+        attrs=attrs,
+    )
+
+
+def test_modality_x_without_shape_is_unsupported():
+    """A csr X with no shape attribute is the codec's explicit
+    NotImplementedError in a modality, as it is in an .h5ad, not a raw
+    KeyError."""
+
+    def csr_without_shape(w):
+        return _one_entry_csr(w, {"encoding-type": "csr_matrix"})
+
+    with pytest.raises(NotImplementedError, match="/mod/m/X without shape"):
+        read_h5mu(_h5mu_with_mod(csr_without_shape))
+
+
+def test_modality_dense_x_decodes_like_h5ad():
+    """A dense X decodes in a modality to the same rows as the same
+    matrix in an .h5ad."""
+    import pandas as pd
+
+    from atac_data_products_spark.sources.hdf5_write import build_h5ad_dense
+    from atac_data_products_spark.sources.ingest import (
+        decode_h5ad_bytes,
+        decode_h5mu_bytes,
+    )
+
+    x = np.array([[0.0, 2.0], [1.5, 0.0], [0.0, 4.0]])
+    mu = pd.concat(
+        list(decode_h5mu_bytes(_h5mu_with_mod(lambda w: w.write_dataset(x)), "u"))
+    )
+    ad = pd.concat(list(decode_h5ad_bytes(build_h5ad_dense(BC, ["f0", "f1"], x), "d")))
+    assert set(mu["modality"]) == {"m"}
+    cols = ["barcode", "feature_id", "value"]
+    assert mu[cols].values.tolist() == ad[cols].values.tolist()
+    assert mu[cols].values.tolist() == [
+        ["AAAC#1", "f1", 2.0], ["GGGT#2", "f0", 1.5], ["TTTT#3", "f1", 4.0],
+    ]
+
+
+def test_modality_compound_obs_is_rejected():
+    """An obs stored as a dataset (pre-0.7 anndata's compound table)
+    is rejected in a modality with the same error as in an .h5ad."""
+    from atac_data_products_spark.sources.hdf5_write import Writer
+
+    def obs_dataset(w):
+        return w.write_dataset(np.arange(3, dtype="int64"))
+
+    def csr(w):
+        return _one_entry_csr(
+            w, {"encoding-type": "csr_matrix", "shape": [3, 2]}
+        )
+
+    with pytest.raises(NotImplementedError, match="compound-dataset /mod/m/obs"):
+        read_h5mu(_h5mu_with_mod(csr, obs_dataset))
+    w = Writer()
+    h5ad = w.finish(_anndata_group(w, csr(w), obs_dataset(w)))
+    with pytest.raises(NotImplementedError, match="compound-dataset /obs"):
+        read_h5ad(h5ad)

@@ -37,11 +37,10 @@ only when they are present (verified both ways at introduction:
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from tools import hostile_fixture as hf
-from tools.check_correctness import compare
+from tools.check_correctness import compare, duck_connect
 
 
 # keys that diverge ONLY via the full-vs-simple case-mapping docs —
@@ -113,11 +112,6 @@ RISK_KEYS = [
     "events_anomaly_mad",
 ]
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 @pytest.fixture(scope="module")
 def hostile_sf(tmp_path_factory):
@@ -132,11 +126,7 @@ def hostile_sf(tmp_path_factory):
 def harness(spark, hostile_sf):
     import __spark_entry__ as entry
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{hostile_sf}/{t}.parquet'"
-        )
+    con = duck_connect(hostile_sf)
     yield spark, entry.queries(), entry.oracle_sql(), compare, con
     con.close()
 

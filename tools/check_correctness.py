@@ -53,11 +53,7 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 from atac_data_products_spark.session import get_spark, sweep_conf as _sweep_conf  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from atac_data_products_spark.sources.tables import TABLES  # noqa: E402
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -32,22 +32,15 @@ import time
 from datetime import date
 from pathlib import Path
 
-import duckdb
-
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from tools.check_correctness import compare  # noqa: E402
+from tools.check_correctness import compare, duck_connect  # noqa: E402
 
 
 def run_pass(spark, queries, oracles, sf_dir: str, keys) -> dict:
     """{key: verdict-first-line}; 'OK' / 'rows-only: N' / failure text."""
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_connect(sf_dir)
     out: dict[str, str] = {}
     for key in keys:
         try:

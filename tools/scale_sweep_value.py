@@ -35,9 +35,8 @@ import subprocess
 import sys
 
 sys.path.insert(0, ".")
-sys.path.insert(0, "tools")
 
-from scale_probe import BASE, build_scaled  # noqa: E402
+from tools.scale_probe import BASE, build_scaled  # noqa: E402
 
 # boundary-sensitive keys WITHOUT a HUGEINT oracle marker: approximation
 # envelopes and pinned IEEE folds whose numeric territory widens with n
