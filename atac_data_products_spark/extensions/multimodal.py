@@ -380,12 +380,6 @@ def demux_video_frames(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int):
-    """Legacy name — PNG payloads resize for real now (resize_images);
-    other formats still require imaging libraries."""
-    return resize_images(media, width, height)
-
-
 def decode_media(media: DataFrame, target: str = "rgb_frames"):
     """Codec decode: PNG images (decode_image_stats) and RIFF/WAVE PCM
     audio (decode_audio_stats) decode for real; video containers are

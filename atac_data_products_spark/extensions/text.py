@@ -153,11 +153,6 @@ def rolling_fingerprint(toks: Column) -> Column:
     )
 
 
-def stopword_count(text: Column | str) -> Column:
-    stop = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.filter(tokens(text), lambda t: F.array_contains(stop, t)))
-
-
 def quality_features(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document quality features (length / uniqueness / stopword mix).
 

@@ -34,9 +34,11 @@ def to_fixed(col: Column | str, scale: int) -> Column:
     return F.floor(c * scale + F.lit(0.5))
 
 
-def cents(col: Column | str) -> Column:
-    """`to_fixed(col, 100)` — integer cents from exact 2-dp doubles."""
-    return to_fixed(col, 100)
+def to_fixed_sql(expr: str, scale: int) -> str:
+    """SQL twin of :func:`to_fixed`, valid in both DuckDB and Spark SQL.
+    The explicit BIGINT cast matters on DuckDB, whose floor(DOUBLE)
+    stays DOUBLE."""
+    return f"CAST(floor({expr} * {scale} + 0.5) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------

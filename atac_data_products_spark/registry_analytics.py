@@ -28,11 +28,14 @@ from .functions.numeric import (
     mean_quantized_signed_sql,
     mean_quantized_sql,
     to_fixed,
+    to_fixed_sql,
 )
 from pyspark.sql.window import Window
 
+from .derived import daily_cents, daily_cents_sql
 from .registry import _t, _values_sql, query
-from .sources.tables import epoch_day_expr, epoch_day_from_us, load_table, ts_us_expr
+from .sources.tables import epoch_day_expr, epoch_day_from_us, epoch_day_from_us_sql
+from .sources.tables import load_table, ts_us_expr
 from .spill import ckpt_lazy as _ckpt_lazy
 
 # ---------------------------------------------------------------------------
@@ -253,7 +256,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window_moving_avg",
     oracle=f"""
     WITH w AS (SELECT event_id,
-                      sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
+                      sum({to_fixed_sql("value", 100)})
                           OVER win AS s_cents,
                       count(value) OVER win AS n_val
                FROM events WHERE ts IS NOT NULL
@@ -399,7 +402,7 @@ def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n,
            CAST(max(k_val) AS BIGINT) AS max_k,
            {mean_quantized_signed_sql(
-               "sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
+               f"sum({to_fixed_sql('value', 100)})",
                "100 * count(value)")} AS avg_value
     FROM j GROUP BY 1
     """,
@@ -1461,7 +1464,7 @@ def normalize_zscore_group(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(p.p05, 6) AS p05,
            round(p.p95, 6) AS p95,
            {mean_quantized_signed_sql(
-               "sum(CAST(floor(c.c_acctbal * 100 + 0.5) AS BIGINT))",
+               f"sum({to_fixed_sql('c.c_acctbal', 100)})",
                "100 * count(*)")} AS avg_raw,
            round(avg(least(greatest(c.c_acctbal, p.p05), p.p95)), 6)
                AS avg_winsorized
@@ -2386,7 +2389,7 @@ def join_interval_overlap_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
                       epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
                FROM events WHERE ts IS NOT NULL),
     mu AS (SELECT {mean_quantized_signed_sql(
-               "sum(CAST(floor(value * 100 + 0.5) AS BIGINT))",
+               f"sum({to_fixed_sql('value', 100)})",
                "100 * count(value)")} AS mean_v FROM e),
     c AS (SELECT user_id,
                  sum(value - mean_v) OVER (PARTITION BY user_id
@@ -3544,13 +3547,7 @@ def _ewma_terms_sql(lag_fn) -> tuple[str, str]:
 @query(
     "timeseries_ewma_smoothing",
     oracle=(lambda: (lambda num, den: f"""
-    WITH d AS (SELECT event_type,
-                      ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT event_type, day,
-                 CAST(sum(cents) AS BIGINT) AS daily_cents
-          FROM d GROUP BY event_type, day),
+    WITH {daily_cents_sql("event_type", where="ts IS NOT NULL")},
     w AS (SELECT event_type, day, daily_cents,
                  daily_cents AS x0,
                  {", ".join(f"lag(daily_cents, {k}) OVER (PARTITION BY event_type ORDER BY day) AS x{k}" for k in range(1, _EWMA_LAGS))}
@@ -3576,14 +3573,7 @@ def timeseries_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation at 8 days changes the value by < (1-α)^8 ≈ 5.8% of a
     day's weight — declared in the contract rather than hidden."""
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        "event_type",
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("event_type", "day").agg(
-        F.sum("cents").cast("bigint").alias("daily_cents")
-    )
+    g = daily_cents(ev, "event_type")
     w = Window.partitionBy("event_type").orderBy("day")
     lag_cols = [F.col("daily_cents").alias("x0")] + [
         F.lag("daily_cents", k).over(w).alias(f"x{k}")
@@ -3780,8 +3770,8 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_kpi_daily",
     oracle=f"""
     WITH e AS (SELECT user_id, event_type,
-                      ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+                      {epoch_day_from_us_sql()} AS day,
+                      {to_fixed_sql("value", 100)} AS cents
                FROM events WHERE ts IS NOT NULL),
     firstday AS (SELECT user_id, min(day) AS first_day FROM e GROUP BY user_id),
     daily AS (SELECT day,
@@ -3817,7 +3807,7 @@ def events_kpi_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select(
         "user_id", "event_type",
         epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
     )
     firstday = e.groupBy("user_id").agg(F.min("day").alias("first_day"))
     daily = e.groupBy("day").agg(
@@ -4030,7 +4020,7 @@ def stat_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_lorenz_gini",
     oracle=f"""
     WITH rev AS (SELECT o_custkey,
-                        CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+                        CAST(sum({to_fixed_sql("o_totalprice", 100)})
                              AS BIGINT) AS cents
                  FROM orders GROUP BY o_custkey),
     rk AS (SELECT cents,
@@ -4064,7 +4054,7 @@ def stat_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.windows import global_row_number
 
     o = _t(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")
+    cents = to_fixed("o_totalprice", 100)
     rev = o.groupBy("o_custkey").agg(F.sum(cents).cast("bigint").alias("cents"))
     # distributed exact rank (round-5): customer dim can be 10⁹ rows
     rk = global_row_number(rev, ["cents", "o_custkey"], "i").select(
@@ -4336,13 +4326,8 @@ def stat_benford_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "timeseries_autocorrelation",
-    oracle="""
-    WITH d AS (SELECT event_type,
-                      ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT event_type, day, CAST(sum(cents) AS BIGINT) AS v
-          FROM d GROUP BY event_type, day),
+    oracle=f"""
+    WITH {daily_cents_sql("event_type", where="ts IS NOT NULL", name="v")},
     l AS (SELECT lag.lag, a.event_type, a.v AS x, b.v AS y
           FROM (SELECT unnest(generate_series(1, 7)) AS lag) lag
           JOIN g a ON TRUE
@@ -4374,14 +4359,7 @@ def timeseries_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT over integer cents, so the Pearson ratio is bit-stable
     under any fold order.  7 lags × |types| output rows."""
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        "event_type",
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("event_type", "day").agg(
-        F.sum("cents").cast("bigint").alias("v")
-    )
+    g = daily_cents(ev, "event_type", name="v")
     lags = spark.range(1, 8).select(F.col("id").alias("lag"))
     a = g.alias("a")
     b = g.alias("b")
@@ -4476,7 +4454,7 @@ def skyline_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH o AS (SELECT o_custkey,
                       CAST(date_trunc('month', CAST(o_orderdate AS TIMESTAMP)) AS DATE)
                           AS m,
-                      CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+                      {to_fixed_sql("o_totalprice", 100)} AS cents
                FROM orders),
     cohort AS (SELECT o_custkey, min(m) AS cohort_month FROM o GROUP BY o_custkey),
     j AS (SELECT c.cohort_month,
@@ -4514,7 +4492,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = o_raw.select(
         "o_custkey",
         F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("m"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("o_totalprice", 100).alias("cents"),
     )
     cohort = o.groupBy("o_custkey").agg(F.min("m").alias("cohort_month"))
     j = o.join(cohort, "o_custkey").select(

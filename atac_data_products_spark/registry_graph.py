@@ -11,6 +11,10 @@ Cross-engine determinism: ranks are exact BIGINT fixed-point (see
 operators/graph.py) — integer adds are associative/commutative under any
 distributed fold order, so the oracle's single-threaded sum and Spark's
 partial-aggregate sum agree bit-for-bit.
+
+The part co-order edge builders (`copart_pairs`, `both_ways`) and their
+CTE twins live in derived.py, shared with the graph keys of
+registry_scale.py.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .derived import copart_pairs, copart_pairs_sql
 from .operators.graph import (
     DAMP_DEN,
     DAMP_NUM,
@@ -124,37 +129,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Triangle counting over the part co-order graph
 # ---------------------------------------------------------------------------
 
-_COPART_CTES = """
-    pairs AS (SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
-              FROM lineitem a JOIN lineitem b
-                ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)"""
-
-
-def _copart_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct ordered (p1 < p2) part pairs that co-occur in an order.
-
-    The self-join key is l_orderkey — bounded fan-out (lines per order is
-    small and capped by the schema), so the pair count is ~k²/2 per order,
-    never corpus²; this is the standard co-occurrence edge builder.
-    """
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-        .distinct()
-    )
-
-
 @query(
     "graph_triangle_count",
     oracle=f"""
-    WITH {_COPART_CTES}
+    WITH {copart_pairs_sql()}
     SELECT CAST(count(*) AS BIGINT) AS n_triangles
     FROM pairs e1
     JOIN pairs e2 ON e1.p2 = e2.p1
@@ -177,7 +155,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     and this one does not.  The standard trick every distributed
     triangle counter ships (cf. Suri-Vassilvitskii MapReduce
     triangles)."""
-    e = _copart_edges(spark, sf_dir)
+    e = copart_pairs(spark, sf_dir)
     deg = (
         e.select(F.col("p1").alias("n"))
         .unionAll(e.select(F.col("p2").alias("n")))
@@ -263,18 +241,13 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CN_HUB_CAP = 32  # wedge-center degree cap: hub suppression in the contract
 CN_MIN_QTY = 48  # bulk-line threshold: the selective edge base
-
-_COBULK_CTES = f"""
-    pairs AS (SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
-              FROM lineitem a JOIN lineitem b
-                ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-              WHERE a.l_quantity >= {CN_MIN_QTY} AND b.l_quantity >= {CN_MIN_QTY})"""
+CN_BULK = f"l_quantity >= {CN_MIN_QTY}"  # the same, as a lineitem row filter
 
 
 @query(
     "graph_common_neighbors",
     oracle=f"""
-    WITH {_COBULK_CTES},
+    WITH {copart_pairs_sql(CN_BULK)},
     sym AS (SELECT p1 AS s, p2 AS d FROM pairs
             UNION ALL SELECT p2, p1 FROM pairs),
     deg AS (SELECT s, CAST(count(*) AS BIGINT) AS degree
@@ -313,20 +286,7 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     so wedge output stays ≤ cap × |edges| even if the data densifies.
     The top-20 page is a TakeOrdered O(k) driver merge with a (p1, p2)
     tie-break — never a full sort."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_quantity") >= CN_MIN_QTY
-    ).select("l_orderkey", "l_partkey")
-    a = li.alias("a")
-    b = li.alias("b")
-    e = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-        .distinct()
-    )
+    e = copart_pairs(spark, sf_dir, CN_BULK)
     sym = e.select(F.col("p1").alias("s"), F.col("p2").alias("d")).unionAll(
         e.select(F.col("p2").alias("s"), F.col("p1").alias("d"))
     )

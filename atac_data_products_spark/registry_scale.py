@@ -46,6 +46,14 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .derived import (
+    BOTH_WAYS_SQL,
+    both_ways,
+    copart_pairs,
+    copart_pairs_sql,
+    daily_cents,
+    daily_cents_sql,
+)
 from .functions.numeric import (
     mean_quantized,
     mean_quantized_signed,
@@ -56,10 +64,12 @@ from .functions.numeric import (
     ratio_scaled_int_signed_sql,
     ratio_scaled_int_sql,
     to_fixed,
+    to_fixed_sql,
 )
 from pyspark.sql.window import Window
 
 from .functions.hashes import hash59, hash59_sql
+from .sources.tables import epoch_day_from_us_sql
 
 # Cross-registry oracle composition (PCA reuses the gram spec, the chain
 # audit reuses the LSH pair spec, packing-efficiency reuses the packer,
@@ -105,10 +115,10 @@ _CHECKSUM_TABLES: dict[str, tuple[str, ...]] = {
         "CAST(l_partkey AS {s})",
         "CAST(l_suppkey AS {s})",
         "CAST(l_linenumber AS {s})",
-        "CAST(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS {s})",
-        "CAST(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS {s})",
-        "CAST(CAST(floor(l_discount * 10000 + 0.5) AS BIGINT) AS {s})",
-        "CAST(CAST(floor(l_tax * 10000 + 0.5) AS BIGINT) AS {s})",
+        f"CAST({to_fixed_sql('l_quantity', 100)} AS {{s}})",
+        f"CAST({to_fixed_sql('l_extendedprice', 100)} AS {{s}})",
+        f"CAST({to_fixed_sql('l_discount', 10000)} AS {{s}})",
+        f"CAST({to_fixed_sql('l_tax', 10000)} AS {{s}})",
         "l_returnflag",
         "l_linestatus",
         "CAST({us_ship} AS {s})",
@@ -117,7 +127,7 @@ _CHECKSUM_TABLES: dict[str, tuple[str, ...]] = {
         "CAST(o_orderkey AS {s})",
         "CAST(o_custkey AS {s})",
         "o_orderstatus",
-        "CAST(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS {s})",
+        f"CAST({to_fixed_sql('o_totalprice', 100)} AS {{s}})",
         "CAST({us_order} AS {s})",
         "o_orderpriority",
     ),
@@ -125,7 +135,7 @@ _CHECKSUM_TABLES: dict[str, tuple[str, ...]] = {
         "CAST(c_custkey AS {s})",
         "c_name",
         "CAST(c_nationkey AS {s})",
-        "CAST(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS {s})",
+        f"CAST({to_fixed_sql('c_acctbal', 100)} AS {{s}})",
         "c_mktsegment",
     ),
 }
@@ -596,17 +606,11 @@ HOLT_BETA = 0.25
 
 @query(
     "timeseries_holt_forecast",
-    oracle="""
-    WITH RECURSIVE d AS (SELECT event_type,
-                      ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT event_type, day, CAST(sum(cents) AS BIGINT) AS daily_cents
-          FROM d GROUP BY event_type, day
-          HAVING sum(cents) IS NOT NULL),
+    oracle=f"""
+    WITH RECURSIVE {daily_cents_sql("event_type", where="ts IS NOT NULL")},
     s AS (SELECT event_type, CAST(daily_cents AS DOUBLE) AS y,
                  row_number() OVER (PARTITION BY event_type ORDER BY day) AS i
-          FROM g),
+          FROM g WHERE daily_cents IS NOT NULL),
     -- the fold as a linear recursion: one row per (type, step); DuckDB
     -- list_reduce is avoided on purpose — its struct lambdas evaluate
     -- fields SEQUENTIALLY (a later field sees the earlier field already
@@ -651,17 +655,8 @@ def timeseries_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     operation sequence, giving bit-identical doubles with no fixed-point
     ladder needed.  Initial state: level = first day, trend = 0.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
-
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        "event_type",
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("event_type", "day").agg(
-        F.sum("cents").cast("bigint").alias("daily_cents")
-    ).where(
+    g = daily_cents(ev, "event_type").where(
         # a day whose values are all NULL has no measurable point — drop
         # it instead of letting a NULL poison the fold (engines propagate
         # NULL through the recurrence differently; hostile-fixture find)
@@ -702,11 +697,7 @@ def timeseries_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "timeseries_seasonal_decompose",
     oracle=f"""
-    WITH d AS (SELECT ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT day, CAST(sum(cents) AS BIGINT) AS daily_cents
-          FROM d GROUP BY day),
+    WITH {daily_cents_sql(where="ts IS NOT NULL")},
     w AS (SELECT day, daily_cents,
                  CAST(sum(daily_cents) OVER fr AS BIGINT) AS fr_sum,
                  CAST(count(*) OVER fr AS BIGINT) AS fr_n
@@ -747,14 +738,8 @@ def timeseries_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame
     wide float sum would be fold-order-dependent).  dow is day-number
     mod 7 — a pure integer cycle, immune to calendar/timezone dialects.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
-
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("day").agg(F.sum("cents").cast("bigint").alias("daily_cents"))
+    g = daily_cents(ev)
     fr = Window.orderBy("day").rowsBetween(-3, 3)
     w = g.select(
         "day",
@@ -799,7 +784,7 @@ def timeseries_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame
 @query(
     "ml_roc_auc",
     oracle=f"""
-    WITH s AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS score_cents,
+    WITH s AS (SELECT {to_fixed_sql("value", 100)} AS score_cents,
                       CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
                FROM events WHERE value IS NOT NULL),
     g AS (SELECT score_cents,
@@ -841,7 +826,7 @@ def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and NULLS LAST in DuckDB's — hostile-fixture find)
     ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
     s = ev.select(
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("score_cents"),
+        to_fixed("value", 100).alias("score_cents"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
     )
     g = s.groupBy("score_cents").agg(
@@ -989,14 +974,9 @@ BFS_MAX_HOPS = 3
 BFS_SEED_MOD = 97  # seeds: p_partkey % 97 == 0 — deterministic, data-free
 
 BFS_BULK_QTY = 45  # edge = two bulk lines co-ordered; keeps the graph sparse
-
-_BFS_EDGES_CTE = f"""
-    pairs AS (SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
-              FROM lineitem a JOIN lineitem b
-                ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-              WHERE a.l_quantity > {BFS_BULK_QTY} AND b.l_quantity > {BFS_BULK_QTY}),
-    edges AS (SELECT p1 AS src, p2 AS dst FROM pairs
-              UNION ALL SELECT p2, p1 FROM pairs)"""
+BFS_BULK = f"l_quantity > {BFS_BULK_QTY}"  # the same, as a lineitem row filter
+# CTEs `pairs` and `edges`: the bulk co-order graph, both directions
+_BULK_EDGES_CTES = f"{copart_pairs_sql(BFS_BULK)},{BOTH_WAYS_SQL}"
 
 
 def _bfs_oracle() -> str:
@@ -1017,7 +997,7 @@ def _bfs_oracle() -> str:
         reached.append(f"h{k}")
     all_hops = " UNION ALL ".join(f"SELECT * FROM {r}" for r in reached)
     return (
-        f"WITH {_BFS_EDGES_CTE}, "
+        f"WITH {_BULK_EDGES_CTES}, "
         + ", ".join(ctes)
         + f" SELECT node AS p_partkey, CAST(hop AS BIGINT) AS hop FROM ({all_hops})"
     )
@@ -1048,30 +1028,11 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs/PLAN_AUDIT.md.  Reference has no graph surface at all
     (SURVEY §2.6 'absent').
     """
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .where(F.col("l_quantity") > BFS_BULK_QTY)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-        .distinct()
-    )
     # `edges` feeds all H branches; LAZY localCheckpoint so the co-order
     # self-join runs once (blocks fill on the first action, are reused by
     # every branch, and are freed by the ContextCleaner when the caller
     # drops the result — no CacheManager entry to leak, ADVICE r03)
-    edges = (
-        pairs.select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        .unionByName(pairs.select(F.col("p2").alias("src"), F.col("p1").alias("dst")))
-        .transform(_ckpt_lazy)
-    )
+    edges = both_ways(copart_pairs(spark, sf_dir, BFS_BULK)).transform(_ckpt_lazy)
     seeds = (
         _t(spark, sf_dir, "part")
         .where(F.col("p_partkey") % BFS_SEED_MOD == 0)
@@ -1190,7 +1151,7 @@ SSJ_WINDOW_US = 600_000_000  # 10 minutes
     oracle=f"""
     WITH e AS (SELECT event_id, user_id, event_type,
                       epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+                      {to_fixed_sql("value", 100)} AS cents
                FROM events),
     p AS (SELECT event_id, user_id, us FROM e WHERE event_type = 'purchase'),
     c AS (SELECT user_id, us, cents FROM e WHERE event_type = 'click'),
@@ -1230,7 +1191,7 @@ def stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_type",
         ts_us_expr(ev).alias("us"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
     )
     band = SSJ_WINDOW_US
     p = e.where(F.col("event_type") == "purchase").select(
@@ -1380,7 +1341,7 @@ CALIB_BIN_CENTS = 1_000  # fixed $10 score bins
 @query(
     "ml_calibration_bins",
     oracle=f"""
-    WITH s AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
+    WITH s AS (SELECT {to_fixed_sql("value", 100)} AS cents,
                       CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
                FROM events)
     SELECT cents // {CALIB_BIN_CENTS} AS bin,
@@ -1407,7 +1368,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = _t(spark, sf_dir, "events")
     s = ev.select(
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
     )
     return (
@@ -1432,12 +1393,8 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stat_theil_sen",
-    oracle="""
-    WITH d AS (SELECT ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events),
-    g AS (SELECT day, CAST(sum(cents) AS BIGINT) AS daily_cents
-          FROM d GROUP BY day),
+    oracle=f"""
+    WITH {daily_cents_sql()},
     slopes AS (SELECT (b.daily_cents - a.daily_cents)
                       / CAST(b.day - a.day AS DOUBLE) AS slope
                FROM g a JOIN g b ON b.day > a.day),
@@ -1468,14 +1425,8 @@ def stat_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     divided once; the intercept reuses the ROUNDED median slope so both
     engines subtract identical doubles before the second median.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
-
     ev = _t(spark, sf_dir, "events")
-    d = ev.select(
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("day").agg(F.sum("cents").cast("bigint").alias("daily_cents"))
+    g = daily_cents(ev)
     a = g.select(F.col("day").alias("xa"), F.col("daily_cents").alias("ya"))
     b = g.select(F.col("day").alias("xb"), F.col("daily_cents").alias("yb"))
     slopes = (
@@ -1717,8 +1668,8 @@ JOIN_SALT_R = 8
     "join_salted_skew",
     oracle=f"""
     WITH e AS (SELECT event_id,
-                      ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+                      {epoch_day_from_us_sql()} AS day,
+                      {to_fixed_sql("value", 100)} AS cents
                FROM events),
     daily AS (SELECT day, CAST(count(*) AS BIGINT) AS n_day,
                      CAST(sum(cents) AS BIGINT) AS cents_day
@@ -1754,7 +1705,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ev.select(
         "event_id",
         epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
     )
     daily = e.groupBy("day").agg(
         F.count("*").alias("n_day"),
@@ -1795,14 +1746,8 @@ join_salted_skew.__doc__ = join_salted_skew.__doc__.format(r=JOIN_SALT_R)
 
 @query(
     "timeseries_ohlc_downsample",
-    oracle="""
-    WITH d AS (SELECT event_type,
-                      ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT event_type, day, CAST(sum(cents) AS BIGINT) AS daily_cents
-          FROM d GROUP BY event_type, day
-          HAVING sum(cents) IS NOT NULL)
+    oracle=f"""
+    WITH {daily_cents_sql("event_type", where="ts IS NOT NULL")}
     SELECT event_type, (day - (day % 7 + 7) % 7) // 7 AS week,
            round(arg_min(daily_cents, day) / 100.0, 2) AS open,
            round(max(daily_cents) / 100.0, 2) AS high,
@@ -1810,7 +1755,8 @@ join_salted_skew.__doc__ = join_salted_skew.__doc__.format(r=JOIN_SALT_R)
            round(arg_max(daily_cents, day) / 100.0, 2) AS close,
            round(sum(daily_cents) / 100.0, 2) AS volume,
            CAST(count(*) AS BIGINT) AS n_days
-    FROM g GROUP BY event_type, (day - (day % 7 + 7) % 7) // 7
+    FROM g WHERE daily_cents IS NOT NULL
+    GROUP BY event_type, (day - (day % 7 + 7) % 7) // 7
     """,
 )
 def timeseries_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1826,17 +1772,9 @@ def timeseries_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     past the daily rollup and never materializes an ordered series,
     unlike window-based first/last which would force a sort.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
-
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        "event_type",
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("event_type", "day").agg(
-        F.sum("cents").cast("bigint").alias("daily_cents")
-    ).where(F.col("daily_cents").isNotNull())  # all-NULL day: no bar point
+    # all-NULL day: no bar point
+    g = daily_cents(ev, "event_type").where(F.col("daily_cents").isNotNull())
     return g.groupBy(
         "event_type", F.expr("(day - pmod(day, 7)) DIV 7").alias("week")
     ).agg(
@@ -1872,7 +1810,7 @@ def _lpa_oracle() -> str:
                                         ORDER BY cnt DESC, label) AS rk
               FROM v{k}) WHERE rk = 1)""")
     return (
-        f"WITH {_BFS_EDGES_CTE}, "
+        f"WITH {_BULK_EDGES_CTES}, "
         + ",".join(ctes)
         + f"""
     SELECT l.label AS community,
@@ -1899,30 +1837,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_bfs_hops; convergence-loop LPA reuses the Pregel pattern
     (connected_components) with localCheckpoint per generation.
     """
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .where(F.col("l_quantity") > BFS_BULK_QTY)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-        .distinct()
-    )
     # lazy localCheckpoints: edge set computed once and reused by every
     # round; each round's labels truncate lineage so the unrolled plan
     # stays flat; blocks are ContextCleaner-freed with the result
     # (ADVICE r03 — no CacheManager entries to leak)
-    edges = (
-        pairs.select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        .unionByName(pairs.select(F.col("p2").alias("src"), F.col("p1").alias("dst")))
-        .transform(_ckpt_lazy)
-    )
+    edges = both_ways(copart_pairs(spark, sf_dir, BFS_BULK)).transform(_ckpt_lazy)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -2123,11 +2042,7 @@ ANOM_MAD_MULT = 3
 @query(
     "events_anomaly_seasonal",
     oracle=f"""
-    WITH d AS (SELECT ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT day, CAST(sum(cents) AS BIGINT) AS daily_cents
-          FROM d GROUP BY day),
+    WITH {daily_cents_sql(where="ts IS NOT NULL")},
     w AS (SELECT day, daily_cents,
                  CAST(sum(daily_cents) OVER fr AS BIGINT) AS fr_sum,
                  CAST(count(*) OVER fr AS BIGINT) AS fr_n
@@ -2173,14 +2088,8 @@ def events_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers BEFORE the comparison, so the anomaly flag is a pure
     integer predicate — no float boundary can disagree between engines.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
-
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("day").agg(F.sum("cents").cast("bigint").alias("daily_cents"))
+    g = daily_cents(ev)
     fr = Window.orderBy("day").rowsBetween(-3, 3)
     w = g.select(
         "day",
@@ -3396,7 +3305,7 @@ def sql_api_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_welch_ttest_ab",
     oracle=f"""
     WITH s AS (SELECT event_type,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+                      {to_fixed_sql("value", 100)} AS cents
                FROM events WHERE event_type IN ('click', 'view')),
     m AS (SELECT event_type,
                  CAST(count(*) AS BIGINT) AS n,
@@ -3441,7 +3350,7 @@ def stat_welch_ttest_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     s = ev.where(F.col("event_type").isin("click", "view")).select(
         "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
     )
     m = s.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -4464,15 +4373,11 @@ vector_pca_power_iteration.__doc__ = vector_pca_power_iteration.__doc__.format(
 @query(
     "timeseries_forecast_backtest",
     oracle=f"""
-    WITH d AS (SELECT ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT day, CAST(sum(cents) AS BIGINT) AS y FROM d GROUP BY day
-          HAVING sum(cents) IS NOT NULL),
+    WITH {daily_cents_sql(where="ts IS NOT NULL", name="y")},
     l AS (SELECT day, y,
                  lag(y, 1) OVER (ORDER BY day) AS naive,
                  lag(y, 7) OVER (ORDER BY day) AS snaive
-          FROM g),
+          FROM g WHERE y IS NOT NULL),
     e AS (SELECT day, y, naive, snaive FROM l
           WHERE naive IS NOT NULL AND snaive IS NOT NULL)
     SELECT CAST(count(*) AS BIGINT) AS n_days,
@@ -4500,19 +4405,11 @@ def timeseries_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     error aggregation ([[timeseries_holt_forecast]] produces them).
     Floats appear only in the three final divisions.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
-
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
     # all-NULL days have no observation: dropped on both sides, like
     # timeseries_holt_forecast (a NULL day otherwise enters the lag
     # series at a different position per engine's NULL ordering)
-    g = d.groupBy("day").agg(F.sum("cents").cast("bigint").alias("y")).where(
-        F.col("y").isNotNull()
-    )
+    g = daily_cents(ev, name="y").where(F.col("y").isNotNull())
     w = Window.orderBy("day")
     l = g.select(
         "day",
@@ -5290,7 +5187,7 @@ APDEX_T_CENTS = 2_500  # "satisfied" threshold on value (proxy latency)
     "events_apdex_score",
     oracle=f"""
     WITH e AS (SELECT event_type,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+                      {to_fixed_sql("value", 100)} AS cents
                FROM events)
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n,
@@ -5323,7 +5220,7 @@ def events_apdex_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _t(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
     )
     t = APDEX_T_CENTS
     sat = F.sum(F.when(F.col("cents") <= t, 1).otherwise(0))
@@ -5346,7 +5243,7 @@ def events_apdex_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_assortativity",
     oracle=f"""
-    WITH {_BFS_EDGES_CTE},
+    WITH {_BULK_EDGES_CTES},
     deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
             FROM edges GROUP BY src),
     ed AS (SELECT da.d AS x, db.d AS y
@@ -5383,24 +5280,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     closing Pearson formula.  Both edge directions are present, so x/y
     marginals are symmetric, matching the undirected definition.
     """
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .where(F.col("l_quantity") > BFS_BULK_QTY)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst")
-    ).unionByName(pairs.select(F.col("p2").alias("src"), F.col("p1").alias("dst")))
+    edges = both_ways(copart_pairs(spark, sf_dir, BFS_BULK))
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
     )
@@ -6682,7 +6562,7 @@ def _kcore_oracle() -> str:
     n{r} AS (SELECT node FROM d{r} WHERE deg >= {KCORE_K})""")
         prev = f"n{r}"
     return (
-        f"WITH {_BFS_EDGES_CTE}, "
+        f"WITH {_BULK_EDGES_CTES}, "
         + ",".join(ctes)
         + f"""
     SELECT CAST((SELECT count(*) FROM n0) AS BIGINT) AS n_nodes,
@@ -6712,30 +6592,10 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregation).  The shuffles stay node-grained; the edge
     set is persisted once and reused by every round.
     """
-
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .where(F.col("l_quantity") > BFS_BULK_QTY)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("p1"), F.col("b.l_partkey").alias("p2"))
-        .distinct()
-    )
     # lazy localCheckpoints (ADVICE r03 leak fix): the edge set is
     # reused by every peel round plus the final core-edge count; each
     # round's survivor set truncates lineage; blocks die with the result
-    edges = (
-        pairs.select(F.col("p1").alias("src"), F.col("p2").alias("dst"))
-        .unionByName(pairs.select(F.col("p2").alias("src"), F.col("p1").alias("dst")))
-        .transform(_ckpt_lazy)
-    )
+    edges = both_ways(copart_pairs(spark, sf_dir, BFS_BULK)).transform(_ckpt_lazy)
     nodes = edges.select(F.col("src").alias("node")).distinct().transform(_ckpt_lazy)
     surv = nodes
     for _ in range(KCORE_ROUNDS):
@@ -6780,9 +6640,9 @@ graph_kcore_peel.__doc__ = graph_kcore_peel.__doc__.format(
 
 @query(
     "stat_anova_oneway",
-    oracle="""
+    oracle=f"""
     WITH s AS (SELECT event_type,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
+                      {to_fixed_sql("value", 100)} AS cents
                FROM events),
     g AS (SELECT event_type,
                  CAST(count(*) AS BIGINT) AS n,
@@ -6821,7 +6681,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     s = _t(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
     )
     g = s.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -6870,7 +6730,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   ROWS UNBOUNDED PRECEDING) AS sid
           FROM g),
     iv AS (SELECT user_id, sid,
-                  ((CAST(min(us) AS BIGINT) - (CAST(min(us) AS BIGINT) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
+                  {epoch_day_from_us_sql("CAST(min(us) AS BIGINT)")} AS day,
                   CAST(count(*) AS BIGINT) AS n_events
            FROM s GROUP BY user_id, sid)
     SELECT day,
@@ -6896,7 +6756,7 @@ def events_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     their start day (the standard convention, stated because midnight-
     spanning sessions would otherwise double-count).
     """
-    from .sources.tables import ts_us_expr
+    from .sources.tables import epoch_day_from_us, ts_us_expr
 
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     e = ev.select("user_id", ts_us_expr(ev).alias("us"))
@@ -6913,7 +6773,7 @@ def events_bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sid", F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
     iv = s.groupBy("user_id", "sid").agg(
-        F.expr("CAST((min(us) - pmod(min(us), 86400000000)) DIV 86400000000 AS BIGINT)").alias("day"),
+        epoch_day_from_us(F.min("us")).alias("day"),
         F.count("*").alias("n_events"),
     )
     return iv.groupBy("day").agg(
@@ -7013,7 +6873,7 @@ def corpus_license_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ml_decision_stump",
     oracle=f"""
-    WITH s AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
+    WITH s AS (SELECT {to_fixed_sql("value", 100)} AS cents,
                       CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
                FROM events WHERE value IS NOT NULL),
     g AS (SELECT cents, CAST(count(*) AS BIGINT) AS n,
@@ -7074,7 +6934,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (its grid group otherwise sorts NULLS FIRST in Spark's cumulative
     # window and NULLS LAST in DuckDB's — hostile-fixture find)
     s = _t(spark, sf_dir, "events").where(F.col("value").isNotNull()).select(
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("pos"),
     )
     g = s.groupBy("cents").agg(
@@ -7411,8 +7271,8 @@ _NS = 1_000_000_000
 
 
 def _irls_oracle() -> str:
-    ctes = ["""
-    s AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
+    ctes = [f"""
+    s AS (SELECT {to_fixed_sql("value", 100)} AS cents,
                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
           FROM events),
     g AS (SELECT cents, y, CAST(count(*) AS BIGINT) AS cnt,
@@ -7492,7 +7352,7 @@ def ml_logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     same cost profile as vector_kmeans_lloyd's iterations.
     """
     s = _t(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
+        to_fixed("value", 100).alias("cents"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
     g = s.groupBy("cents", "y").agg(F.count("*").alias("cnt")).select(
@@ -7580,12 +7440,8 @@ def ml_logistic_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_rolling_median",
-    oracle="""
-    WITH d AS (SELECT ((epoch_us(CAST(ts AS TIMESTAMP)) - (epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000 + 86400000000) % 86400000000) // 86400000000) AS day,
-                      CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-               FROM events WHERE ts IS NOT NULL),
-    g AS (SELECT day, CAST(sum(cents) AS BIGINT) AS daily_cents
-          FROM d GROUP BY day)
+    oracle=f"""
+    WITH {daily_cents_sql(where="ts IS NOT NULL")}
     SELECT day,
            round(daily_cents / 100.0, 2) AS daily_value,
            round(quantile_cont(daily_cents, 0.5)
@@ -7612,14 +7468,8 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     grids the two-heap streaming median is the declared upgrade, same
     interface.
     """
-    from .sources.tables import epoch_day_from_us, ts_us_expr  # noqa: F401
-
     ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    d = ev.select(
-        epoch_day_from_us(ts_us_expr(ev)).alias("day"),
-        F.floor(F.col("value") * 100 + 0.5).cast("bigint").alias("cents"),
-    )
-    g = d.groupBy("day").agg(F.sum("cents").cast("bigint").alias("daily_cents"))
+    g = daily_cents(ev)
     fr = Window.orderBy("day").rowsBetween(-6, 0)
     return g.select(
         "day",

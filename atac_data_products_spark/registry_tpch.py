@@ -63,8 +63,8 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent flip in r07 but cost 3× — decimal(21,4)/decimal(27,6)
     products leave the compact-long representation and allocate
     BigDecimal per row).  The stored doubles are exact 2-dp values, so
-    ``floor(x*100 + 0.5)`` recovers the exact integer cents in pure
-    codegen arithmetic (Math.floor, no BigDecimal — F.round on double
+    ``to_fixed(x, 100)`` = floor(x·100 + ½) recovers the exact integer
+    cents in pure codegen arithmetic (Math.floor, no BigDecimal — F.round on double
     goes through BigDecimal.setScale; floor is also sign-correct,
     where a cast's truncation toward zero would be off by one on every
     negative).  Per-row products then stay int64: disc_price in
@@ -94,12 +94,8 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate") <= _ntz("1998-09-02")
     )
-
-    def cents(col: str):
-        return F.floor(F.col(col) * 100 + F.lit(0.5))
-
-    qty_c, ep_c = cents("l_quantity"), cents("l_extendedprice")
-    disc_c, tax_c = cents("l_discount"), cents("l_tax")
+    qty_c, ep_c = to_fixed("l_quantity", 100), to_fixed("l_extendedprice", 100)
+    disc_c, tax_c = to_fixed("l_discount", 100), to_fixed("l_tax", 100)
     disc_u = ep_c * (F.lit(100) - disc_c)  # 1e-4 money units
     charge_u = disc_u * (F.lit(100) + tax_c)  # 1e-6 money units
     part = li.groupBy(

@@ -79,13 +79,3 @@ def invert_dim(dim: DataFrame, key: str, value: str) -> DataFrame:
         dim[key].alias("v"),
     )
 
-
-def load_yaml_dim(spark: SparkSession, path: str) -> DataFrame:
-    """Parse an organ_types-shaped YAML file into the dim (import-gated:
-    pyyaml may be absent; the baked-in ORGAN_TYPES covers tests)."""
-    import yaml
-
-    with open(path) as f:
-        raw = yaml.safe_load(f)
-    rows = [(code, spec["description"]) for code, spec in raw.items()]
-    return spark.createDataFrame(rows, "code string, description string")

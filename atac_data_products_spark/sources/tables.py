@@ -141,6 +141,21 @@ def epoch_day_from_us(us_col, day_us: int = 86_400_000_000):
     return ((us - F.pmod(us, d)) / d).cast("bigint")
 
 
+# DuckDB twin of `ts_us_expr(events)`: the oracle's events views carry
+# ts as a naive wall clock, so epoch_us of it is timezone-free
+TS_US_SQL = "epoch_us(CAST(ts AS TIMESTAMP))"
+
+
+def epoch_day_from_us_sql(us_sql: str = TS_US_SQL) -> str:
+    """DuckDB twin of :func:`epoch_day_from_us`; the default argument
+    makes it the twin of ``epoch_day_from_us(ts_us_expr(events))``.
+    DuckDB's `%` takes the dividend's sign, so the remainder is moved
+    into [0, d) before it is subtracted: floor, not truncation, for
+    pre-1970 instants."""
+    d = 86_400_000_000
+    return f"(({us_sql} - ({us_sql} % {d} + {d}) % {d}) // {d})"
+
+
 def ntz_epoch_s(col_sql: str):
     """Epoch-seconds BIGINT from a TIMESTAMP_NTZ column; see
     ntz_epoch_us."""

@@ -1,0 +1,167 @@
+"""Each shared derivation in derived.py against its DuckDB CTE twin.
+
+The registry keys that splice these in are graded through their own
+oracles; this battery checks each builder and its twin directly, for
+every variant the registry uses, on the sf0.001 tables and on the
+hostile fixture (pre-1970 clocks, the epoch ±1 µs, year 9999, NULL ts
+and NULL value).  It also checks the two rules the builders rest on,
+cents and the day floor, and that no package file writes either rule
+out by hand.
+"""
+
+from __future__ import annotations
+
+from pathlib import Path
+
+import duckdb
+import pytest
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from atac_data_products_spark.derived import (
+    BOTH_WAYS_SQL,
+    both_ways,
+    copart_pairs,
+    copart_pairs_sql,
+    daily_cents,
+    daily_cents_sql,
+)
+from atac_data_products_spark.functions.numeric import to_fixed, to_fixed_sql
+from atac_data_products_spark.registry_graph import CN_BULK
+from atac_data_products_spark.registry_scale import BFS_BULK
+from atac_data_products_spark.sources.tables import (
+    epoch_day_from_us,
+    epoch_day_from_us_sql,
+    load_table,
+    ts_us_expr,
+)
+from tests.conftest import SF_SMALL
+from tools import hostile_fixture as hf
+from tools.check_correctness import duck_connect
+
+PKG = Path(__file__).resolve().parent.parent / "atac_data_products_spark"
+
+
+@pytest.fixture(scope="module", params=["sf0.001", "hostile"])
+def tables(request, tmp_path_factory):
+    """(sf_dir, duckdb connection) for each table set."""
+    if request.param == "hostile":
+        sf_dir = str(tmp_path_factory.mktemp("hostile_derived"))
+        hf.build(sf_dir, include_case_traps=False)
+    else:
+        sf_dir = SF_SMALL
+    con = duck_connect(sf_dir)
+    yield sf_dir, con
+    con.close()
+
+
+def _sorted(rows):
+    # NULL-safe total order over rows of ints, strings and NULLs
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("where", [None, CN_BULK, BFS_BULK])
+def test_copart_pairs_match_their_cte(spark, tables, where):
+    sf_dir, con = tables
+    got = copart_pairs(spark, sf_dir, where).select("p1", "p2").collect()
+    want = con.execute(
+        f"WITH {copart_pairs_sql(where or '')} SELECT p1, p2 FROM pairs"
+    ).fetchall()
+    assert got, "empty edge set proves nothing"
+    assert _sorted(got) == _sorted(want)
+
+
+@pytest.mark.parametrize("where", [None, BFS_BULK])
+def test_both_ways_matches_its_cte(spark, tables, where):
+    sf_dir, con = tables
+    got = both_ways(copart_pairs(spark, sf_dir, where)).select("src", "dst").collect()
+    want = con.execute(
+        f"WITH {copart_pairs_sql(where or '')}, {BOTH_WAYS_SQL} "
+        "SELECT src, dst FROM edges"
+    ).fetchall()
+    assert _sorted(got) == _sorted(want)
+
+
+@pytest.mark.parametrize("by", [(), ("event_type",)])
+@pytest.mark.parametrize("where", ["", "ts IS NOT NULL"])
+def test_daily_cents_match_their_cte(spark, tables, by, where):
+    sf_dir, con = tables
+    ev = load_table(spark, sf_dir, "events")
+    if where:
+        ev = ev.where(where)
+    cols = [*by, "day", "v"]
+    got = daily_cents(ev, *by, name="v").select(*cols).collect()
+    want = con.execute(
+        f"WITH {daily_cents_sql(*by, where=where, name='v')} "
+        f"SELECT {', '.join(cols)} FROM g"
+    ).fetchall()
+    assert got
+    assert _sorted(got) == _sorted(want)
+
+
+def test_event_day_matches_its_sql_twin(spark, tables):
+    sf_dir, con = tables
+    ev = load_table(spark, sf_dir, "events")
+    got = ev.select("event_id", epoch_day_from_us(ts_us_expr(ev))).collect()
+    want = con.execute(
+        f"SELECT event_id, {epoch_day_from_us_sql()} FROM events"
+    ).fetchall()
+    assert _sorted(got) == _sorted(want)
+
+
+def test_hostile_days_floor_before_1970(spark, tmp_path):
+    # the fixture's clocks just before the epoch land on day -1, not 0
+    hf.pq_write_events(str(tmp_path))
+    ev = load_table(spark, str(tmp_path), "events")
+    days = dict(
+        ev.select("event_id", epoch_day_from_us(ts_us_expr(ev)).alias("d")).collect()
+    )
+    assert (days[1], days[2], days[3], days[4], days[5]) == (-7140, -1, 0, 0, -1)
+    assert days[9] is None
+
+
+# half-cent values, negatives, the ±1e6 domain edge, and NULL
+FIXED_CASES = [
+    0.0, 0.005, 0.015, 1.005, 2.675, 12.345, 99.99, 1e6,
+    -0.005, -0.015, -2.675, -99.99, -1e6, None,
+]
+
+
+@pytest.mark.parametrize("scale", [100, 10000])
+def test_to_fixed_matches_its_sql_twin(spark, scale):
+    schema = StructType([StructField("x", DoubleType())])
+    df = spark.createDataFrame([(x,) for x in FIXED_CASES], schema)
+    got = [r[0] for r in df.select(to_fixed("x", scale)).collect()]
+    con = duckdb.connect()
+    want = [
+        con.execute(
+            f"SELECT {to_fixed_sql('x', scale)} FROM (SELECT CAST(? AS DOUBLE) AS x)",
+            [x],
+        ).fetchone()[0]
+        for x in FIXED_CASES
+    ]
+    con.close()
+    assert got == want
+    assert got[-1] is None
+    assert all(isinstance(v, int) for v in got[:-1])
+
+
+# the two rules, as their hand-written copies read
+HAND_COPIES = ("* 100 + 0.5", "% 86400000000 + 86400000000")
+RULE_FILES = {
+    PKG / "functions" / "numeric.py",
+    PKG / "sources" / "tables.py",
+}
+
+
+def test_no_package_file_writes_a_rule_out_by_hand():
+    found = [
+        f"{path.relative_to(PKG)}: {pat}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path not in RULE_FILES
+        for pat in HAND_COPIES
+        if pat in path.read_text()
+    ]
+    assert not found, (
+        "use functions/numeric.py::to_fixed[_sql] and "
+        f"sources/tables.py::epoch_day_from_us[_sql] instead: {found}"
+    )

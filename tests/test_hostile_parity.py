@@ -104,6 +104,12 @@ RISK_KEYS = [
     "timeseries_ohlc_downsample",
     "timeseries_holt_forecast",
     "timeseries_forecast_backtest",
+    # the rest of the daily-cents family (derived.daily_cents)
+    "timeseries_seasonal_decompose",
+    "events_anomaly_seasonal",
+    "stat_theil_sen",
+    "timeseries_ewma_smoothing",
+    "timeseries_autocorrelation",
     "agg_percentile_disc",
     "ml_roc_auc",
     "ml_decision_stump",

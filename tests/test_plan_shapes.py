@@ -219,6 +219,29 @@ def test_capture_builds_each_key_once_and_restores_conf(spark):
     assert scanner.scan(plans)["ok"]["smj"] == 0
 
 
+def test_normalized_strips_only_session_ids():
+    from tools.plan_capture import normalized
+
+    plan = (
+        "(3) HashAggregate [codegen id : 2]\n"
+        "Keys [1]: [l_partkey#17L]\n"
+        "Functions [1]: [partial_count(1)], plan_id=42\n"
+        "(4) Scan ExistingRDD\n"
+        "Output [2]: [p1#103L, p2#104L]\n"
+        "Arguments: [p1#103L, p2#104L], MapPartitionsRDD[57] at "
+        "localCheckpoint\n"
+    )
+    assert normalized(plan) == (
+        "(3) HashAggregate [codegen id : 2]\n"
+        "Keys [1]: [l_partkey#L]\n"
+        "Functions [1]: [partial_count(1)], plan_id=\n"
+        "(4) Scan ExistingRDD\n"
+        "Output [2]: [p1#L, p2#L]\n"
+        "Arguments: [p1#L, p2#L], MapPartitionsRDD[] at localCheckpoint\n"
+    )
+    assert normalized(normalized(plan)) == normalized(plan)
+
+
 def test_all_plans_build(shapes):
     errs = {k: v["err"] for k, v in shapes.items() if v.get("err")}
     assert errs == {}, f"plans failed to build: {errs}"

@@ -2,7 +2,9 @@
 
 Usage: python tools/capture_plans.py <tag> [suffix] [key ...]
 
-Writes plans/<tag>/<key>_<suffix>.txt (suffix defaults to "before").
+Writes plans/<tag>/<key>_<suffix>.txt (suffix defaults to "before"),
+with session ids stripped (`plan_capture.normalized`), so two captures
+of the same plan — before and after a refactor — diff clean.
 Default key set: every bench.py HEADLINE key.  Plan construction only —
 no job runs (keys whose construction is eager run their bounded probes,
 same as bench).
@@ -25,7 +27,7 @@ def main() -> int:
     import bench
     import __spark_entry__ as e
     from atac_data_products_spark.session import get_spark
-    from tools.plan_capture import formatted
+    from tools.plan_capture import formatted, normalized
 
     if not keys:
         keys = bench.HEADLINE
@@ -39,7 +41,7 @@ def main() -> int:
             print(f"SKIP {key}: not registered")
             continue
         try:
-            plan = formatted(qs[key](spark, sf_dir))
+            plan = normalized(formatted(qs[key](spark, sf_dir)))
             path = os.path.join(outdir, f"{key}_{suffix}.txt")
             with open(path, "w") as fh:
                 fh.write(plan)

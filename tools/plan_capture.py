@@ -20,6 +20,17 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
+# ids a plan gets from its session, not from its shape: expression ids
+# (`#12`), Connect plan ids (`plan_id=3`) and RDD ids (`RDD[45]`)
+_SESSION_IDS = re.compile(r"(#|plan_id=|RDD\[)\d+")
+
+
+def normalized(plan: str) -> str:
+    """`plan` with its session-assigned ids stripped, so plans of the
+    same shape built in different sessions compare equal."""
+    return _SESSION_IDS.sub(r"\1", plan)
+
+
 def nodes(plan: str, name: str) -> int:
     # node headers print as "(n) Name" (the tree echoes each node too,
     # as `+- Name (n)` — counting headers avoids double counting)
