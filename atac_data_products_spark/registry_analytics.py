@@ -95,7 +95,7 @@ def agg_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
                           THEN l_extendedprice * (1 - l_discount) ELSE 0 END), 2)
                AS returned_revenue,
            ({mean_quantized_sql(
-               "sum(CAST(round(l_tax * 100) AS BIGINT)) FILTER (WHERE l_quantity > 25)",
+               f"sum({to_fixed_sql('l_tax', 100)}) FILTER (WHERE l_quantity > 25)",
                "count(l_tax) FILTER (WHERE l_quantity > 25)",
                10_000,
            )}) / 100.0 AS avg_tax_bulk
@@ -1998,8 +1998,8 @@ def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "abc_pareto_classification",
     oracle=f"""
     WITH rev AS (SELECT l_partkey,
-                        CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                                 * (100 - CAST(round(l_discount * 100, 0) AS BIGINT)))
+                        CAST(sum({to_fixed_sql("l_extendedprice", 100)}
+                                 * (100 - {to_fixed_sql("l_discount", 100)}))
                           AS BIGINT) AS revenue_q
                  FROM lineitem GROUP BY l_partkey),
     tot AS (SELECT CAST(sum(revenue_q) AS BIGINT) AS total_q FROM rev),
@@ -2246,12 +2246,12 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_rfm_segmentation",
-    oracle="""
+    oracle=f"""
     WITH m AS (SELECT o_custkey,
                       max(CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP)) / 86400) AS BIGINT))
                           AS last_day,
                       CAST(count(*) AS BIGINT) AS frequency,
-                      CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
+                      CAST(sum({to_fixed_sql("o_totalprice", 100)}) AS BIGINT)
                           AS monetary_cents
                FROM orders GROUP BY o_custkey)
     SELECT o_custkey,

@@ -1075,10 +1075,10 @@ _BOM_DEPTH = 6
 
 @query(
     "hierarchy_rollup_bom",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE edges AS (
       SELECT c_custkey AS key, c_custkey // 10 AS parent,
-             CAST(round(c_acctbal * 100) AS BIGINT) AS cents
+             {to_fixed_sql("c_acctbal", 100)} AS cents
       FROM customer
     ),
     walk(key, anc) AS (
@@ -1883,7 +1883,7 @@ BLOOM_DIM_MIN_BAL = 9_000.0  # selective supplier subset
     oracle=f"""
     SELECT l_returnflag,
            CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
+           CAST(sum({to_fixed_sql("l_extendedprice", 100)}) AS BIGINT)
                AS revenue_cents
     FROM lineitem
     WHERE l_suppkey IN (SELECT s_suppkey FROM supplier
@@ -2369,7 +2369,7 @@ DUP_PAY_TOL_BP = 100  # amount tolerance: 100 basis points = 1%
     "orders_duplicate_payment_audit",
     oracle=f"""
     WITH o AS (SELECT o_orderkey, o_custkey,
-                      CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+                      {to_fixed_sql("o_totalprice", 100)} AS cents,
                       epoch_us(o_orderdate) // 86400000000 AS day
                FROM orders)
     SELECT a.o_orderkey AS order_a, b.o_orderkey AS order_b,
@@ -3076,9 +3076,9 @@ corpus_quality_percentile_gate.__doc__ = corpus_quality_percentile_gate.__doc__.
 
 @query(
     "supplier_scorecard_composite",
-    oracle="""
+    oracle=f"""
     WITH k AS (SELECT l_suppkey,
-                      CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+                      CAST(sum({to_fixed_sql("l_extendedprice", 100)})
                            AS BIGINT) AS rev_cents,
                       CAST(count(*) AS BIGINT) AS n_lines,
                       CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders
@@ -3179,11 +3179,11 @@ def supplier_scorecard_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "nested_json_roundtrip_flatten",
-    oracle="""
+    oracle=f"""
     SELECT l_orderkey,
            CAST(l_linenumber AS BIGINT) AS line_no,
            l_partkey,
-           CAST(round(l_quantity * 100) AS BIGINT) AS qty_cents
+           {to_fixed_sql("l_quantity", 100)} AS qty_cents
     FROM lineitem WHERE l_orderkey % 50 = 0
     """,
 )
@@ -3424,7 +3424,7 @@ def _boot_weight_sql(u: str) -> str:
     "stat_bootstrap_poisson_ci",
     oracle=f"""
     WITH o AS (SELECT o_orderkey,
-                      CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+                      {to_fixed_sql("o_totalprice", 100)} AS cents,
                       {hash59_sql("'bsA_' || CAST(o_orderkey AS VARCHAR)")} AS ha,
                       {hash59_sql("'bsB_' || CAST(o_orderkey AS VARCHAR)")} AS hb
                FROM orders),
@@ -4013,7 +4013,7 @@ def sketch_bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_column_profile",
-    oracle="""
+    oracle=f"""
     WITH o AS (SELECT * FROM orders)
     SELECT 'o_custkey' AS col, CAST(count(*) AS BIGINT) AS n_rows,
            CAST(count(o_custkey) AS BIGINT) AS n_nonnull,
@@ -4030,9 +4030,9 @@ def sketch_bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 'o_totalprice_cents', CAST(count(*) AS BIGINT),
            CAST(count(o_totalprice) AS BIGINT),
-           CAST(count(DISTINCT CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT),
-           CAST(min(CAST(round(o_totalprice * 100) AS BIGINT)) AS VARCHAR),
-           CAST(max(CAST(round(o_totalprice * 100) AS BIGINT)) AS VARCHAR)
+           CAST(count(DISTINCT {to_fixed_sql("o_totalprice", 100)}) AS BIGINT),
+           CAST(min({to_fixed_sql("o_totalprice", 100)}) AS VARCHAR),
+           CAST(max({to_fixed_sql("o_totalprice", 100)}) AS VARCHAR)
     FROM o
     UNION ALL
     SELECT 'o_orderpriority', CAST(count(*) AS BIGINT),
@@ -4583,7 +4583,7 @@ def scan_parquet_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "supplier_concentration_hhi",
     oracle=f"""
     WITH r AS (SELECT l_suppkey,
-                      CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+                      CAST(sum({to_fixed_sql("l_extendedprice", 100)})
                            AS BIGINT) AS rev
                FROM lineitem GROUP BY l_suppkey),
     t AS (SELECT CAST(count(*) AS BIGINT) AS n_suppliers,
@@ -4893,11 +4893,11 @@ def stat_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_vwap_daily",
-    oracle="""
+    oracle=f"""
     WITH l AS (SELECT epoch_us(l_shipdate) // 86400000000 AS day,
                       l_returnflag,
-                      CAST(round(l_extendedprice * 100) AS BIGINT) AS rev_cents,
-                      CAST(round(l_quantity * 100) AS BIGINT) AS qty_c
+                      {to_fixed_sql("l_extendedprice", 100)} AS rev_cents,
+                      {to_fixed_sql("l_quantity", 100)} AS qty_c
                FROM lineitem)
     SELECT day, l_returnflag,
            CAST(sum(qty_c) AS BIGINT) AS qty_centi,
@@ -4952,8 +4952,8 @@ def orders_vwap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH l AS (SELECT l_partkey,
                       epoch_us(l_shipdate) // 86400000000 // 30 AS period,
-                      CAST(round(l_extendedprice * 100) AS BIGINT) AS rev,
-                      CAST(round(l_quantity * 100) AS BIGINT) AS qty
+                      {to_fixed_sql("l_extendedprice", 100)} AS rev,
+                      {to_fixed_sql("l_quantity", 100)} AS qty
                FROM lineitem),
     b AS (SELECT period, min(period) OVER () AS p1, max(period) OVER () AS p2
           FROM l),
@@ -5321,9 +5321,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stat_spearman_rank_corr",
-    oracle="""
-    WITH l AS (SELECT CAST(round(l_quantity * 100) AS BIGINT) AS q,
-                      CAST(round(l_discount * 10000) AS BIGINT) AS d
+    oracle=f"""
+    WITH l AS (SELECT {to_fixed_sql("l_quantity", 100)} AS q,
+                      {to_fixed_sql("l_discount", 10000)} AS d
                FROM lineitem),
     rq AS (SELECT q, avg(rn) AS r FROM (
              SELECT q, row_number() OVER (ORDER BY q) AS rn FROM l) GROUP BY q),
@@ -5406,11 +5406,11 @@ def stat_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_abc_xyz_matrix",
-    oracle="""
+    oracle=f"""
     WITH l AS (SELECT l_partkey,
                       epoch_us(l_shipdate) // 86400000000 // 7 AS wk,
-                      CAST(round(l_extendedprice * 100) AS BIGINT) AS rev,
-                      CAST(round(l_quantity * 100) AS BIGINT) AS qty
+                      {to_fixed_sql("l_extendedprice", 100)} AS rev,
+                      {to_fixed_sql("l_quantity", 100)} AS qty
                FROM lineitem),
     pw AS (SELECT l_partkey, wk,
                   CAST(sum(rev) AS BIGINT) AS rev,
@@ -6471,7 +6471,7 @@ RF_MOD = 1000  # refresh ~0.1% of orders per cycle
     "tpch_refresh_cycle",
     oracle=f"""
     WITH base AS (SELECT o_orderkey,
-                         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+                         {to_fixed_sql("o_totalprice", 100)} AS cents
                   FROM orders),
     mx AS (SELECT CAST(max(o_orderkey) AS BIGINT) AS m FROM base),
     ins AS (SELECT b.o_orderkey + mx.m + 1 AS o_orderkey, b.cents
@@ -7075,7 +7075,7 @@ orders_otif_rate.__doc__ = orders_otif_rate.__doc__.format(d=OTIF_SLA_DAYS)
     oracle=f"""
     WITH ps AS (SELECT l_partkey,
                        CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers,
-                       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+                       CAST(sum({to_fixed_sql("l_extendedprice", 100)})
                             AS BIGINT) AS rev_cents
                 FROM lineitem GROUP BY l_partkey),
     j AS (SELECT p.p_brand, ps.n_suppliers, ps.rev_cents

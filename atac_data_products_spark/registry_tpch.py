@@ -22,6 +22,7 @@ from .functions.numeric import (
     mean_quantized,
     mean_quantized_sql,
     to_fixed,
+    to_fixed_sql,
 )
 from .registry import _t, query
 
@@ -211,8 +212,8 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tpch_q14_promo_share",
     oracle=f"""
-    WITH l AS (SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                      * (100 - CAST(round(l_discount * 100, 0) AS BIGINT))
+    WITH l AS (SELECT {to_fixed_sql("l_extendedprice", 100)}
+                      * (100 - {to_fixed_sql("l_discount", 100)})
                           AS disc_u,
                       p_type
                FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -541,7 +542,7 @@ def tpch_q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tpch_q17_small_qty_revenue",
     oracle=f"""
     SELECT {mean_quantized_sql(
-        "sum(CAST(round(l_extendedprice * 100) AS BIGINT))", "700", 100
+        f"sum({to_fixed_sql('l_extendedprice', 100)})", "700", 100
     )} AS avg_yearly
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE p_brand = 'Brand#3' AND p_type = 'PROMO'
@@ -959,7 +960,7 @@ def tpch_q21_sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame
     WITH costs AS (
       SELECT l_partkey, l_suppkey,
              min({mean_quantized_sql(
-                 "CAST(round(l_extendedprice * 100) AS BIGINT)",
+                 to_fixed_sql("l_extendedprice", 100),
                  "CAST(l_quantity AS BIGINT) * 100", 10_000)}) AS unit_cost
       FROM lineitem GROUP BY l_partkey, l_suppkey)
     SELECT p_partkey, p_brand, s_name, n_name, unit_cost

@@ -19,11 +19,28 @@ Design notes (100 TB target, tested on local[N]):
   compiles 174 classes, so at 100 every entry was evicted before its
   plan ran again: each warm pass over the built plans compiled 85-138
   classes anew, and the JIT compiled those fresh classes once more.
-  With 2000 entries warm passes compile 0 classes, apart from the
-  renamed stages of docs/OPERATIONS.md.  The ``atac_product`` flow
-  needs fewer than 100, so it never hit the old limit.  The conf is
-  static, so it is set here in the builder; sessions not built by
-  ``get_spark`` (one an outside caller creates) keep Spark's default.
+  With 2000 entries, and the class names below, warm passes compile 0
+  classes.  The ``atac_product`` flow needs fewer than 100, so it never
+  hit the old limit.  The conf is static, so it is set here in the
+  builder; sessions not built by ``get_spark`` (one an outside caller
+  creates) keep Spark's default.
+  Whole-stage classes are named without their codegen stage id
+  (``spark.sql.codegen.useIdInClassName=false``): under AQE two sibling
+  stages can finish in either order, and a stage numbered differently
+  on a later execution would otherwise be compiled again under its new
+  name.
+- The driver JVM starts from a dynamic class-data-sharing archive
+  (``jvm_archive.py``).  The reference runs each product as a CWL job
+  in a fresh process, so every product pays for a cold JVM, and most of
+  that start is class loading: with the archive mapped, a cold
+  ``get_spark`` plus its first Python-worker job fell from about 7 s to
+  about 4 s on a 4-core host.  The first JVM on a host records the
+  archive and dumps it at exit (there is no install step to do it);
+  each later JVM maps it through ``spark.driver.defaultJavaOptions``,
+  which Spark puts ahead of a caller's ``extraJavaOptions``.  When the
+  archive cannot be used (a conf dir with real files, an unwritable
+  cache, a caller's own ``defaultJavaOptions``) no flag is added and
+  the JVM starts as it would without it, so there is no opt-out knob.
 """
 
 from __future__ import annotations
@@ -31,6 +48,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import jvm_archive
 
 
 # About 11x one lsh_corpus pass (174 classes): room for the registry's
@@ -93,10 +112,35 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    launch = _cds_launch(extra_conf or {})
+    if launch is None:
+        return builder.getOrCreate()
+    builder = builder.config("spark.driver.defaultJavaOptions", launch.java_options)
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = launch.conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if conf_dir is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = conf_dir
+    jvm_archive.record(launch, spark)
+    return spark
+
+
+def _cds_launch(conf: dict[str, str]) -> jvm_archive.Launch | None:
+    """The driver JVM's class-data archive launch, when this call starts
+    a driver JVM (module docstring); None when it reuses a running one."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None
+    return jvm_archive.plan(conf)

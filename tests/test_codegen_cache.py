@@ -6,7 +6,8 @@ LSH/corpus keys below needs more than Spark's default of 100 classes, so
 with the default every class is evicted before the next execution of the
 same plans and compiled again (at sf0.001: 79-95 classes on every later
 pass).  ``get_spark`` sizes the cache so that later passes over built
-plans compile nothing.
+plans compile nothing, and names whole-stage classes without their stage
+id, so that a stage AQE numbers differently is not compiled again.
 """
 
 from __future__ import annotations
@@ -29,20 +30,17 @@ def test_later_passes_over_built_plans_compile_nothing(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
-    qs = e.queries()
     # AQE may finish two sibling stages in either order and so number
-    # their whole-stage classes differently on each execution; a renamed
-    # class is a new cache entry whatever the cache size.  Class names
-    # without the stage id keep this test about eviction alone.
-    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
-    try:
-        frames = {k: qs[k](spark, SF_SMALL) for k in KEYS}
+    # their whole-stage classes differently on each execution; the
+    # session's class names carry no stage id, so a renamed stage is not
+    # a new cache entry
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    qs = e.queries()
+    frames = {k: qs[k](spark, SF_SMALL) for k in KEYS}
+    for df in frames.values():
+        df.select("*").toPandas()
+    for n in range(2):
+        c0 = compiled_classes(spark)
         for df in frames.values():
             df.select("*").toPandas()
-        for n in range(2):
-            c0 = compiled_classes(spark)
-            for df in frames.values():
-                df.select("*").toPandas()
-            assert compiled_classes(spark) - c0 == 0, f"pass {n + 2} recompiled"
-    finally:
-        spark.conf.unset("spark.sql.codegen.useIdInClassName")
+        assert compiled_classes(spark) - c0 == 0, f"pass {n + 2} recompiled"

@@ -11,6 +11,7 @@ out by hand.
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 import duckdb
@@ -145,21 +146,37 @@ def test_to_fixed_matches_its_sql_twin(spark, scale):
     assert all(isinstance(v, int) for v in got[:-1])
 
 
-# the two rules, as their hand-written copies read
-HAND_COPIES = ("* 100 + 0.5", "% 86400000000 + 86400000000")
+# the two rules, as their hand-written copies read (regexes); the cents
+# rule has a second spelling, DuckDB's round, which rounds halves away
+# from zero where to_fixed rounds them up
+HAND_COPIES = (
+    r"\* 100 \+ 0\.5",
+    r"% 86400000000 \+ 86400000000",
+    r"round\([^()\n]*\* 100(, 0)?\) AS BIGINT",
+)
 RULE_FILES = {
     PKG / "functions" / "numeric.py",
     PKG / "sources" / "tables.py",
 }
+# keys whose Spark side rounds with Spark's round, not to_fixed, so that
+# their SQL twin rounds too
+ROUNDING_KEYS = {"sql_api_lateral_subquery"}
+
+
+def _key_at(text: str, pos: int) -> str | None:
+    keys = re.findall(r'@query\(\s*"(\w+)"', text[:pos])
+    return keys[-1] if keys else None
 
 
 def test_no_package_file_writes_a_rule_out_by_hand():
     found = [
-        f"{path.relative_to(PKG)}: {pat}"
+        f"{path.relative_to(PKG)}: {m.group(0)}"
         for path in sorted(PKG.rglob("*.py"))
         if path not in RULE_FILES
+        for text in [path.read_text()]
         for pat in HAND_COPIES
-        if pat in path.read_text()
+        for m in re.finditer(pat, text)
+        if _key_at(text, m.start()) not in ROUNDING_KEYS
     ]
     assert not found, (
         "use functions/numeric.py::to_fixed[_sql] and "
