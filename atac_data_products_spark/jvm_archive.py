@@ -3,19 +3,28 @@
 A cold driver JVM spends most of its start loading and verifying the
 ~20 K classes Spark needs.  A dynamic archive holds those classes
 already parsed; a JVM started with ``-XX:SharedArchiveFile`` maps it
-instead.  ``session.get_spark`` asks :func:`plan` for the flags of each
-driver JVM it launches, and :func:`record` for the archive's life cycle
-once the JVM is up:
+instead.
 
-- A checked archive for this JDK and jar list exists: the JVM maps it.
-- None exists: the JVM records one with ``-XX:ArchiveClassesAtExit`` to
-  a per-process temp name, and dumps it when it exits.  A temp dump
-  becomes the archive only through ``os.replace`` after a throwaway
-  ``java -Xshare:on`` on it exits 0 (:func:`settle`): a truncated archive
-  kills any JVM that maps it with SIGBUS, even under ``-Xshare:auto``.
-- The archive cannot be used (a conf dir with real files, an unwritable
-  cache, a caller's own ``spark.driver.defaultJavaOptions``, no ``java``
-  found): no flag, and the JVM runs as it would without this module.
+The archive is made by an explicit step, once per host or container
+image, before the jobs that use it::
+
+    python -m atac_data_products_spark.jvm_archive
+
+:func:`build` starts one driver JVM as ``session.get_spark`` does, runs
+a first job through it (:func:`_first_job`), and has the JVM dump what
+it loaded when it exits (``-XX:ArchiveClassesAtExit``).  The dump
+becomes the archive only through ``os.replace`` after a throwaway
+``java -Xshare:on`` on it exits 0 (:func:`check`): a truncated archive
+kills any JVM that maps it with SIGBUS, even under ``-Xshare:auto``.
+
+``session.get_spark`` asks :func:`plan` for the flags of each driver JVM
+it launches, and only ever maps a checked archive.  It never records
+one: a job's own JVM that records starts about 3 s slower and takes
+about 7 s longer to exit, and a job in a fresh container never lives to
+map its dump.  With no archive, or one that cannot be used (a conf dir
+with real files, a caller's own ``spark.driver.defaultJavaOptions``, no
+``java`` found), no flag is added and the JVM runs as it would without
+this module.
 
 Files, under ``$XDG_CACHE_HOME/atac-data-products-spark`` (default
 ``~/.cache``):
@@ -23,9 +32,7 @@ Files, under ``$XDG_CACHE_HOME/atac-data-products-spark`` (default
 - ``<key>.jsa``: a checked archive.  ``<key>`` digests the ``java``
   binary and the driver's jars (name, size and mtime of each), so a new
   JDK or a changed jar gives a new key and the old file is never mapped.
-- ``<key>.<pid>-<token>.jsa.tmp``: a dump in flight or not yet checked,
-  and beside it ``...jsa.json``: the dumping JVM's pid, its ``java`` and
-  its own ``java.class.path``, which the check runs with.
+- ``<key>.<random>.build/``: a build in flight, removed when it ends.
 - ``conf/``: an empty ``SPARK_CONF_DIR`` for the launch.  Spark puts the
   conf dir on the classpath and the JDK refuses a non-empty directory on
   an archived classpath, so the archive is used only when the
@@ -34,22 +41,17 @@ Files, under ``$XDG_CACHE_HOME/atac-data-products-spark`` (default
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
-import json
 import os
 import shutil
 import subprocess
+import sys
 import tempfile
-import threading
-import time
-import uuid
 from dataclasses import dataclass
 
 CACHE_NAME = "atac-data-products-spark"
-# a dump with no record beside it this long after its last write is an
-# orphan: its session died before it could write one
-ORPHAN_AGE_S = 600
 # a check of a sound archive takes well under a second
 CHECK_TIMEOUT_S = 120
 # the JVM prints CDS warnings (a skipped class, a mismatched archive) on
@@ -58,19 +60,14 @@ QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 # directories the Spark launcher appends to the driver's classpath when set
 CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 
-_lock = threading.Lock()
-_watchers: list[tuple[threading.Thread, int, str]] = []
-
 
 @dataclass(frozen=True)
 class Launch:
-    """What one driver JVM launch gets: its CDS options, the conf dir to
-    launch with, and the temp dump it records to (None: it maps one)."""
+    """What one driver JVM launch gets: its CDS options and the conf dir
+    to launch with."""
 
     java_options: str
     conf_dir: str
-    java: str
-    pending: str | None
 
 
 def cache_dir() -> str:
@@ -110,11 +107,9 @@ def _templates_only(conf_dir: str) -> bool:
     return all(n.endswith(".template") for n in names)
 
 
-def plan(conf: dict[str, str]) -> Launch | None:
-    """The CDS launch for a driver JVM started with Spark conf ``conf``,
-    or None when the JVM must run without an archive (module docstring).
-    Settles the dumps of earlier JVMs first, so an archive a finished JVM
-    left is mapped by this one."""
+def _site(conf: dict[str, str]) -> tuple[str, str, str] | None:
+    """``(java, cache dir, key)`` of the archive a driver JVM started with
+    Spark conf ``conf`` could map, or None when it cannot map any."""
     if "spark.driver.defaultJavaOptions" in conf:
         return None
     if any(os.environ.get(v) for v in CLASSPATH_ENV):
@@ -132,80 +127,52 @@ def plan(conf: dict[str, str]) -> Launch | None:
     # the launcher splits java options on whitespace
     if any(c.isspace() or c in "'\"" for c in cache):
         return None
-    empty_conf = os.path.join(cache, "conf")
     try:
-        os.makedirs(empty_conf, exist_ok=True)
-        if os.listdir(empty_conf) or not os.access(cache, os.W_OK | os.X_OK):
-            return None
         key = archive_key(java, glob.glob(os.path.join(spark_home, "jars", "*.jar")),
                           conf.get("spark.driver.extraClassPath", ""))
     except OSError:
         return None
-    _join_finished_watchers()
-    settle(cache)
+    return java, cache, key
+
+
+def _empty_conf_dir(cache: str) -> str | None:
+    path = os.path.join(cache, "conf")
+    try:
+        os.makedirs(path, exist_ok=True)
+        return None if os.listdir(path) else path
+    except OSError:
+        return None
+
+
+def plan(conf: dict[str, str]) -> Launch | None:
+    """The CDS launch for a driver JVM started with Spark conf ``conf``:
+    a checked archive to map, or None (module docstring)."""
+    site = _site(conf)
+    if site is None:
+        return None
+    _, cache, key = site
     archive = os.path.join(cache, f"{key}.jsa")
-    if os.path.isfile(archive):
-        return Launch(f"-XX:SharedArchiveFile={archive} {QUIET}", empty_conf, java, None)
-    pending = os.path.join(cache, f"{key}.{os.getpid()}-{uuid.uuid4().hex[:8]}.jsa.tmp")
-    return Launch(f"-XX:ArchiveClassesAtExit={pending} {QUIET}", empty_conf, java, pending)
+    if not os.path.isfile(archive):
+        return None
+    empty = _empty_conf_dir(cache)
+    if empty is None:
+        return None
+    return Launch(f"-XX:SharedArchiveFile={archive} {QUIET}", empty)
 
 
-def record(launch: Launch, spark) -> None:
-    """After the JVM of ``launch`` is up: when it records a dump, write
-    the record the check needs beside it, and promote the dump as soon
-    as the JVM exits while this process lives (else the next
-    :func:`plan` does)."""
-    if launch.pending is None:
-        return
-    from pyspark import SparkContext
-
-    jvm = spark.sparkContext._jvm
-    pid = int(jvm.java.lang.ProcessHandle.current().pid())
-    meta = {"pid": pid, "java": launch.java,
-            "classpath": str(jvm.java.lang.System.getProperty("java.class.path"))}
-    tmp = f"{_meta(launch.pending)}.{os.getpid()}"
+@contextlib.contextmanager
+def spark_conf_dir(path: str):
+    """``SPARK_CONF_DIR`` set to ``path`` while a driver JVM launches; the
+    caller's value (or its absence) afterwards."""
+    before = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = path
     try:
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, _meta(launch.pending))
-    except OSError:
-        # a dump without a record is never checked, and goes as an orphan
-        _remove(tmp)
-        return
-    proc = getattr(SparkContext._gateway, "proc", None)
-    if proc is None:
-        return
-    cache = os.path.dirname(launch.pending)
-
-    def watch():
-        proc.wait()
-        settle(cache)
-
-    t = threading.Thread(target=watch, name="jvm-archive-settle", daemon=True)
-    t.start()
-    _watchers.append((t, pid, launch.pending))
-
-
-def _meta(pending: str) -> str:
-    return pending[: -len(".tmp")] + ".json"
-
-
-def _running(pid: int, pending: str) -> bool:
-    """Whether JVM ``pid`` is alive and is the one recording ``pending``
-    (a zombie has an empty cmdline; a reused pid another one)."""
-    try:
-        with open(f"/proc/{pid}/cmdline", "rb") as f:
-            return pending.encode() in f.read()
-    except OSError:
-        return False
-
-
-def _join_finished_watchers() -> None:
-    for w in list(_watchers):
-        t, pid, pending = w
-        if not _running(pid, pending):
-            t.join()
-            _watchers.remove(w)
+        yield
+    finally:
+        if before is None:
+            os.environ.pop("SPARK_CONF_DIR", None)
+        else:
+            os.environ["SPARK_CONF_DIR"] = before
 
 
 def check(archive: str, java: str, classpath: str) -> bool:
@@ -227,52 +194,88 @@ def check(archive: str, java: str, classpath: str) -> bool:
     return r.returncode == 0
 
 
-def _remove(*paths: str) -> None:
-    for p in paths:
+def install(dump: str, archive: str, java: str, classpath: str) -> bool:
+    """Make ``dump`` the archive at ``archive`` when it passes
+    :func:`check` with the dumping JVM's ``classpath``; whether it did.
+    A JVM already mapping an older file there keeps its mapping."""
+    if not check(dump, java, classpath):
+        return False
+    os.replace(dump, archive)
+    return True
+
+
+def _first_job(spark, work: str) -> None:
+    """What a product's first jobs load: a Python worker, Arrow batches to
+    pandas and back, a codegen'd shuffle aggregate and a join, and a zstd
+    parquet round trip."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    sc.parallelize(range(2), 2).map(lambda x: x + 1).collect()
+    df = spark.range(1000).select((F.col("id") % 7).alias("k"), F.col("id").alias("v"))
+    agg = df.groupBy("k").agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+    path = os.path.join(work, "first_job.parquet")
+    agg.write.parquet(path)
+    joined = spark.read.parquet(path).join(df, "k")
+    joined.mapInPandas(lambda it: it, joined.schema).toPandas()
+
+
+def _exit_jvm(spark) -> None:
+    """Stop the session and wait for its JVM to exit (and so to dump)."""
+    from pyspark import SparkContext
+
+    spark.stop()
+    gateway = SparkContext._gateway
+    proc = gateway.proc
+    gateway.shutdown()
+    SparkContext._gateway = SparkContext._jvm = None
+    # the JVM exits when its stdin closes (PythonGatewayServer)
+    proc.stdin.close()
+    proc.wait()
+
+
+def build() -> str | None:
+    """Record, check and install the archive for ``get_spark``'s driver
+    JVM, unless one is in place; its path, or None when a driver JVM here
+    cannot map one.  Must run in a process with no driver JVM yet."""
+    from pyspark import SparkContext
+
+    from .session import get_spark
+
+    site = _site({})
+    if site is None:
+        return None
+    java, cache, key = site
+    archive = os.path.join(cache, f"{key}.jsa")
+    if os.path.isfile(archive):
+        return archive
+    if SparkContext._gateway is not None:
+        raise RuntimeError("build the archive in a process with no driver JVM")
+    empty = _empty_conf_dir(cache)
+    if empty is None:
+        return None
+    work = tempfile.mkdtemp(prefix=f"{key}.", suffix=".build", dir=cache)
+    try:
+        dump = os.path.join(work, "dump.jsa")
+        with spark_conf_dir(empty):
+            spark = get_spark("jvm-archive-build", extra_conf={
+                "spark.driver.defaultJavaOptions": f"-XX:ArchiveClassesAtExit={dump} {QUIET}"})
         try:
-            os.remove(p)
-        except FileNotFoundError:
-            pass
+            classpath = str(spark.sparkContext._jvm.java.lang.System.getProperty(
+                "java.class.path"))
+            _first_job(spark, work)
+        finally:
+            _exit_jvm(spark)
+        if not install(dump, archive, java, classpath):
+            raise RuntimeError(f"the driver JVM's dump failed its check; no archive at {archive}")
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return archive
 
 
-def settle(cache: str) -> None:
-    """Promote each finished dump under ``cache`` that passes
-    :func:`check` to ``<key>.jsa``, and remove the ones that fail, with
-    their records.  Dumps whose JVM still runs are left alone."""
-    with _lock:
-        for pending in glob.glob(os.path.join(cache, "*.jsa.tmp")):
-            meta_path = _meta(pending)
-            try:
-                with open(meta_path) as f:
-                    meta = json.load(f)
-            except FileNotFoundError:
-                try:
-                    if time.time() - os.stat(pending).st_mtime > ORPHAN_AGE_S:
-                        _remove(pending)
-                except FileNotFoundError:
-                    pass
-                continue
-            except (OSError, ValueError):
-                _remove(pending, meta_path)
-                continue
-            if _running(meta["pid"], pending):
-                continue
-            key = os.path.basename(pending).split(".", 1)[0]
-            try:
-                if check(pending, meta["java"], meta["classpath"]):
-                    os.replace(pending, os.path.join(cache, f"{key}.jsa"))
-            except OSError:
-                pass
-            _remove(pending, meta_path)
-        # records whose JVM ended without a dump (killed, or never started)
-        for meta_path in glob.glob(os.path.join(cache, "*.jsa.json")):
-            pending = meta_path[: -len(".json")] + ".tmp"
-            if os.path.exists(pending):
-                continue
-            try:
-                with open(meta_path) as f:
-                    pid = json.load(f)["pid"]
-            except (OSError, ValueError, KeyError):
-                pid = None
-            if pid is None or not _running(pid, pending):
-                _remove(meta_path)
+if __name__ == "__main__":
+    path = build()
+    if path is None:
+        sys.exit("no archive: a driver JVM here cannot map one "
+                 "(a conf dir with real files, no java, or a cache path with spaces)")
+    print(path)

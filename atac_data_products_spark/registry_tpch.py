@@ -685,7 +685,7 @@ def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                "sum(volume_e4)")} AS mkt_share
     FROM (
       SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-             CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)
+             {to_fixed_sql("l_extendedprice * (1 - l_discount)", 10_000)}
                  AS volume_e4,
              n2.n_name AS nation
       FROM part

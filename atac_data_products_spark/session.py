@@ -30,17 +30,21 @@ Design notes (100 TB target, tested on local[N]):
   on a later execution would otherwise be compiled again under its new
   name.
 - The driver JVM starts from a dynamic class-data-sharing archive
-  (``jvm_archive.py``).  The reference runs each product as a CWL job
-  in a fresh process, so every product pays for a cold JVM, and most of
-  that start is class loading: with the archive mapped, a cold
-  ``get_spark`` plus its first Python-worker job fell from about 7 s to
-  about 4 s on a 4-core host.  The first JVM on a host records the
-  archive and dumps it at exit (there is no install step to do it);
-  each later JVM maps it through ``spark.driver.defaultJavaOptions``,
-  which Spark puts ahead of a caller's ``extraJavaOptions``.  When the
-  archive cannot be used (a conf dir with real files, an unwritable
-  cache, a caller's own ``defaultJavaOptions``) no flag is added and
-  the JVM starts as it would without it, so there is no opt-out knob.
+  (``jvm_archive.py``) when one has been built for this JDK and jar
+  list.  The reference runs each product as a CWL job in a fresh
+  process, so every product pays for a cold JVM, and most of that start
+  is class loading: with the archive mapped, a cold ``get_spark`` plus
+  its first Python-worker job fell from about 7 s to about 4 s on a
+  4-core host.  The archive is made by an explicit step
+  (``python -m atac_data_products_spark.jvm_archive``), at install or
+  image-build time, never by a job's own JVM: recording made a one-JVM
+  job with no archive about twice as slow, and its dump was of no use
+  to a job in a fresh container.  ``get_spark`` maps it through
+  ``spark.driver.defaultJavaOptions``, which Spark puts ahead of a
+  caller's ``extraJavaOptions``.  With no archive, or one that cannot be
+  used (a conf dir with real files, a caller's own
+  ``defaultJavaOptions``), no flag is added and the JVM starts as it
+  would without it, so there is no opt-out knob.
 """
 
 from __future__ import annotations
@@ -123,17 +127,8 @@ def get_spark(
     if launch is None:
         return builder.getOrCreate()
     builder = builder.config("spark.driver.defaultJavaOptions", launch.java_options)
-    conf_dir = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = launch.conf_dir
-    try:
-        spark = builder.getOrCreate()
-    finally:
-        if conf_dir is None:
-            os.environ.pop("SPARK_CONF_DIR", None)
-        else:
-            os.environ["SPARK_CONF_DIR"] = conf_dir
-    jvm_archive.record(launch, spark)
-    return spark
+    with jvm_archive.spark_conf_dir(launch.conf_dir):
+        return builder.getOrCreate()
 
 
 def _cds_launch(conf: dict[str, str]) -> jvm_archive.Launch | None:

@@ -146,13 +146,18 @@ def test_to_fixed_matches_its_sql_twin(spark, scale):
     assert all(isinstance(v, int) for v in got[:-1])
 
 
+# an argument list with parentheses nested up to three deep
+_ARGS = r"[^()]*"
+for _ in range(3):
+    _ARGS = rf"(?:[^()]|\({_ARGS}\))*"
 # the two rules, as their hand-written copies read (regexes); the cents
-# rule has a second spelling, DuckDB's round, which rounds halves away
-# from zero where to_fixed rounds them up
+# rule has a second spelling, DuckDB's round at any power-of-ten scale
+# and across line breaks, which rounds halves away from zero where
+# to_fixed rounds them up
 HAND_COPIES = (
     r"\* 100 \+ 0\.5",
     r"% 86400000000 \+ 86400000000",
-    r"round\([^()\n]*\* 100(, 0)?\) AS BIGINT",
+    rf"round\({_ARGS}\* 10+(, 0)?\)\s*AS BIGINT",
 )
 RULE_FILES = {
     PKG / "functions" / "numeric.py",
@@ -160,12 +165,32 @@ RULE_FILES = {
 }
 # keys whose Spark side rounds with Spark's round, not to_fixed, so that
 # their SQL twin rounds too
-ROUNDING_KEYS = {"sql_api_lateral_subquery"}
+ROUNDING_KEYS = {
+    "corpus_doc_embedding_hashed",
+    "dq_skew_profile",
+    "events_anomaly_seasonal",
+    "events_bot_cadence_score",
+    "ml_naive_bayes_langid",
+    "sql_api_lateral_subquery",
+    "stat_diff_in_diff",
+    "stat_mcnemar_classifiers",
+    "stat_powerlaw_mle",
+    "timeseries_seasonal_decompose",
+}
 
 
 def _key_at(text: str, pos: int) -> str | None:
-    keys = re.findall(r'@query\(\s*"(\w+)"', text[:pos])
-    return keys[-1] if keys else None
+    """The key whose code holds ``pos``: the last ``@query`` before it,
+    or the function it sits in, when that is a key or builds a key's
+    oracle (``@query("k", oracle=_f())``)."""
+    owners = re.findall(r'@query\(\s*"(\w+)"|^def (\w+)\(', text[:pos], re.M)
+    if not owners:
+        return None
+    key, func = owners[-1]
+    if key or re.search(rf'@query\(\s*"{func}"', text):
+        return key or func
+    use = re.search(rf'@query\(\s*"(\w+)",\s*oracle={func}\(\)', text)
+    return use.group(1) if use else None
 
 
 def test_no_package_file_writes_a_rule_out_by_hand():
