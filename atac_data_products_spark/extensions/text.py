@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashes import hash59
 from ..functions.numeric import mean_quantized
 
 # Small English stopword marker list (public, standard function words).
@@ -27,8 +28,9 @@ STOPWORDS = ["the", "a", "an", "of", "to", "and", "in", "is", "on", "for"]
 # (the DuckDB oracle's engine) defines it as [\t\n\f\r ]; a vertical
 # tab in the input makes the two engines tokenize differently (found
 # by the hostile-Unicode parity sweep, tools/hostile_fixture.py).
-# Pinning the class makes the token semantics exact and identical on
-# both sides; every oracle's '\s' means exactly this set under RE2.
+# Both engines read the class from here: each text rule below has one
+# Spark function and its DuckDB twin (`*_sql`) beside it, and the
+# twins splice the same pattern into the oracle SQL.
 WS_CLASS = r"[\t\n\f\r ]"
 TOKEN_SPLIT_RE = WS_CLASS + "+"
 
@@ -37,6 +39,28 @@ def tokens(text: Column | str) -> Column:
     """Whitespace tokenization of lower-cased, trimmed text."""
     c = F.col(text) if isinstance(text, str) else text
     return F.split(F.trim(F.lower(c)), TOKEN_SPLIT_RE)
+
+
+def tokens_sql(expr: str = "text") -> str:
+    """The DuckDB twin of :func:`tokens`: a token list."""
+    return f"regexp_split_to_array(trim(lower({expr})), '{TOKEN_SPLIT_RE}')"
+
+
+def normalize_redact(text: Column | str) -> Column:
+    """Lower-cased, trimmed text with each whitespace run collapsed to
+    one space and each digit run redacted to ``<num>``."""
+    c = F.col(text) if isinstance(text, str) else text
+    return F.regexp_replace(
+        F.regexp_replace(F.trim(F.lower(c)), TOKEN_SPLIT_RE, " "), "[0-9]+", "<num>"
+    )
+
+
+def normalize_redact_sql(expr: str = "text") -> str:
+    """The DuckDB twin of :func:`normalize_redact`."""
+    return (
+        f"regexp_replace(regexp_replace(trim(lower({expr})), '{TOKEN_SPLIT_RE}', ' ', 'g'), "
+        "'[0-9]+', '<num>', 'g')"
+    )
 
 
 def word_shingles(toks: Column, n: int = 3) -> Column:
@@ -52,6 +76,15 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     )
     parts = lambda i: [F.element_at(toks, i + j) for j in range(n)]  # noqa: E731
     return F.transform(idx, lambda i: F.concat_ws(" ", *parts(i)))
+
+
+def word_shingles_sql(toks: str, n: int = 3) -> str:
+    """The DuckDB twin of :func:`word_shingles` over the token list
+    `toks` (``[i:i+n-1]`` is DuckDB's inclusive slice: n tokens)."""
+    return (
+        f"[array_to_string({toks}[i:i+{n - 1}], ' ') "
+        f"FOR i IN range(1, len({toks}) - {n - 2})]"
+    )
 
 
 def ensure_min_partitions(
@@ -142,8 +175,7 @@ def rolling_fingerprint(toks: Column) -> Column:
     """
     hashed = F.transform(
         toks,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint")
-        % F.lit(ROLL_HASH_MASK + 1),
+        lambda t: hash59(t) % F.lit(ROLL_HASH_MASK + 1),
     )
     rest = F.slice(hashed, 2, F.greatest(F.size(hashed) - 1, F.lit(0)))
     return F.aggregate(

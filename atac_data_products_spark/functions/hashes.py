@@ -26,23 +26,22 @@ HASH_BITS = 59
 MERSENNE_P = (1 << 61) - 1
 
 
-def hash59(col: Column | str, salt: str = "") -> Column:
+def hash59(col: Column | str) -> Column:
     """Deterministic hash of a string column, portable to DuckDB.
 
     15 hex md5 digits -> values in [0, 2^60) (a 60-bit range, despite
     the historical name; round-5 ADVICE corrected the stated bound —
     overflow reasoning downstream must budget for hi = h DIV 2^30
-    < 2^30, not 2^29)."""
+    < 2^30, not 2^29).  A salted hash concatenates its salt in the
+    caller (`F.concat(F.lit(s), c)` / `'s' || c`): both are NULL when
+    the column is, where DuckDB's `concat` would skip the NULL."""
     c = F.col(col) if isinstance(col, str) else col
-    if salt:
-        c = F.concat(F.lit(salt), c)
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def hash59_sql(expr: str, salt: str = "") -> str:
+def hash59_sql(expr: str) -> str:
     """The DuckDB-side twin of :func:`hash59` (ANSI-ish SQL text)."""
-    inner = f"concat('{salt}', {expr})" if salt else expr
-    return f"(('0x' || substr(md5({inner}), 1, 15))::BIGINT)"
+    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
 
 
 def minhash_permutation(h: Column, a: int, b: int) -> Column:

@@ -33,6 +33,8 @@ from .functions.numeric import (
 from pyspark.sql.window import Window
 
 from .derived import daily_cents, daily_cents_sql
+from .extensions.text import tokens_sql
+from .functions.hashes import hash59, hash59_sql
 from .registry import _t, _values_sql, query
 from .sources.tables import epoch_day_expr, epoch_day_from_us, epoch_day_from_us_sql
 from .sources.tables import load_table, ts_us_expr
@@ -439,9 +441,9 @@ def json_extract_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_deterministic",
-    oracle="""
+    oracle=f"""
     WITH s AS (SELECT o_orderpriority, o_totalprice,
-                      ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT % 10
+                      {hash59_sql("CAST(o_orderkey AS VARCHAR)")} % 10
                           AS slot
                FROM orders)
     SELECT o_orderpriority,
@@ -457,10 +459,7 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs, engines, and partitionings — the property a training-data
     pipeline needs for holdout splits."""
     o = _t(spark, sf_dir, "orders")
-    slot = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 10
-    )
+    slot = hash59(F.col("o_orderkey").cast("string")) % 10
     s = o.select("o_orderpriority", "o_totalprice", slot.alias("slot"))
     return s.groupBy("o_orderpriority").agg(
         F.count_if(F.col("slot") == 0).alias("n_sampled"),
@@ -1036,7 +1035,7 @@ _TAG_DICT = [
     oracle=rf"""
     WITH dict AS ({_values_sql(_TAG_DICT, ["term", "category"])}),
     tok AS (SELECT doc_id, source,
-                   unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+                   unnest({tokens_sql()}) AS term
             FROM documents)
     SELECT source, category,
            CAST(count(*) AS BIGINT) AS n_hits,
@@ -1338,9 +1337,9 @@ def events_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "table_diff_reconcile",
-    oracle="""
+    oracle=f"""
     WITH b AS (SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders),
-    s AS (SELECT *, ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT % 100
+    s AS (SELECT *, {hash59_sql("CAST(o_orderkey AS VARCHAR)")} % 100
                  AS slot
           FROM b),
     rev AS (
@@ -1376,10 +1375,7 @@ def table_diff_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    slot = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 100
-    )
+    slot = hash59(F.col("o_orderkey").cast("string")) % 100
     s = base.withColumn("slot", slot)
     rev = (
         s.where(F.col("slot") % 17 != 0)
@@ -2591,8 +2587,8 @@ def orders_size_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stat_zipf_regression",
-    oracle="""
-    WITH toks AS (SELECT regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+    oracle=f"""
+    WITH toks AS (SELECT {tokens_sql()} AS t
                   FROM documents),
     tok AS (SELECT unnest(t) AS token FROM toks),
     c AS (SELECT token, CAST(count(*) AS BIGINT) AS n

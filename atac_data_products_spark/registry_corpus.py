@@ -14,12 +14,26 @@ and single-shuffle aggregations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import registry_ext  # noqa: F401  (registers the CC oracle this module composes)
-from .extensions.text import WS_CLASS
+from .extensions.text import (
+    TOKEN_SPLIT_RE,
+    WS_CLASS,
+    bpe_token_count,
+    ensure_min_partitions,
+    normalize_redact,
+    normalize_redact_sql,
+    shingle_table,
+    token_count,
+    tokens,
+    tokens_sql,
+    word_shingles,
+    word_shingles_sql,
+)
+from .functions.hashes import hash59, hash59_sql
 from .functions.numeric import (
     mean_quantized,
     mean_quantized_signed,
@@ -35,10 +49,9 @@ from .registry import _t, _values_sql, query
 
 @query(
     "corpus_normalize_redact",
-    oracle=r"""
+    oracle=f"""
     WITH n AS (SELECT doc_id,
-                      regexp_replace(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'),
-                                     '[0-9]+', '<num>', 'g') AS norm
+                      {normalize_redact_sql()} AS norm
                FROM documents)
     SELECT doc_id, md5(norm) AS norm_fp,
            CAST(length(norm) AS BIGINT) AS norm_len
@@ -52,11 +65,7 @@ def corpus_normalize_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint of the normalized text is the cross-engine-checkable
     output (and doubles as the exact-dedup key post-normalization)."""
     d = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(
-        F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_CLASS + "+", " "),
-        "[0-9]+",
-        "<num>",
-    )
+    norm = normalize_redact("text")
     return d.select(
         "doc_id",
         F.md5(norm).alias("norm_fp"),
@@ -71,8 +80,8 @@ def corpus_normalize_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_tfidf_topk",
-    oracle=r"""
-    WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+    oracle=f"""
+    WITH tok AS (SELECT doc_id, unnest({tokens_sql()}) AS term
                  FROM documents),
     tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
            FROM tok GROUP BY doc_id, term),
@@ -95,8 +104,6 @@ def corpus_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (term), then a broadcast of the tiny df/N sides back onto tf.  The
     per-doc ranking windows over (doc_id) — partition-parallel, never a
     global sort.  Ties broken by term so the top-k is total-ordered."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
@@ -128,16 +135,24 @@ def corpus_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _split() -> Column:
+    """80/10/10 train/val/test from the md5 slot of the doc id."""
+    slot = hash59(F.col("doc_id").cast("string")) % 100
+    return F.when(slot < 80, "train").when(slot < 90, "val").otherwise("test")
+
+
+def _split_sql(doc_id: str = "doc_id") -> str:
+    """The DuckDB twin of :func:`_split`."""
+    slot = f"{hash59_sql(f'CAST({doc_id} AS VARCHAR)')} % 100"
+    return f"CASE WHEN {slot} < 80 THEN 'train' WHEN {slot} < 90 THEN 'val' ELSE 'test' END"
+
+
 @query(
     "corpus_split_assign",
-    oracle="""
-    WITH s AS (SELECT lang, n_chars,
-                      ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100
-                          AS slot
+    oracle=f"""
+    WITH s AS (SELECT lang, n_chars, {_split_sql()} AS split
                FROM documents)
-    SELECT lang,
-           CASE WHEN slot < 80 THEN 'train'
-                WHEN slot < 90 THEN 'val' ELSE 'test' END AS split,
+    SELECT lang, split,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS total_chars
     FROM s GROUP BY 1, 2
@@ -149,14 +164,7 @@ def corpus_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows), engine-portable, and skew-free.  One narrow projection +
     one aggregation shuffle."""
     d = _t(spark, sf_dir, "documents")
-    slot = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 100
-    )
-    split = (
-        F.when(slot < 80, "train").when(slot < 90, "val").otherwise("test")
-    )
-    return d.groupBy("lang", split.alias("split")).agg(
+    return d.groupBy("lang", _split().alias("split")).agg(
         F.count("*").alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
     )
@@ -173,7 +181,7 @@ _PACK_CAP = 2048
     "corpus_seq_packing",
     oracle=rf"""
     WITH t AS (SELECT source, doc_id,
-                      CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT)
+                      CAST(len({tokens_sql()}) AS BIGINT)
                           AS n_tokens
                FROM documents),
     c AS (SELECT source, doc_id, n_tokens,
@@ -197,8 +205,6 @@ def corpus_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     one total sort of the corpus — the non-scalable formulation; sharded
     packing is what training pipelines do anyway (one packer per input
     shard)."""
-    from .extensions.text import token_count
-
     d = _t(spark, sf_dir, "documents")
     t = d.select(
         "source", "doc_id", token_count("text").cast("bigint").alias("n_tokens")
@@ -234,7 +240,7 @@ _MIX_WEIGHTS = [(f"src{i}", 20 + 15 * (i % 5)) for i in range(20)]
     oracle=f"""
     WITH w AS ({_values_sql(_MIX_WEIGHTS, ["source", "pct"])}),
     s AS (SELECT d.source, pct,
-                 ('0x' || substr(md5('mix' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100
+                 {hash59_sql("'mix' || CAST(doc_id AS VARCHAR)")} % 100
                      AS slot
           FROM documents d JOIN w ON d.source = w.source)
     SELECT source,
@@ -251,14 +257,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the kept fraction streams straight into the next stage."""
     d = _t(spark, sf_dir, "documents")
     weights = spark.sql(_values_sql(_MIX_WEIGHTS, ["source", "pct"]))
-    slot = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix"), F.col("doc_id").cast("string"))), 1, 15),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    slot = hash59(F.concat(F.lit("mix"), F.col("doc_id").cast("string"))) % 100
     joined = d.join(F.broadcast(weights), "source").select(
         "source", "pct", slot.alias("slot")
     )
@@ -275,10 +274,10 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udtf_term_positions",
-    oracle=r"""
+    oracle=f"""
     WITH tok AS (SELECT doc_id,
-                        generate_subscripts(regexp_split_to_array(trim(lower(text)), '\s+'), 1) AS pos,
-                        unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS term
+                        generate_subscripts({tokens_sql()}, 1) AS pos,
+                        unnest({tokens_sql()}) AS term
                  FROM documents)
     SELECT doc_id, CAST(pos AS INT) AS pos, term
     FROM tok WHERE pos <= 5
@@ -298,12 +297,12 @@ def udtf_term_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.functions import udtf
 
-    # the engine's token contract exactly (extensions/text.py WS_CLASS):
+    # the engine's token contract exactly (extensions/text.py TOKEN_SPLIT_RE):
     # bare str.split() is Unicode-wide (NBSP, U+2028, ...) and drops
     # empty tokens, silently diverging from the declared [\t\n\f\r ]
     # split on hostile input — trim spaces only, split on the class,
     # keep empties, like F.split/trim and the DuckDB oracle do
-    ws_re = re.compile(r"[\t\n\f\r ]+")
+    ws_re = re.compile(TOKEN_SPLIT_RE)
 
     @udtf(returnType="pos int, term string")
     class TermSplit:
@@ -328,20 +327,6 @@ def udtf_term_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Benchmark decontamination / repetition filtering / corpus stats
 # ---------------------------------------------------------------------------
-
-_CORPUS_TOKS_CTE = (
-    "toks AS (SELECT doc_id, source, "
-    "regexp_split_to_array(trim(lower(text)), '\\s+') AS t FROM documents)"
-)
-# 3-token shingles; [i:i+2] is DuckDB's inclusive slice (3 elements)
-_CORPUS_SH_SET_CTE = (
-    "sh AS (SELECT DISTINCT doc_id, source, "
-    "unnest([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]) AS shingle "
-    "FROM toks WHERE len(t) >= 3)"
-)
-_CORPUS_SH_MULTI_CTE = _CORPUS_SH_SET_CTE.replace("SELECT DISTINCT", "SELECT").replace(
-    "sh AS", "shm AS"
-)
 
 
 def _bench_shingles_maybe_broadcast(
@@ -388,8 +373,9 @@ def _bench_shingles_maybe_broadcast(
 @query(
     "corpus_contamination",
     oracle=f"""
-    WITH {_CORPUS_TOKS_CTE},
-    {_CORPUS_SH_SET_CTE},
+    WITH toks AS (SELECT doc_id, source, {tokens_sql()} AS t FROM documents),
+    sh AS (SELECT DISTINCT doc_id, source, unnest({word_shingles_sql("t")}) AS shingle
+           FROM toks WHERE len(t) >= 3),
     bench AS (SELECT shingle FROM sh WHERE source = 'src9'),
     train AS (SELECT doc_id, shingle FROM sh WHERE source <> 'src9'),
     tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles
@@ -424,8 +410,6 @@ def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct now keys (doc_id, shingle) without the constant source
     column.  At 100 TB the benchmark side is tiny relative to the
     corpus and broadcasts; the train side never self-joins."""
-    from .extensions.text import tokens, word_shingles
-
     d = _t(spark, sf_dir, "documents")
 
     def shingles(df, *keep):
@@ -464,8 +448,9 @@ def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_repetition_ratio",
     oracle=f"""
-    WITH {_CORPUS_TOKS_CTE},
-    {_CORPUS_SH_MULTI_CTE}
+    WITH toks AS (SELECT doc_id, source, {tokens_sql()} AS t FROM documents),
+    shm AS (SELECT doc_id, source, unnest({word_shingles_sql("t")}) AS shingle
+            FROM toks WHERE len(t) >= 3)
     SELECT doc_id,
            CAST(count(*) AS BIGINT) AS n_total,
            CAST(count(DISTINCT shingle) AS BIGINT) AS n_distinct,
@@ -483,8 +468,6 @@ def corpus_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Single map-side-combinable aggregation over the shingle multiset —
     one shuffle on doc_id, no joins, no Python."""
-    from .extensions.text import ensure_min_partitions, tokens, word_shingles
-
     d = ensure_min_partitions(
         # round-12: one input file -> one scan partition serializes the
         # heavy per-row expansion below; conditional spread (no-op at scale)
@@ -521,7 +504,7 @@ _QG_MAX_AVG_TOK_LEN = 5.5
     "corpus_quality_gate",
     oracle=rf"""
     WITH t AS (SELECT doc_id, n_chars,
-                      regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+                      {tokens_sql()} AS toks
                FROM documents),
     m AS (SELECT doc_id, n_chars,
                  {mean_quantized_sql(
@@ -552,8 +535,6 @@ def corpus_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     are rounded BEFORE thresholding on both engines (repo parity
     convention) so a float at the boundary cannot flip the verdict
     cross-engine."""
-    from .extensions.text import ensure_min_partitions, tokens
-
     d = ensure_min_partitions(
         # round-12: one input file -> one scan partition serializes the
         # heavy per-row expansion below; conditional spread (no-op at scale)
@@ -600,7 +581,7 @@ _CHUNK_S = 24
     "corpus_chunk_overlap",
     oracle=rf"""
     WITH t AS (SELECT doc_id,
-                      regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+                      {tokens_sql()} AS toks
                FROM documents
                WHERE text IS NOT NULL),
     s AS (SELECT doc_id, toks,
@@ -627,8 +608,6 @@ def corpus_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join.  At 100 TB chunking streams map-side straight into the
     embedding stage; the md5 fingerprint doubles as the chunk-level
     exact-dedup key."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     # NULL text tokenizes to a NULL array; greatest(size(NULL), 1) is 1
     # (greatest skips NULLs), which would fabricate one empty chunk per
@@ -666,7 +645,7 @@ _SPAN_W = 16
     "corpus_span_dup_rate",
     oracle=rf"""
     WITH t AS (SELECT doc_id,
-                      regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+                      {tokens_sql()} AS toks
                FROM documents),
     s AS (SELECT doc_id, toks,
                  unnest(generate_series(1, greatest(len(toks), 1), {_SPAN_W})) AS start
@@ -700,8 +679,6 @@ def corpus_span_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id) shuffle for the per-doc rollup.  Bodies never shuffle —
     only fingerprints.  Within-doc repetition is the separate
     corpus_repetition_ratio signal."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     # NULL text tokenizes to a NULL array; greatest(size(NULL), 1) is 1
     # (greatest skips NULLs), which would fabricate one empty chunk per
@@ -741,11 +718,9 @@ corpus_span_dup_rate.__doc__ = corpus_span_dup_rate.__doc__.format(W=_SPAN_W)
 @query(
     "corpus_novelty_rate",
     oracle=rf"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
-    shingles AS (SELECT DISTINCT doc_id,
-                        unnest([array_to_string(t[i:i+2], ' ')
-                                FOR i IN range(1, len(t)-1)]) AS shingle
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
                  FROM toks WHERE len(t) >= 3),
     o AS (SELECT shingle, min(doc_id) AS first_doc FROM shingles GROUP BY shingle)
     SELECT s.doc_id,
@@ -770,8 +745,6 @@ def corpus_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one combinable min-agg shuffle on the shingle hash, one fp
     join back (co-partitioned with the agg output), one (doc_id)
     rollup.  Document bodies never shuffle."""
-    from .extensions.text import shingle_table
-
     sh = shingle_table(_t(spark, sf_dir, "documents"))
     owner = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     novel = F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0)
@@ -834,7 +807,7 @@ corpus_reservoir_per_source.__doc__ = corpus_reservoir_per_source.__doc__.format
     SELECT coalesce(source, 'ALL') AS source,
            coalesce(lang, 'ALL') AS lang,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(len(regexp_split_to_array(trim(lower(text)), '\\s+'))) AS BIGINT)
+           CAST(sum(len({tokens_sql()})) AS BIGINT)
              AS n_tokens,
            {mean_quantized_sql("sum(n_chars)", "count(n_chars)")} AS avg_chars
     FROM documents
@@ -847,8 +820,6 @@ def corpus_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP, the partial-aggregate-friendly way to get the
     mixture table a data card reports.  NULL grouping slots are
     coalesced to 'ALL' so the oracle comparison is engine-portable."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     return (
         d.select("source", "lang", "n_chars", F.size(tokens("text")).alias("__nt"))
@@ -975,7 +946,7 @@ VOCAB_TOPK = 200
 @query(
     "corpus_vocab_coverage",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
     tok AS (SELECT unnest(t) AS token FROM toks),
     counts AS (SELECT token, CAST(count(*) AS BIGINT) AS n
@@ -999,8 +970,6 @@ def corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition window runs over only the {VOCAB_TOPK}-row page, with the
     corpus-wide token total folded in as a broadcast one-row dim —
     no global sort of the full vocabulary anywhere."""
-    from .extensions.text import tokens
-
     docs = _t(spark, sf_dir, "documents")
     counts = (
         docs.select(F.explode(tokens("text")).alias("token"))
@@ -1032,11 +1001,11 @@ HASH_FEATURE_BUCKETS = 64
 @query(
     "text_feature_hashing",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
     tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
     h AS (SELECT doc_id,
-                 ('0x' || substr(md5(token), 1, 15))::BIGINT % {HASH_FEATURE_BUCKETS}
+                 {hash59_sql("token")} % {HASH_FEATURE_BUCKETS}
                      AS bucket
           FROM tok WHERE token != '')
     SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS n
@@ -1050,16 +1019,11 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what makes it the streaming/OOV-safe choice at corpus scale.
     Long-form output (doc_id, bucket, n): sparse by construction; one
     combinable aggregation shuffle and no vocabulary state anywhere."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(tokens("text")).alias("token")
     ).where(F.col("token") != "")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("bigint")
-        % HASH_FEATURE_BUCKETS
-    )
+    bucket = hash59("token") % HASH_FEATURE_BUCKETS
     return (
         tok.select("doc_id", bucket.alias("bucket"))
         .groupBy("doc_id", "bucket")
@@ -1074,8 +1038,8 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_pmi_bigrams",
-    oracle=r"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
     uni AS (SELECT unnest(t) AS tok FROM toks),
     uc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM uni WHERE tok != '' GROUP BY tok),
@@ -1103,8 +1067,6 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregates; the unigram side and the one-row totals
     broadcast onto the 20-row top page, so nothing after the counts
     shuffles more than the page."""
-    from .extensions.text import tokens, word_shingles
-
     d = _t(spark, sf_dir, "documents")
     toks = d.select(tokens("text").alias("t"))
     uc = (
@@ -1152,7 +1114,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_training_manifest",
     oracle=rf"""
     WITH t AS (SELECT doc_id, source, n_chars, text,
-                      regexp_split_to_array(trim(lower(text)), '\s+') AS toks
+                      {tokens_sql()} AS toks
                FROM documents),
     gated AS (SELECT doc_id, source, text, toks
               FROM (SELECT *,
@@ -1166,19 +1128,14 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AND stop_ratio >= {_QG_MIN_STOP_RATIO}
                 AND avg_tok_len <= {_QG_MAX_AVG_TOK_LEN}),
     fp AS (SELECT doc_id, source, toks,
-                  md5(regexp_replace(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'),
-                                     '[0-9]+', '<num>', 'g')) AS norm_fp
+                  md5({normalize_redact_sql()}) AS norm_fp
            FROM gated),
     canon AS (SELECT * FROM (
                 SELECT *, row_number() OVER (PARTITION BY norm_fp ORDER BY doc_id) AS rn
                 FROM fp) WHERE rn = 1),
-    assigned AS (SELECT source, len(toks) AS n_tokens,
-                        ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100
-                            AS slot
+    assigned AS (SELECT source, len(toks) AS n_tokens, {_split_sql()} AS split
                  FROM canon)
-    SELECT source,
-           CASE WHEN slot < 80 THEN 'train'
-                WHEN slot < 90 THEN 'val' ELSE 'test' END AS split,
+    SELECT source, split,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS total_tokens
     FROM assigned GROUP BY 1, 2
@@ -1197,8 +1154,6 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its standalone contract query (corpus_quality_gate,
     corpus_normalize_redact, dedup_exact, corpus_split_assign,
     corpus_stats_rollup)."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     toks = tokens("text")
     n_toks = F.size(toks)
@@ -1212,22 +1167,14 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (stop_ratio >= _QG_MIN_STOP_RATIO)
         & (avg_tok_len <= _QG_MAX_AVG_TOK_LEN)
     )
-    norm = F.regexp_replace(
-        F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_CLASS + "+", " "),
-        "[0-9]+",
-        "<num>",
-    )
+    norm = normalize_redact("text")
     fp = gated.select(
         "doc_id", "source", F.size(tokens("text")).alias("n_tokens"),
         F.md5(norm).alias("norm_fp"),
     )
     w = Window.partitionBy("norm_fp").orderBy("doc_id")
     canon = fp.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
-    slot = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 100
-    )
-    split = F.when(slot < 80, "train").when(slot < 90, "val").otherwise("test")
+    split = _split()
     return (
         canon.select("source", "n_tokens", split.alias("split"))
         .groupBy("source", "split")
@@ -1292,7 +1239,7 @@ _LP_SCALE = 1_000_000_000  # fixed-point 1e9 for log-probs
 @query(
     "corpus_unigram_logprob",
     oracle=rf"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
     tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
     tok2 AS (SELECT doc_id, token FROM tok WHERE token != ''),
@@ -1322,8 +1269,6 @@ def corpus_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     any distributed aggregation order (the same determinism pattern as
     fixed-point PageRank).  The unigram model is a broadcast dim
     (vocab-sized); one (doc) aggregation shuffle does the scoring."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens("text")).alias("token")).where(
         F.col("token") != ""
@@ -1351,10 +1296,9 @@ def corpus_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_dup_rate_by_source",
-    oracle=r"""
+    oracle=f"""
     WITH n AS (SELECT doc_id, source,
-                      md5(regexp_replace(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'),
-                                         '[0-9]+', '<num>', 'g')) AS fp
+                      md5({normalize_redact_sql()}) AS fp
                FROM documents),
     canon AS (SELECT fp, min(doc_id) AS keeper FROM n GROUP BY fp)
     SELECT n.source,
@@ -1373,11 +1317,7 @@ def corpus_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a co-partitioned join back; the rate divides exactly-counted
     BIGINTs."""
     d = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(
-        F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_CLASS + "+", " "),
-        "[0-9]+",
-        "<num>",
-    )
+    norm = normalize_redact("text")
     n = d.select("doc_id", "source", F.md5(norm).alias("fp"))
     canon = n.groupBy("fp").agg(F.min("doc_id").alias("keeper"))
     j = n.join(canon, "fp")
@@ -1391,9 +1331,9 @@ def corpus_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_readability_scores",
-    oracle=r"""
+    oracle=f"""
     WITH m AS (SELECT doc_id,
-                      CAST(len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+                      CAST(len(list_filter({tokens_sql()},
                                            x -> x != '')) AS BIGINT) AS words,
                       CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT)
                           AS sentences,
@@ -1415,7 +1355,6 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.  The quality-pipeline complement to corpus_quality_gate's
     structural rules."""
     d = _t(spark, sf_dir, "documents")
-    from .extensions.text import tokens
 
     words = F.size(F.filter(tokens("text"), lambda x: x != "")).cast("bigint")
     sentences = F.greatest(
@@ -1447,7 +1386,7 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_token_entropy",
     oracle=rf"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
     tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
     c AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS n
@@ -1471,8 +1410,6 @@ def corpus_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distributed aggregation is exact integer adds under any fold
     order (the unigram-logprob convention); one (doc, token) shuffle
     and one doc rollup."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     c = (
         d.select("doc_id", F.explode(tokens("text")).alias("token"))
@@ -1501,16 +1438,8 @@ def corpus_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_split_leakage_audit",
     oracle=rf"""
-    WITH n AS (SELECT doc_id,
-                      md5(regexp_replace(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'),
-                                         '[0-9]+', '<num>', 'g')) AS fp,
-                      ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100
-                          AS slot
+    WITH s AS (SELECT doc_id, md5({normalize_redact_sql()}) AS fp, {_split_sql()} AS split
                FROM documents),
-    s AS (SELECT doc_id, fp,
-                 CASE WHEN slot < 80 THEN 'train'
-                      WHEN slot < 90 THEN 'val' ELSE 'test' END AS split
-          FROM n),
     train_fp AS (SELECT DISTINCT fp FROM s WHERE split = 'train')
     SELECT s.split,
            CAST(count(*) AS BIGINT) AS n_docs,
@@ -1532,16 +1461,8 @@ def corpus_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins (broadcast when it fits, shuffled otherwise) against the
     held-out rows; counts divide exactly."""
     d = _t(spark, sf_dir, "documents")
-    norm = F.regexp_replace(
-        F.regexp_replace(F.trim(F.lower(F.col("text"))), WS_CLASS + "+", " "),
-        "[0-9]+",
-        "<num>",
-    )
-    slot = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 100
-    )
-    split = F.when(slot < 80, "train").when(slot < 90, "val").otherwise("test")
+    norm = normalize_redact("text")
+    split = _split()
     s = d.select(F.md5(norm).alias("fp"), split.alias("split"))
     train_fp = (
         s.where(F.col("split") == "train")
@@ -1626,7 +1547,7 @@ _BG_SCALE = 1_000_000_000  # fixed-point 1e9 for bigram log-probs
 @query(
     "corpus_bigram_logprob",
     oracle=rf"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
     bg AS (SELECT doc_id,
                   [t[x] || ' ' || t[x + 1] for x in generate_series(1, len(t) - 1)]
@@ -1670,7 +1591,7 @@ def corpus_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle hash join on the bigram key, which AQE picks on its own
     (nothing in the plan pins a broadcast)."""
     d = _t(spark, sf_dir, "documents")
-    t = F.split(F.trim(F.lower(F.col("text"))), WS_CLASS + "+")
+    t = tokens("text")
     toks = d.select("doc_id", t.alias("t"))
     bigrams = F.zip_with(
         F.slice("t", 1, F.greatest(F.size("t") - 1, F.lit(0))),
@@ -1712,9 +1633,9 @@ def corpus_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_cross_source_overlap",
-    oracle=r"""
+    oracle=f"""
     WITH toks AS (SELECT doc_id, source,
-                         regexp_split_to_array(trim(lower(text)), '\s+') AS t
+                         {tokens_sql()} AS t
                   FROM documents),
     sh AS (SELECT DISTINCT source,
                   md5(t[x] || ' ' || t[x+1] || ' ' || t[x+2] || ' ' ||
@@ -1748,14 +1669,12 @@ def corpus_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     down to source-pair cardinality before its exchange.
     At 100 TB: one wide shuffle on digest; everything after it is
     bounded per key."""
-    from .extensions.text import ensure_min_partitions
-
     # round-12: the sf-scale corpus arrives as one file → one scan
     # partition, serializing the tokenize+md5 expansion on a single
     # core; spread first (conditional — a corpus with thousands of
     # splits passes through untouched)
     d = ensure_min_partitions(_t(spark, sf_dir, "documents"), by="doc_id")
-    t = F.split(F.trim(F.lower(F.col("text"))), WS_CLASS + "+")
+    t = tokens("text")
     toks = d.select("source", t.alias("t"))
     # sequence(1, 0) is DESCENDING [1, 0] in Spark, not empty — unguarded
     # it fabricated two windows per short document, with element_at(t, 0)
@@ -1915,7 +1834,7 @@ def corpus_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                      "t.n_tot", "t.n_langs * c.n_lang")}) AS accept_p_pub
           FROM c CROSS JOIN t),
     acc AS (SELECT d.lang, r.n_lang, r.accept_p, r.accept_p_pub,
-                   CASE WHEN (('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000000)
+                   CASE WHEN ({hash59_sql("CAST(d.doc_id AS VARCHAR)")} % 1000000)
                         < CAST(floor(r.accept_p * 1000000) AS BIGINT)
                         THEN 1 ELSE 0 END AS kept
             FROM documents d JOIN r ON d.lang = r.lang)
@@ -1961,10 +1880,7 @@ def corpus_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             mean_quantized("n_tot", F.col("n_langs") * F.col("n_lang")),
         ).alias("accept_p_pub"),
     )
-    slot = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 1_000_000
-    )
+    slot = hash59(F.col("doc_id").cast("string")) % 1_000_000
     kept = F.when(
         slot < F.floor(F.col("accept_p") * 1_000_000).cast("bigint"), 1
     ).otherwise(0)
@@ -1982,7 +1898,7 @@ def corpus_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_tokenizer_fertility",
     oracle=rf"""
     WITH t AS (SELECT lang,
-                      len(regexp_split_to_array(trim(lower(text)), '\s+'))
+                      len({tokens_sql()})
                           AS n_words,
                       len(regexp_extract_all(lower(text),
                           '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_bpe
@@ -2005,8 +1921,6 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both counts are JVM regex expressions in one narrow projection; the
     per-lang rollup divides exact BIGINT sums, so the ratio is
     fold-order-proof.  Shuffle: one combinable aggregate on lang."""
-    from .extensions.text import bpe_token_count, token_count
-
     d = _t(spark, sf_dir, "documents")
     t = d.select(
         "lang",
@@ -2025,9 +1939,9 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_heldout_bigram_coverage",
     oracle=rf"""
     WITH toks AS (SELECT doc_id,
-                         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100
+                         {hash59_sql("CAST(doc_id AS VARCHAR)")} % 100
                              AS slot,
-                         regexp_split_to_array(trim(lower(text)), '\s+') AS t
+                         {tokens_sql()} AS t
                   FROM documents),
     bg AS (SELECT doc_id, slot,
                   [t[x] || ' ' || t[x + 1] for x in generate_series(1, len(t) - 1)]
@@ -2064,11 +1978,8 @@ def corpus_heldout_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFram
     [[corpus_split_assign]], so coverage is reproducible under corpus
     growth."""
     d = _t(spark, sf_dir, "documents")
-    slot = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 100
-    )
-    t = F.split(F.trim(F.lower(F.col("text"))), WS_CLASS + "+")
+    slot = hash59(F.col("doc_id").cast("string")) % 100
+    t = tokens("text")
     bigrams = F.zip_with(
         F.slice("t", 1, F.greatest(F.size("t") - 1, F.lit(0))),
         F.slice("t", 2, F.greatest(F.size("t") - 1, F.lit(0))),
@@ -2104,12 +2015,11 @@ def _pipeline_e2e_oracle() -> str:
     import re as _re
 
     surv = _re.sub(r"\bdocuments\b", "documents_gated", _survivors_oracle())
-    toks_sql = r"regexp_split_to_array(trim(lower(text)), '\s+')"
     stop_sql = mean_quantized_sql(
-        f"len(list_filter({toks_sql}, x -> x IN ('the', 'a')))",
-        f"len({toks_sql})",
+        f"len(list_filter({tokens_sql()}, x -> x IN ('the', 'a')))",
+        f"len({tokens_sql()})",
     )
-    avg_tok_sql = mean_quantized_sql("n_chars", f"len({toks_sql})")
+    avg_tok_sql = mean_quantized_sql("n_chars", f"len({tokens_sql()})")
     return f"""
     WITH documents_gated AS (
       SELECT doc_id, text, lang, source, n_chars FROM (
@@ -2121,8 +2031,9 @@ def _pipeline_e2e_oracle() -> str:
         AND __avg_tok <= {_QG_MAX_AVG_TOK_LEN} AND source <> 'src9'
     ),
     surv AS (SELECT doc_id FROM ({surv}) s),
-    {_CORPUS_TOKS_CTE},
-    {_CORPUS_SH_SET_CTE},
+    toks AS (SELECT doc_id, source, {tokens_sql()} AS t FROM documents),
+    sh AS (SELECT DISTINCT doc_id, source, unnest({word_shingles_sql("t")}) AS shingle
+           FROM toks WHERE len(t) >= 3),
     bench AS (SELECT DISTINCT shingle FROM sh WHERE source = 'src9'),
     cstat AS (SELECT t.doc_id,
                      CAST(count(*) AS BIGINT) AS n_sh,
@@ -2134,14 +2045,10 @@ def _pipeline_e2e_oracle() -> str:
     clean AS (SELECT doc_id FROM cstat
               WHERE n_cont * 100 < n_sh * {_CONT_DROP_PCT}),
     final AS (SELECT g.source,
-                     CAST(len(regexp_split_to_array(trim(lower(g.text)), '\\s+'))
-                          AS BIGINT) AS n_tokens,
-                     ('0x' || substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 15))::BIGINT
-                         % 100 AS slot
+                     CAST(len({tokens_sql("g.text")}) AS BIGINT) AS n_tokens,
+                     {_split_sql("g.doc_id")} AS split
               FROM documents_gated g JOIN clean USING (doc_id))
-    SELECT source,
-           CASE WHEN slot < 80 THEN 'train'
-                WHEN slot < 90 THEN 'val' ELSE 'test' END AS split,
+    SELECT source, split,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS total_tokens
     FROM final GROUP BY 1, 2
@@ -2177,8 +2084,6 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         duplicate_clusters,
         minhash_lsh_dedup_pairs,
     )
-    from .extensions.text import tokens, word_shingles
-    from .functions.hashes import hash59
     from .registry_ext import JACCARD_THRESHOLD
     from .spill import spill_once as _spill_once
     from .spill import spill_root as _spill_root
@@ -2272,11 +2177,7 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean = cstat.where(
         F.col("n_cont") * 100 < F.col("n_sh") * _CONT_DROP_PCT
     ).select("doc_id")
-    slot = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint") % 100
-    )
-    split = F.when(slot < 80, "train").when(slot < 90, "val").otherwise("test")
+    split = _split()
     # clean ⊆ surv ⊆ gated: joining the spilled gate table re-reads
     # per-doc (source, n_tokens) instead of re-tokenizing the corpus
     final = gate_tbl.join(clean, "doc_id")
@@ -2294,7 +2195,7 @@ _JS_SCALE = 1_000_000_000_000  # 1e-12 fixed point for JS terms
 @query(
     "corpus_js_divergence_sources",
     oracle=rf"""
-    WITH tok AS (SELECT source, unnest(regexp_split_to_array(trim(lower(text)), '\s+'))
+    WITH tok AS (SELECT source, unnest({tokens_sql()})
                      AS token
                  FROM documents),
     tok2 AS (SELECT source, token FROM tok WHERE token != ''),
@@ -2340,8 +2241,6 @@ def corpus_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed (source, token) rows join the two count dims.  Per-token
     terms quantize to 1e-12 fixed point before the per-source sum; the
     remainder derives from exact BIGINT count ratios."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(tokens("text")).alias("token")).where(
         F.col("token") != ""
@@ -2408,7 +2307,7 @@ _ER_SCALE = 1_000_000_000  # 1e-9 fixed point for entropy-rate terms
 @query(
     "corpus_entropy_rate",
     oracle=rf"""
-    WITH toks AS (SELECT source, regexp_split_to_array(trim(lower(text)), '\s+') AS t
+    WITH toks AS (SELECT source, {tokens_sql()} AS t
                   FROM documents),
     bg AS (SELECT source,
                   unnest([t[x] || ' ' || t[x + 1]
@@ -2445,8 +2344,6 @@ def corpus_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditioning counts; each term quantizes to 1e-9 fixed point before
     the per-source sum.  One bigram aggregation feeds both count
     tables; the join keys on (source, w₁)."""
-    from .extensions.text import tokens
-
     d = _t(spark, sf_dir, "documents")
     t = tokens("text")
     bigrams = F.zip_with(

@@ -34,12 +34,16 @@ from .extensions.multimodal import byte_features, with_payload
 from .extensions.similarity import cosine_topk, lsh_topk, query_vector
 from .extensions.text import (
     STOPWORDS,
+    WS_CLASS,
     lang_id,
     quality_features,
     shingle_table,
     token_count,
     tokens,
+    tokens_sql,
+    word_shingles_sql,
 )
+from .functions.hashes import hash59, hash59_sql
 from .functions.numeric import (
     mean_quantized,
     mean_quantized_signed,
@@ -54,16 +58,6 @@ from .sources.tables import events_with_ts, ntz_epoch_s, ntz_epoch_us, ts_us_exp
 # constants as the Spark plans.
 # ---------------------------------------------------------------------------
 
-_TOKS_CTE = (
-    "toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t "
-    "FROM documents)"
-)
-_SHINGLES_CTE = (
-    "shingles AS (SELECT DISTINCT doc_id, "
-    "unnest([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]) AS shingle "
-    "FROM toks WHERE len(t) >= 3)"
-)
-_H40_SQL = "((('0x' || substr(md5(shingle), 1, 15))::BIGINT) % {m})".format(m=_MASK40 + 1)
 _STOPLIST_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
 
 JACCARD_THRESHOLD = 0.2
@@ -105,7 +99,9 @@ def prefix_pair_sql(num: int, den: int) -> str:
     hint; the result set is byte-identical."""
     jac = mean_quantized_sql("n_inter", "l.na + l.nb - n_inter")
     return f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
+                 FROM toks WHERE len(t) >= 3),
     pf_sh AS MATERIALIZED (SELECT doc_id, shingle FROM shingles),
     pf_df AS (SELECT shingle, count(*) AS df FROM pf_sh GROUP BY shingle),
     pf_sizes AS MATERIALIZED (
@@ -158,9 +154,9 @@ def _bucket_sql(n_dims: int = 64) -> str:
 
 @query(
     "text_token_count",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           len(regexp_split_to_array(trim(lower(text)), '\\s+')) AS n_tokens
+           len({tokens_sql()}) AS n_tokens
     FROM documents
     """,
 )
@@ -173,13 +169,13 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_quality_score",
     oracle=f"""
-    WITH {_TOKS_CTE},
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
     feats AS (
       SELECT doc_id,
              len(t) AS n_tokens,
              len(list_distinct(t)) AS n_uniq_tokens,
              length(regexp_replace((SELECT text FROM documents d2 WHERE d2.doc_id = toks.doc_id),
-                                   '\\s', '', 'g')) AS n_nonspace,
+                                   '{WS_CLASS}', '', 'g')) AS n_nonspace,
              len(list_filter(t, x -> list_contains({_STOPLIST_SQL}, x))) AS n_stop
       FROM toks
     )
@@ -201,7 +197,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_lang_id",
     oracle=f"""
-    WITH {_TOKS_CTE},
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
     s AS (SELECT doc_id,
                  len(list_filter(t, x -> list_contains({_STOPLIST_SQL}, x))) AS n_stop,
                  len(t) AS n FROM toks)
@@ -220,10 +216,12 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "doc_fingerprint",
     oracle=f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE}
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
+                 FROM toks WHERE len(t) >= 3)
     SELECT doc_id,
-           min(('0x' || substr(md5(shingle), 1, 15))::BIGINT) AS fp_min,
-           max(('0x' || substr(md5(shingle), 1, 15))::BIGINT) AS fp_max,
+           min({hash59_sql("shingle")}) AS fp_min,
+           max({hash59_sql("shingle")}) AS fp_max,
            count(*) AS n_shingles
     FROM shingles GROUP BY doc_id
     """,
@@ -231,8 +229,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-hash document fingerprint (winnowing-lite): min/max of the
     portable 59-bit shingle hashes + shingle cardinality."""
-    from .functions.hashes import hash59
-
     sh = shingle_table(_t(spark, sf_dir, "documents"))
     return sh.groupBy("doc_id").agg(
         F.min(hash59("shingle")).alias("fp_min"),
@@ -262,7 +258,9 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
+                 FROM toks WHERE len(t) >= 3),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
     inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
               FROM shingles a JOIN shingles b USING (shingle)
@@ -287,8 +285,10 @@ def _minhash_oracle() -> str:
         f"min((h * {a} + {b}) % {_P}) AS mh_{i}" for i, (a, b) in enumerate(_perm_params())
     )
     return f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
-    h AS (SELECT doc_id, {_H40_SQL} AS h FROM shingles)
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
+                 FROM toks WHERE len(t) >= 3),
+    h AS (SELECT doc_id, {hash59_sql("shingle")} % {_MASK40 + 1} AS h FROM shingles)
     SELECT doc_id, {mins} FROM h GROUP BY doc_id
     """
 
@@ -331,7 +331,6 @@ def _lsh_with_body(max_bucket_size: int | None = None) -> str:
     mins = ", ".join(
         f"min((h * {a} + {b}) % {_P}) AS mh_{i}" for i, (a, b) in enumerate(_perm_params())
     )
-    from .functions.hashes import hash59_sql
 
     structs = []
     for bi in range(LSH_BANDS):
@@ -358,8 +357,10 @@ def _lsh_with_body(max_bucket_size: int | None = None) -> str:
                UNION ALL
                SELECT __min AS doc_a, doc_id AS doc_b
                FROM sized WHERE __n > {max_bucket_size} AND doc_id <> __min))"""
-    return f"""{_TOKS_CTE}, {_SHINGLES_CTE},
-    h AS (SELECT doc_id, {_H40_SQL} AS h FROM shingles),
+    return f"""toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
+                 FROM toks WHERE len(t) >= 3),
+    h AS (SELECT doc_id, {hash59_sql("shingle")} % {_MASK40 + 1} AS h FROM shingles),
     sig AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id),
     buckets AS (SELECT doc_id, u.band AS band, u.sig AS sig
                 FROM (SELECT doc_id, unnest([{", ".join(structs)}]) AS u FROM sig)),
@@ -572,8 +573,8 @@ query("dedup_connected_components", oracle=_cc_oracle())(dedup_connected_compone
 
 @query(
     "text_ngram_topk",
-    oracle="""
-    WITH t AS (SELECT regexp_split_to_array(trim(lower(text)), '\\s+') AS toks FROM documents),
+    oracle=f"""
+    WITH t AS (SELECT {tokens_sql()} AS toks FROM documents),
     bg AS (SELECT unnest([toks[i] || ' ' || toks[i+1] FOR i IN range(1, len(toks))]) AS bigram
            FROM t WHERE len(toks) >= 2)
     SELECT bigram, CAST(count(*) AS BIGINT) AS n
@@ -608,10 +609,10 @@ def _simhash_oracle() -> str:
     return f"""
     WITH tok AS (
       SELECT DISTINCT doc_id,
-             unnest(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+'))) AS tok
+             unnest(list_distinct({tokens_sql()})) AS tok
       FROM documents
     ),
-    h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
+    h AS (SELECT doc_id, {hash59_sql("tok")} AS h
           FROM tok WHERE tok != ''),
     s AS (SELECT doc_id, {sums} FROM h GROUP BY doc_id)
     SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM s
@@ -1541,9 +1542,9 @@ def _rolling_oracle() -> str:
     from .extensions.text import ROLL_BASE, ROLL_HASH_MASK, ROLL_MOD
 
     return f"""
-    WITH {_TOKS_CTE},
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
     h AS (SELECT doc_id,
-                 list_transform(t, x -> (('0x' || substr(md5(x), 1, 15))::BIGINT) % {ROLL_HASH_MASK + 1}) AS hs
+                 list_transform(t, x -> {hash59_sql("x")} % {ROLL_HASH_MASK + 1}) AS hs
           FROM toks)
     SELECT doc_id,
            list_reduce(hs, (a, b) -> (a * {ROLL_BASE} + b) % {ROLL_MOD}) AS rolling_fp

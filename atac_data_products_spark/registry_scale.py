@@ -68,6 +68,7 @@ from .functions.numeric import (
 )
 from pyspark.sql.window import Window
 
+from .extensions.text import tokens_sql, word_shingles_sql
 from .functions.hashes import hash59, hash59_sql
 from .sources.tables import epoch_day_from_us_sql
 
@@ -382,10 +383,9 @@ PREFIX_JACCARD = PREFIX_JACCARD_NUM / PREFIX_JACCARD_DEN
 @query(
     "dedup_prefix_filter_join",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
-    shingles AS (SELECT DISTINCT doc_id,
-                 unnest([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]) AS shingle
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
                  FROM toks WHERE len(t) >= 3),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
     inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
@@ -1240,13 +1240,13 @@ SUBSTR_MIN_SPAN = 9  # report pairs sharing a run of ≥ this many tokens
 @query(
     "dedup_common_substring",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
-    grams AS (SELECT doc_id, g.pos, g.h FROM toks,
-              unnest([{{'pos': i,
-                        'h': ('0x' || substr(md5(array_to_string(t[i:i+{SUBSTR_GRAM - 1}], ' ')), 1, 15))::BIGINT}}
-                      FOR i IN range(1, len(t) - {SUBSTR_GRAM - 2})]) AS u(g)
-              WHERE len(t) >= {SUBSTR_GRAM}),
+    sh AS (SELECT doc_id, {word_shingles_sql("t", SUBSTR_GRAM)} AS s
+           FROM toks WHERE len(t) >= {SUBSTR_GRAM}),
+    grams AS (SELECT doc_id, g.pos, g.h FROM sh,
+              unnest([{{'pos': i, 'h': {hash59_sql("s[i]")}}}
+                      FOR i IN range(1, len(s) + 1)]) AS u(g)),
     hits AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
                     a.pos AS pa, a.pos - b.pos AS diag
              FROM grams a JOIN grams b ON a.h = b.h AND a.doc_id < b.doc_id),
@@ -1521,7 +1521,7 @@ def _rake_oracle() -> str:
     WITH toks AS (
       SELECT doc_id, u.tok, u.pos
       FROM (SELECT doc_id,
-                   regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+                   {tokens_sql()} AS t
             FROM documents),
            unnest([{{'pos': i, 'tok': t[i]}} FOR i IN range(1, len(t) + 1)]) AS u(u)
     ),
@@ -2444,9 +2444,9 @@ orders_duplicate_payment_audit.__doc__ = orders_duplicate_payment_audit.__doc__.
 
 @query(
     "corpus_lang_confusion",
-    oracle="""
+    oracle=f"""
     WITH toks AS (SELECT doc_id, lang,
-                         regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+                         {tokens_sql()} AS t
                   FROM documents),
     s AS (SELECT doc_id, lang,
                  len(list_filter(t, x -> list_contains(
@@ -2700,24 +2700,12 @@ SWEEP_THRESHOLD = 0.2
 
 def _sweep_oracle() -> str:
     from .extensions.dedup import MINHASH_K, _perm_params
-    from .functions.hashes import hash59_sql
 
     _P = (1 << 61) - 1
-    mask_m = (1 << 40)
     mins = ", ".join(
         f"min((h * {a} + {b}) % {_P}) AS mh_{i}"
         for i, (a, b) in enumerate(_perm_params(MINHASH_K))
     )
-    toks = (
-        "toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t "
-        "FROM documents)"
-    )
-    shingles = (
-        "shingles AS (SELECT DISTINCT doc_id, "
-        "unnest([array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)]) AS shingle "
-        "FROM toks WHERE len(t) >= 3)"
-    )
-    h40 = f"((('0x' || substr(md5(shingle), 1, 15))::BIGINT) % {mask_m})"
     # truth via the prefix-filtered exact-Jaccard twin (recall-lossless,
     # tests/test_prefix_truth_identity.py) — the naive all-pairs
     # inverted-index CTE spilled >80 GB at the 8x value sweep
@@ -2730,8 +2718,10 @@ def _sweep_oracle() -> str:
     # is the actual mechanism behind the r09 '>80 GB spill' (the
     # materialized intermediates measure <10M rows at 8x).  Evaluation
     # hint only; the result set is unchanged.
-    parts = [f"""{toks}, {shingles},
-    h AS (SELECT doc_id, {h40} AS h FROM shingles),
+    parts = [f"""toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
+                 FROM toks WHERE len(t) >= 3),
+    h AS (SELECT doc_id, {hash59_sql("shingle")} % {1 << 40} AS h FROM shingles),
     sig AS MATERIALIZED (SELECT doc_id, {mins} FROM h GROUP BY doc_id),
     truth AS MATERIALIZED (SELECT doc_a, doc_b FROM ({prefix_pair_sql(1, 5)}))"""]
     selects = []
@@ -3001,7 +2991,7 @@ QGATE_KEEP_FRACTION = 0.8
     "corpus_quality_percentile_gate",
     oracle=f"""
     WITH f AS (SELECT doc_id,
-                      len(regexp_split_to_array(trim(lower(text)), '\\s+'))
+                      len({tokens_sql()})
                           AS n_tokens,
                       CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS BIGINT)
                           AS n_punct,
@@ -5127,7 +5117,7 @@ def corpus_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_hapax_rate",
     oracle=f"""
     WITH toks AS (SELECT source,
-                         unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
+                         unnest({tokens_sql()})
                              AS tok
                   FROM documents),
     tc AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS n
@@ -5731,7 +5721,7 @@ VOCAB_CHECKPOINTS = 10
     "corpus_vocab_growth_curve",
     oracle=f"""
     WITH toks AS (SELECT doc_id,
-                         unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
+                         unnest({tokens_sql()})
                              AS tok
                   FROM documents),
     firsts AS (SELECT tok, CAST(min(doc_id) AS BIGINT) AS first_doc
@@ -5824,7 +5814,7 @@ SPAN_MEAN_LEN = 3
     "corpus_span_corruption",
     oracle=f"""
     WITH t AS (SELECT doc_id,
-                      CAST(len(regexp_split_to_array(trim(lower(text)), '\\s+'))
+                      CAST(len({tokens_sql()})
                            AS BIGINT) AS n
                FROM documents),
     s AS (SELECT doc_id, n,
@@ -5835,11 +5825,9 @@ SPAN_MEAN_LEN = 3
     masked AS (SELECT doc_id, n, n_spans,
                       CAST(len(list_distinct(flatten(
                         [range(
-                           (('0x' || substr(md5('span' || CAST(doc_id AS VARCHAR)
-                                          || '_' || CAST(k AS VARCHAR)), 1, 15))::BIGINT)
+                           {hash59_sql("'span' || CAST(doc_id AS VARCHAR) || '_' || CAST(k AS VARCHAR)")}
                              % n + 1,
-                           least((('0x' || substr(md5('span' || CAST(doc_id AS VARCHAR)
-                                          || '_' || CAST(k AS VARCHAR)), 1, 15))::BIGINT)
+                           least({hash59_sql("'span' || CAST(doc_id AS VARCHAR) || '_' || CAST(k AS VARCHAR)")}
                                    % n + 1 + {SPAN_MEAN_LEN}, n + 1))
                          FOR k IN range(1, n_spans + 1)]))) AS BIGINT) AS n_masked
                FROM s)
@@ -7136,9 +7124,9 @@ def orders_single_source_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_naive_bayes_langid",
-    oracle="""
+    oracle=f"""
     WITH toks AS (SELECT doc_id, lang,
-                         unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
+                         unnest({tokens_sql()})
                              AS tok
                   FROM documents),
     tk AS (SELECT doc_id, lang, tok FROM toks WHERE tok <> ''),
@@ -7492,7 +7480,7 @@ DOC_EMB_DIM = 16
     "corpus_doc_embedding_hashed",
     oracle=f"""
     WITH toks AS (SELECT doc_id,
-                         unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
+                         unnest({tokens_sql()})
                              AS tok
                   FROM documents),
     tk AS (SELECT doc_id, tok FROM toks WHERE tok <> ''),
@@ -7669,9 +7657,9 @@ def _mcnemar_oracle() -> str:
     nb = ORACLES["ml_naive_bayes_langid"]
     # rebuild per-doc predictions for both classifiers (the NB oracle
     # aggregates to a confusion matrix; we need the doc grain here)
-    return """
+    return f"""
     WITH toks AS (SELECT doc_id, lang,
-                         regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+                         {tokens_sql()} AS t
                   FROM documents),
     heur AS (SELECT doc_id, lang,
                     CASE WHEN len(list_filter(t, x -> list_contains(

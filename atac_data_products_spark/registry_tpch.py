@@ -920,20 +920,31 @@ def tpch_q21_sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame
     """Q21 shape (lateness = shipped >=90 days after order date — the
     driver has no commit/receipt dates): suppliers solely responsible
     for late multi-supplier orders.  The two correlated EXISTS become
-    per-order aggregates joined once — counting distinct suppliers and
-    distinct LATE suppliers per order — instead of two extra passes
-    over lineitem as semi/anti joins would need."""
+    per-order aggregates joined once — counting suppliers and LATE
+    suppliers per order — instead of two extra passes over lineitem as
+    semi/anti joins would need.  The counts run over a per-(order,
+    supplier) aggregate rather than as two distinct counts, which
+    Spark would plan through an Expand whose projection order varies
+    with the session's expression ids."""
     late = F.col("l_shipdate") >= F.col("o_orderdate") + F.expr("INTERVAL 90 DAY")
     o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    per_order = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey")
+    per_supp = (
+        li.where(F.col("l_suppkey").isNotNull())
+        .join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_orderkey", "l_suppkey")
         .agg(
-            F.count_distinct("l_suppkey").alias("n_supp"),
-            F.count_distinct(F.when(late, F.col("l_suppkey"))).alias("n_late_supp"),
+            F.max(late).alias("late"),
+            F.first(F.col("o_orderdate")).alias("o_orderdate"),
+        )
+    )
+    per_order = (
+        per_supp.groupBy("l_orderkey")
+        .agg(
+            F.count("*").alias("n_supp"),
+            F.count_if("late").alias("n_late_supp"),
             F.first(F.col("o_orderdate")).alias("o_orderdate"),
         )
         .where((F.col("n_supp") > 1) & (F.col("n_late_supp") == 1))

@@ -5,8 +5,10 @@ oracles; this battery checks each builder and its twin directly, for
 every variant the registry uses, on the sf0.001 tables and on the
 hostile fixture (pre-1970 clocks, the epoch ±1 µs, year 9999, NULL ts
 and NULL value).  It also checks the two rules the builders rest on,
-cents and the day floor, and that no package file writes either rule
-out by hand.
+cents and the day floor, the text rules the corpus, dedup and LSH keys
+share (tokens, word shingles, hash59, normalize-redact and the corpus
+split), each against its SQL twin, and that no package file writes any
+of these rules out by hand.
 """
 
 from __future__ import annotations
@@ -15,7 +17,9 @@ import re
 from pathlib import Path
 
 import duckdb
+import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from atac_data_products_spark.derived import (
@@ -26,9 +30,19 @@ from atac_data_products_spark.derived import (
     daily_cents,
     daily_cents_sql,
 )
+from atac_data_products_spark.extensions.text import (
+    normalize_redact,
+    normalize_redact_sql,
+    tokens,
+    tokens_sql,
+    word_shingles,
+    word_shingles_sql,
+)
+from atac_data_products_spark.functions.hashes import hash59, hash59_sql
 from atac_data_products_spark.functions.numeric import to_fixed, to_fixed_sql
+from atac_data_products_spark.registry_corpus import _split, _split_sql
 from atac_data_products_spark.registry_graph import CN_BULK
-from atac_data_products_spark.registry_scale import BFS_BULK
+from atac_data_products_spark.registry_scale import BFS_BULK, SUBSTR_GRAM
 from atac_data_products_spark.sources.tables import (
     epoch_day_from_us,
     epoch_day_from_us_sql,
@@ -146,23 +160,123 @@ def test_to_fixed_matches_its_sql_twin(spark, scale):
     assert all(isinstance(v, int) for v in got[:-1])
 
 
+# documents every table set gets on top of its own: NULL text, the
+# whitespace zoo with \x0B (Java's \s holds it, RE2's does not), texts
+# shorter than a shingle, and a NULL doc id
+EXTRA_DOCS = [
+    (-1, None),
+    (-2, "\t\n\r  \x0b\x0c"),
+    (-3, "one two"),
+    (-4, "a\x0bb\x0bc d\te"),
+    (-5, " Lead 12 and  trail 345 "),
+    (None, "a doc without an id"),
+]
+
+
+@pytest.fixture(scope="module")
+def docs(spark, tables):
+    """(Spark documents, DuckDB CTE `docs`): (doc_id, text) of the table
+    set plus EXTRA_DOCS."""
+    sf_dir, con = tables
+    extra = pa.table(
+        {
+            "doc_id": pa.array([d for d, _ in EXTRA_DOCS], pa.int64()),
+            "text": pa.array([t for _, t in EXTRA_DOCS], pa.string()),
+        }
+    )
+    con.register("extra_docs", extra)
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    df = df.unionByName(spark.createDataFrame(extra.to_pandas(), df.schema))
+    return df, (
+        "docs AS (SELECT doc_id, text FROM documents "
+        "UNION ALL SELECT doc_id, text FROM extra_docs)"
+    )
+
+
+def _twins(con, docs, spark_col, sql):
+    """Sorted (doc_id, value) rows of `spark_col` and of `sql` over docs."""
+    df, cte = docs
+    got = df.select("doc_id", spark_col).collect()
+    want = con.execute(f"WITH {cte} SELECT doc_id, {sql} FROM docs").fetchall()
+    assert len(got) > len(EXTRA_DOCS)
+    return _sorted(got), _sorted(want)
+
+
+def test_tokens_match_their_sql_twin(tables, docs):
+    got, want = _twins(tables[1], docs, tokens("text"), tokens_sql())
+    assert got == want
+    by_id = dict(got)
+    assert by_id[-1] is None
+    assert by_id[-4] == ["a\x0bb\x0bc", "d", "e"]
+
+
+@pytest.mark.parametrize("n", [3, SUBSTR_GRAM])
+def test_word_shingles_match_their_sql_twin(tables, docs, n):
+    got, want = _twins(
+        tables[1], docs, word_shingles(tokens("text"), n), word_shingles_sql(tokens_sql(), n)
+    )
+    # Spark's shingles of NULL text are [], DuckDB's are NULL: both
+    # explode to no rows, which is all a consumer sees
+    assert got == _sorted((d, [] if v is None else v) for d, v in want)
+    by_id = dict(got)
+    assert by_id[-1] == by_id[-3] == []
+    assert any(len(v) > 1 for v in by_id.values())
+
+
+def test_normalize_redact_matches_its_sql_twin(tables, docs):
+    got, want = _twins(tables[1], docs, normalize_redact("text"), normalize_redact_sql())
+    assert got == want
+    assert dict(got)[-5] == "lead <num> and trail <num>"
+
+
+@pytest.mark.parametrize("salt", ["", "mix"])
+def test_hash59_matches_its_sql_twin(tables, docs, salt):
+    # a salted hash concatenates in the caller; NULL text stays NULL
+    col = F.concat(F.lit(salt), F.col("text")) if salt else F.col("text")
+    sql = f"'{salt}' || text" if salt else "text"
+    got, want = _twins(tables[1], docs, hash59(col), hash59_sql(sql))
+    assert got == want
+    assert dict(got)[-1] is None
+
+
+def test_corpus_split_matches_its_sql_twin(tables, docs):
+    got, want = _twins(tables[1], docs, _split(), _split_sql())
+    assert got == want
+    assert {v for _, v in got} == {"train", "val", "test"}
+
+
 # an argument list with parentheses nested up to three deep
 _ARGS = r"[^()]*"
 for _ in range(3):
     _ARGS = rf"(?:[^()]|\({_ARGS}\))*"
-# the two rules, as their hand-written copies read (regexes); the cents
-# rule has a second spelling, DuckDB's round at any power-of-ten scale
-# and across line breaks, which rounds halves away from zero where
+# the cents rule's second spelling, DuckDB's round at any power-of-ten
+# scale and across line breaks, which rounds halves away from zero where
 # to_fixed rounds them up
+ROUND_COPY = rf"round\({_ARGS}\* 10+(, 0)?\)\s*AS BIGINT"
+# the rules, as their hand-written copies read (regexes); the text
+# rules in their SQL spelling, then their Spark one
 HAND_COPIES = (
     r"\* 100 \+ 0\.5",
     r"% 86400000000 \+ 86400000000",
-    rf"round\({_ARGS}\* 10+(, 0)?\)\s*AS BIGINT",
+    ROUND_COPY,
+    r"regexp_split_to_array\(trim\(lower\(",
+    r"\bF\.split\(F\.trim\(F\.lower\(",
+    r"array_to_string\(\w+\[i:i\+",
+    r"F\.element_at\(\w+, i \+ j\)",
+    r"'0x' \|\| substr\(md5\(",
+    r"\bF\.conv\(\s*F\.substring\(\s*F\.md5\(",
+    r"regexp_replace\(regexp_replace\(trim\(lower\(",
+    r"\bF\.regexp_replace\(\s*F\.regexp_replace\(\s*F\.trim\(",
 )
 RULE_FILES = {
+    PKG / "extensions" / "text.py",
+    PKG / "functions" / "hashes.py",
     PKG / "functions" / "numeric.py",
     PKG / "sources" / "tables.py",
 }
+# the corpus split lives beside its keys (registry_corpus._split and
+# _split_sql), so its one copy per engine is the one match allowed
+SPLIT_RULE = (r'< 80, "train"', r"< 80 THEN 'train'")
 # keys whose Spark side rounds with Spark's round, not to_fixed, so that
 # their SQL twin rounds too
 ROUNDING_KEYS = {
@@ -194,16 +308,25 @@ def _key_at(text: str, pos: int) -> str | None:
 
 
 def test_no_package_file_writes_a_rule_out_by_hand():
+    texts = {path: path.read_text() for path in sorted(PKG.rglob("*.py"))}
     found = [
         f"{path.relative_to(PKG)}: {m.group(0)}"
-        for path in sorted(PKG.rglob("*.py"))
+        for path, text in texts.items()
         if path not in RULE_FILES
-        for text in [path.read_text()]
         for pat in HAND_COPIES
         for m in re.finditer(pat, text)
-        if _key_at(text, m.start()) not in ROUNDING_KEYS
+        if pat != ROUND_COPY or _key_at(text, m.start()) not in ROUNDING_KEYS
     ]
+    for pat in SPLIT_RULE:
+        hits = [
+            f"{path.relative_to(PKG)}: {m.group(0)}"
+            for path, text in texts.items()
+            for m in re.finditer(pat, text)
+        ]
+        found += hits if len(hits) > 1 else []
     assert not found, (
-        "use functions/numeric.py::to_fixed[_sql] and "
-        f"sources/tables.py::epoch_day_from_us[_sql] instead: {found}"
+        "use functions/numeric.py::to_fixed[_sql], "
+        "sources/tables.py::epoch_day_from_us[_sql], the text rules in "
+        "extensions/text.py and functions/hashes.py, and "
+        f"registry_corpus._split[_sql] instead: {found}"
     )

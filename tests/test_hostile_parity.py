@@ -10,7 +10,8 @@ same verdict the driver gate would.
 Found (and fixed) by the sweep that introduced this battery:
 
 - Java `\\s` includes \\x0B, RE2's doesn't → tokenizers pinned to the
-  explicit class [\\t\\n\\f\\r ] on both engines (text.WS_CLASS)
+  explicit class [\\t\\n\\f\\r ] on both engines (text.WS_CLASS; the
+  oracles splice the same pattern through the text.py SQL twins)
 - Java `\\b` is Unicode-aware, RE2's is ASCII → regex_extract_battery
   rewritten with explicit ASCII boundary classes
 - a Spark SQL string literal unescapes backslashes → corpus_pii_scan's

@@ -53,12 +53,14 @@ def _naive_pair_sql(num: int, den: int) -> str:
     """Test-local naive inverted-index twin of prefix_pair_sql at an
     arbitrary threshold — the unfiltered ground truth the theorem says
     the prefix form must reproduce exactly."""
+    from atac_data_products_spark.extensions.text import tokens_sql, word_shingles_sql
     from atac_data_products_spark.functions.numeric import mean_quantized_sql
-    from atac_data_products_spark.registry_ext import _SHINGLES_CTE, _TOKS_CTE
 
     jac = mean_quantized_sql("n_inter", "za.n_sh + zb.n_sh - n_inter")
     return f"""
-    WITH {_TOKS_CTE}, {_SHINGLES_CTE},
+    WITH toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
+                 FROM toks WHERE len(t) >= 3),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
     inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
               FROM shingles a JOIN shingles b USING (shingle)
