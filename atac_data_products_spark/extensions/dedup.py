@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import mean_quantized
 
-from ..functions.hashes import hash59
+from ..functions.hashes import hash59, hash59_expr
 from .text import shingle_table
 from ..spill import ckpt_eager as _ckpt_eager
 from ..spill import release_checkpoint as _release_ckpt
@@ -55,6 +55,21 @@ def _perm_params(k: int = MINHASH_K) -> list[tuple[int, int]]:
         b = ((i + 7) * 40503 + 101) % (1 << 20)
         params.append((a, b))
     return params
+
+
+def _band_structs(bands: int, rows: int) -> str:
+    """The (band, sig) struct list of the LSH bucket key as Spark SQL
+    text: sig is hash59 of band ``bi``'s minhashes joined by ``_``."""
+    return ", ".join(
+        f"struct({bi} AS band, "
+        + hash59_expr(
+            "concat_ws('_', "
+            + ", ".join(f"mh_{bi * rows + r}" for r in range(rows))
+            + ")"
+        )
+        + " AS sig)"
+        for bi in range(bands)
+    )
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -122,13 +137,7 @@ def lsh_candidate_pairs(
     """
     # band structs as one SQL string: JVM-side parse instead of ~10 py4j
     # round trips per band constructing nested Column objects
-    structs = ", ".join(
-        f"struct({bi} AS band, "
-        "CAST(conv(substring(md5(concat_ws('_', "
-        + ", ".join(f"mh_{bi * rows + r}" for r in range(rows))
-        + ")), 1, 15), 16, 10) AS BIGINT) AS sig)"
-        for bi in range(bands)
-    )
+    structs = _band_structs(bands, rows)
     buckets = signatures.selectExpr(
         id_col, f"explode(array({structs})) AS b"
     ).select(id_col, "b.band", "b.sig")
@@ -624,6 +633,22 @@ def connected_components(
     )
 
 
+def connected_components_sql(pairs: str = "pairs", docs: str = "documents") -> str:
+    """The DuckDB twin of :func:`connected_components` over the
+    ``(doc_a, doc_b)`` relation ``pairs`` and the ``doc_id`` relation
+    ``docs``: the CTEs ``edges``, ``walk`` (a recursive walk of every
+    reachable label) and ``cc`` = (doc_id, cluster_id = min label),
+    spliced after a ``WITH RECURSIVE``."""
+    return f"""edges AS (SELECT doc_a AS src, doc_b AS dst FROM {pairs}
+              UNION ALL SELECT doc_b, doc_a FROM {pairs}),
+    walk(doc_id, label) AS (
+      SELECT doc_id, doc_id FROM {docs}
+      UNION
+      SELECT e.dst, w.label FROM walk w JOIN edges e ON w.doc_id = e.src
+    ),
+    cc AS (SELECT doc_id, min(label) AS cluster_id FROM walk GROUP BY doc_id)"""
+
+
 SIMHASH_BITS = 32
 
 
@@ -672,13 +697,7 @@ def lsh_probe_pairs(
     daily batch is millions — probing emits O(|new| × bucket hit rate)
     candidates instead of re-pairing the whole corpus.
     """
-    structs = ", ".join(
-        f"struct({bi} AS band, "
-        "CAST(conv(substring(md5(concat_ws('_', "
-        + ", ".join(f"mh_{bi * rows + r}" for r in range(rows))
-        + ")), 1, 15), 16, 10) AS BIGINT) AS sig)"
-        for bi in range(bands)
-    )
+    structs = _band_structs(bands, rows)
     buckets = signatures.selectExpr(
         id_col, new_col, f"explode(array({structs})) AS b"
     ).select(id_col, new_col, "b.band", "b.sig")

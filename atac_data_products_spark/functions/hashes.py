@@ -39,6 +39,12 @@ def hash59(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
+def hash59_expr(arg: str) -> str:
+    """:func:`hash59` as Spark SQL text, for an ``F.expr``/``selectExpr``
+    string whose argument is itself SQL text (a lambda variable, say)."""
+    return f"CAST(conv(substring(md5({arg}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def hash59_sql(expr: str) -> str:
     """The DuckDB-side twin of :func:`hash59` (ANSI-ish SQL text)."""
     return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"

@@ -18,7 +18,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import registry_ext  # noqa: F401  (registers the CC oracle this module composes)
+from .extensions.dedup import (
+    LSH_MAX_BUCKET,
+    connected_components_sql,
+    digest_shingles,
+    duplicate_clusters,
+)
 from .extensions.text import (
     TOKEN_SPLIT_RE,
     WS_CLASS,
@@ -41,6 +46,7 @@ from .functions.numeric import (
     mean_quantized_sql,
 )
 from .registry import _t, _values_sql, query
+from .registry_ext import _lsh_dedup_oracle, graded_lsh_pairs
 
 # ---------------------------------------------------------------------------
 # Normalization / redaction
@@ -500,6 +506,49 @@ _QG_MIN_STOP_RATIO = 0.05
 _QG_MAX_AVG_TOK_LEN = 5.5
 
 
+def _quality_scores(toks: Column) -> tuple[Column, Column]:
+    """(stop_ratio, avg_tok_len) of the token list ``toks``: the share
+    of _QG_STOPWORDS tokens and ``n_chars`` per token, both quantized
+    before any rule compares them."""
+    n_toks = F.size(toks)
+    stop_arr = F.array(*[F.lit(s) for s in _QG_STOPWORDS])
+    stop_ratio = mean_quantized(
+        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))), n_toks
+    )
+    return stop_ratio, mean_quantized("n_chars", n_toks)
+
+
+def _quality_scores_sql(toks: str) -> tuple[str, str]:
+    """The DuckDB twin of :func:`_quality_scores`."""
+    stops = ", ".join(f"'{s}'" for s in _QG_STOPWORDS)
+    return (
+        mean_quantized_sql(f"len(list_filter({toks}, x -> x IN ({stops})))", f"len({toks})"),
+        mean_quantized_sql("n_chars", f"len({toks})"),
+    )
+
+
+def _quality_keep(n_chars: Column, stop_ratio: Column, avg_tok_len: Column) -> Column:
+    """The gate's verdict: every rule passes."""
+    return (
+        (n_chars >= _QG_MIN_CHARS)
+        & (stop_ratio >= _QG_MIN_STOP_RATIO)
+        & (avg_tok_len <= _QG_MAX_AVG_TOK_LEN)
+    )
+
+
+def _quality_keep_sql(
+    stop_ratio: str = "stop_ratio", avg_tok_len: str = "avg_tok_len"
+) -> str:
+    """The DuckDB twin of :func:`_quality_keep` over ``n_chars``."""
+    return (
+        f"(n_chars >= {_QG_MIN_CHARS} AND {stop_ratio} >= {_QG_MIN_STOP_RATIO}"
+        f" AND {avg_tok_len} <= {_QG_MAX_AVG_TOK_LEN})"
+    )
+
+
+_QG_STOP_SQL, _QG_AVG_SQL = _quality_scores_sql("toks")
+
+
 @query(
     "corpus_quality_gate",
     oracle=rf"""
@@ -507,19 +556,15 @@ _QG_MAX_AVG_TOK_LEN = 5.5
                       {tokens_sql()} AS toks
                FROM documents),
     m AS (SELECT doc_id, n_chars,
-                 {mean_quantized_sql(
-                     "len(list_filter(toks, x -> x IN ('the', 'a')))",
-                     "len(toks)",
-                 )} AS stop_ratio,
-                 {mean_quantized_sql("n_chars", "len(toks)")} AS avg_tok_len
+                 {_QG_STOP_SQL} AS stop_ratio,
+                 {_QG_AVG_SQL} AS avg_tok_len
           FROM t)
     SELECT doc_id, stop_ratio, avg_tok_len,
            CASE WHEN n_chars < {_QG_MIN_CHARS} THEN 'too_short'
                 WHEN stop_ratio < {_QG_MIN_STOP_RATIO} THEN 'low_stopword'
                 WHEN avg_tok_len > {_QG_MAX_AVG_TOK_LEN} THEN 'long_tokens'
                 ELSE 'ok' END AS reason,
-           (n_chars >= {_QG_MIN_CHARS} AND stop_ratio >= {_QG_MIN_STOP_RATIO}
-            AND avg_tok_len <= {_QG_MAX_AVG_TOK_LEN}) AS keep
+           {_quality_keep_sql()} AS keep
     FROM m
     """,
 )
@@ -540,13 +585,7 @@ def corpus_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # heavy per-row expansion below; conditional spread (no-op at scale)
         _t(spark, sf_dir, "documents"), by="doc_id"
     )
-    toks = tokens("text")
-    n_toks = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in _QG_STOPWORDS])
-    stop_ratio = mean_quantized(
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))), n_toks
-    )
-    avg_tok_len = mean_quantized("n_chars", n_toks)
+    stop_ratio, avg_tok_len = _quality_scores(tokens("text"))
     m = d.select(
         "doc_id",
         "n_chars",
@@ -564,10 +603,8 @@ def corpus_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stop_ratio",
         "avg_tok_len",
         reason.alias("reason"),
-        (
-            (F.col("n_chars") >= _QG_MIN_CHARS)
-            & (F.col("stop_ratio") >= _QG_MIN_STOP_RATIO)
-            & (F.col("avg_tok_len") <= _QG_MAX_AVG_TOK_LEN)
+        _quality_keep(
+            F.col("n_chars"), F.col("stop_ratio"), F.col("avg_tok_len")
         ).alias("keep"),
     )
 
@@ -845,29 +882,29 @@ def corpus_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _survivors_oracle() -> str:
-    """Survivor selection on top of connected components over the LSH
-    candidate pairs.  The LSH oracle (registered by registry_ext,
-    imported above so its ORACLES entry exists at module-import time)
-    replicates the banding from the same constants, so even though the
-    pair stage is approximate-recall, BOTH engines derive the identical
-    pair set and the whole pipeline stays value-checked."""
-    from .registry import ORACLES
-
-    pair_sql = ORACLES["dedup_minhash_lsh"]
-    cc_sql = f"""
-    WITH RECURSIVE pairs AS ({pair_sql}),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION ALL SELECT doc_b, doc_a FROM pairs),
-    walk(doc_id, label) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, w.label FROM walk w JOIN edges e ON w.doc_id = e.src
+def _survivor_pick(docs: DataFrame, dup: DataFrame) -> DataFrame:
+    """The survivor row of each duplicate cluster in ``dup`` (doc_id,
+    cluster_id): its member with the longest ``docs`` text, the lowest
+    doc_id on a tie."""
+    w = Window.partitionBy("cluster_id").orderBy(
+        F.desc(F.length("text")), F.col("doc_id")
     )
-    SELECT doc_id, min(label) AS cluster_id FROM walk GROUP BY doc_id
-    """
+    return (
+        docs.select("doc_id", "text").join(dup, "doc_id")
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+    )
+
+
+def _survivors_oracle(docs: str = "documents") -> str:
+    """The DuckDB twin of the survivor pipeline over the documents
+    relation ``docs``: the graded LSH pairs (the same banding and cap as
+    the Spark plan, so both engines derive the identical pair set),
+    their connected components, and one survivor per cluster with the
+    cluster's size."""
     return f"""
-    WITH cc AS ({cc_sql}),
+    WITH RECURSIVE pairs AS ({_lsh_dedup_oracle(LSH_MAX_BUCKET, docs)}),
+    {connected_components_sql("pairs", docs)},
     sized AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members
               FROM cc GROUP BY cluster_id),
     ranked AS (SELECT c.doc_id, c.cluster_id, s.n_members,
@@ -875,7 +912,7 @@ def _survivors_oracle() -> str:
                                          ORDER BY length(d.text) DESC, c.doc_id)
                           AS rn
                FROM cc c
-               JOIN documents d ON c.doc_id = d.doc_id
+               JOIN {docs} d ON c.doc_id = d.doc_id
                JOIN sized s ON c.cluster_id = s.cluster_id)
     SELECT doc_id, cluster_id, n_members FROM ranked WHERE rn = 1
     """
@@ -898,29 +935,12 @@ def corpus_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_id.  Cluster sizes are bounded by real duplication, and a
     pathological mega-cluster is exactly the hot-bucket case the LSH
     cap test pins."""
-    from .extensions.dedup import (
-        LSH_MAX_BUCKET,
-        digest_shingles,
-        duplicate_clusters,
-        minhash_lsh_dedup_pairs,
-    )
-    from .registry_ext import JACCARD_THRESHOLD
-
     docs = _t(spark, sf_dir, "documents")
-    edges = minhash_lsh_dedup_pairs(
-        digest_shingles(docs, sf_dir),
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
-    ).select("doc_a", "doc_b")
+    edges = graded_lsh_pairs(digest_shingles(docs, sf_dir)).select("doc_a", "doc_b")
     dup = duplicate_clusters(edges)  # (doc_id, cluster_id), members only
     sized = dup.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc(F.length("text")), F.col("doc_id")
-    )
     dup_survivors = (
-        docs.select("doc_id", "text").join(dup, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        _survivor_pick(docs, dup)
         .join(sized, "cluster_id")
         .select("doc_id", "cluster_id", "n_members")
     )
@@ -1044,7 +1064,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni AS (SELECT unnest(t) AS tok FROM toks),
     uc AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM uni WHERE tok != '' GROUP BY tok),
     nu AS (SELECT CAST(sum(c) AS BIGINT) AS n_uni FROM uc),
-    bg AS (SELECT unnest([t[i] || ' ' || t[i+1] FOR i IN range(1, len(t))]) AS bigram
+    bg AS (SELECT unnest({word_shingles_sql("t", 2)}) AS bigram
            FROM toks WHERE len(t) >= 2),
     bc AS (SELECT bigram, CAST(count(*) AS BIGINT) AS c_xy FROM bg GROUP BY bigram),
     nb AS (SELECT CAST(sum(c_xy) AS BIGINT) AS n_bi FROM bc),
@@ -1118,15 +1138,10 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                FROM documents),
     gated AS (SELECT doc_id, source, text, toks
               FROM (SELECT *,
-                           {mean_quantized_sql(
-                               "len(list_filter(toks, x -> x IN ('the', 'a')))",
-                               "len(toks)",
-                           )} AS stop_ratio,
-                           {mean_quantized_sql("n_chars", "len(toks)")} AS avg_tok_len
+                           {_QG_STOP_SQL} AS stop_ratio,
+                           {_QG_AVG_SQL} AS avg_tok_len
                     FROM t)
-              WHERE n_chars >= {_QG_MIN_CHARS}
-                AND stop_ratio >= {_QG_MIN_STOP_RATIO}
-                AND avg_tok_len <= {_QG_MAX_AVG_TOK_LEN}),
+              WHERE {_quality_keep_sql()}),
     fp AS (SELECT doc_id, source, toks,
                   md5({normalize_redact_sql()}) AS norm_fp
            FROM gated),
@@ -1155,18 +1170,7 @@ def corpus_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_normalize_redact, dedup_exact, corpus_split_assign,
     corpus_stats_rollup)."""
     d = _t(spark, sf_dir, "documents")
-    toks = tokens("text")
-    n_toks = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in _QG_STOPWORDS])
-    stop_ratio = mean_quantized(
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))), n_toks
-    )
-    avg_tok_len = mean_quantized("n_chars", n_toks)
-    gated = d.where(
-        (F.col("n_chars") >= _QG_MIN_CHARS)
-        & (stop_ratio >= _QG_MIN_STOP_RATIO)
-        & (avg_tok_len <= _QG_MAX_AVG_TOK_LEN)
-    )
+    gated = d.where(_quality_keep(F.col("n_chars"), *_quality_scores(tokens("text"))))
     norm = normalize_redact("text")
     fp = gated.select(
         "doc_id", "source", F.size(tokens("text")).alias("n_tokens"),
@@ -1549,11 +1553,7 @@ _BG_SCALE = 1_000_000_000  # fixed-point 1e9 for bigram log-probs
     oracle=rf"""
     WITH toks AS (SELECT doc_id, {tokens_sql()} AS t
                   FROM documents),
-    bg AS (SELECT doc_id,
-                  [t[x] || ' ' || t[x + 1] for x in generate_series(1, len(t) - 1)]
-                      AS bigrams
-           FROM toks),
-    pair AS (SELECT doc_id, unnest(bigrams) AS bigram FROM bg),
+    pair AS (SELECT doc_id, unnest({word_shingles_sql("t", 2)}) AS bigram FROM toks),
     uni AS (SELECT token, CAST(count(*) AS BIGINT) AS cu
             FROM (SELECT unnest(t) AS token FROM toks) WHERE token != ''
             GROUP BY token),
@@ -1591,14 +1591,8 @@ def corpus_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle hash join on the bigram key, which AQE picks on its own
     (nothing in the plan pins a broadcast)."""
     d = _t(spark, sf_dir, "documents")
-    t = tokens("text")
-    toks = d.select("doc_id", t.alias("t"))
-    bigrams = F.zip_with(
-        F.slice("t", 1, F.greatest(F.size("t") - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(F.size("t") - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    pair = toks.select("doc_id", F.explode(bigrams).alias("bigram"))
+    toks = d.select("doc_id", tokens("text").alias("t"))
+    pair = toks.select("doc_id", F.explode(word_shingles(F.col("t"), 2)).alias("bigram"))
     uni = (
         toks.select(F.explode("t").alias("token"))
         .where(F.col("token") != "")
@@ -1637,11 +1631,8 @@ def corpus_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS (SELECT doc_id, source,
                          {tokens_sql()} AS t
                   FROM documents),
-    sh AS (SELECT DISTINCT source,
-                  md5(t[x] || ' ' || t[x+1] || ' ' || t[x+2] || ' ' ||
-                      t[x+3] || ' ' || t[x+4]) AS dg
-           FROM toks, (SELECT unnest(generate_series(1, 100000)) AS x) g
-           WHERE x <= len(t) - 4)
+    g AS (SELECT source, unnest({word_shingles_sql("t", 5)}) AS gram FROM toks),
+    sh AS (SELECT DISTINCT source, md5(gram) AS dg FROM g)
     SELECT a.source AS source_a, b.source AS source_b,
            CAST(count(*) AS BIGINT) AS n_shared_shingles
     FROM sh a JOIN sh b ON a.dg = b.dg AND a.source < b.source
@@ -1943,11 +1934,8 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                              AS slot,
                          {tokens_sql()} AS t
                   FROM documents),
-    bg AS (SELECT doc_id, slot,
-                  [t[x] || ' ' || t[x + 1] for x in generate_series(1, len(t) - 1)]
-                      AS bigrams
-           FROM toks),
-    pair AS (SELECT doc_id, slot, unnest(bigrams) AS bigram FROM bg),
+    pair AS (SELECT doc_id, slot, unnest({word_shingles_sql("t", 2)}) AS bigram
+             FROM toks),
     train AS (SELECT DISTINCT bigram FROM pair WHERE slot < 80),
     held AS (SELECT p.doc_id, p.bigram,
                     (t.bigram IS NOT NULL) AS covered
@@ -1979,14 +1967,8 @@ def corpus_heldout_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFram
     growth."""
     d = _t(spark, sf_dir, "documents")
     slot = hash59(F.col("doc_id").cast("string")) % 100
-    t = tokens("text")
-    bigrams = F.zip_with(
-        F.slice("t", 1, F.greatest(F.size("t") - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(F.size("t") - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    pair = d.select("doc_id", slot.alias("slot"), t.alias("t")).select(
-        "doc_id", "slot", F.explode(bigrams).alias("bigram")
+    pair = d.select("doc_id", slot.alias("slot"), tokens("text").alias("t")).select(
+        "doc_id", "slot", F.explode(word_shingles(F.col("t"), 2)).alias("bigram")
     )
     train = pair.where(F.col("slot") < 80).select("bigram").distinct()
     held = pair.where(F.col("slot") >= 80).join(
@@ -2010,16 +1992,9 @@ _CONT_DROP_PCT = 15  # drop docs with >= 15% benchmark-shingle overlap
 def _pipeline_e2e_oracle() -> str:
     """Gate → LSH-survivor dedup → decontamination → split → manifest,
     composed from the SAME oracle fragments as the standalone contracts
-    (survivor SQL retargeted at the gated CTE via identifier rewrite;
-    benchmark shingles still read the full corpus view)."""
-    import re as _re
-
-    surv = _re.sub(r"\bdocuments\b", "documents_gated", _survivors_oracle())
-    stop_sql = mean_quantized_sql(
-        f"len(list_filter({tokens_sql()}, x -> x IN ('the', 'a')))",
-        f"len({tokens_sql()})",
-    )
-    avg_tok_sql = mean_quantized_sql("n_chars", f"len({tokens_sql()})")
+    (the survivor SQL reads the gated CTE; benchmark shingles still read
+    the full corpus view)."""
+    stop_sql, avg_tok_sql = _quality_scores_sql(tokens_sql())
     return f"""
     WITH documents_gated AS (
       SELECT doc_id, text, lang, source, n_chars FROM (
@@ -2027,10 +2002,9 @@ def _pipeline_e2e_oracle() -> str:
                {stop_sql} AS __stop_ratio,
                {avg_tok_sql} AS __avg_tok
         FROM documents d) t
-      WHERE n_chars >= {_QG_MIN_CHARS} AND __stop_ratio >= {_QG_MIN_STOP_RATIO}
-        AND __avg_tok <= {_QG_MAX_AVG_TOK_LEN} AND source <> 'src9'
+      WHERE {_quality_keep_sql("__stop_ratio", "__avg_tok")} AND source <> 'src9'
     ),
-    surv AS (SELECT doc_id FROM ({surv}) s),
+    surv AS (SELECT doc_id FROM ({_survivors_oracle("documents_gated")}) s),
     toks AS (SELECT doc_id, source, {tokens_sql()} AS t FROM documents),
     sh AS (SELECT DISTINCT doc_id, source, unnest({word_shingles_sql("t")}) AS shingle
            FROM toks WHERE len(t) >= 3),
@@ -2078,28 +2052,13 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cluster map's bounded probe (or distributed convergence loop
     above the cap).  At 100 TB every stage's story is already audited
     under its standalone key — composition adds no new shuffle."""
-    from .extensions.dedup import (
-        LSH_MAX_BUCKET,
-        digest_shingles,
-        duplicate_clusters,
-        minhash_lsh_dedup_pairs,
-    )
-    from .registry_ext import JACCARD_THRESHOLD
     from .spill import spill_once as _spill_once
     from .spill import spill_root as _spill_root
 
     d = _t(spark, sf_dir, "documents")
     toks = tokens("text")
-    n_toks = F.size(toks)
-    stop_arr = F.array(*[F.lit(s) for s in _QG_STOPWORDS])
-    stop_ratio = mean_quantized(
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x))), n_toks
-    )
-    avg_tok_len = mean_quantized("n_chars", n_toks)
     gated = d.where(
-        (F.col("n_chars") >= _QG_MIN_CHARS)
-        & (stop_ratio >= _QG_MIN_STOP_RATIO)
-        & (avg_tok_len <= _QG_MAX_AVG_TOK_LEN)
+        _quality_keep(F.col("n_chars"), *_quality_scores(toks))
         & (F.col("source") != "src9")
     )
     # the gate+tokenize+shingle subtree has ~6 consumers (signatures,
@@ -2131,26 +2090,14 @@ def corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate_fut = _pool.submit(_spill_once, gate_tbl, spark, gate_path)
         _pool.shutdown(wait=False)
     sh = digest_shingles(gated, sf_dir, tag="lsh_digest_shingles_gated")
-    edges = minhash_lsh_dedup_pairs(
-        sh,
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
-    ).select("doc_a", "doc_b")
+    edges = graded_lsh_pairs(sh).select("doc_a", "doc_b")
     dup = duplicate_clusters(edges)  # edge members only
     if gate_fut is not None:
         gate_tbl = gate_fut.result()
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc(F.length("text")), F.col("doc_id")
-    )
     # dup members are all gated (edges only pair gated docs), so the
     # survivor window joins the RAW doc table — identical rows, no
     # second gate evaluation
-    dup_surv = (
-        d.select("doc_id", "text").join(dup, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("doc_id")
-    )
+    dup_surv = _survivor_pick(d, dup).select("doc_id")
     surv = dup_surv.unionByName(
         gate_tbl.select("doc_id").join(dup.select("doc_id"), "doc_id", "left_anti")
     )
@@ -2280,12 +2227,12 @@ def corpus_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_dedup_cluster_sizes",
     oracle=f"""
-    WITH surv AS ({{SURV}})
+    WITH surv AS ({_survivors_oracle()})
     SELECT n_members,
            CAST(count(*) AS BIGINT) AS n_clusters,
            CAST(n_members * count(*) AS BIGINT) AS n_docs
     FROM surv GROUP BY n_members
-    """.replace("{{SURV}}", "{SURV}").format(SURV=_survivors_oracle()),
+    """,
 )
 def corpus_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster size distribution — the data-card histogram
@@ -2309,9 +2256,7 @@ _ER_SCALE = 1_000_000_000  # 1e-9 fixed point for entropy-rate terms
     oracle=rf"""
     WITH toks AS (SELECT source, {tokens_sql()} AS t
                   FROM documents),
-    bg AS (SELECT source,
-                  unnest([t[x] || ' ' || t[x + 1]
-                          for x in generate_series(1, len(t) - 1)]) AS bigram
+    bg AS (SELECT source, unnest({word_shingles_sql("t", 2)}) AS bigram
            FROM toks),
     cb AS (SELECT source, bigram, CAST(count(*) AS BIGINT) AS c
            FROM bg GROUP BY source, bigram),
@@ -2345,13 +2290,9 @@ def corpus_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-source sum.  One bigram aggregation feeds both count
     tables; the join keys on (source, w₁)."""
     d = _t(spark, sf_dir, "documents")
-    t = tokens("text")
-    bigrams = F.zip_with(
-        F.slice(t, 1, F.greatest(F.size(t) - 1, F.lit(0))),
-        F.slice(t, 2, F.greatest(F.size(t) - 1, F.lit(0))),
-        lambda a, b: F.concat_ws(" ", a, b),
+    bg = d.select("source", tokens("text").alias("t")).select(
+        "source", F.explode(word_shingles(F.col("t"), 2)).alias("bigram")
     )
-    bg = d.select("source", F.explode(bigrams).alias("bigram"))
     cb = bg.groupBy("source", "bigram").agg(
         F.count("*").cast("bigint").alias("c")
     )

@@ -23,6 +23,7 @@ from .extensions.dedup import (
     _MASK40,
     _P,
     _perm_params,
+    connected_components_sql,
     digest_shingles,
     exact_dedup,
     jaccard_pairs,
@@ -301,11 +302,14 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_signatures(digest_shingles(_t(spark, sf_dir, "documents")))
 
 
-def _lsh_dedup_oracle(max_bucket_size: int | None = None) -> str:
-    """Full MinHash→banded-LSH→verify in DuckDB SQL, generated from the
-    same band/row/permutation constants as the Spark plan.  LSH recall
-    <1 vs brute force, but the pipeline itself is deterministic — so the
-    approximate path is still value-hash checkable.
+def _lsh_dedup_oracle(
+    max_bucket_size: int | None = None, docs: str = "documents"
+) -> str:
+    """Full MinHash→banded-LSH→verify in DuckDB SQL over the documents
+    relation ``docs``, generated from the same band/row/permutation
+    constants as the Spark plan.  LSH recall <1 vs brute force, but the
+    pipeline itself is deterministic — so the approximate path is still
+    value-hash checkable.
 
     With ``max_bucket_size`` the candidate CTE reproduces the star-edge
     cap: buckets larger than the cap contribute (bucket-min ↔ member)
@@ -313,7 +317,7 @@ def _lsh_dedup_oracle(max_bucket_size: int | None = None) -> str:
     plan computes in lsh_candidate_pairs."""
     jac = mean_quantized_sql("n_inter", "sa.n_sh + sb.n_sh - n_inter")
     return f"""
-    WITH {_lsh_with_body(max_bucket_size)}
+    WITH {_lsh_with_body(max_bucket_size, docs)}
     SELECT c.doc_a, c.doc_b, {jac} AS jaccard
     FROM cand c
     JOIN inter i ON c.doc_a = i.doc_a AND c.doc_b = i.doc_b
@@ -323,9 +327,10 @@ def _lsh_dedup_oracle(max_bucket_size: int | None = None) -> str:
     """
 
 
-def _lsh_with_body(max_bucket_size: int | None = None) -> str:
-    """Shared oracle CTE body: shingles → signatures → banded buckets →
-    candidate pairs (+ per-doc set sizes and pair intersections)."""
+def _lsh_with_body(max_bucket_size: int | None = None, docs: str = "documents") -> str:
+    """Shared oracle CTE body over ``docs``: shingles → signatures →
+    banded buckets → candidate pairs (+ per-doc set sizes and pair
+    intersections)."""
     from .extensions.dedup import LSH_BANDS, LSH_ROWS
 
     mins = ", ".join(
@@ -357,7 +362,7 @@ def _lsh_with_body(max_bucket_size: int | None = None) -> str:
                UNION ALL
                SELECT __min AS doc_a, doc_id AS doc_b
                FROM sized WHERE __n > {max_bucket_size} AND doc_id <> __min))"""
-    return f"""toks AS (SELECT doc_id, {tokens_sql()} AS t FROM documents),
+    return f"""toks AS (SELECT doc_id, {tokens_sql()} AS t FROM {docs}),
     shingles AS (SELECT DISTINCT doc_id, unnest({word_shingles_sql("t")}) AS shingle
                  FROM toks WHERE len(t) >= 3),
     h AS (SELECT doc_id, {hash59_sql("shingle")} % {_MASK40 + 1} AS h FROM shingles),
@@ -371,6 +376,16 @@ def _lsh_with_body(max_bucket_size: int | None = None) -> str:
               WHERE s1.doc_id < s2.doc_id GROUP BY 1, 2)"""
 
 
+def graded_lsh_pairs(sh: DataFrame) -> DataFrame:
+    """The graded LSH pair spec over a :func:`digest_shingles` table:
+    (doc_a, doc_b, jaccard) at JACCARD_THRESHOLD with the production
+    bucket cap.  Its DuckDB twin is ``_lsh_dedup_oracle(LSH_MAX_BUCKET,
+    docs=...)``."""
+    return minhash_lsh_dedup_pairs(
+        sh, threshold=JACCARD_THRESHOLD, max_bucket_size=LSH_MAX_BUCKET
+    )
+
+
 @query("dedup_minhash_lsh", oracle=_lsh_dedup_oracle(LSH_MAX_BUCKET))
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path (the graded contract): MinHash → banded LSH buckets
@@ -382,11 +397,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding AND the cap from the same constants, so even this
     approximate path is value-checked; its exact brute-force twin is
     dedup_ngram_jaccard, its uncapped form dedup_minhash_lsh_exact."""
-    return minhash_lsh_dedup_pairs(
-        digest_shingles(_t(spark, sf_dir, "documents"), sf_dir),
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
-    )
+    return graded_lsh_pairs(digest_shingles(_t(spark, sf_dir, "documents"), sf_dir))
 
 
 @query("dedup_minhash_lsh_exact", oracle=_lsh_dedup_oracle())
@@ -541,19 +552,11 @@ def dedup_minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> Data
 
 
 def _cc_oracle() -> str:
-    """Connected components over the Jaccard-pair graph via a recursive
-    CTE: enumerate reachable labels, keep the min per node."""
-    pair_sql = ORACLES["dedup_ngram_jaccard"]
+    """Connected components over the Jaccard-pair graph."""
     return f"""
-    WITH RECURSIVE pairs AS ({pair_sql}),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION ALL SELECT doc_b, doc_a FROM pairs),
-    walk(doc_id, label) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, w.label FROM walk w JOIN edges e ON w.doc_id = e.src
-    )
-    SELECT doc_id, min(label) AS cluster_id FROM walk GROUP BY doc_id
+    WITH RECURSIVE pairs AS ({ORACLES["dedup_ngram_jaccard"]}),
+    {connected_components_sql()}
+    SELECT doc_id, cluster_id FROM cc
     """
 
 
@@ -575,7 +578,7 @@ query("dedup_connected_components", oracle=_cc_oracle())(dedup_connected_compone
     "text_ngram_topk",
     oracle=f"""
     WITH t AS (SELECT {tokens_sql()} AS toks FROM documents),
-    bg AS (SELECT unnest([toks[i] || ' ' || toks[i+1] FOR i IN range(1, len(toks))]) AS bigram
+    bg AS (SELECT unnest({word_shingles_sql("toks", 2)}) AS bigram
            FROM t WHERE len(toks) >= 2)
     SELECT bigram, CAST(count(*) AS BIGINT) AS n
     FROM bg GROUP BY bigram ORDER BY n DESC, bigram LIMIT 20

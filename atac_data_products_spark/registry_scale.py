@@ -69,7 +69,7 @@ from .functions.numeric import (
 from pyspark.sql.window import Window
 
 from .extensions.text import tokens_sql, word_shingles_sql
-from .functions.hashes import hash59, hash59_sql
+from .functions.hashes import hash59, hash59_expr, hash59_sql
 from .sources.tables import epoch_day_from_us_sql
 
 # Cross-registry oracle composition (PCA reuses the gram spec, the chain
@@ -1294,13 +1294,13 @@ def dedup_common_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = SUBSTR_GRAM
     toked = d.select("doc_id", tokens("text").alias("t"))
     parts = ", ".join(f"element_at(t, CAST(i + {j} AS INT))" for j in range(n))
+    h = hash59_expr(f"concat_ws(' ', {parts})")
     grams = toked.where(F.size("t") >= n).select(
         "doc_id",
         F.explode(
             F.expr(
                 f"transform(sequence(1, size(t) - {n - 1}), "
-                f"i -> struct(i AS pos, "
-                f"CAST(conv(substring(md5(concat_ws(' ', {parts})), 1, 15), 16, 10) AS BIGINT) AS h))"
+                f"i -> struct(i AS pos, {h} AS h))"
             )
         ).alias("g"),
     ).select("doc_id", "g.pos", "g.h")
@@ -5874,8 +5874,8 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     # span starts (caught by the round-9 ANSI-off conf-invariance
     # sweep); the explicit cast is exact under both ANSI regimes
     start = (
-        "CAST(conv(substring(md5(concat('span', CAST(doc_id AS STRING), '_', "
-        "CAST(k AS STRING))), 1, 15), 16, 10) AS BIGINT) % n + 1"
+        hash59_expr("concat('span', CAST(doc_id AS STRING), '_', CAST(k AS STRING))")
+        + " % n + 1"
     )
     masked = s.withColumn(
         "n_masked",
@@ -5914,20 +5914,12 @@ CHAIN_MARGIN = 0.1  # clusters whose weakest verified edge is within
 
 
 def _chain_audit_oracle() -> str:
-    from .registry import ORACLES
-    from .registry_ext import JACCARD_THRESHOLD
+    from .extensions.dedup import LSH_MAX_BUCKET, connected_components_sql
+    from .registry_ext import JACCARD_THRESHOLD, _lsh_dedup_oracle
 
-    pair_sql = ORACLES["dedup_minhash_lsh"]
     return f"""
-    WITH RECURSIVE pairs AS ({pair_sql}),
-    edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-              UNION ALL SELECT doc_b, doc_a FROM pairs),
-    walk(doc_id, label) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.dst, w.label FROM walk w JOIN edges e ON w.doc_id = e.src
-    ),
-    cc AS (SELECT doc_id, min(label) AS cluster_id FROM walk GROUP BY doc_id),
+    WITH RECURSIVE pairs AS ({_lsh_dedup_oracle(LSH_MAX_BUCKET)}),
+    {connected_components_sql()},
     pc AS (SELECT c.cluster_id, p.jaccard
            FROM pairs p JOIN cc c ON c.doc_id = p.doc_a)
     SELECT cluster_id,
@@ -5958,13 +5950,8 @@ def dedup_cluster_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and a per-cluster rollup — all keyed on cluster_id, nothing
     beyond the existing pipeline's shuffles.
     """
-    from .extensions.dedup import (
-        LSH_MAX_BUCKET,
-        connected_components,
-        digest_shingles,
-        minhash_lsh_dedup_pairs,
-    )
-    from .registry_ext import JACCARD_THRESHOLD
+    from .extensions.dedup import connected_components, digest_shingles
+    from .registry_ext import JACCARD_THRESHOLD, graded_lsh_pairs
     from .spill import ckpt_eager as _ckpt_eager
 
     docs = _t(spark, sf_dir, "documents")
@@ -5972,11 +5959,7 @@ def dedup_cluster_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup: an eager checkpoint materializes the (small, dup-only)
     # pair set once instead of running the banded join + verify per
     # consumer — the pagerank edge-checkpoint adjudication shape
-    pairs = minhash_lsh_dedup_pairs(
-        digest_shingles(docs, sf_dir),
-        threshold=JACCARD_THRESHOLD,
-        max_bucket_size=LSH_MAX_BUCKET,
-    ).transform(_ckpt_eager)
+    pairs = graded_lsh_pairs(digest_shingles(docs, sf_dir)).transform(_ckpt_eager)
     cc = connected_components(docs.select("doc_id"), pairs.select("doc_a", "doc_b"))
     sized = cc.groupBy("cluster_id").agg(F.count("*").alias("n_members"))
     pc = pairs.join(

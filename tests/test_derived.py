@@ -7,8 +7,9 @@ hostile fixture (pre-1970 clocks, the epoch ±1 µs, year 9999, NULL ts
 and NULL value).  It also checks the two rules the builders rest on,
 cents and the day floor, the text rules the corpus, dedup and LSH keys
 share (tokens, word shingles, hash59, normalize-redact and the corpus
-split), each against its SQL twin, and that no package file writes any
-of these rules out by hand.
+split), the corpus-pipeline stages (quality gate, connected components,
+survivor pick), each against its SQL twin, and that no package file
+writes any of these rules out by hand.
 """
 
 from __future__ import annotations
@@ -30,6 +31,12 @@ from atac_data_products_spark.derived import (
     daily_cents,
     daily_cents_sql,
 )
+from atac_data_products_spark.extensions.dedup import (
+    connected_components,
+    connected_components_sql,
+    digest_shingles,
+    duplicate_clusters,
+)
 from atac_data_products_spark.extensions.text import (
     normalize_redact,
     normalize_redact_sql,
@@ -38,9 +45,20 @@ from atac_data_products_spark.extensions.text import (
     word_shingles,
     word_shingles_sql,
 )
-from atac_data_products_spark.functions.hashes import hash59, hash59_sql
+from atac_data_products_spark.functions.hashes import hash59, hash59_expr, hash59_sql
 from atac_data_products_spark.functions.numeric import to_fixed, to_fixed_sql
-from atac_data_products_spark.registry_corpus import _split, _split_sql
+from atac_data_products_spark.registry import ORACLES
+from atac_data_products_spark.registry_corpus import (
+    _quality_keep,
+    _quality_keep_sql,
+    _quality_scores,
+    _quality_scores_sql,
+    _split,
+    _split_sql,
+    _survivor_pick,
+    _survivors_oracle,
+)
+from atac_data_products_spark.registry_ext import dedup_ngram_jaccard, graded_lsh_pairs
 from atac_data_products_spark.registry_graph import CN_BULK
 from atac_data_products_spark.registry_scale import BFS_BULK, SUBSTR_GRAM
 from atac_data_products_spark.sources.tables import (
@@ -161,35 +179,40 @@ def test_to_fixed_matches_its_sql_twin(spark, scale):
 
 
 # documents every table set gets on top of its own: NULL text, the
-# whitespace zoo with \x0B (Java's \s holds it, RE2's does not), texts
-# shorter than a shingle, and a NULL doc id
+# whitespace zoo with \x0B (Java's \s holds it, RE2's does not), empty
+# and whitespace-only text, texts shorter than a shingle, and a NULL doc id
 EXTRA_DOCS = [
     (-1, None),
     (-2, "\t\n\r  \x0b\x0c"),
     (-3, "one two"),
     (-4, "a\x0bb\x0bc d\te"),
     (-5, " Lead 12 and  trail 345 "),
+    (-6, ""),
+    (-7, " \t\n "),
     (None, "a doc without an id"),
 ]
 
 
 @pytest.fixture(scope="module")
 def docs(spark, tables):
-    """(Spark documents, DuckDB CTE `docs`): (doc_id, text) of the table
-    set plus EXTRA_DOCS."""
+    """(Spark documents, DuckDB CTE `docs`): (doc_id, text, n_chars) of
+    the table set plus EXTRA_DOCS, whose n_chars is their length."""
     sf_dir, con = tables
     extra = pa.table(
         {
             "doc_id": pa.array([d for d, _ in EXTRA_DOCS], pa.int64()),
             "text": pa.array([t for _, t in EXTRA_DOCS], pa.string()),
+            "n_chars": pa.array(
+                [None if t is None else len(t) for _, t in EXTRA_DOCS], pa.int64()
+            ),
         }
     )
     con.register("extra_docs", extra)
-    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    df = load_table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     df = df.unionByName(spark.createDataFrame(extra.to_pandas(), df.schema))
     return df, (
-        "docs AS (SELECT doc_id, text FROM documents "
-        "UNION ALL SELECT doc_id, text FROM extra_docs)"
+        "docs AS (SELECT doc_id, text, n_chars FROM documents "
+        "UNION ALL SELECT doc_id, text, n_chars FROM extra_docs)"
     )
 
 
@@ -239,10 +262,96 @@ def test_hash59_matches_its_sql_twin(tables, docs, salt):
     assert dict(got)[-1] is None
 
 
+def test_hash59_expr_matches_hash59(docs):
+    df, _ = docs
+    rows = df.select(F.expr(hash59_expr("text")), hash59("text")).collect()
+    assert all(a == b for a, b in rows)
+    assert (None, None) in {tuple(r) for r in rows}
+
+
 def test_corpus_split_matches_its_sql_twin(tables, docs):
     got, want = _twins(tables[1], docs, _split(), _split_sql())
     assert got == want
     assert {v for _, v in got} == {"train", "val", "test"}
+
+
+def test_quality_gate_matches_its_sql_twin(tables, docs):
+    stop, avg = _quality_scores(tokens("text"))
+    stop_sql, avg_sql = _quality_scores_sql(tokens_sql())
+    keep = _quality_keep(F.col("n_chars"), stop, avg)
+    keep_sql = _quality_keep_sql(stop_sql, avg_sql)
+    for col, sql in [(stop, stop_sql), (avg, avg_sql), (keep, keep_sql)]:
+        got, want = _twins(tables[1], docs, col, sql)
+        assert got == want
+    kept = dict(got)
+    assert kept[-1] is None  # NULL text
+    assert kept[-6] is kept[-7] is False  # empty, whitespace-only
+    if tables[0] == SF_SMALL:
+        assert {True, False} <= set(kept.values())
+
+
+def _cc_rows(con, nodes, edges, pairs_cte, docs_cte):
+    got = connected_components(nodes, edges).select("doc_id", "cluster_id").collect()
+    want = con.execute(
+        f"WITH RECURSIVE {pairs_cte}, {docs_cte}, "
+        f"{connected_components_sql('pairs', 'nodes')} "
+        "SELECT doc_id, cluster_id FROM cc"
+    ).fetchall()
+    return _sorted(got), _sorted(want)
+
+
+def test_connected_components_match_their_sql_twin(spark, tables):
+    sf_dir, con = tables
+    got, want = _cc_rows(
+        con,
+        load_table(spark, sf_dir, "documents").select("doc_id"),
+        dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"),
+        f"pairs AS ({ORACLES['dedup_ngram_jaccard']})",
+        "nodes AS (SELECT doc_id FROM documents)",
+    )
+    assert got == want
+    assert any(d != c for d, c in got), "no cluster with two members"
+
+
+def test_connected_components_of_a_chain(spark):
+    nodes = spark.createDataFrame([(x,) for x in "abcd"], "doc_id string")
+    edges = spark.createDataFrame([("a", "b"), ("b", "c")], "doc_a string, doc_b string")
+    con = duckdb.connect()
+    got, want = _cc_rows(
+        con,
+        nodes,
+        edges,
+        "pairs AS (SELECT * FROM (VALUES ('a', 'b'), ('b', 'c')) v(doc_a, doc_b))",
+        "nodes AS (SELECT * FROM (VALUES ('a'), ('b'), ('c'), ('d')) v(doc_id))",
+    )
+    con.close()
+    assert got == want == [("a", "a"), ("b", "a"), ("c", "a"), ("d", "d")]
+
+
+@pytest.mark.parametrize("gated", [False, True])
+def test_survivor_pick_matches_its_sql_twin(spark, tables, gated):
+    sf_dir, con = tables
+    d = load_table(spark, sf_dir, "documents")
+    view = "documents"
+    if gated:
+        d = d.where(_quality_keep(F.col("n_chars"), *_quality_scores(tokens("text"))))
+        stop_sql, avg_sql = _quality_scores_sql(tokens_sql())
+        view = "documents_gated_twin"
+        con.execute(
+            f"CREATE OR REPLACE TEMP VIEW {view} AS SELECT * FROM documents "
+            f"WHERE {_quality_keep_sql(stop_sql, avg_sql)}"
+        )
+    dup = duplicate_clusters(
+        graded_lsh_pairs(digest_shingles(d)).select("doc_a", "doc_b")
+    )
+    got = _survivor_pick(d, dup).select("doc_id", "cluster_id").collect()
+    want = con.execute(
+        f"SELECT doc_id, cluster_id FROM ({_survivors_oracle(view)}) "
+        "WHERE n_members > 1"
+    ).fetchall()
+    assert _sorted(got) == _sorted(want)
+    if tables[0] == SF_SMALL:
+        assert got, "no duplicate cluster proves nothing"
 
 
 # an argument list with parentheses nested up to three deep
@@ -253,26 +362,33 @@ for _ in range(3):
 # scale and across line breaks, which rounds halves away from zero where
 # to_fixed rounds them up
 ROUND_COPY = rf"round\({_ARGS}\* 10+(, 0)?\)\s*AS BIGINT"
-# the rules, as their hand-written copies read (regexes); the text
-# rules in their SQL spelling, then their Spark one
-HAND_COPIES = (
-    r"\* 100 \+ 0\.5",
-    r"% 86400000000 \+ 86400000000",
-    ROUND_COPY,
-    r"regexp_split_to_array\(trim\(lower\(",
-    r"\bF\.split\(F\.trim\(F\.lower\(",
-    r"array_to_string\(\w+\[i:i\+",
-    r"F\.element_at\(\w+, i \+ j\)",
-    r"'0x' \|\| substr\(md5\(",
-    r"\bF\.conv\(\s*F\.substring\(\s*F\.md5\(",
-    r"regexp_replace\(regexp_replace\(trim\(lower\(",
-    r"\bF\.regexp_replace\(\s*F\.regexp_replace\(\s*F\.trim\(",
-)
-RULE_FILES = {
-    PKG / "extensions" / "text.py",
-    PKG / "functions" / "hashes.py",
-    PKG / "functions" / "numeric.py",
-    PKG / "sources" / "tables.py",
+TEXT = PKG / "extensions" / "text.py"
+HASHES = PKG / "functions" / "hashes.py"
+# the rules, as their hand-written copies read (regexes), each with the
+# file that holds the rule itself and so may spell it (None: no file
+# does); the text rules in their SQL spelling, then their Spark one
+HAND_COPIES = {
+    r"\* 100 \+ 0\.5": PKG / "functions" / "numeric.py",
+    r"% 86400000000 \+ 86400000000": PKG / "sources" / "tables.py",
+    ROUND_COPY: PKG / "functions" / "numeric.py",
+    r"regexp_split_to_array\(trim\(lower\(": TEXT,
+    r"\bF\.split\(F\.trim\(F\.lower\(": TEXT,
+    r"array_to_string\(\w+\[i:i\+": TEXT,
+    r"F\.element_at\(\w+, i \+ j\)": TEXT,
+    r"'0x' \|\| substr\(md5\(": HASHES,
+    r"\bF\.conv\(\s*F\.substring\(\s*F\.md5\(": HASHES,
+    r"conv\(substring\(md5\(": HASHES,
+    r"regexp_replace\(regexp_replace\(trim\(lower\(": TEXT,
+    r"\bF\.regexp_replace\(\s*F\.regexp_replace\(\s*F\.trim\(": TEXT,
+    # the word bigram (and longer n-grams) joined by hand, not by
+    # word_shingles_sql
+    r"\|\| ' ' \|\|": None,
+    # the quality gate's stop list, typed out instead of built from
+    # registry_corpus._QG_STOPWORDS
+    r"x IN \('the', 'a'\)": None,
+    r"walk\(doc_id, label\)": PKG / "extensions" / "dedup.py",
+    # an oracle retargeted at another table by rewriting its text
+    r're\.sub\(r"\\bdocuments': None,
 }
 # the corpus split lives beside its keys (registry_corpus._split and
 # _split_sql), so its one copy per engine is the one match allowed
@@ -312,8 +428,8 @@ def test_no_package_file_writes_a_rule_out_by_hand():
     found = [
         f"{path.relative_to(PKG)}: {m.group(0)}"
         for path, text in texts.items()
-        if path not in RULE_FILES
-        for pat in HAND_COPIES
+        for pat, home in HAND_COPIES.items()
+        if path != home
         for m in re.finditer(pat, text)
         if pat != ROUND_COPY or _key_at(text, m.start()) not in ROUNDING_KEYS
     ]
@@ -327,6 +443,8 @@ def test_no_package_file_writes_a_rule_out_by_hand():
     assert not found, (
         "use functions/numeric.py::to_fixed[_sql], "
         "sources/tables.py::epoch_day_from_us[_sql], the text rules in "
-        "extensions/text.py and functions/hashes.py, and "
-        f"registry_corpus._split[_sql] instead: {found}"
+        "extensions/text.py and functions/hashes.py, "
+        "extensions/dedup.py::connected_components_sql, and "
+        "registry_corpus._split[_sql] and _quality_*[_sql] instead: "
+        f"{found}"
     )
