@@ -7,8 +7,7 @@ snapshot).  The reference is an eager single-node pandas/anndata ETL
 pipeline; this engine rebuilds its semantics as lazy DataFrame plans over
 Parquet, letting Catalyst supply the optimizer the reference lacks, and
 adds the large-scale training-data-pipeline operators (dedup, similarity
-search, text analysis, multimodal plumbing, streaming) the reference never
-had.
+search, text analysis, multimodal plumbing) the reference never had.
 
 Layout:
   session     — SparkSession builder (AQE on, tuned for local[N] testing,
@@ -20,8 +19,7 @@ Layout:
   functions/  — scalar/column expression library (strings, hashes, vectors)
   plans/      — composed pipelines (product build, manifest build)
   extensions/ — dedup, similarity search, text analysis, multimodal
-  streaming/  — Structured Streaming analogues over the events stream
-  sinks/      — TSV / parquet-product / metadata-JSON writers
+  sinks/      — TSV / parquet-product / metadata-JSON / .h5mu writers
   registry    — the (queries, oracle_sql) contract surface for the driver
 """
 

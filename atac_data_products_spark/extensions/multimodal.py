@@ -1,19 +1,16 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images / audio / video ride through the engine as ``binary`` columns
-with a typed metadata struct alongside.  Decode / feature-extraction /
-resize / frame-sampling run as Arrow-batched mapInPandas stages — each
-batch a pandas frame of (id, payload bytes), output a typed feature
-frame.  The media codec libraries are NOT in this container, so the
-codec call is stubbed (`NotImplementedError`) while everything Spark
-owns — schema, batch shape, partitioning, UDF signature — is real and
-tested via the deterministic byte-level feature path.
+with a typed metadata struct alongside.  Decode, feature extraction and
+frame sampling run as Arrow-batched mapInPandas stages — each batch a
+pandas frame of (id, payload bytes), output a typed feature frame.  PNG
+images (extensions/png.py), RIFF/WAVE PCM audio (extensions/wav.py) and
+AVI containers (extensions/avi.py) decode with the standard library; any
+other codec raises ``NotImplementedError`` naming the format, because
+its library is not a dependency.
 
 Scale: payloads never pass through the driver; batches flow
-executor-side via Arrow.  Partitioning by content-size bands
-(repartition_by_size_bands — range partitioning on payload bytes)
-keeps decode tasks balanced (one 4K video next to a thumbnail is a
-straggler otherwise).
+executor-side via Arrow.
 """
 
 from __future__ import annotations
@@ -39,47 +36,6 @@ def with_payload(df: DataFrame, id_col: str, text_col: str, media_type: str = "t
         F.encode(F.col(text_col), "UTF-8").alias("payload"),
         F.lit(media_type).alias("media_type"),
         F.octet_length(F.col(text_col)).cast("bigint").alias("declared_bytes"),
-    )
-
-
-def repartition_by_size_bands(
-    media: DataFrame,
-    num_partitions: int | None = None,
-    over_partition_factor: int = 4,
-) -> DataFrame:
-    """Straggler defense for heterogeneous media decode: range-partition
-    on payload size (media_id as tiebreak), OVER-partitioned so AQE's
-    byte-targeted coalescing can even out per-task WORK.
-
-    Hash partitioning equalizes ROW counts, not work — one 16 MB video
-    landing beside ten thousand 4 KB thumbnails makes that task the
-    stage straggler, and at 100 TB the stage runs at the speed of its
-    unluckiest task.  Two mechanisms compose here: (1)
-    ``repartitionByRange`` samples the size distribution and draws
-    boundaries so every partition holds a contiguous, similar-sized
-    slice — no thumbnail task stuck behind a video, and Arrow batch
-    memory per task becomes predictable; (2) because decode cost is
-    roughly proportional to payload BYTES, handing AQE
-    ``over_partition_factor``× more range slices than target tasks
-    lets its advisory-size coalescing merge adjacent small-byte
-    (thumbnail) slices while leaving heavy-tail slices alone —
-    approximately equal bytes, hence equal work, per final task.
-    Interpose before byte_features/decode_*/demux_* when payload sizes
-    are heavy-tailed."""
-    n = num_partitions
-    if n is None:
-        try:
-            n = (
-                int(media.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-                * over_partition_factor
-            )
-        except (TypeError, ValueError):
-            n = (
-                media.sparkSession.sparkContext.defaultParallelism
-                * over_partition_factor
-            )
-    return media.repartitionByRange(
-        n, F.octet_length("payload").asc(), F.col("media_id").asc()
     )
 
 
@@ -213,46 +169,6 @@ def decode_image_stats(media: DataFrame) -> DataFrame:
     )
 
 
-RESIZED_SCHEMA = "media_id bigint, payload binary, width int, height int"
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize for PNG payloads: decode (extensions/png.py) →
-    nearest-neighbor index selection → re-encode, inside the same
-    Arrow-batched mapInPandas seam.  Deterministic bytes out (filter-0
-    scanlines, fixed zlib level)."""
-    from .png import decode_png, encode_png, is_png, resize_nearest
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:  # NULL payload has no pixels to resize
-                    continue
-                raw = bytes(payload)
-                if not is_png(raw):
-                    raise NotImplementedError(
-                        "resize_images: payload is not PNG; other codecs "
-                        "need imaging libraries not in this container"
-                    )
-                ids.append(mid)
-                payloads.append(
-                    encode_png(resize_nearest(decode_png(raw), width, height))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "payload": payloads,
-                    "width": pd.Series([width] * len(ids), dtype="int32"),
-                    "height": pd.Series([height] * len(ids), dtype="int32"),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        resize, RESIZED_SCHEMA
-    )
-
-
 AUDIO_STATS_SCHEMA = (
     "media_id bigint, channel int, sample_rate int, n_samples bigint, "
     "sum_value bigint, sum_abs bigint, min_value int, max_value int"
@@ -377,20 +293,4 @@ def demux_video_frames(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "payload").mapInPandas(
         demux, VIDEO_FRAME_SCHEMA
-    )
-
-
-def decode_media(media: DataFrame, target: str = "rgb_frames"):
-    """Codec decode: PNG images (decode_image_stats) and RIFF/WAVE PCM
-    audio (decode_audio_stats) decode for real; video containers are
-    stubbed — those codecs are not in this container and installs are
-    prohibited."""
-    if target in ("rgb_frames", "image_stats"):
-        return decode_image_stats(media)
-    if target in ("audio_samples", "audio_stats"):
-        return decode_audio_stats(media)
-    raise NotImplementedError(
-        "video decode requires codec libraries not shipped in this "
-        "container; PNG images decode via decode_image_stats, WAV PCM "
-        "audio via decode_audio_stats"
     )

@@ -138,12 +138,3 @@ def encode_png(img: np.ndarray) -> bytes:
 
     ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
     return PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
-
-
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize via pure index selection (no imaging
-    library): deterministic, exact, and vectorized."""
-    h, w = img.shape[:2]
-    ys = np.minimum((np.arange(height) * h) // height, h - 1)
-    xs = np.minimum((np.arange(width) * w) // width, w - 1)
-    return img[ys][:, xs]

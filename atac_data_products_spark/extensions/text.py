@@ -80,11 +80,11 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
 
 def word_shingles_sql(toks: str, n: int = 3) -> str:
     """The DuckDB twin of :func:`word_shingles` over the token list
-    `toks` (``[i:i+n-1]`` is DuckDB's inclusive slice: n tokens)."""
-    return (
-        f"[array_to_string({toks}[i:i+{n - 1}], ' ') "
-        f"FOR i IN range(1, len({toks}) - {n - 2})]"
-    )
+    `toks`.  Each shingle joins its n tokens with ``||``, which DuckDB
+    runs several times faster than ``array_to_string`` over a list
+    slice: the slice builds one list per shingle."""
+    words = " || ' ' || ".join(f"{toks}[i + {j}]" for j in range(n))
+    return f"[{words} FOR i IN range(1, len({toks}) - {n - 2})]"
 
 
 def ensure_min_partitions(

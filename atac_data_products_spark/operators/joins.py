@@ -3,8 +3,8 @@
 All reference joins are equi-joins or set intersections on a key
 (uuid / cell_id).  Spark-first mappings:
 
-- J1 `intersect_obs`  → left-semi joins (mu.pp.intersect_obs,
-  bin/concatenate.py:99-102).
+- J1 `intersect_keys` → left-semi joins, one per modality
+  (mu.pp.intersect_obs, bin/concatenate.py:99-102).
 - J2 `join_donor_metadata` → broadcast hash inner join (pandas merge +
   positional re-index at bin/concatenate.py:105-111; the positional
   idiom is deliberately NOT reproduced — keyed joins are order-free).
@@ -19,7 +19,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def intersect_keys(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
@@ -31,12 +30,6 @@ def intersect_keys(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -
     """
     keys = [on] if isinstance(on, str) else list(on)
     return left.join(right.select(*keys).distinct(), keys, "left_semi")
-
-
-def intersect_obs(a: DataFrame, b: DataFrame, on: str = "cell_id") -> tuple[DataFrame, DataFrame]:
-    """Bidirectional modality alignment: both frames restricted to the
-    common key set (mu.pp.intersect_obs, bin/concatenate.py:101)."""
-    return intersect_keys(a, b, on), intersect_keys(b, a, on)
 
 
 def broadcast_dim_join(

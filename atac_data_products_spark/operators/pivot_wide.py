@@ -44,16 +44,3 @@ def matrix_to_wide(
         )
     return x.groupBy(row_key).pivot(col_key, list(col_values)).agg(F.sum(value_col))
 
-
-def matrix_to_map(x: DataFrame, row_key: str, col_key: str, value_col: str) -> DataFrame:
-    """Unbounded-width alternative: one map<feature,value> column per
-    cell — arbitrary feature count without plan-width blowup.  Duplicate
-    (row, col) pairs are summed first (same rule as matrix_to_wide;
-    map_from_entries would otherwise throw under the default
-    mapKeyDedupPolicy=EXCEPTION)."""
-    summed = x.groupBy(row_key, col_key).agg(F.sum(value_col).alias("__v"))
-    return summed.groupBy(row_key).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col(col_key), F.col("__v")))
-        ).alias("features")
-    )

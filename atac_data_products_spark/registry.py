@@ -7,7 +7,7 @@ compare sorts columns by name before hashing.
 
 Each docstring cites the reference behavior being modeled (file:line into
 /root/reference).  Extensions (dedup / similarity / text / multimodal /
-streaming) live in ``registry_ext.py``.
+windowed events) live in ``registry_ext.py``.
 """
 
 from __future__ import annotations

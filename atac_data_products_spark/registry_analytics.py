@@ -1370,8 +1370,8 @@ def table_diff_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots independently.
 
     Scale: a co-partitioned key join plus a map-side-combinable count —
-    the same shape at 100 TB, and bucketed layouts drop the shuffle
-    entirely (tests/test_bucketing.py)."""
+    the same shape at 100 TB, and tables bucketed on the key drop the
+    shuffle entirely."""
     base = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
@@ -3374,8 +3374,7 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id), how many events arrive more than 10 minutes behind the
     running event-time high-water mark — i.e. the rows a streaming job
     with ``withWatermark("ts", "10 minutes")`` would DROP.  Run this
-    batch audit before picking a watermark delay; the streaming twins
-    ([[window_tumbling_agg]] etc.) then own the online path.
+    batch audit before picking a watermark delay.
 
     Per-user windows shuffle once on user_id; the running max is a
     bounded-state frame (one µs BIGINT per row).  Watermarks in Spark

@@ -1036,7 +1036,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hashing trick: tokens -> fixed-width feature buckets via the
     repo's portable md5-prefix hash, counts per (doc, bucket) — a
     vocabulary-free featurizer whose output width is a constant, which
-    is what makes it the streaming/OOV-safe choice at corpus scale.
+    is what makes it the streaming- and OOV-safe choice at corpus scale.
     Long-form output (doc_id, bucket, n): sparse by construction; one
     combinable aggregation shuffle and no vocabulary state anywhere."""
     d = _t(spark, sf_dir, "documents")

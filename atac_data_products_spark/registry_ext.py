@@ -1,4 +1,4 @@
-"""Extension registry: dedup / similarity / text / multimodal / streaming.
+"""Extension registry: dedup / similarity / text / multimodal / windowed events.
 
 Registered into the same QUERIES/ORACLES dicts as the core registry
 (imported for side effects by ``__spark_entry__``).  Where an operator
@@ -992,7 +992,7 @@ def multimodal_avi_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming analogues (batch-checkable; live readStream in streaming/)
+# Event-time windows and dedup, in the batch form a stream would run
 # ---------------------------------------------------------------------------
 
 
@@ -1006,9 +1006,8 @@ def multimodal_avi_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-minute tumbling window aggregation — identical semantics to the
-    Structured Streaming version in streaming/events.py (same window call,
-    plus watermark there)."""
+    """5-minute tumbling window aggregation — the window call a
+    Structured Streaming job would run, without its watermark."""
     ev = events_with_ts(spark, sf_dir)
     return (
         ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -1093,8 +1092,8 @@ def window_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT user_id, event_type FROM events",
 )
 def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact key dedup — batch twin of dropDuplicatesWithinWatermark in
-    the streaming module."""
+    """Exact key dedup — the batch form of a stream's
+    dropDuplicatesWithinWatermark."""
     return _t(spark, sf_dir, "events").select("user_id", "event_type").dropDuplicates()
 
 

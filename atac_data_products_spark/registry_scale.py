@@ -1168,11 +1168,9 @@ SSJ_WINDOW_US = 600_000_000  # 10 minutes
 )
 def stream_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-purchase click context within the trailing 10 minutes — the
-    BATCH TWIN of a stream-stream interval self-join (the Structured
-    Streaming form, with watermarks on both sides and the identical
-    time-bound predicate, runs in streaming/events.py::
-    interval_join_purchases_clicks; tests/test_streaming.py asserts the
-    streamed pair set equals this plan's pairs under AvailableNow).
+    batch form of a stream-stream interval self-join (a Structured
+    Streaming job would put watermarks on both sides and keep the same
+    time-bound predicate).
 
     Scale shape: the interval theta-join becomes an EQUI-join by time
     banding — window = one 10-min band, so each purchase probes exactly
@@ -2784,7 +2782,6 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_candidate_pairs,
         minhash_signatures,
     )
-    from .spill import ckpt_eager as _ckpt_eager
 
     sh = digest_shingles(_t(spark, sf_dir, "documents"), sf_dir)
     sig = minhash_signatures(sh)
@@ -5952,7 +5949,6 @@ def dedup_cluster_chain_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .extensions.dedup import connected_components, digest_shingles
     from .registry_ext import JACCARD_THRESHOLD, graded_lsh_pairs
-    from .spill import ckpt_eager as _ckpt_eager
 
     docs = _t(spark, sf_dir, "documents")
     # `pairs` feeds BOTH the cluster map and the per-cluster edge
@@ -6206,7 +6202,7 @@ STATE_BAND_US = 600_000_000  # 10-minute state horizon
 )
 def stream_state_size_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-state capacity audit: per 10-minute band (== the
-    watermark horizon the repo's stateful queries declare), the distinct
+    10-minute watermark horizon a stateful stream would declare), the distinct
     keys and buffered rows a stateful operator would hold — peak and
     average.  This is the number that sizes executor memory (or forces
     the RocksDB store) BEFORE a stream launches: watermark state ≈

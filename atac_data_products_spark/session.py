@@ -45,6 +45,11 @@ Design notes (100 TB target, tested on local[N]):
   used (a conf dir with real files, a caller's own
   ``defaultJavaOptions``), no flag is added and the JVM starts as it
   would without it, so there is no opt-out knob.
+- The driver heap defaults to half the host's memory, at most 24g
+  (``SPARK_GRAFT_DRIVER_MEM`` overrides it).  A fixed 24g let one
+  oracle gate's driver JVM grow past half of a 16 GB host, so two
+  sessions, or one beside the test suite, could run the host out of
+  memory.
 """
 
 from __future__ import annotations
@@ -59,6 +64,22 @@ from . import jvm_archive
 # About 11x one lsh_corpus pass (174 classes): room for the registry's
 # other keys in one session without evicting the pass (module docstring)
 CODEGEN_CACHE_ENTRIES = 2000
+
+
+# the driver heap's ceiling, whatever the host holds
+MAX_DRIVER_MEM_GIB = 24
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's ``MemTotal`` in whole GiB (at least 1),
+    capped at ``MAX_DRIVER_MEM_GIB``; the cap itself where ``meminfo``
+    cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return f"{MAX_DRIVER_MEM_GIB}g"
+    return f"{min(MAX_DRIVER_MEM_GIB, max(1, kib // (2 * 1024 * 1024)))}g"
 
 
 def default_parallelism() -> int:
@@ -119,7 +140,10 @@ def get_spark(
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,30 +13,8 @@ sentinel (bin/upload.py:37-39).  S3 deployment is the same code path —
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    path: str | None = None,
-) -> None:
-    """Write a table bucketed (and sorted) by its join key.
-
-    Bucketing co-locates equal keys at rest: two tables bucketed the
-    same way join with NO exchange (verified in tests) — at 100 TB this
-    is the difference between a full-corpus shuffle per join and none.
-    Spark bucketing requires the catalog (saveAsTable); pass ``path``
-    for an external location.
-    """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table_name)
 
 
 def write_manifest_tsv(df: DataFrame, path: str) -> None:
@@ -97,8 +75,7 @@ def write_product(
 
 def _csr_from_coo(pdf):
     """Vectorized CSR assembly from a long COO pandas frame with columns
-    (cell_id, feature_id, value) — shared by the per-dataset h5ad sink
-    and the h5mu container sink (round-5 review: was duplicated).
+    (cell_id, feature_id, value), for the h5mu container sink.
 
     Duplicate (cell_id, feature_id) entries are SUMMED first — the
     scipy/anndata duplicate-coalescing convention — so a union of
@@ -130,50 +107,6 @@ def _csr_from_coo(pdf):
         feat_codes.astype("int32"),
         indptr,
     )
-
-
-def export_h5ad_per_dataset(x: DataFrame, out_dir: str) -> DataFrame:
-    """Distributed AnnData export: one ``<dataset>.h5ad`` file per
-    dataset from a long/COO matrix table (dataset, cell_id, feature_id,
-    value) — the reference's own per-dataset file unit
-    (bin/concatenate.py:49-53 reads exactly these), written with the
-    dependency-free HDF5 writer (sources/hdf5_write.py, anndata CSR
-    layout readable by ``anndata.read_h5ad`` and by sources/hdf5.py).
-
-    Scale shape: ``groupBy(dataset).applyInPandas`` — one shuffle on the
-    partition key that already partitions the product matrix at rest,
-    then one task builds one file; no driver materialization.  Row and
-    feature order are sorted, so bytes are deterministic.  ``out_dir``
-    must be a task-reachable filesystem path (shared FS in cluster
-    mode); for object stores keep the parquet product layout and export
-    at the edge.  Returns one receipt row per file (lazy until acted
-    on).
-    """
-    import pandas as _pd
-
-    schema = (
-        "dataset string, path string, n_cells bigint, n_features bigint, "
-        "n_bytes bigint"
-    )
-
-    def _export(key, pdf):
-        from ..sources.hdf5_write import build_h5ad_csr
-
-        dataset = key[0]
-        barcodes, features, data, indices, indptr = _csr_from_coo(pdf)
-        content = build_h5ad_csr(barcodes, features, data, indices, indptr)
-        path = os.path.join(out_dir, f"{dataset}.h5ad")
-        tmp = f"{path}.tmp-{os.getpid()}"
-        os.makedirs(out_dir, exist_ok=True)
-        with open(tmp, "wb") as f:
-            f.write(content)
-        os.replace(tmp, path)
-        return _pd.DataFrame(
-            [[dataset, path, len(barcodes), len(features), len(content)]],
-            columns=["dataset", "path", "n_cells", "n_features", "n_bytes"],
-        )
-
-    return x.groupBy("dataset").applyInPandas(_export, schema)
 
 
 def _join_uri(base: str, *parts: str) -> str:

@@ -152,6 +152,18 @@ def test_sweep_conf_parses_pairs_and_rejects_bare_segments(monkeypatch):
         sweep_conf()
 
 
+def test_default_driver_memory_is_half_the_host_capped(tmp_path):
+    """The driver heap defaults to half of MemTotal in whole GiB, at
+    least 1g and at most 24g, and to 24g where meminfo is unreadable."""
+    from atac_data_products_spark.session import default_driver_memory
+
+    meminfo = tmp_path / "meminfo"
+    for kib, want in [(16456384, "7g"), (1 << 20, "1g"), (256 << 20, "24g")]:
+        meminfo.write_text(f"MemTotal:       {kib} kB\nMemFree:  1 kB\n")
+        assert default_driver_memory(str(meminfo)) == want
+    assert default_driver_memory(str(tmp_path / "missing")) == "24g"
+
+
 def test_sweep_reports_each_key_and_fails_on_drift_or_error(capsys):
     """Both settings run through normalize, so row order and column
     order do not count as drift; a changed value does, and an exception

@@ -40,7 +40,10 @@ def test_later_passes_over_built_plans_compile_nothing(spark):
     for df in frames.values():
         df.select("*").toPandas()
     for n in range(2):
-        c0 = compiled_classes(spark)
-        for df in frames.values():
+        # per key, so that a failure names the plan that recompiled
+        compiled = {}
+        for k, df in frames.items():
+            c0 = compiled_classes(spark)
             df.select("*").toPandas()
-        assert compiled_classes(spark) - c0 == 0, f"pass {n + 2} recompiled"
+            compiled[k] = compiled_classes(spark) - c0
+        assert compiled == dict.fromkeys(KEYS, 0), f"pass {n + 2} recompiled"

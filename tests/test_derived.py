@@ -382,7 +382,7 @@ HAND_COPIES = {
     r"\bF\.regexp_replace\(\s*F\.regexp_replace\(\s*F\.trim\(": TEXT,
     # the word bigram (and longer n-grams) joined by hand, not by
     # word_shingles_sql
-    r"\|\| ' ' \|\|": None,
+    r"\|\| ' ' \|\|": TEXT,
     # the quality gate's stop list, typed out instead of built from
     # registry_corpus._QG_STOPWORDS
     r"x IN \('the', 'a'\)": None,

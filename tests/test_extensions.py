@@ -2,12 +2,11 @@
 
 Beyond the per-key oracle equivalence (test_registry), these check the
 semantic properties the oracles can't express: LSH recall against the
-exact baseline, fingerprint locality, stub behavior of the codec seam.
+exact baseline, fingerprint locality.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from atac_data_products_spark.extensions.dedup import (
@@ -17,11 +16,7 @@ from atac_data_products_spark.extensions.dedup import (
     minhash_lsh_dedup_pairs,
     simhash,
 )
-from atac_data_products_spark.extensions.multimodal import (
-    byte_features,
-    decode_media,
-    with_payload,
-)
+from atac_data_products_spark.extensions.multimodal import byte_features, with_payload
 from atac_data_products_spark.extensions.similarity import cosine_topk, lsh_topk
 from atac_data_products_spark.extensions.text import shingle_table, word_shingles, tokens
 
@@ -123,52 +118,6 @@ def test_multimodal_payload_roundtrip(spark):
     import hashlib
 
     assert feats[1].content_md5 == hashlib.md5(b"hello").hexdigest()
-
-
-def test_multimodal_video_decode_is_stubbed(spark):
-    """PNG images and WAV PCM audio decode for real now; video CODEC
-    targets stay an honest NotImplementedError (codecs absent from the
-    container — container DEMUX is real via demux_video_frames)."""
-    with pytest.raises(NotImplementedError):
-        decode_media(None, target="video_pixels")
-
-
-def test_repartition_by_size_bands(spark):
-    """Range partitioning on payload size: every partition must hold a
-    contiguous size band (no partition mixes thumbnails with the heavy
-    tail), and the decode seam must compose unchanged on top."""
-    from pyspark.sql import functions as F
-
-    from atac_data_products_spark.extensions.multimodal import (
-        repartition_by_size_bands,
-    )
-
-    # heavy-tailed sizes: many small, few huge
-    rows = [(i, bytearray(b"x" * (10 + i % 7))) for i in range(180)]
-    rows += [(1000 + i, bytearray(b"y" * 50_000)) for i in range(4)]
-    media = spark.createDataFrame(
-        rows, "media_id bigint, payload binary"
-    ).repartition(7)  # scramble first
-    banded = repartition_by_size_bands(media, num_partitions=4)
-    got = (
-        banded.select(
-            F.spark_partition_id().alias("pid"),
-            F.octet_length("payload").alias("sz"),
-        )
-        .groupBy("pid")
-        .agg(F.min("sz").alias("lo"), F.max("sz").alias("hi"))
-        .orderBy("lo")
-        .collect()
-    )
-    # contiguous, non-overlapping bands (ties may share a boundary)
-    for a, b in zip(got, got[1:]):
-        assert a["hi"] <= b["lo"]
-    # the heavy tail rides in the top band, together (contiguity)
-    assert got[-1]["hi"] == 50_000
-    tail = [r for r in got if r["hi"] == 50_000]
-    assert len(tail) == 1
-    # decode composes on the banded frame
-    assert byte_features(banded).count() == 184
 
 
 def test_kmeans_lloyd_partitioning_invariance(spark):

@@ -16,11 +16,9 @@ import numpy as np
 import pytest
 
 from atac_data_products_spark.sources.hdf5 import H5Reader, read_h5ad_matrix
-from atac_data_products_spark.sources.hdf5_write import (
-    Writer,
-    build_h5ad_csr,
-    build_h5ad_dense,
-)
+from atac_data_products_spark.sources.hdf5_write import Writer, build_h5ad_csr
+
+from tests.hdf5_fixtures import WriterV2, build_h5ad_dense
 
 BARCODES = ["BAM_data#AAAC", "GGGT", "TTTT"]
 FEATURES = ["chr1:0-500", "chr1:500-1000", "chr2:0-500"]
@@ -150,8 +148,6 @@ def test_chunked_2d_with_partial_edge_chunks():
 def test_v2_superblock_ohdr_compact_links():
     """libver='latest'-style files: superblock v2, OHDR object headers,
     inline link messages — same reader, different writer subclass."""
-    from atac_data_products_spark.sources.hdf5_write import WriterV2
-
     w = WriterV2()
     ints = w.write_dataset(np.arange(10, dtype="int32"))
     mat = w.write_dataset(
@@ -174,8 +170,6 @@ def test_v2_superblock_ohdr_compact_links():
 
 def test_v2_h5ad_roundtrip():
     """A v2-style .h5ad decodes through the same AnnData layer."""
-    from atac_data_products_spark.sources.hdf5_write import WriterV2
-
     w = WriterV2()
     d = w.write_dataset(np.asarray(DATA, dtype="<f8"))
     i = w.write_dataset(np.asarray(INDICES, dtype="<i4"))
@@ -287,45 +281,6 @@ def test_codec_property_roundtrip():
         np.testing.assert_array_equal(arr, x)
 
 
-def test_export_h5ad_per_dataset_roundtrip(spark, tmp_path):
-    """Distributed h5ad export (reference's native per-dataset file
-    unit, bin/concatenate.py:49-53) then re-ingest: COO -> .h5ad files
-    -> COO must be the identity."""
-    from atac_data_products_spark.sinks.writers import export_h5ad_per_dataset
-    from atac_data_products_spark.sources.ingest import decode_h5ad_bytes
-
-    rows = [
-        ("ds1", "ds1-AAAC", "chr1:0-500", 2.0),
-        ("ds1", "ds1-AAAC", "chr1:500-1000", 1.0),
-        ("ds1", "ds1-GGGT", "chr1:0-500", 3.0),
-        ("ds2", "ds2-CCCC", "chr2:0-500", 9.5),
-    ]
-    x = spark.createDataFrame(
-        rows, "dataset string, cell_id string, feature_id string, value double"
-    )
-    out = tmp_path / "export"
-    receipts = {
-        r.dataset: r
-        for r in export_h5ad_per_dataset(x, str(out)).collect()
-    }
-    assert receipts["ds1"].n_cells == 2 and receipts["ds1"].n_features == 2
-    assert receipts["ds2"].n_cells == 1
-
-    import pandas as pd
-
-    back = []
-    for ds, r in receipts.items():
-        content = open(r.path, "rb").read()
-        back.append(pd.concat(list(decode_h5ad_bytes(content, ds))))
-    got = pd.concat(back).sort_values(
-        ["dataset", "barcode", "feature_id"], ignore_index=True
-    )
-    expect = pd.DataFrame(
-        rows, columns=["dataset", "barcode", "feature_id", "value"]
-    ).sort_values(["dataset", "barcode", "feature_id"], ignore_index=True)
-    pd.testing.assert_frame_equal(got, expect)
-
-
 def test_ingest_pipeline_with_h5ad_files(spark, tmp_path):
     """End-to-end: binaryFile scan -> mapInPandas decode of REAL h5ad
     bytes -> COO DataFrame, the exact distributed seam of SURVEY §2.1."""
@@ -362,8 +317,6 @@ def _v2_track_order_writer():
     creation-order field after EVERY message header."""
     import struct as _struct
 
-    from atac_data_products_spark.sources.hdf5_write import WriterV2
-
     class _W(WriterV2):
         def _object_header(self, messages):
             block = b""
@@ -399,8 +352,6 @@ def test_v2_message_do_not_share_flag_skips_nothing():
     bytes; pre-fix the reader skipped 2 valid body bytes."""
     import struct as _struct
 
-    from atac_data_products_spark.sources.hdf5_write import WriterV2
-
     class _W(WriterV2):
         def _object_header(self, messages):
             block = b""
@@ -426,8 +377,6 @@ def test_dense_attributes_rejected_not_silently_empty():
     means attrs live in dense storage the codec does not parse — must
     raise, never return {} (which downstream would mis-default)."""
     import struct as _struct
-
-    from atac_data_products_spark.sources.hdf5_write import WriterV2
 
     w = WriterV2()
     ds = w.write_dataset(np.arange(3, dtype="int64"))
@@ -463,8 +412,6 @@ def test_dense_attributes_rejected_not_silently_empty():
 
 
 def _csr_group_file(attrs: dict) -> bytes:
-    from atac_data_products_spark.sources.hdf5_write import WriterV2
-
     w = WriterV2()
     x = w.write_group(
         {

@@ -109,7 +109,7 @@ def read_h5ad(content):
 
 
 def test_userblock_rejects_oversized_info_and_v2():
-    from atac_data_products_spark.sources.hdf5_write import WriterV2
+    from tests.hdf5_fixtures import WriterV2
 
     with pytest.raises(ValueError, match="block size"):
         wrap_userblock(b"\x00" * 9 + b"x", "y" * 600)
@@ -438,7 +438,7 @@ def test_modality_dense_x_decodes_like_h5ad():
     matrix in an .h5ad."""
     import pandas as pd
 
-    from atac_data_products_spark.sources.hdf5_write import build_h5ad_dense
+    from tests.hdf5_fixtures import build_h5ad_dense
     from atac_data_products_spark.sources.ingest import (
         decode_h5ad_bytes,
         decode_h5mu_bytes,

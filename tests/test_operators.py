@@ -18,11 +18,7 @@ from atac_data_products_spark.operators.aggregates import (
     collect_sorted_csv,
     first_match_pivot,
 )
-from atac_data_products_spark.operators.joins import (
-    broadcast_dim_join,
-    intersect_obs,
-    zip_columns,
-)
+from atac_data_products_spark.operators.joins import broadcast_dim_join, zip_columns
 from atac_data_products_spark.operators.unions import union_outer
 from atac_data_products_spark.operators.windows import first_per_group
 from atac_data_products_spark.sources.rest import apply_search
@@ -55,15 +51,6 @@ def test_concat_cell_id(spark):
     df = spark.createDataFrame([("ds1", "AAAC")], "dataset string, barcode string")
     row = df.select(concat_cell_id("dataset", "barcode").alias("c")).first()
     assert row.c == "ds1-AAAC"
-
-
-def test_intersect_obs_drops_unshared_cells(spark):
-    # FIXTURES edge case 2: cell in one modality only → dropped both ways
-    cbb = spark.createDataFrame([("c1",), ("c2",), ("c3",)], "cell_id string")
-    cbg = spark.createDataFrame([("c2",), ("c3",), ("c4",)], "cell_id string")
-    a, b = intersect_obs(cbb, cbg)
-    assert {r.cell_id for r in a.collect()} == {"c2", "c3"}
-    assert {r.cell_id for r in b.collect()} == {"c2", "c3"}
 
 
 def test_broadcast_join_drops_unmanifested_dataset(spark):
@@ -197,10 +184,7 @@ def test_es_dsl_compiles_to_filters(spark):
 def test_pivot_width_guardrail(spark):
     import pytest
 
-    from atac_data_products_spark.operators.pivot_wide import (
-        matrix_to_map,
-        matrix_to_wide,
-    )
+    from atac_data_products_spark.operators.pivot_wide import matrix_to_wide
 
     x = spark.createDataFrame(
         [("c1", "f1", 1.0), ("c1", "f2", 2.0), ("c2", "f1", 3.0)],
@@ -212,8 +196,6 @@ def test_pivot_width_guardrail(spark):
     assert rows[1].f1 == 3.0 and rows[1].f2 is None  # outer fill rule: null
     with pytest.raises(ValueError, match="guardrail"):
         matrix_to_wide(x, "cell_id", "feature_id", "value", [f"f{i}" for i in range(5000)])
-    m = {r.cell_id: r.features for r in matrix_to_map(x, "cell_id", "feature_id", "value").collect()}
-    assert m["c1"] == {"f1": 1.0, "f2": 2.0}
 
 
 def test_manifest_tsv_roundtrip(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Pure-Python PNG codec tests (extensions/png.py) and the real
-multimodal decode/resize seams built on it.
+multimodal decode seam built on it.
 
 The encoder emits filter-0 scanlines, so the decoder's filter
 implementations (Sub/Up/Average/Paeth) are exercised with hand-built
@@ -18,7 +18,6 @@ from atac_data_products_spark.extensions.png import (
     decode_png,
     encode_png,
     is_png,
-    resize_nearest,
 )
 
 
@@ -133,22 +132,10 @@ def test_rejections_are_named():
         decode_png(bytes(bad2))
 
 
-def test_resize_nearest_exact():
-    img = np.arange(16, dtype="u1").reshape(4, 4, 1)
-    up = resize_nearest(img, 8, 8)
-    assert up.shape == (8, 8, 1)
-    assert up[0, 0, 0] == img[0, 0, 0] and up[7, 7, 0] == img[3, 3, 0]
-    down = resize_nearest(img, 2, 2)
-    np.testing.assert_array_equal(down[:, :, 0], [[0, 2], [8, 10]])
-
-
 def test_spark_decode_image_stats_and_resize(spark):
-    """The real multimodal seam: PNG payloads through mapInPandas —
-    per-channel stats out, and resize → re-decode at the new shape."""
-    from atac_data_products_spark.extensions.multimodal import (
-        decode_image_stats,
-        resize_images,
-    )
+    """The real multimodal seam: PNG payloads through mapInPandas,
+    per-channel stats out."""
+    from atac_data_products_spark.extensions.multimodal import decode_image_stats
 
     imgs = {i: _img(6, 6, 3, seed=i) for i in (1, 2)}
     media = spark.createDataFrame(
@@ -166,14 +153,6 @@ def test_spark_decode_image_stats_and_resize(spark):
             assert (row.width, row.height) == (6, 6)
             assert row.mean_value == round(float(img[:, :, ch].mean()), 6)
 
-    resized = resize_images(media, 3, 3).collect()
-    for r in resized:
-        out = decode_png(bytes(r.payload))
-        assert out.shape == (3, 3, 3)
-        np.testing.assert_array_equal(
-            out, resize_nearest(imgs[r.media_id], 3, 3)
-        )
-
 
 def test_spark_image_stats_null_payload_skipped(spark):
     # NULL payload has no pixels (same contract as frame_sample /
@@ -188,18 +167,6 @@ def test_spark_image_stats_null_payload_skipped(spark):
     )
     rows = decode_image_stats(media).collect()
     assert sorted({r.media_id for r in rows}) == [1]
-
-
-def test_spark_resize_null_payload_skipped(spark):
-    from atac_data_products_spark.extensions.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_png(_img(4, 4, 1)))), (2, None)],
-        "media_id bigint, payload binary",
-    )
-    rows = resize_images(media, 2, 2).collect()
-    assert [r.media_id for r in rows] == [1]
-    assert decode_png(bytes(rows[0].payload)).shape == (2, 2, 1)
 
 
 def test_spark_image_stats_halfway_mean_rounds_half_up(spark):

@@ -194,17 +194,6 @@ def test_spark_decode_audio_non_wav_raises(spark):
         decode_audio_stats(media).collect()
 
 
-def test_decode_media_routing(spark):
-    from atac_data_products_spark.extensions.multimodal import decode_media
-
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_wav(_rand(8, 1), 8000)))],
-        "media_id bigint, payload binary",
-    )
-    assert decode_media(media, "audio_stats").count() == 1
-    with pytest.raises(NotImplementedError, match="video"):
-        decode_media(media, "video_frames")
-
 def test_spark_decode_audio_null_payload_skipped(spark):
     # NULL payload has no samples (same contract as frame_sample); it
     # must not crash the executor with TypeError(bytes(None))

@@ -79,6 +79,36 @@ HOSTILE = [
     "ñ combining tilde vs ñ precomposed",
 ]
 
+# Hostile documents that clear the corpus quality gate (>= 100 chars,
+# stop-word ratio >= 0.05, mean token length <= 5.5), so the keys that
+# gate first (corpus_training_manifest, corpus_pipeline_e2e) grade rows,
+# not two empty results.  Pairs collide after normalisation: the first
+# two differ only in case and whitespace, the digit pair only in digits.
+GATE_PASSING = [
+    "The  cat\tsat on the mat.\r\nA dog ran to the park,\fand the bird "
+    "sang a song in the old tree by the lake at dawn.",
+    "THE CAT SAT ON THE MAT. A DOG RAN TO THE PARK, AND THE BIRD SANG A "
+    "SONG IN THE OLD TREE BY THE LAKE AT DAWN.",
+    # a vertical tab and a no-break space are not token breaks
+    "a\x0bb the cat sat on a mat in the sun, the dog ran\u00a0to a tree "
+    "and the kid sat by a lake to read a book all day.",
+    "On day 1 the 2 kids saw a 300 ants and the 45 cats ran to a park "
+    "with 6 dogs at 7 am in the 2024 fair.",
+    "On day 9 the 8 kids saw a 700 ants and the 12 cats ran to a park "
+    "with 3 dogs at 5 am in the 1999 fair.",
+    # a tab is not trimmed: empty first and last tokens
+    "\tthe end of a line is not the end of a text: a tab at the start "
+    "and a space at the end stay as they are \t",
+]
+# gate-passing documents with a NULL lang and a NULL source, distinct
+# after normalisation, so a NULL source group survives the dedup
+GATE_PASSING_NULLS = (
+    "a doc with no lang still has to pass the gate; the text is long, "
+    "and it has a few of the stop words in it.",
+    "a doc with no source still has to pass the gate; the text is long, "
+    "and it has a few of the stop words in it.",
+)
+
 
 # The one DOCUMENTED checker divergence (docs/OPERATIONS.md): Spark
 # applies Unicode FULL/contextual case mapping (Turkish İ → 'i̇', Greek
@@ -126,7 +156,7 @@ def build(
     pq_write_events(dest)
     docs = [
         t
-        for t in HOSTILE
+        for t in HOSTILE + GATE_PASSING
         if include_case_traps or not any(m in t for m in CASE_TRAP_MARKERS)
     ]
     rows = [(i, t, "xx", "hostile_a", len(t)) for i, t in enumerate(docs)]
@@ -141,6 +171,8 @@ def build(
             (2000, None, "xx", "hostile_a", 0),
             (2001, "plain text with null lang", None, "hostile_a", 25),
             (2002, "plain text with null source", "xx", None, 27),
+            (2003, GATE_PASSING_NULLS[0], None, "hostile_a", len(GATE_PASSING_NULLS[0])),
+            (2004, GATE_PASSING_NULLS[1], "xx", None, len(GATE_PASSING_NULLS[1])),
         ]
     tbl = pa.table(
         {

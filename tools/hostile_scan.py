@@ -39,7 +39,8 @@ from tools.check_correctness import compare, duck_connect  # noqa: E402
 
 
 def run_pass(spark, queries, oracles, sf_dir: str, keys) -> dict:
-    """{key: verdict-first-line}; 'OK' / 'rows-only: N' / failure text."""
+    """{key: verdict-first-line}; 'OK' / 'OK (0 rows)' / 'rows-only: N' /
+    failure text."""
     con = duck_connect(sf_dir)
     out: dict[str, str] = {}
     for key in keys:
@@ -56,7 +57,9 @@ def run_pass(spark, queries, oracles, sf_dir: str, keys) -> dict:
         except Exception as e:  # noqa: BLE001
             out[key] = f"ORACLE ERROR: {type(e).__name__}: {e}"
             continue
-        out[key] = compare(key, sdf, odf).splitlines()[0]
+        verdict = compare(key, sdf, odf).splitlines()[0]
+        # both engines empty: the check passes but shows nothing
+        out[key] = f"{verdict} (0 rows)" if verdict == "OK" and not len(sdf) else verdict
     con.close()
     return out
 
@@ -95,6 +98,7 @@ def main() -> int:
     extra = sorted(p2_bad - expected)
     stale = sorted(expected - p2_bad)
     rows_only = sorted(k for k, v in p1.items() if v.startswith("rows-only"))
+    empty = sorted(k for k, v in p1.items() if v.endswith("(0 rows)"))
     ok = not p1_bad and not extra and not stale
 
     print(f"pass 2 divergent: {len(p2_bad)} (expected exemptions: {len(expected)})")
@@ -102,6 +106,7 @@ def main() -> int:
         print(f"  EXTRA divergence beyond the exemption list: {extra}")
     if stale:
         print(f"  STALE exemptions (no longer diverge): {stale}")
+    print(f"pass 1 graded on 0 rows in both engines: {len(empty)} {empty}")
     print(f"{'CLEAN' if ok else 'VIOLATIONS'} in {elapsed:.0f}s")
 
     if write_artifact and not args:
@@ -126,6 +131,9 @@ Every key's Spark plan vs its DuckDB oracle on the adversarial fixture
 events — tools/hostile_fixture.py).
 
 **{len(keys) - len(p1_bad)}/{len(keys)} clean.**{"" if not p1_bad else chr(10) + chr(10) + chr(10).join(f"- FAIL `{k}`: {v}" for k, v in sorted(p1_bad.items()))}
+
+Graded on 0 rows in both engines (the check passes but shows nothing):
+{len(empty)} keys{": " + ", ".join(f"`{k}`" for k in empty) if empty else ""}.
 
 ## Pass 2 — case-trap docs included (exemption-list exactness)
 
